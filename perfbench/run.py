@@ -1,16 +1,17 @@
 """Benchmark for ``SQLEngine.execute_sql`` and the registry's curation
 operators.
 
-    python3 perfbench/run.py --workload sql_adhoc --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload sql_adhoc --seed 1 --seconds 19 --trace 0
 
 Run from the root of a checkout. One run is one fresh process with one
 closed-loop client thread against Spark ``local[nproc]``. It generates
 its tables under ``.perfbench/`` (reused across runs), starts the
 session, runs a set-up pass that checks every registry id against its
-DuckDB oracle and records an order-insensitive digest of every op's
-output, and a warm pass, then runs ``round(seconds / pass_s)`` timed
-passes of the workload's ops in seeded orders. An op that raises or whose digest
-differs from its set-up digest counts as failed.
+DuckDB oracle, and ``workloads.WARM_PASSES`` warm passes, then runs
+``round(seconds / pass_s)`` timed passes of the workload's ops in seeded
+orders. The first run of an op records an order-insensitive digest of
+its output; a later run that raises or whose digest differs counts as
+failed.
 
 ``--trace 0`` reports the end-to-end metrics; ``--trace 1`` runs the same
 sequence with spans and JVM counters around every call and reports the
@@ -63,17 +64,13 @@ def _sha(lines) -> str:
     return h.hexdigest()
 
 
-def text_lines(out: str, fmt: str) -> list[str]:
-    """The rows of an ``execute_sql`` result, normalised for comparison:
-    plan expression ids (``#123``) are numbered per session and masked,
-    and so is table cell padding, which follows the widest value."""
+def text_lines(out: str) -> list[str]:
+    """The rows of a TABLE-format ``execute_sql`` result, normalised for
+    comparison: plan expression ids (``#123``) are numbered per session
+    and masked, and so is table cell padding, which follows the widest
+    value."""
     out = re.sub(r"#\d+L?", "#", out)
     out = re.sub(r"(plan_id=|id=#?)\d+", r"\1", out)
-    if fmt == "json":
-        lines = []
-        for part in out.split("\n"):
-            lines += [json.dumps(r, sort_keys=True) for r in json.loads(part)]
-        return lines
     return [re.sub(r" +", " ", line) for line in out.split("\n") if not line.startswith("+")]
 
 
@@ -82,9 +79,7 @@ def frame_digest(pdf) -> str:
     return _sha("\x1f".join(map(str, row)) for row in pdf.astype(str).itertuples(index=False))
 
 
-def rows_out(out: str, fmt: str) -> int:
-    if fmt == "json":
-        return sum(len(json.loads(p)) for p in out.split("\n"))
+def rows_out(out: str) -> int:
     # per statement: border, header, border, rows…, border
     lines = out.split("\n")
     borders = sum(1 for line in lines if line.startswith("+"))
@@ -196,8 +191,8 @@ class Runner:
         self.py_pid = os.getpid()
         self.tracer = Tracer() if trace else _NoTrace()
         self.frames: dict[str, object] = {}  # curation op → the DataFrame its read built
-        self.ref: dict[str, str] = {}  # op key → set-up digest
-        self.ref_lines: dict[str, list[str]] = {}  # SQL op key → set-up rows
+        self.ref: dict[str, str] = {}  # op key → digest of its first run
+        self.ref_lines: dict[str, list[str]] = {}  # SQL op key → rows of its first run
         self.out_root = os.path.join(WORK, "writes")
         self.records: list[dict] = []
         self.partitions = spark.conf.get("spark.sql.shuffle.partitions")
@@ -267,9 +262,7 @@ class Runner:
             with tr.span("write" if op.kind == "write" else "catalyst.analyze"):
                 df = eng.sql(s)
             with tr.span("catalyst.plan"):
-                # format_json formats a new toJSON() Dataset: plan that one
-                jdf = df._jdf.toJSON() if fmt.value == "json" else df._jdf
-                jdf.queryExecution().executedPlan()
+                df._jdf.queryExecution().executedPlan()
             with tr.span("formats.format_result"):
                 outs.append(self.formats.format_result(df, fmt, eng.max_rows))
         return "\n".join(outs)
@@ -292,15 +285,15 @@ class Runner:
 
     def _verify(self, op, result) -> dict:
         """Digest the op's output (reading back a write); compare it with
-        the set-up digest, or record it during set-up."""
+        the op's first digest, or record it on the op's first run."""
         info: dict = {}
         if self.wl.fmt:  # the formatted result, also a COPY's row-count table
-            info.update(rows_out=rows_out(result, self.wl.fmt), bytes_out=len(result.encode()))
+            info.update(rows_out=rows_out(result), bytes_out=len(result.encode()))
         if op.kind == "write":
             rows, dig, files, size = read_back(os.path.join(self.out_root, op.out))
             info.update(rows=rows, write_files=files, write_bytes=size)
         elif self.wl.fmt:
-            lines = text_lines(result, self.wl.fmt)
+            lines = text_lines(result)
             dig = _sha(lines)
             ref = self.ref_lines.setdefault(op.key, lines)
             if op.grows and set(ref) <= set(lines):
@@ -436,7 +429,7 @@ def _per_layer(tracer: Tracer, recs: list[dict], record: dict) -> tuple[dict, li
     n_pass = max(r["pass"] for r in recs) + 1
     record["per_pass"] = {
         k: [sum(r[k] for r in recs if r["pass"] == p) for p in range(n_pass)]
-        for k in ("compiles", "jit_ms", "jobs", "stages", "tasks")
+        for k in ("jobs", "stages", "tasks")
     }
     self_by_name: dict[str, float] = {}
     for s in spans:
@@ -445,6 +438,12 @@ def _per_layer(tracer: Tracer, recs: list[dict], record: dict) -> tuple[dict, li
             self_by_name[key] = self_by_name.get(key, 0.0) + s["self"] * 1000
     record["self_ms_per_op"] = {k: v / max(1, len(recs)) for k, v in sorted(self_by_name.items())}
     return layers, spans
+
+
+def _listed(kind: str) -> list[str]:
+    """The names of the ``kind`` metrics in BENCHMARK.json, in its order."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return [m["name"] for m in json.load(f)[kind]]
 
 
 def main(argv=None) -> int:
@@ -510,9 +509,20 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
     runner = Runner(wl, spark, eng, data_dir, bool(args.trace))
     passes = wl.order(args.seed, wl.passes(args.seconds))
 
-    # set-up pass: every op once (reference digests), every registry id
-    # checked against its DuckDB oracle, writes checked for row count
+    # per pass (set-up, warm, timed): wall time, JIT time and codegen
+    # compiles, read once per pass outside every op, so every run shows
+    # how far JIT cost had levelled off when timing began
+    pass_log: list[dict] = []
+
+    def log_pass(phase: str, w0: float, j0: float, c0: int) -> None:
+        pass_log.append({"phase": phase, "wall_s": time.time() - w0,
+                         "jit_ms": runner.jvm.jit_ms() - j0,
+                         "compiles": runner.jvm.compiles() - c0})
+
+    # set-up pass: every op once, every registry id checked against its
+    # DuckDB oracle, writes checked for row count
     t = time.time()
+    j0, c0 = runner.jvm.jit_ms(), runner.jvm.compiles()
     con = duckdb.connect()
     for name in TABLE_NAMES:
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{data_dir}/{name}.parquet')")
@@ -520,14 +530,10 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
     setup_fail = []
     for op in passes[0]:
         if wl.fmt and op.kind == "read" and op.qid and op.qid not in oracle:
-            # execute_sql's own steps, with the oracle check on the same
-            # DataFrame (a registry text is one statement)
-            df = eng.sql(op.text)
-            pdf = df.toPandas()
-            lines = text_lines(
-                runner.formats.format_result(df, eng.result_format, eng.max_rows), wl.fmt)
-            runner.ref[op.key], runner.ref_lines[op.key] = _sha(lines), lines
-            oracle[op.qid] = _oracle(con, registry, op.qid, pdf, data_dir)
+            # the oracle check runs the registry text once, through
+            # SQLEngine.sql (a registry text is one statement); the first
+            # warm pass records the digest of its formatted result
+            oracle[op.qid] = _oracle(con, registry, op.qid, eng.sql(op.text).toPandas(), data_dir)
             continue
         rec = runner.run_op(op, registry)
         if rec["error"]:
@@ -541,11 +547,16 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
             setup_fail.append({**rec, "error": f"wrote {rec.get('rows')} rows, query returns "
                                                f"{oracle[op.qid]['rows']}"})
     con.close()
-    for seq in passes[1 : 1 + wl.warm]:
-        for op in seq:
-            rec = runner.run_op(op, registry)
-            if rec["error"] or not rec.get("ok"):
-                setup_fail.append(rec)
+    log_pass("setup", t, j0, c0)
+
+    def run_pass(seq, phase: str) -> list[dict]:
+        w0, j0, c0 = time.time(), runner.jvm.jit_ms(), runner.jvm.compiles()
+        recs = [runner.run_op(op, registry) for op in seq]
+        log_pass(phase, w0, j0, c0)
+        return recs
+
+    for seq in passes[1 : 1 + workloads.WARM_PASSES]:
+        setup_fail += [r for r in run_pass(seq, "warm") if r["error"] or not r.get("ok")]
     if args.trace:
         runner.tracer = Tracer()  # set-up spans are not part of the record
     warmup_s = time.time() - t
@@ -553,9 +564,8 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
 
     # timed passes
     t = time.time()
-    for p, seq in enumerate(passes[1 + wl.warm :]):
-        for op in seq:
-            runner.records.append(runner.run_op(op, registry) | {"pass": p})
+    for p, seq in enumerate(passes[1 + workloads.WARM_PASSES :]):
+        runner.records += [r | {"pass": p} for r in run_pass(seq, "timed")]
     loop_s = time.time() - t
     host1 = probes.host_cpu()
 
@@ -575,8 +585,8 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
     }
     record = {
         "workload": wl.name, "seed": args.seed, "seconds": args.seconds, "trace": args.trace,
-        "sf": wl.sf, "tables": datagen.describe(data_dir), "warm_passes": wl.warm,
-        "passes": len(passes) - 1 - wl.warm,
+        "sf": wl.sf, "tables": datagen.describe(data_dir), "warm_passes": workloads.WARM_PASSES,
+        "passes": len(passes) - 1 - workloads.WARM_PASSES, "pass_log": pass_log,
         "ops_per_pass": len(wl.ops), "loop_s": loop_s,
         "setup": {"setup_s": setup_s, "datagen_s": datagen_s, "session_s": session_s,
                   "register_s": register_s, "warmup_s": warmup_s},
@@ -598,6 +608,10 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
     print(f"{name} failed_share = {record['failed_share']:.6g} 1 ({len(failed)} of {len(recs)} ops; "
           f"{len(oracle)} registry ids oracle-checked, failing: {bad_oracle})")
     print(f"{name} latency_tail_ms is p{pctl:.1f} of n={n_tail} reads")
+    print(f"{name} per pass (set-up, {workloads.WARM_PASSES} warm, timed): "
+          f"wall_s {[round(x['wall_s'], 2) for x in pass_log]} "
+          f"jit_ms {[round(x['jit_ms']) for x in pass_log]} "
+          f"codegen compiles {[x['compiles'] for x in pass_log]}")
     print(f"{name} host steal_s = {noise['steal_s']} steal_share = {noise['steal_share']} "
           f"cpu_jvm_s = {noise['cpu_jvm_s']} cpu_py_s = {noise['cpu_py_s']} run_s = {noise['run_s']}")
     if args.trace:
@@ -607,9 +621,11 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
         print(f"{name} per timed pass: {json.dumps(record['per_pass'])}")
         print(f"{name} trace: worst |wall - sum of self times| = "
               f"{100 * record['trace_unaccounted_share_max']:.3f}% of an op's wall")
-        metrics = {k: {"value": v, "unit": _LAYER_UNITS[k]} for k, v in layers.items()}
+        metrics = {k: {"value": layers[k], "unit": _LAYER_UNITS[k]} for k in _listed("per_layer")}
     else:
-        metrics = {k: {"value": v, "unit": u} for k, (v, u) in e2e.items()}
+        # the end-to-end metrics BENCHMARK.json gates; the others are
+        # printed above and kept in the run's record
+        metrics = {k: {"value": e2e[k][0], "unit": e2e[k][1]} for k in _listed("end_to_end")}
     for r in setup_fail + failed[:5]:
         print(f"{name} FAILED {r['key']}: {r.get('error') or 'digest differs'} {r.get('diff', '')}",
               file=sys.stderr)

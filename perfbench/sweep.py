@@ -4,12 +4,14 @@
 
 Runs ``run.py`` ``--runs`` times per workload (seeds ``seed0 …``), each
 in a fresh process, then ``--traced`` traced runs. For every end-to-end
-metric it prints the median, the quartiles (``statistics.quantiles(n=4)``)
-and their distance as a share of the median next to the metric's bound
-from BENCHMARK.json; for every run it prints the host's CPU steal. The
-traced runs give the tracing overhead: traced minus untraced
-``latency_p50_ms`` and ``cpu_ms_per_op``. The summary is also written to
-``.perfbench/out/sweep.json``.
+metric a run measures it prints the median, the quartiles
+(``statistics.quantiles(n=4)``) and their distance as a share of the
+median, next to the metric's bound from BENCHMARK.json if it is gated.
+For every run it prints the host's CPU steal, and per pass the median
+wall and JIT time over the runs. Each traced run follows an untraced run
+of the same seed; the pair gives the tracing overhead, traced minus
+untraced ``latency_p50_ms`` and ``cpu_ms_per_op``. The summary is also
+written to ``.perfbench/out/sweep.json``.
 """
 
 from __future__ import annotations
@@ -71,26 +73,45 @@ def main() -> int:
                   flush=True)
             runs.append(r)
         rows = {}
-        for m in bounds:
-            vals = [r["result"]["metrics"][m]["value"] for r in runs]
+        # every end-to-end metric a run measures, gated in BENCHMARK.json or not
+        for m in runs[0]["record"]["end_to_end"]:
+            vals = [r["record"]["end_to_end"][m] for r in runs]
             med, q1, q3, sp = spread(vals)
-            rows[m] = {"median": med, "q1": q1, "q3": q3, "spread": sp, "bound": bounds[m],
+            rows[m] = {"median": med, "q1": q1, "q3": q3, "spread": sp, "bound": bounds.get(m),
                        "values": vals}
-            print(f"{wl} {m}: median {med:.4g} q1 {q1:.4g} q3 {q3:.4g} "
-                  f"spread {sp:.4f} bound {bounds[m]} (a third: {bounds[m] / 3:.4f})")
-        summary[wl] = {"end_to_end": rows, "host": [r["record"]["host"] for r in runs]}
+            gate = (f"bound {bounds[m]} (a third: {bounds[m] / 3:.4f})" if m in bounds
+                    else "not gated")
+            print(f"{wl} {m}: median {med:.4g} q1 {q1:.4g} q3 {q3:.4g} spread {sp:.4f} {gate}")
+        # JIT levelling: median over the runs of each pass's JIT time and wall
+        logs = [r["record"]["pass_log"] for r in runs]
+        curve = {
+            k: [statistics.median(log[i][k] for log in logs) for i in range(len(logs[0]))]
+            for k in ("wall_s", "jit_ms", "compiles")
+        }
+        print(f"{wl} per pass, median of runs (set-up, warm, timed): " + " ".join(
+            f"{k} {[round(v, 2) for v in vs]}" for k, vs in curve.items()))
+        summary[wl] = {"end_to_end": rows, "host": [r["record"]["host"] for r in runs],
+                       "pass_curve": curve}
         for i in range(args.traced):
-            t = run_once(wl, args.seed0 + args.runs + i, args.seconds, 1)["record"]
+            # a traced run right after an untraced run of the same seed, so
+            # that both see about the same host noise
+            seed = args.seed0 + args.runs + i
+            u = run_once(wl, seed, args.seconds, 0)["record"]
+            t = run_once(wl, seed, args.seconds, 1)["record"]
             over = {
-                m: t["end_to_end"][m] - rows[m]["median"]
+                m: t["end_to_end"][m] - u["end_to_end"][m]
                 for m in ("latency_p50_ms", "cpu_ms_per_op")
             }
             summary[wl].setdefault("traced", []).append(
                 {"per_layer": t["per_layer"], "overhead": over, "host": t["host"],
-                 "per_pass": t["per_pass"], "self_ms_per_op": t["self_ms_per_op"],
+                 "untraced": {"end_to_end": u["end_to_end"], "host": u["host"]},
+                 "per_pass": t["per_pass"], "pass_log": t["pass_log"],
+                 "self_ms_per_op": t["self_ms_per_op"],
                  "trace_unaccounted_share_max": t["trace_unaccounted_share_max"]})
-            print(f"{wl} tracing overhead: " + " ".join(
-                f"{m} {v:+.4g} ({100 * v / rows[m]['median']:+.1f}%)" for m, v in over.items()))
+            print(f"{wl} tracing overhead, seed {seed} (steal_share untraced "
+                  f"{u['host']['steal_share']}, traced {t['host']['steal_share']}): " + " ".join(
+                      f"{m} {v:+.4g} ({100 * v / u['end_to_end'][m]:+.1f}%)"
+                      for m, v in over.items()))
     os.makedirs(OUT, exist_ok=True)
     with open(os.path.join(OUT, "sweep.json"), "w") as f:
         json.dump(summary, f, indent=1)

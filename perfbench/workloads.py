@@ -1,4 +1,4 @@
-"""The benchmark's three workloads as fixed operation lists.
+"""The benchmark's workloads as fixed operation lists.
 
 A workload is a list of ops. One pass runs every op once, in an order
 drawn from the run's seed; every seed runs the same ops, so two seeds do
@@ -15,17 +15,12 @@ directory that the client reads back).
     end, Catalyst, scheduling, codegen) dominates; the statement mix
     generates more classes per pass than Spark's 100-entry codegen
     cache holds.
-``sql_dashboard``
-    sf0.1, JSON format. Six heavy analytic registry texts repeat; every
-    second one is also written with COPY. The plans repeat and fit the
-    codegen cache, so scan, shuffle, aggregation, JSON transfer and the
-    write path dominate. Runnable, but not in BENCHMARK.json: one run
-    takes about 90 s on a 4-vCPU host.
 ``curation_pipeline``
     sf0.1, the registry's LLM-curation operators through
     ``QuerySpec.spark_fn``: a read op builds the operator's DataFrame
-    and collects it; for every second operator a write op then writes
-    that DataFrame as parquet.
+    and collects it; for three of them a write op then writes that
+    DataFrame as parquet. The plans repeat and fit the codegen
+    cache.
     ``SQLEngine``, ``compat`` and ``formats`` are off this path.
 """
 
@@ -33,6 +28,12 @@ from __future__ import annotations
 
 import random
 from dataclasses import dataclass
+
+
+# untimed passes after the set-up pass, so that JIT compilation has
+# levelled off before timing starts (see WORKLOADS.md for the measured
+# per-pass JIT time)
+WARM_PASSES = 2
 
 
 @dataclass(frozen=True)
@@ -52,14 +53,11 @@ class Op:
 class Workload:
     name: str
     sf: float
-    fmt: str  # "table" | "json" | "" (no SQLEngine)
+    fmt: str  # "table" | "" (no SQLEngine)
     ops: tuple[Op, ...]
     # wall seconds of one steady pass on a 4-vCPU host: the number of
     # timed passes is round(--seconds / pass_s), fixed per setting
     pass_s: float
-    # untimed passes after the set-up pass, so that JIT compilation has
-    # levelled off before timing starts
-    warm: int
 
     def passes(self, seconds: int) -> int:
         return max(1, round(seconds / self.pass_s))
@@ -70,7 +68,7 @@ class Workload:
         right after the read that builds its DataFrame)."""
         rng = random.Random(seed)
         out = []
-        for _ in range(1 + self.warm + n_passes):
+        for _ in range(1 + WARM_PASSES + n_passes):
             ops = list(self.ops)
             rng.shuffle(ops)
             reads = [o for o in ops if o.kind == "read"]
@@ -91,28 +89,29 @@ class Workload:
 
 
 # registry SQL texts of sql_adhoc, each a distinct plan: predicates,
-# joins, aggregates, windows, set ops, sorts, scalar functions and CTEs.
-# The mix is as wide as a run's time allows; it still generates more
-# classes per pass than the codegen cache holds
+# joins, aggregates, windows, set ops, sorts, scalar functions and CTEs,
+# plus cheap scans, VALUES and LIMIT, so that a run holds enough reads
+# for a tail percentile. Together they generate more classes per pass
+# than the codegen cache holds
 ADHOC_IDS = (
     "q_exists_in", "q_join_left", "q_join_full", "q_join_anti", "q_agg_having",
-    "q_agg_rollup", "q_win_lag_lead", "q_win_named", "q_union_distinct",
-    "q_intersect", "q_topk", "q_fn_string_basic", "q_cte",
+    "q_win_lag_lead", "q_win_named", "q_win_value_fns", "q_win_groups_frame",
+    "q_union_distinct", "q_topk", "q_fn_string_basic", "q_cte",
+    "q_values_inline", "q_generate_series", "q_limit_offset", "q_union_all",
+    "q_scan_parquet", "q_fn_stringdist", "q_fn_encoding",
 )
 # written with COPY … STORED AS PARQUET
-ADHOC_COPY_IDS = ("q_join_inner",)
+ADHOC_COPY_IDS = ("q_topk",)
 
-DASHBOARD_IDS = (
-    "q_agg_cube", "q_join_full", "q_agg_distinct",
-    "q_win_ranking", "q_fn_stddev_var", "q_agg_groupby",
-)
-
-# every second one (dedup_exact, pipeline_chunk, pipeline_curation) is
-# also written
+# cheap to mid-cost operators, so that a run holds enough reads for a
+# tail percentile
 CURATION_IDS = (
     "q_dedup_exact", "q_text_quality", "q_pipeline_chunk", "q_sample_temperature",
-    "q_pipeline_curation",
+    "q_sample_hash", "q_text_tokens", "q_pipeline_split", "q_sample_stratified",
+    "q_text_normalize", "q_pipeline_manifest",
 )
+# also written; a write runs the operator's plan again, so the cheap ones
+CURATION_WRITE_IDS = ("q_dedup_exact", "q_pipeline_split", "q_pipeline_manifest")
 
 
 # ``{partitions}`` is the session's own shuffle partition count, so the
@@ -134,7 +133,7 @@ def _copy(qid: str, text: str) -> Op:
 
 def build(name: str, registry) -> Workload:
     """The named workload over ``registry`` (``queries.load_all()``)."""
-    sql = {q: registry_sql(registry[q]) for q in ADHOC_IDS + ADHOC_COPY_IDS + DASHBOARD_IDS}
+    sql = {q: registry_sql(registry[q]) for q in ADHOC_IDS + ADHOC_COPY_IDS}
     if name == "sql_adhoc":
         ops = [Op(q, "read", sql[q], q) for q in ADHOC_IDS]
         ops += [
@@ -155,16 +154,12 @@ def build(name: str, registry) -> Workload:
             Op("set_datafusion", "read", SET_STATEMENT),
         ]
         ops += [_copy(q, sql[q]) for q in ADHOC_COPY_IDS]
-        return Workload(name, 0.01, "table", tuple(ops), pass_s=6.5, warm=1)
-    if name == "sql_dashboard":
-        ops = [Op(q, "read", sql[q], q) for q in DASHBOARD_IDS]
-        ops += [_copy(q, sql[q]) for q in DASHBOARD_IDS[::2]]
-        return Workload(name, 0.1, "json", tuple(ops), pass_s=7.0, warm=1)
+        return Workload(name, 0.01, "table", tuple(ops), pass_s=8.0)
     if name == "curation_pipeline":
         ops = [Op(q, "read", None, q) for q in CURATION_IDS]
-        ops += [Op(f"write:{q}", "write", None, q, f"write_{q}") for q in CURATION_IDS[::2]]
-        return Workload(name, 0.1, "", tuple(ops), pass_s=4.4, warm=1)
+        ops += [Op(f"write:{q}", "write", None, q, f"write_{q}") for q in CURATION_WRITE_IDS]
+        return Workload(name, 0.1, "", tuple(ops), pass_s=3.3)
     raise KeyError(name)
 
 
-NAMES = ("sql_adhoc", "sql_dashboard", "curation_pipeline")
+NAMES = ("sql_adhoc", "curation_pipeline")
