@@ -1,15 +1,17 @@
 """Deterministic fixture tables for the benchmark.
 
-Writes the ten tables the engine's catalog binds (``sources.catalog.
-TABLE_NAMES``) as one single-row-group parquet file each, with the
-schemas and value domains of the project's fixture set (FIXTURES.md):
-a TPC-H-like star schema plus ``events``, ``documents`` and
-``embeddings``. Row counts scale like the fixtures (lineitem = 6M x sf).
+Builds the ten tables the engine's catalog binds (``sources.catalog.
+TABLE_NAMES``) with the schemas and value domains of the project's
+fixture set (FIXTURES.md): a TPC-H-like star schema plus ``events``,
+``documents`` and ``embeddings``. Row counts scale like the fixtures
+(lineitem = 6M x sf). A workload's directory holds, as one
+single-row-group parquet file each, only the tables its ops read, so
+that ``register_tables`` binds no table the workload never scans.
 
 The data seed is fixed: every benchmark seed reads the same tables, so
 two seeds do the same work in a different order. A generated directory
-is stamped and reused; a stamp from another generator version or scale
-makes it regenerate.
+is stamped and reused; a stamp from another generator version, scale or
+table list makes it regenerate.
 """
 
 from __future__ import annotations
@@ -175,23 +177,27 @@ def _tables(sf: float) -> dict[str, pa.Table]:
     return out
 
 
-def _stamp(sf: float) -> str:
+def _stamp(sf: float, names: tuple[str, ...]) -> str:
     src = open(os.path.abspath(__file__), "rb").read()
-    return f"{GENERATOR_VERSION}:{sf}:{DATA_SEED}:{hashlib.sha1(src).hexdigest()}"
+    return f"{GENERATOR_VERSION}:{sf}:{DATA_SEED}:{','.join(names)}:{hashlib.sha1(src).hexdigest()}"
 
 
-def ensure(root: str, sf: float) -> str:
-    """Return ``<root>/sf<sf>``, generating it first unless a complete
-    copy from this generator is already there."""
-    d = os.path.join(root, f"sf{sf}")
+def ensure(root: str, sf: float, names: tuple[str, ...], tag: str) -> str:
+    """Return ``<root>/<tag>``, holding the tables ``names`` at scale
+    ``sf``; generate it first unless a complete copy from this generator
+    is already there. Every table is generated, so a table's rows do not
+    depend on which others are written."""
+    d = os.path.join(root, tag)
     stamp = os.path.join(d, ".stamp")
-    want = _stamp(sf)
+    want = _stamp(sf, names)
     if os.path.exists(stamp) and open(stamp).read() == want:
         return d
     tmp = f"{d}.tmp{os.getpid()}"
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     for name, t in _tables(sf).items():
+        if name not in names:
+            continue
         pq.write_table(
             t, os.path.join(tmp, f"{name}.parquet"), compression="snappy",
             row_group_size=max(1, t.num_rows),

@@ -1,7 +1,7 @@
 """Benchmark for ``SQLEngine.execute_sql`` and the registry's curation
 operators.
 
-    python3 perfbench/run.py --workload sql_adhoc --seed 1 --seconds 19 --trace 0
+    python3 perfbench/run.py --workload sql_adhoc --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. One run is one fresh process with one
 closed-loop client thread against Spark ``local[nproc]``. It generates
@@ -68,8 +68,11 @@ def text_lines(out: str) -> list[str]:
     """The rows of a TABLE-format ``execute_sql`` result, normalised for
     comparison: plan expression ids (``#123``) are numbered per session
     and masked, and so is table cell padding, which follows the widest
-    value."""
+    value. A plan string cut to a fixed length (``…, (o_orderke...``)
+    ends at a point that moves with the ids' digit counts, so its cut
+    token is masked too."""
     out = re.sub(r"#\d+L?", "#", out)
+    out = re.sub(r"[\w#]*\.\.\.", "...", out)
     out = re.sub(r"(plan_id=|id=#?)\d+", r"\1", out)
     return [re.sub(r" +", " ", line) for line in out.split("\n") if not line.startswith("+")]
 
@@ -467,7 +470,7 @@ def main(argv=None) -> int:
     registry = load_all()
     wl = workloads.build(args.workload, registry)
     t = time.time()
-    data_dir = datagen.ensure(os.path.join(WORK, "data"), wl.sf)
+    data_dir = datagen.ensure(os.path.join(WORK, "data"), wl.sf, wl.tables, wl.name)
     datagen_s = time.time() - t
 
     t = time.time()
@@ -492,7 +495,7 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
 
     from datafusion_wasm_bindings_spark import ResultFormat, SQLEngine
     from datafusion_wasm_bindings_spark.session import size_scan_splits
-    from datafusion_wasm_bindings_spark.sources.catalog import TABLE_NAMES, register_tables
+    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
 
     t = time.time()
     size_scan_splits(spark, data_dir)
@@ -509,33 +512,43 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
     runner = Runner(wl, spark, eng, data_dir, bool(args.trace))
     passes = wl.order(args.seed, wl.passes(args.seconds))
 
-    # per pass (set-up, warm, timed): wall time, JIT time and codegen
-    # compiles, read once per pass outside every op, so every run shows
-    # how far JIT cost had levelled off when timing began
+    # per pass (set-up, warm, timed): wall time, JIT time, codegen
+    # compiles and JVM plus Python CPU, read once per pass outside every
+    # op, so every run shows how far JIT cost had levelled off when
+    # timing began
     pass_log: list[dict] = []
 
-    def log_pass(phase: str, w0: float, j0: float, c0: int) -> None:
-        pass_log.append({"phase": phase, "wall_s": time.time() - w0,
-                         "jit_ms": runner.jvm.jit_ms() - j0,
-                         "compiles": runner.jvm.compiles() - c0})
+    def counters() -> tuple[float, float, int, float]:
+        return (time.time(), runner.jvm.jit_ms(), runner.jvm.compiles(),
+                probes.proc_cpu_s(runner.jvm.pid) + probes.proc_cpu_s(runner.py_pid))
+
+    def log_pass(phase: str, c0: tuple) -> None:
+        c1 = counters()
+        pass_log.append({"phase": phase, "wall_s": c1[0] - c0[0], "jit_ms": c1[1] - c0[1],
+                         "compiles": c1[2] - c0[2], "cpu_s": c1[3] - c0[3]})
 
     # set-up pass: every op once, every registry id checked against its
     # DuckDB oracle, writes checked for row count
     t = time.time()
-    j0, c0 = runner.jvm.jit_ms(), runner.jvm.compiles()
+    c0 = counters()
     con = duckdb.connect()
-    for name in TABLE_NAMES:
+    for name in wl.tables:
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{data_dir}/{name}.parquet')")
     oracle: dict[str, dict] = {}
     setup_fail = []
+    setup_steps: list[list] = []  # [op key, wall s of its run, wall s of its oracle check]
     for op in passes[0]:
+        s0 = time.time()
+        setup_steps.append([op.key, None, None])
         if wl.fmt and op.kind == "read" and op.qid and op.qid not in oracle:
             # the oracle check runs the registry text once, through
             # SQLEngine.sql (a registry text is one statement); the first
             # warm pass records the digest of its formatted result
             oracle[op.qid] = _oracle(con, registry, op.qid, eng.sql(op.text).toPandas(), data_dir)
+            setup_steps[-1][2] = time.time() - s0
             continue
         rec = runner.run_op(op, registry)
+        setup_steps[-1][1] = rec["wall"]
         if rec["error"]:
             setup_fail.append(rec)
             continue
@@ -543,16 +556,17 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
             pdf = (eng.sql(workloads.registry_sql(registry[op.qid])).toPandas()
                    if wl.fmt else runner.last)
             oracle[op.qid] = _oracle(con, registry, op.qid, pdf, data_dir)
+        setup_steps[-1][2] = time.time() - s0 - rec["wall"]
         if op.kind == "write" and rec.get("rows") != oracle[op.qid]["rows"]:
             setup_fail.append({**rec, "error": f"wrote {rec.get('rows')} rows, query returns "
                                                f"{oracle[op.qid]['rows']}"})
     con.close()
-    log_pass("setup", t, j0, c0)
+    log_pass("setup", c0)
 
     def run_pass(seq, phase: str) -> list[dict]:
-        w0, j0, c0 = time.time(), runner.jvm.jit_ms(), runner.jvm.compiles()
+        c0 = counters()
         recs = [runner.run_op(op, registry) for op in seq]
-        log_pass(phase, w0, j0, c0)
+        log_pass(phase, c0)
         return recs
 
     for seq in passes[1 : 1 + workloads.WARM_PASSES]:
@@ -587,6 +601,7 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
         "workload": wl.name, "seed": args.seed, "seconds": args.seconds, "trace": args.trace,
         "sf": wl.sf, "tables": datagen.describe(data_dir), "warm_passes": workloads.WARM_PASSES,
         "passes": len(passes) - 1 - workloads.WARM_PASSES, "pass_log": pass_log,
+        "setup_steps": setup_steps,
         "ops_per_pass": len(wl.ops), "loop_s": loop_s,
         "setup": {"setup_s": setup_s, "datagen_s": datagen_s, "session_s": session_s,
                   "register_s": register_s, "warmup_s": warmup_s},
@@ -611,7 +626,8 @@ def _run(args, spark, registry, wl, data_dir, datagen_s, session_s, host0) -> in
     print(f"{name} per pass (set-up, {workloads.WARM_PASSES} warm, timed): "
           f"wall_s {[round(x['wall_s'], 2) for x in pass_log]} "
           f"jit_ms {[round(x['jit_ms']) for x in pass_log]} "
-          f"codegen compiles {[x['compiles'] for x in pass_log]}")
+          f"codegen compiles {[x['compiles'] for x in pass_log]} "
+          f"cpu_s {[round(x['cpu_s'], 2) for x in pass_log]}")
     print(f"{name} host steal_s = {noise['steal_s']} steal_share = {noise['steal_share']} "
           f"cpu_jvm_s = {noise['cpu_jvm_s']} cpu_py_s = {noise['cpu_py_s']} run_s = {noise['run_s']}")
     if args.trace:
