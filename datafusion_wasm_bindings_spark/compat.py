@@ -685,5 +685,7 @@ def rewrite(sql: str) -> str:
     return _unmask(masked, lits)
 
 
-def needs_information_schema(sql: str) -> bool:
-    return bool(_INFO_SCHEMA_RE.search(_mask_literals(sql)[0]))
+def information_schema_relations(sql: str) -> set[str]:
+    """The information_schema relations ``sql`` names (outside string
+    literals and comments), e.g. {"tables", "columns"}."""
+    return {m.group(1).lower() for m in _INFO_SCHEMA_RE.finditer(_mask_literals(sql)[0])}

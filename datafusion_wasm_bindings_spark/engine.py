@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_wasm_bindings_spark.errors import EngineError, classify_spark_error
 from datafusion_wasm_bindings_spark.formats import ResultFormat, format_result
-from datafusion_wasm_bindings_spark.session import get_spark
+from datafusion_wasm_bindings_spark.session import get_spark, local_rows
 
 
 def split_statements(sql: str) -> list[str]:
@@ -376,11 +376,11 @@ class SQLEngine:
                 m.group("body").strip(),
                 _split_prepare_types(m.group("types")),
             )
-            return self.spark.createDataFrame([], "result string")
+            return local_rows(self.spark, [], "result string")
         m = _DEALLOCATE_RE.match(stmt)
         if m:
             self._prepared.pop(m.group("name").lower(), None)
-            return self.spark.createDataFrame([], "result string")
+            return local_rows(self.spark, [], "result string")
         m = _EXECUTE_RE.match(stmt)
         if m and m.group("name").lower() in self._prepared:
             body, types = self._prepared[m.group("name").lower()]
@@ -484,7 +484,8 @@ class SQLEngine:
             qe = df._jdf.queryExecution()
             logical = _datafusion_style_plan(qe.optimizedPlan().toString())
             physical = qe.executedPlan().toString().rstrip("\n")
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [("logical_plan", logical), ("physical_plan", physical)],
                 "plan_type string, plan string",
             )
@@ -498,9 +499,7 @@ class SQLEngine:
             n = df.count()
             plan = df._jdf.queryExecution().executedPlan().toString()
             lines = [f"rows: {n}"] + plan.splitlines()
-            return self.spark.createDataFrame(
-                [(line,) for line in lines], "plan string"
-            )
+            return local_rows(self.spark, [(line,) for line in lines], "plan string")
         if stripped.upper() == "SHOW ALL":
             # reference: SHOW ALL lists datafusion.* settings via
             # information_schema.df_settings (core.rs:62); Spark's
@@ -517,14 +516,16 @@ class SQLEngine:
         # SQL-callable shims (dfwb_gcd/lcm/regexp_match) that compat
         # renames target; cached per session, so this is a dict lookup
         ensure_registered(self.spark)
-        if compat.needs_information_schema(stmt):
+        info_relations = compat.information_schema_relations(stmt)
+        if info_relations:
             # reference enables information_schema at session build
-            # (core.rs:62); we materialize the emulation on demand
+            # (core.rs:62); we materialize the relations the statement
+            # names, on demand
             from datafusion_wasm_bindings_spark.sources.infoschema import (
                 register_information_schema,
             )
 
-            register_information_schema(self.spark)
+            register_information_schema(self.spark, info_relations)
         rewritten = compat.rewrite(stmt)
         if args:
             return self.spark.sql(rewritten, args=args)
@@ -541,6 +542,11 @@ class SQLEngine:
         the same value; a parameter can never inject clause text.
         Limitation (documented): a literal ``$n`` inside a string
         constant in the template is also treated as a marker.
+
+        The one-row query selects from ``VALUES (0)``: Catalyst folds a
+        projection of a local relation into a local relation, which
+        collects without a Spark job (a bare ``SELECT`` scans
+        OneRowRelation in one job).
         """
         exprs = []
         for i, a in enumerate(args):
@@ -548,7 +554,7 @@ class SQLEngine:
             if types:
                 e = f"CAST({e} AS {types[i]})"
             exprs.append(f"{e} AS p{i}")
-        row = self._run_sql("SELECT " + ", ".join(exprs)).collect()[0]
+        row = self._run_sql("SELECT " + ", ".join(exprs) + " FROM VALUES (0)").collect()[0]
         values = {f"dfwb_p{i + 1}": row[i] for i in range(len(args))}
         bound = re.sub(r"\$(\d+)", r":dfwb_p\1", body)
         return self._run_sql(bound, args=values)
@@ -560,8 +566,13 @@ class SQLEngine:
         row count, matching DataFusion's COPY output relation.
 
         Scale note: task-parallel part files (no coalesce) — the write
-        parallelism is the plan's partitioning.
+        parallelism is the plan's partitioning. The query runs once: the
+        row count is a metric observed during the write itself, not a
+        separate ``count()`` job over the same plan.
         """
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
         src = m.group("query")
         df = self.sql(src) if src else self.spark.table(m.group("table").strip('"'))
         path = m.group("path")
@@ -571,8 +582,13 @@ class SQLEngine:
         if not fmt:
             suffix = path.rsplit(".", 1)[-1].lower()
             fmt = suffix if suffix in ("parquet", "csv", "json") else "parquet"
-        n = df.count()
-        writer = df.write.mode("overwrite")
+        if fmt not in ("parquet", "csv", "json"):
+            from datafusion_wasm_bindings_spark.errors import PlanError
+
+            raise PlanError(f"COPY: unsupported STORED AS format: {fmt}")
+        observed = Observation()
+        writer = df.observe(observed, F.count(F.lit(1)).alias("rows")).write
+        writer = writer.mode("overwrite").format(fmt)
         partcols = m.group("partcols")
         if partcols:
             # hive-style layout (col=value dirs) — readers of the output
@@ -580,17 +596,10 @@ class SQLEngine:
             writer = writer.partitionBy(
                 *[c.strip().strip('"') for c in partcols.split(",")]
             )
-        if fmt == "parquet":
-            writer.parquet(path)
-        elif fmt == "csv":
-            writer.option("header", "true").csv(path)
-        elif fmt == "json":
-            writer.json(path)
-        else:
-            from datafusion_wasm_bindings_spark.errors import PlanError
-
-            raise PlanError(f"COPY: unsupported STORED AS format: {fmt}")
-        return self.spark.createDataFrame([(n,)], "count bigint")
+        if fmt == "csv":
+            writer = writer.option("header", "true")
+        writer.save(path)
+        return local_rows(self.spark, [(observed.get["rows"],)], "count bigint")
 
     #: Cap on bytes staged through the driver for an http(s) external
     #: table (VERDICT r11 #5): the whole-object GET matches the
@@ -726,7 +735,7 @@ class SQLEngine:
             raise PlanError(f"unsupported STORED AS format: {fmt}")
         df.createOrReplaceTempView(name)
         # DDL yields an empty result relation, like DataFusion's DDL path
-        return self.spark.createDataFrame([], "result string")
+        return local_rows(self.spark, [], "result string")
 
 
 _DF_NODE_MAP = {

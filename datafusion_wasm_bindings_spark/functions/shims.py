@@ -26,6 +26,8 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from datafusion_wasm_bindings_spark.sources.catalog import _session_key
+
 # DataFusion name -> pyspark.sql.functions name, where it is a pure
 # rename (identical semantics). Identity mappings are omitted.
 NAME_MAP = {
@@ -203,6 +205,9 @@ def version_string() -> str:
     return f"datafusion-wasm-bindings-spark {__version__} (spark {pyspark.__version__})"
 
 
+# session tokens (sources.catalog._session_key), not id(spark): CPython
+# reuses the id of a collected session, and a new session at that
+# address would skip registration
 _registered_sessions: set[int] = set()
 
 
@@ -255,7 +260,8 @@ def ensure_registered(spark: SparkSession) -> None:
     so they codegen like any builtin. Only regexp_match (column
     patterns) remains a Python UDF.
     """
-    if id(spark) in _registered_sessions:
+    key = _session_key(spark)
+    if key in _registered_sessions:
         return
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION dfwb_gcd(a BIGINT, b BIGINT) "
@@ -273,4 +279,4 @@ def ensure_registered(spark: SparkSession) -> None:
         "CREATE OR REPLACE TEMPORARY FUNCTION dfwb_version() "
         f"RETURNS STRING RETURN '{version_string()}'"
     )
-    _registered_sessions.add(id(spark))
+    _registered_sessions.add(key)

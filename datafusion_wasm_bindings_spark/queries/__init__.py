@@ -67,74 +67,70 @@ _MODULES = (
     "analytics5",
 )
 
-# Round-13 driver window (exactly 50 names, COVERAGE.md round-13 plan):
+# Round-14 driver window (exactly 50 names, COVERAGE.md round-14 plan):
 # zero never-checked / non-green ids remain (290/290 cumulative-green),
 # so the whole window is staleness re-verification — the stalest
 # greens oldest-first (last-verified round, registration order) per
 # the mechanical rule enforced by tests/test_window_rotation.py: the
-# r7-stamped SURVEY §2 relational/join/agg/window/setop/sort block
-# (predicates/like/case/cast, scalar_subquery/exists_in, the seven
-# join variants + theta/residual/using, the agg global/having/
-# distinct/grouping-sets/rollup/cube/filter-clause suite, the window
-# lag-lead/value-fns/agg-over/frames/named family, union/intersect/
-# except incl. ALL forms, distinct/distinct_on/sort/limit_offset/
-# topk) then the r8-stamped dedup-cluster pair, dedup_embedding, the
-# sim topk/lsh/ivf trio, and the text tokens/quality/langid/
-# repetition quartet. Rotation preceded by the conftest
-# ORACLE_UNSAFE_TYPES + dtype audit (tools_driver_sim.py over all
-# 50). Names listed here move to the FRONT of the registry in this
+# r8-stamped text/sample/join/stream/multimodal/events/pipeline block
+# (fingerprint, the four samplers, asof/range/salted/bucketed joins,
+# the four stream joins and dedup, windows over events, decontaminate/
+# pii) and the r8-stamped SURVEY §2.8 aggregate-function suite, then
+# the r9-stamped dedup/sim/text/pipeline ids. Rotation preceded by the
+# conftest ORACLE_UNSAFE_TYPES + dtype audit (tools_driver_sim.py over
+# all 50). Names listed here move to the FRONT of the registry in this
 # order; everything else follows in registration order.
 _WINDOW = (
-    "q_predicates",
-    "q_like_ilike",
-    "q_case",
-    "q_cast",
-    "q_scalar_subquery",
-    "q_exists_in",
-    "q_join_left",
-    "q_join_right",
-    "q_join_full",
-    "q_join_semi",
-    "q_join_anti",
-    "q_join_cross",
-    "q_join_theta",
-    "q_join_residual",
-    "q_join_using",
-    "q_agg_global",
-    "q_agg_having",
-    "q_agg_distinct",
-    "q_agg_grouping_sets",
-    "q_agg_rollup",
-    "q_agg_cube",
-    "q_agg_filter_clause",
-    "q_win_lag_lead",
-    "q_win_value_fns",
-    "q_win_agg_over",
-    "q_win_rows_frame",
-    "q_win_range_frame",
-    "q_win_groups_frame",
-    "q_win_named",
-    "q_union_all",
-    "q_union_distinct",
-    "q_intersect",
-    "q_except",
-    "q_intersect_all",
-    "q_except_all",
-    "q_distinct",
-    "q_distinct_on",
-    "q_sort",
-    "q_limit_offset",
-    "q_topk",
-    "q_dedup_clusters",
-    "q_dedup_clusters_star",
-    "q_dedup_embedding",
-    "q_sim_topk",
-    "q_sim_lsh_topk",
-    "q_sim_ivf_topk",
-    "q_text_tokens",
-    "q_text_quality",
-    "q_text_langid",
-    "q_text_repetition",
+    "q_text_fingerprint",
+    "q_sample_stratified",
+    "q_sample_hash",
+    "q_sample_weighted",
+    "q_sample_temperature",
+    "q_join_asof",
+    "q_feature_binning",
+    "q_join_range",
+    "q_stream_stateful_totals",
+    "q_stream_dedup",
+    "q_stream_stream_join",
+    "q_stream_static_join",
+    "q_join_salted",
+    "q_multimodal_features",
+    "q_multimodal_resize",
+    "q_multimodal_frames",
+    "q_events_tumbling",
+    "q_events_sliding",
+    "q_events_session",
+    "q_text_decontaminate",
+    "q_text_pii",
+    "q_pipeline_shuffle",
+    "q_join_bucketed",
+    "q_events_outliers",
+    "q_pipeline_chunk",
+    "q_fn_count",
+    "q_fn_median",
+    "q_fn_approx_distinct",
+    "q_fn_approx_median",
+    "q_fn_approx_percentile",
+    "q_fn_array_agg",
+    "q_fn_string_agg",
+    "q_fn_first_last_value",
+    "q_fn_bool_and_or",
+    "q_fn_bit_agg",
+    "q_fn_stddev_var",
+    "q_fn_corr_covar",
+    "q_fn_regr",
+    "q_fn_greatest_least",
+    "q_fn_struct",
+    "q_dedup_paragraph",
+    "q_dedup_substring",
+    "q_sim_pq_topk",
+    "q_sim_truncation",
+    "q_text_tokens_bpe",
+    "q_text_tfidf",
+    "q_text_confusion",
+    "q_text_stats",
+    "q_pipeline_split",
+    "q_pipeline_epochs",
 )
 
 

@@ -18,8 +18,9 @@ at any scale.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_APP_NAME = "datafusion-wasm-bindings-spark"
 
@@ -87,6 +88,15 @@ def get_spark(
         # default (FIXTURES.md: ns → µs policy). Read nanos as long and
         # convert to µs timestamps at the view layer (sources/catalog.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Spark's codegen cache holds 100 classes by default, fewer than
+        # one ad-hoc statement mix: the 14 statements of perfbench's
+        # sql_adhoc compile 119-128 distinct classes, so every pass
+        # recompiled, and the JVM re-JITted, 50-76 of them (traced
+        # sql_adhoc, 4-vCPU VM). At 1000 the warm and timed passes
+        # compile 0. One pass over the whole 290-id registry compiles
+        # 3,100 distinct classes (sf0.001), so 1000 keeps several such
+        # mixes without holding every class a long session compiles.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -99,6 +109,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_rows(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
+    """Rows the engine already holds on the driver (PREPARE's empty
+    relation, EXPLAIN's plan text, COPY's row count, the
+    information_schema metadata) as a DataFrame with DDL ``schema``.
+
+    Built from an Arrow table, so it plans as a ``LocalTableScan`` and
+    collects without a Spark job. ``spark.createDataFrame(list, ddl)``
+    goes through ``sc.parallelize`` and a Python worker instead:
+    measured warm on a 4-vCPU VM at ``local[4]``, a two-row relation
+    cost 1 job, 4 tasks and 370-510 ms to collect that way, against
+    0 jobs and 26-50 ms from Arrow.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(struct.names, r)) for r in rows], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def size_scan_splits(spark: SparkSession, data_dir: str) -> int | None:

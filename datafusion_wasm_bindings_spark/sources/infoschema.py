@@ -3,52 +3,58 @@
 The reference enables DataFusion's information_schema
 (src/core.rs:62): `information_schema.{tables,columns,views,
 df_settings}` plus SHOW statements. Spark has no information_schema in
-the default (in-memory) catalog, so we synthesize the two relations
-queries actually use from ``spark.catalog``, matching DataFusion's
-column layout (table_catalog / table_schema / table_name / ...).
+the default (in-memory) catalog, so we synthesize the relations from
+``spark.catalog``, matching DataFusion's column layout (table_catalog /
+table_schema / table_name / ...).
 
-These are driver-side catalog lookups over a handful of entries —
-metadata, not data; scale is irrelevant by construction. Latency is
-not: `tables` composes SHOW TABLES/SHOW VIEWS lazily (evaluated
-JVM-side at query time, so the registered view is also *live* like
-DataFusion's), and `columns` reads analyzed schemas via
-``spark.table(name).schema`` — ~30× faster than per-table
-``catalog.listColumns`` py4j round-trips.
+Each relation is rebuilt for every statement that names it, and only
+the relations a statement names are rebuilt, so every statement sees
+the catalog as it is when it runs, like DataFusion's live views.
+`tables` and `views` come from the collected SHOW TABLES / SHOW VIEWS
+rows, `columns` from each table's analyzed schema
+(``spark.table(name).schema`` — ~30× faster than per-table
+``catalog.listColumns`` py4j round-trips). These are driver-side
+catalog lookups over a handful of entries — metadata, not data — and
+their rows become local relations (``session.local_rows``), which a
+query reads without a Spark job. `df_settings` stays a lazy
+``SET -v``.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from datafusion_wasm_bindings_spark.session import local_rows
 
 _TABLES_SCHEMA = "table_catalog string, table_schema string, table_name string, table_type string"
+_VIEWS_SCHEMA = "table_catalog string, table_schema string, table_name string, definition string"
 _COLUMNS_SCHEMA = (
     "table_catalog string, table_schema string, table_name string, "
     "column_name string, ordinal_position int, is_nullable string, data_type string"
 )
 
 
-def information_schema_tables(spark: SparkSession) -> DataFrame:
-    """information_schema.tables over the session catalog.
+def _table_rows(spark: SparkSession) -> list[tuple[str, str, str, str]]:
+    """The rows of information_schema.tables. table_type mirrors
+    DataFusion: 'BASE TABLE' for tables, 'VIEW' for (temp and
+    permanent) views."""
+    views = {r.viewName for r in spark.sql("SHOW VIEWS").collect()}
+    return [
+        (
+            "spark_catalog",
+            r.namespace or "default",
+            r.tableName,
+            "VIEW" if r.isTemporary or r.tableName in views else "BASE TABLE",
+        )
+        for r in spark.sql("SHOW TABLES").collect()
+    ]
 
-    table_type mirrors DataFusion: 'BASE TABLE' for tables, 'VIEW' for
-    (temp and permanent) views. Lazy: SHOW TABLES / SHOW VIEWS run
-    JVM-side when the result is consumed, not at registration.
-    """
-    t = spark.sql("SHOW TABLES")
-    v = spark.sql("SHOW VIEWS").select(
-        F.col("viewName").alias("tableName"), F.lit(True).alias("__is_view")
-    )
-    return t.join(v, "tableName", "left").select(
-        F.lit("spark_catalog").alias("table_catalog"),
-        F.when(F.col("namespace") == "", "default")
-        .otherwise(F.col("namespace"))
-        .alias("table_schema"),
-        F.col("tableName").alias("table_name"),
-        F.when(F.col("__is_view").isNotNull() | F.col("isTemporary"), "VIEW")
-        .otherwise("BASE TABLE")
-        .alias("table_type"),
-    )
+
+def information_schema_tables(spark: SparkSession) -> DataFrame:
+    """information_schema.tables over the session catalog."""
+    return local_rows(spark, _table_rows(spark), _TABLES_SCHEMA)
 
 
 def information_schema_columns(spark: SparkSession, table: str | None = None) -> DataFrame:
@@ -74,7 +80,7 @@ def information_schema_columns(spark: SparkSession, table: str | None = None) ->
                     fld.dataType.simpleString(),
                 )
             )
-    return spark.createDataFrame(rows, _COLUMNS_SCHEMA)
+    return local_rows(spark, rows, _COLUMNS_SCHEMA)
 
 
 # Definition text of views created THROUGH the engine's SQL surface
@@ -96,20 +102,12 @@ def forget_view_definition(name: str) -> None:
 def information_schema_views(spark: SparkSession) -> DataFrame:
     """information_schema.views: the VIEW rows of `tables`, with the
     definition text when the view was created through this engine."""
-    t = information_schema_tables(spark)
-    views = t.filter(t.table_type == "VIEW")
-    defs = spark.createDataFrame(
-        list(VIEW_DEFINITIONS.items()) or [("", "")],
-        "def_name string, definition string",
-    )
-    from pyspark.sql import functions as F
-
-    return (
-        views.join(
-            F.broadcast(defs), F.lower(views.table_name) == defs.def_name, "left"
-        )
-        .select("table_catalog", "table_schema", "table_name", "definition")
-    )
+    rows = [
+        (catalog, schema, name, VIEW_DEFINITIONS.get(name.lower()))
+        for catalog, schema, name, kind in _table_rows(spark)
+        if kind == "VIEW"
+    ]
+    return local_rows(spark, rows, _VIEWS_SCHEMA)
 
 
 def information_schema_df_settings(spark: SparkSession) -> DataFrame:
@@ -120,12 +118,17 @@ def information_schema_df_settings(spark: SparkSession) -> DataFrame:
     return spark.sql("SET -v").selectExpr("key AS name", "value")
 
 
-def register_information_schema(spark: SparkSession) -> None:
-    """Bind the emulated relations as temp views with is_-prefixed names
-    (Spark temp views cannot live in a dotted schema)."""
-    information_schema_tables(spark).createOrReplaceTempView("information_schema_tables")
-    information_schema_columns(spark).createOrReplaceTempView("information_schema_columns")
-    information_schema_views(spark).createOrReplaceTempView("information_schema_views")
-    information_schema_df_settings(spark).createOrReplaceTempView(
-        "information_schema_df_settings"
-    )
+_RELATIONS = {
+    "tables": information_schema_tables,
+    "columns": information_schema_columns,
+    "views": information_schema_views,
+    "df_settings": information_schema_df_settings,
+}
+
+
+def register_information_schema(spark: SparkSession, names: Iterable[str]) -> None:
+    """Bind the named relations ("tables", "columns", "views",
+    "df_settings") as temp views with information_schema_-prefixed
+    names (Spark temp views cannot live in a dotted schema)."""
+    for name in names:
+        _RELATIONS[name](spark).createOrReplaceTempView(f"information_schema_{name}")
