@@ -189,8 +189,9 @@ _COPY_RE = re.compile(
 
 
 def _split_exec_args(args: str) -> list[str]:
-    """Split EXECUTE's argument list on top-level commas (respects
-    quoted strings and parentheses)."""
+    """Split EXECUTE's argument list, or PREPARE's type list
+    (DECIMAL(18, 2) holds a nested comma), on top-level commas
+    (respects quoted strings and parentheses)."""
     out: list[str] = []
     buf: list[str] = []
     depth = 0
@@ -255,28 +256,6 @@ _PREPARE_TYPE_MAP = {
     "REAL": "FLOAT",
     "INTEGER": "INT",
 }
-
-
-def _split_prepare_types(types: str | None) -> list[str]:
-    """Split a PREPARE type list on top-level commas (DECIMAL(18, 2)
-    contains a nested comma) and normalize spellings."""
-    if not types or not types.strip():
-        return []
-    out: list[str] = []
-    depth, buf = 0, []
-    for ch in types:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    if "".join(buf).strip():
-        out.append("".join(buf).strip())
-    return [_PREPARE_TYPE_MAP.get(t.upper(), t.upper()) for t in out]
 
 
 class SQLEngine:
@@ -374,7 +353,10 @@ class SQLEngine:
         if m:
             self._prepared[m.group("name").lower()] = (
                 m.group("body").strip(),
-                _split_prepare_types(m.group("types")),
+                [
+                    _PREPARE_TYPE_MAP.get(t.upper(), t.upper())
+                    for t in _split_exec_args(m.group("types") or "")
+                ],
             )
             return local_rows(self.spark, [], "result string")
         m = _DEALLOCATE_RE.match(stmt)

@@ -19,7 +19,6 @@ distributed output use DataFrame writers (COPY TO, §2.1) instead.
 
 from __future__ import annotations
 
-import json
 from enum import Enum
 
 from pyspark.sql import DataFrame
@@ -88,12 +87,3 @@ def format_result(df: DataFrame, fmt: ResultFormat, max_rows: int | None = None)
     if fmt is ResultFormat.JSON:
         return format_json(df, max_rows)
     return format_table(df, max_rows)
-
-
-def format_empty(message: str = "") -> str:
-    """Rendering for statements with no result relation (DDL etc.)."""
-    return message
-
-
-def rows_to_json(rows: list[dict]) -> str:
-    return json.dumps(rows, default=str)

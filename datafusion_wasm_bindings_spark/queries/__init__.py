@@ -3,7 +3,9 @@ SURVEY.md §2 (plus §7.6 extensions).
 
 Each registered query is a pair:
 - a Spark implementation ``(spark, sf_dir) -> DataFrame`` (DataFrame
-  API or Spark SQL — Catalyst produces the same plan either way), and
+  API or SQL — every SQL string runs through ``SQLEngine.sql``, the
+  product path: statement dispatch, ``compat.rewrite``, shims and error
+  classification; Catalyst produces the same plan either way), and
 - an ANSI-SQL oracle string DuckDB runs over the same parquet views
   (or ``None`` for genuinely non-SQL-expressible operators → the
   driver records a weaker rows-only check).
@@ -24,6 +26,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datafusion_wasm_bindings_spark.engine import SQLEngine
 from datafusion_wasm_bindings_spark.sources.catalog import register_tables
 
 
@@ -158,48 +161,15 @@ def query(
 
 def _swap_table_refs(text: str, table: str, view: str) -> str:
     """Replace whole-word references to ``table`` with ``view``, never
-    touching string literals or comments (the compat scanner's r5
-    masking convention — ADVICE r12 on sql_query's raw re.sub): one
-    left-to-right scan masks '…' literals (with '' escapes) and
-    ``--`` / ``/* */`` comments behind \\x00 placeholders, the
-    word-boundary substitution runs on the masked text only, and the
-    masked spans are restored verbatim."""
+    touching string literals or comments: the substitution runs on the
+    text as ``compat._mask_literals`` masks it, and the masked spans are
+    restored verbatim."""
     import re
 
-    spans: list[str] = []
-    out: list[str] = []
-    i, n = 0, len(text)
-    while i < n:
-        c = text[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if text[j] == "'":
-                    if j + 1 < n and text[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append(text[i : min(j + 1, n)])
-            out.append(f"\x00{len(spans) - 1}\x00")
-            i = j + 1
-        elif c == "-" and text[i : i + 2] == "--":
-            j = text.find("\n", i)
-            j = n if j < 0 else j
-            spans.append(text[i:j])
-            out.append(f"\x00{len(spans) - 1}\x00")
-            i = j
-        elif c == "/" and text[i : i + 2] == "/*":
-            j = text.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            spans.append(text[i:j])
-            out.append(f"\x00{len(spans) - 1}\x00")
-            i = j
-        else:
-            out.append(c)
-            i += 1
-    masked = re.sub(rf"\b{re.escape(table)}\b", view, "".join(out))
-    return re.sub(r"\x00(\d+)\x00", lambda m: spans[int(m.group(1))], masked)
+    from datafusion_wasm_bindings_spark.compat import _mask_literals, _unmask
+
+    masked, spans = _mask_literals(text)
+    return _unmask(re.sub(rf"\b{re.escape(table)}\b", view, masked), spans)
 
 
 def sql_query(
@@ -211,20 +181,22 @@ def sql_query(
     tags: tuple[str, ...] = (),
     parallel_tables: tuple[str, ...] = (),
 ) -> None:
-    """Register a query whose Spark side is a SQL string.
+    """Register a query whose Spark side is a SQL string, run through
+    ``SQLEngine.sql`` like any statement a user sends the engine.
 
     ``oracle="same"`` (default) reuses the identical text for DuckDB —
     valid only where the dialects agree; pass an explicit string where
     they diverge, or None for rows-only.
 
     ``parallel_tables`` names fact tables whose scan should widen when
-    the fixture layout serializes it (catalog.table(parallel=True),
-    r12 guide §2.5): the Spark side runs the SAME SQL text over a
-    scoped temp view of the widened scan — the expression tree the r9
-    shared-string convention relies on is untouched (only the scan
+    the fixture layout serializes it (catalog.table(parallel=True)):
+    the Spark side runs the SAME SQL text over a scoped temp view of
+    the widened scan — the expression tree is untouched (only the scan
     node under it changes), and the ORACLE text keeps the original
-    table name. Opt in only on measured wins (decimal-moment
-    aggregates: q_fn_corr_covar 1.76→0.97 s at sf0.1); the exchange
+    table name. Opt in only on measured wins. Decimal-moment
+    aggregates at sf0.1 on 4 vCPUs (``local[4]``, median of 7
+    alternating warm runs, identical rows): q_fn_corr_covar 2.74 s
+    plain vs 1.46 s widened, q_fn_regr 2.25 s vs 1.48 s. The exchange
     is a no-op at healthy row-group layouts by construction.
     """
 
@@ -239,7 +211,7 @@ def sql_query(
                 view = f"{t}_par_{scratch.scope()}"
                 _table(spark, sf_dir, t, parallel=True).createOrReplaceTempView(view)
                 text = _swap_table_refs(text, t, view)
-        return spark.sql(text)
+        return SQLEngine(spark).sql(text)
 
     import sys as _sys
 

@@ -725,31 +725,23 @@ query(
 
 
 # ====================== function-catalog: bitwise / arrays ============
-def _fn_bitwise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bitwise operator coverage (mirrors DataFusion's binary bit
-    expressions, reference Cargo DataFusion 45 `&`/`|`/`#`/`<<`/`>>`):
-    pure-map projection, codegen'd JVM-side."""
-    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
-
-    register_tables(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT n_nationkey,
-               CAST(n_nationkey & 12 AS BIGINT) AS b_and,
-               CAST(n_nationkey | 5 AS BIGINT) AS b_or,
-               CAST(n_nationkey ^ 9 AS BIGINT) AS b_xor,
-               CAST(shiftleft(n_nationkey, 2) AS BIGINT) AS b_shl,
-               CAST(shiftright(n_nationkey, 1) AS BIGINT) AS b_shr,
-               CAST(bit_count(n_nationkey) AS BIGINT) AS b_pop,
-               CAST(~n_nationkey AS BIGINT) AS b_not
-        FROM nation
-        """
-    )
-
-
-query(
+# Bitwise operator coverage (mirrors DataFusion's binary bit
+# expressions, reference Cargo DataFusion 45 `&`/`|`/`#`/`<<`/`>>`):
+# pure-map projection, codegen'd JVM-side.
+sql_query(
     "q_fn_bitwise",
     """
+    SELECT n_nationkey,
+           CAST(n_nationkey & 12 AS BIGINT) AS b_and,
+           CAST(n_nationkey | 5 AS BIGINT) AS b_or,
+           CAST(n_nationkey ^ 9 AS BIGINT) AS b_xor,
+           CAST(shiftleft(n_nationkey, 2) AS BIGINT) AS b_shl,
+           CAST(shiftright(n_nationkey, 1) AS BIGINT) AS b_shr,
+           CAST(bit_count(n_nationkey) AS BIGINT) AS b_pop,
+           CAST(~n_nationkey AS BIGINT) AS b_not
+    FROM nation
+    """,
+    oracle="""
     SELECT n_nationkey,
            CAST(n_nationkey & 12 AS BIGINT) AS b_and,
            CAST(n_nationkey | 5 AS BIGINT) AS b_or,
@@ -761,40 +753,32 @@ query(
     FROM nation
     """,
     tags=("functions", "math"),
-)(_fn_bitwise)
+)
 
 
-def _fn_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-function catalog row (DataFusion's make_array /
-    array_contains / array_position / array_distinct / array_slice
-    family), surfaced hash-robust: arrays stringified via concat_ws,
-    positions/sizes as BIGINT."""
-    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
-
-    register_tables(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT n_nationkey,
-               concat_ws(',', array_sort(array(n_nationkey, n_regionkey, 7))) AS arr_sorted,
-               -- COALESCE: Spark array_contains is 3-valued (NULL when
-               -- no match but a NULL element exists); DuckDB
-               -- list_contains is total -> align on the total form
-               COALESCE(array_contains(array(n_nationkey, n_regionkey), 3), FALSE) AS has3,
-               CAST(array_position(array(10, 20, 30, n_nationkey), n_nationkey) AS BIGINT) AS pos,
-               -- count NON-NULL distinct: Spark array_distinct keeps a
-               -- NULL element, DuckDB list_distinct drops it
-               CAST(size(array_distinct(filter(array(n_nationkey, n_regionkey, n_regionkey),
-                                               x -> x IS NOT NULL))) AS BIGINT) AS n_uniq,
-               concat_ws(',', slice(array(1, 2, 3, 4, 5), 2, 3)) AS sliced,
-               concat_ws(',', array_sort(array_union(array(n_nationkey), array(n_regionkey)))) AS unioned
-        FROM nation
-        """
-    )
-
-
-query(
+# Array-function catalog row (DataFusion's make_array /
+# array_contains / array_position / array_distinct / array_slice
+# family), surfaced hash-robust: arrays stringified via concat_ws,
+# positions/sizes as BIGINT.
+sql_query(
     "q_fn_array_ops",
     """
+    SELECT n_nationkey,
+           concat_ws(',', array_sort(array(n_nationkey, n_regionkey, 7))) AS arr_sorted,
+           -- COALESCE: Spark array_contains is 3-valued (NULL when
+           -- no match but a NULL element exists); DuckDB
+           -- list_contains is total -> align on the total form
+           COALESCE(array_contains(array(n_nationkey, n_regionkey), 3), FALSE) AS has3,
+           CAST(array_position(array(10, 20, 30, n_nationkey), n_nationkey) AS BIGINT) AS pos,
+           -- count NON-NULL distinct: Spark array_distinct keeps a
+           -- NULL element, DuckDB list_distinct drops it
+           CAST(size(array_distinct(filter(array(n_nationkey, n_regionkey, n_regionkey),
+                                           x -> x IS NOT NULL))) AS BIGINT) AS n_uniq,
+           concat_ws(',', slice(array(1, 2, 3, 4, 5), 2, 3)) AS sliced,
+           concat_ws(',', array_sort(array_union(array(n_nationkey), array(n_regionkey)))) AS unioned
+    FROM nation
+    """,
+    oracle="""
     SELECT n_nationkey,
            array_to_string(list_sort([n_nationkey, n_regionkey, 7]), ',') AS arr_sorted,
            list_contains([n_nationkey, n_regionkey], 3) AS has3,
@@ -807,7 +791,7 @@ query(
     FROM nation
     """,
     tags=("functions", "core"),
-)(_fn_array_ops)
+)
 
 
 # ====================== k-fold CV + snapshot diff =====================
@@ -980,31 +964,23 @@ query(
 
 
 # ====================== higher-order functions / UDTF =================
-def _fn_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lambda higher-order-function catalog row (DataFusion's array
-    lambdas; Spark: transform/filter/exists/aggregate/zip_with), all
-    inside codegen — output stringified hash-robust."""
-    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
-
-    register_tables(spark, sf_dir)
-    return spark.sql(
-        """
-        SELECT n_nationkey,
-               concat_ws(',', transform(sequence(1, 4), x -> x * n_nationkey)) AS mul,
-               concat_ws(',', filter(sequence(1, 10), x -> x % (n_nationkey + 2) = 0)) AS filtered,
-               exists(sequence(1, 10), x -> x = n_nationkey) AS has_key,
-               CAST(aggregate(sequence(1, n_nationkey % 5 + 3), 0,
-                              (acc, x) -> acc + x * x) AS BIGINT) AS sumsq,
-               concat_ws(',', zip_with(sequence(1, 3), sequence(4, 6),
-                                       (a, b) -> a * 10 + b)) AS zipped
-        FROM nation
-        """
-    )
-
-
-query(
+# Lambda higher-order-function catalog row (DataFusion's array
+# lambdas; Spark: transform/filter/exists/aggregate/zip_with), all
+# inside codegen — output stringified hash-robust.
+sql_query(
     "q_fn_higher_order",
     """
+    SELECT n_nationkey,
+           concat_ws(',', transform(sequence(1, 4), x -> x * n_nationkey)) AS mul,
+           concat_ws(',', filter(sequence(1, 10), x -> x % (n_nationkey + 2) = 0)) AS filtered,
+           exists(sequence(1, 10), x -> x = n_nationkey) AS has_key,
+           CAST(aggregate(sequence(1, n_nationkey % 5 + 3), 0,
+                          (acc, x) -> acc + x * x) AS BIGINT) AS sumsq,
+           concat_ws(',', zip_with(sequence(1, 3), sequence(4, 6),
+                                   (a, b) -> a * 10 + b)) AS zipped
+    FROM nation
+    """,
+    oracle="""
     SELECT n_nationkey,
            COALESCE(array_to_string(list_transform(generate_series(1, 4),
                                                    x -> x * n_nationkey), ','),
@@ -1019,7 +995,7 @@ query(
     FROM nation
     """,
     tags=("functions", "core", "lambda"),
-)(_fn_higher_order)
+)
 
 
 def _fn_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1031,9 +1007,7 @@ def _fn_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     unnest+GROUP BY."""
     from pyspark.sql.functions import udtf
 
-    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
-
-    register_tables(spark, sf_dir)
+    from datafusion_wasm_bindings_spark.engine import SQLEngine
 
     @udtf(returnType="word string, n bigint")
     class WordCounts:
@@ -1050,7 +1024,7 @@ def _fn_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield w, n
 
     spark.udtf.register("dfwb_word_counts", WordCounts)
-    return spark.sql(
+    return SQLEngine(spark).sql(
         """
         SELECT d.doc_id, t.word, t.n
         FROM documents d, LATERAL dfwb_word_counts(d.text) t

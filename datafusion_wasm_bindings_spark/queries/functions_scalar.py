@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_wasm_bindings_spark.queries import query, sql_query
-from datafusion_wasm_bindings_spark.sources.catalog import register_tables
 
 # --- core: null handling ----------------------------------------------
 sql_query(
@@ -121,27 +120,21 @@ sql_query(
 )
 
 # --- math: Spark gaps (gcd/lcm UDF shims, factorial, isnan/nanvl) --------
-def _math_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datafusion_wasm_bindings_spark.functions.shims import ensure_registered
-
-    ensure_registered(spark)
-    return spark.sql(
-        """
-        SELECT p_partkey,
-               dfwb_gcd(p_size, 24) AS g,
-               dfwb_lcm(p_size, 4) AS l,
-               factorial(p_size % 10) AS fac,
-               isnan(p_retailprice / 1.0) AS is_nan,
-               nanvl(p_retailprice, -1.0) AS nan_fixed,
-               (p_size = 0) AS is_zero
-        FROM part WHERE p_partkey <= 200 AND p_size > 0
-        """
-    )
-
-
-query(
+# gcd/lcm are the DataFusion spellings; compat renames them to the
+# dfwb_gcd/dfwb_lcm shims the engine registers
+sql_query(
     "q_fn_math_gaps",
     """
+    SELECT p_partkey,
+           gcd(p_size, 24) AS g,
+           lcm(p_size, 4) AS l,
+           factorial(p_size % 10) AS fac,
+           isnan(p_retailprice / 1.0) AS is_nan,
+           nanvl(p_retailprice, -1.0) AS nan_fixed,
+           (p_size = 0) AS is_zero
+    FROM part WHERE p_partkey <= 200 AND p_size > 0
+    """,
+    oracle="""
     SELECT p_partkey,
            gcd(p_size, 24) AS g,
            lcm(p_size, 4) AS l,
@@ -154,19 +147,16 @@ query(
     FROM part WHERE p_partkey <= 200 AND p_size > 0
     """,
     tags=("functions", "math"),
-)(_math_gaps)
+)
 
 # --- introspection: arrow_typeof / version (SURVEY §2.8 "—" rows) ---------
 def _typeof_version(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
-    from datafusion_wasm_bindings_spark.functions.shims import (
-        arrow_typeof,
-        ensure_registered,
-    )
+    from datafusion_wasm_bindings_spark.engine import SQLEngine
+    from datafusion_wasm_bindings_spark.functions.shims import arrow_typeof
 
-    ensure_registered(spark)
-    version_ok = spark.sql(
+    version_ok = SQLEngine(spark).sql(
         "SELECT dfwb_version() RLIKE '^datafusion-wasm-bindings-spark' AS ok"
     ).collect()[0].ok
     return spark.range(1).select(

@@ -24,6 +24,7 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datafusion_wasm_bindings_spark.engine import SQLEngine
 from datafusion_wasm_bindings_spark.queries import query, sql_query
 from datafusion_wasm_bindings_spark.sources.catalog import TABLE_NAMES
 
@@ -124,7 +125,7 @@ def _scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # by sampling (SURVEY §1 schema row)
     df = spark.read.csv(csv_path, header=True, inferSchema=True)
     df.createOrReplaceTempView("nation_csv")
-    return spark.sql(
+    return SQLEngine(spark).sql(
         "SELECT n_nationkey, n_name, n_regionkey FROM nation_csv WHERE n_regionkey <= 3"
     )
 
@@ -193,7 +194,7 @@ def _scan_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInArrow(_decode_ipc, spark_schema)
     )
     df.createOrReplaceTempView("nation_arrow")
-    return spark.sql(
+    return SQLEngine(spark).sql(
         "SELECT n_nationkey, n_name, n_regionkey FROM nation_arrow WHERE n_regionkey <= 3"
     )
 
@@ -219,7 +220,7 @@ def _scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT, n_comment STRING"
     ).json(json_path)
     df.createOrReplaceTempView("nation_json")
-    return spark.sql(
+    return SQLEngine(spark).sql(
         "SELECT n_nationkey, n_name FROM nation_json WHERE n_nationkey < 20"
     )
 
@@ -252,13 +253,14 @@ sql_query(
 
 # --- q_values_ctas: CREATE TABLE AS VALUES → MemTable equivalent --------------
 def _values_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.sql(
+    eng = SQLEngine(spark)
+    eng.sql(
         """
         CREATE OR REPLACE TEMP VIEW ctas_colors AS
         SELECT k, color FROM VALUES (1, 'red'), (2, 'green'), (3, 'blue') AS t(k, color)
         """
     )
-    return spark.sql("SELECT k, upper(color) AS c FROM ctas_colors WHERE k >= 2")
+    return eng.sql("SELECT k, upper(color) AS c FROM ctas_colors WHERE k >= 2")
 
 
 query(
@@ -307,7 +309,8 @@ def _copy_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesce(1): deterministic single file for the oracle glob; at
     # scale you would keep task-parallel part files instead.
     (
-        spark.sql("SELECT n_nationkey, n_name, n_regionkey FROM nation WHERE n_regionkey <= 2")
+        SQLEngine(spark)
+        .sql("SELECT n_nationkey, n_name, n_regionkey FROM nation WHERE n_regionkey <= 2")
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(out)
@@ -331,8 +334,6 @@ def _copy_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COPY … STORED AS CSV through the engine, read back with
     header+inference — closes the CSV leg of the reference's COPY
     surface (SURVEY §2.1 sink row)."""
-    from datafusion_wasm_bindings_spark.engine import SQLEngine
-
     out = os.path.join(_OUT_ROOT, _sf_tag(sf_dir), f"copy_nation_csv_{_scope()}")
     SQLEngine(spark).sql(
         f"COPY (SELECT n_nationkey, n_name, n_regionkey FROM nation "
@@ -360,8 +361,6 @@ query(
 def _copy_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COPY … STORED AS JSON (newline-delimited) through the engine,
     read back — the JSON leg of the COPY surface."""
-    from datafusion_wasm_bindings_spark.engine import SQLEngine
-
     out = os.path.join(_OUT_ROOT, _sf_tag(sf_dir), f"copy_nation_json_{_scope()}")
     SQLEngine(spark).sql(
         f"COPY (SELECT n_nationkey, n_name, n_regionkey FROM nation "
@@ -396,8 +395,6 @@ def _scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     on read, Spark prunes to the single o_orderstatus=F directory
     (PartitionFilters — asserted in tests/test_plans.py), the
     mechanism that turns a 100 TB scan into a one-partition scan."""
-    from datafusion_wasm_bindings_spark.engine import SQLEngine
-
     out = os.path.join(_OUT_ROOT, _sf_tag(sf_dir), f"copy_orders_by_status_{_scope()}")
     SQLEngine(spark).sql(
         f"COPY (SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders) "
@@ -503,16 +500,17 @@ def _insert_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     tbl = f"dfwb_insert_target_{_scope()}"
     loc = os.path.join(_OUT_ROOT, _sf_tag(sf_dir), f"insert_target_{_scope()}")
     shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    spark.sql(
+    eng = SQLEngine(spark)
+    eng.sql(f"DROP TABLE IF EXISTS {tbl}")
+    eng.sql(
         f"""
         CREATE TABLE {tbl} (k BIGINT, name STRING)
         USING PARQUET LOCATION '{loc}'
         """
     )
-    spark.sql(f"INSERT INTO {tbl} SELECT n_nationkey, n_name FROM nation WHERE n_regionkey = 0")
-    spark.sql(f"INSERT INTO {tbl} VALUES (100, 'atlantis'), (101, 'lemuria')")
-    return spark.sql(f"SELECT k, name FROM {tbl}")
+    eng.sql(f"INSERT INTO {tbl} SELECT n_nationkey, n_name FROM nation WHERE n_regionkey = 0")
+    eng.sql(f"INSERT INTO {tbl} VALUES (100, 'atlantis'), (101, 'lemuria')")
+    return eng.sql(f"SELECT k, name FROM {tbl}")
 
 
 query(

@@ -12,12 +12,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datafusion_wasm_bindings_spark.engine import SQLEngine
 from datafusion_wasm_bindings_spark.queries import query, sql_query
 
 # --- q_multi_statement: script through the engine wrapper --------------
 def _multi_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datafusion_wasm_bindings_spark.engine import SQLEngine
-
     eng = SQLEngine(spark)
     eng.execute_sql(
         """
@@ -74,7 +73,7 @@ sql_query(
 def _recursive_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_wasm_bindings_spark.plans.recursive import recursive_fixpoint
 
-    seed = spark.sql("SELECT 1 AS n")
+    seed = SQLEngine(spark).sql("SELECT 1 AS n")
 
     def step(prev: DataFrame) -> DataFrame:
         return prev.filter("n < 25").selectExpr("n + 1 AS n")
@@ -94,13 +93,14 @@ query(
     tags=("statements", "recursive", "compat"),
 )(_recursive_loop)
 
-# --- q_prepared: parameterized statements (PREPARE/EXECUTE analogue) ---------
+# --- q_prepared: the engine's PREPARE / EXECUTE with typed binding ----------
 def _prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(
-        "SELECT o_orderkey, o_totalprice FROM orders "
-        "WHERE o_totalprice > :min_price AND o_orderstatus = :status",
-        args={"min_price": 150000, "status": "O"},
+    eng = SQLEngine(spark)
+    eng.sql(
+        "PREPARE p(DOUBLE, STRING) AS SELECT o_orderkey, o_totalprice FROM orders "
+        "WHERE o_totalprice > $1 AND o_orderstatus = $2"
     )
+    return eng.sql("EXECUTE p(150000, 'O')")
 
 
 query(
@@ -114,14 +114,15 @@ query(
 
 # --- q_ddl_view ---------------------------------------------------------------
 def _ddl_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.sql("DROP VIEW IF EXISTS ddl_rich_customers")
-    spark.sql(
+    eng = SQLEngine(spark)
+    eng.sql("DROP VIEW IF EXISTS ddl_rich_customers")
+    eng.sql(
         """
         CREATE TEMP VIEW ddl_rich_customers AS
         SELECT c_custkey, c_name, c_acctbal FROM customer WHERE c_acctbal > 5000
         """
     )
-    return spark.sql(
+    return eng.sql(
         "SELECT c_custkey, c_name FROM ddl_rich_customers WHERE c_custkey <= 1000"
     )
 

@@ -218,37 +218,75 @@ def test_information_schema_views_and_settings(engine, spark, sf_dir):
     assert settings.count() == 1
 
 
-def test_distinct_on_in_nested_subquery_and_cte_body(spark, sf_dir):
-    import duckdb
-
-    from datafusion_wasm_bindings_spark.engine import SQLEngine
-    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
-
-    register_tables(spark, sf_dir)
-    eng = SQLEngine(spark)
-    duck = duckdb.connect()
-    duck.sql(f"CREATE VIEW nation AS FROM '{sf_dir}/nation.parquet'")
-
-    shapes = [
-        # derived table
+# Dialect oracle coverage: each case is a DataFusion-dialect text that
+# needs a compat rewrite to run on Spark (run through SQLEngine.sql) and
+# the DuckDB text with the same meaning, compared like the registry's
+# oracle gate. Each case fails when its rewrite is disabled.
+_DIALECT_CASES = {
+    "similar_to": (
+        "SELECT n_name, n_name SIMILAR TO '%(1|2)_' AS two_digit FROM nation "
+        "WHERE n_name NOT SIMILAR TO '%[5-9]'",
+        "SELECT n_name, regexp_full_match(n_name, '.*(1|2).') AS two_digit "
+        "FROM nation WHERE NOT regexp_full_match(n_name, '.*[5-9]')",
+    ),
+    "distinct_on_derived_table": (
         "SELECT t.n_regionkey, t.n_name FROM "
         "(SELECT DISTINCT ON (n_regionkey) n_regionkey, n_name "
         " FROM nation ORDER BY n_regionkey, n_name) t "
         "WHERE t.n_regionkey < 3 ORDER BY t.n_regionkey",
-        # CTE *body* (not the final SELECT)
+        "same",
+    ),
+    "distinct_on_cte_body": (
         "WITH firsts AS (SELECT DISTINCT ON (n_regionkey) n_regionkey, n_name "
         "  FROM nation ORDER BY n_regionkey, n_name DESC) "
         "SELECT n_regionkey, n_name FROM firsts ORDER BY n_regionkey",
-        # two occurrences: CTE body and final SELECT
+        "same",
+    ),
+    "distinct_on_cte_body_and_final_select": (
         "WITH firsts AS (SELECT DISTINCT ON (n_regionkey) n_regionkey, n_name "
         "  FROM nation ORDER BY n_regionkey, n_name) "
         "SELECT DISTINCT ON (n_name) n_name, n_regionkey FROM firsts "
         "ORDER BY n_name, n_regionkey",
-    ]
-    for sql in shapes:
-        got = sorted(tuple(r) for r in eng.sql(sql).collect())
-        want = sorted(tuple(r) for r in duck.sql(sql).fetchall())
-        assert got == want, sql
+        "same",
+    ),
+    "date_bin": (
+        "SELECT o_orderkey, CAST(date_bin(INTERVAL '7' DAY, "
+        "CAST(o_orderdate AS TIMESTAMP), TIMESTAMP '1970-01-05 00:00:00') AS STRING) AS wk "
+        "FROM orders WHERE o_orderkey <= 200",
+        "SELECT o_orderkey, CAST(time_bucket(INTERVAL '7 days', "
+        "CAST(o_orderdate AS TIMESTAMP), TIMESTAMP '1970-01-05 00:00:00') AS VARCHAR) AS wk "
+        "FROM orders WHERE o_orderkey <= 200",
+    ),
+    "to_char": (
+        "SELECT o_orderkey, to_char(o_orderdate, '%Y-%m (%d)') AS s "
+        "FROM orders WHERE o_orderkey <= 200",
+        "SELECT o_orderkey, strftime(o_orderdate, '%Y-%m (%d)') AS s "
+        "FROM orders WHERE o_orderkey <= 200",
+    ),
+    "arrow_cast": (
+        "SELECT o_orderkey, arrow_cast(o_totalprice, 'Int64') AS p, "
+        "arrow_cast(o_orderkey, 'Utf8') AS k FROM orders WHERE o_orderkey <= 200",
+        "SELECT o_orderkey, CAST(trunc(o_totalprice) AS BIGINT) AS p, "
+        "CAST(o_orderkey AS VARCHAR) AS k FROM orders WHERE o_orderkey <= 200",
+    ),
+    "gcd_lcm": (
+        "SELECT p_partkey, gcd(p_size - 25, 24) AS g, lcm(p_size % 5, 4) AS l "
+        "FROM part WHERE p_partkey <= 200",
+        "same",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DIALECT_CASES))
+def test_dialect_case_matches_duckdb(case, engine, spark, duck, sf_dir):
+    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
+    from tests.conftest import assert_oracle_match
+
+    datafusion_sql, duckdb_sql = _DIALECT_CASES[case]
+    register_tables(spark, sf_dir)
+    got = engine.sql(datafusion_sql)
+    want = duck.sql(datafusion_sql if duckdb_sql == "same" else duckdb_sql)
+    assert_oracle_match(got, want, case)
 
 
 def test_groups_frame_through_engine(spark):

@@ -73,3 +73,37 @@ def test_coverage_inventory_matches_registry():
     )
     m = re.search(r"\*\*Registry: (\d+) queries; (\d+) with full oracles\.\*\*", text)
     assert m and int(m.group(1)) == len(reg) == int(m.group(2)), (m, len(reg))
+
+
+def test_no_direct_spark_sql_in_query_modules():
+    """One SQL execution path: query modules hand SQL to SQLEngine.sql
+    (dispatch, compat.rewrite, shims, error classification), never to
+    spark.sql directly."""
+    import pathlib
+
+    from datafusion_wasm_bindings_spark import queries
+
+    direct = [
+        f"{path.name}:{i}"
+        for path in sorted(pathlib.Path(queries.__file__).parent.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "spark.sql(" in line
+    ]
+    assert not direct, f"spark.sql( in query modules (use SQLEngine(spark).sql): {direct}"
+
+
+def test_sql_query_runs_through_compat_rewrite(spark, sf_dir, monkeypatch):
+    """A sql_query entry's text passes through the engine's dialect
+    layer exactly once."""
+    from datafusion_wasm_bindings_spark import compat
+
+    calls = []
+    real = compat.rewrite
+
+    def counting(sql):
+        calls.append(sql)
+        return real(sql)
+
+    monkeypatch.setattr(compat, "rewrite", counting)
+    REGISTRY["q_cte"].spark_fn(spark, sf_dir)
+    assert len(calls) == 1, calls
