@@ -23,6 +23,7 @@ Differences by design (documented quirks, SURVEY.md §0):
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -258,6 +259,17 @@ _PREPARE_TYPE_MAP = {
 }
 
 
+@contextmanager
+def _classified():
+    """Re-raise whatever the block raises as an ``EngineError``."""
+    try:
+        yield
+    except EngineError:
+        raise
+    except Exception as exc:  # noqa: BLE001 - re-raise classified
+        raise classify_spark_error(exc) from exc
+
+
 class SQLEngine:
     """SQL string in → formatted result string out, over Spark.
 
@@ -320,20 +332,18 @@ class SQLEngine:
 
     def sql(self, stmt: str) -> DataFrame:
         """Single statement → DataFrame (the lazy, composable surface)."""
-        try:
-            df = self._dispatch(stmt)
-        except EngineError:
-            raise
-        except Exception as exc:  # noqa: BLE001 - re-raise classified
-            raise classify_spark_error(exc) from exc
-        return df
+        with _classified():
+            return self._dispatch(stmt)
 
     def _execute_statement(self, stmt: str) -> str:
-        df = self.sql(stmt)
-        return format_result(df, self.result_format, self.max_rows)
+        # the statement runs inside format_result: its errors (an ANSI
+        # cast failure, say) are classified like planning errors
+        with _classified():
+            return format_result(self._dispatch(stmt), self.result_format, self.max_rows)
 
     def _dispatch(self, stmt: str) -> DataFrame:
-        m = _SET_DF_RE.match(stmt.strip())
+        stmt = stmt.strip()
+        m = _SET_DF_RE.match(stmt)
         if m:
             mapped = _DF_SETTING_TO_SPARK.get(m.group("key").lower())
             if mapped:
@@ -387,7 +397,7 @@ class SQLEngine:
         m = _COPY_RE.match(stmt)
         if m:
             return self._copy_to(m)
-        m = _CREATE_VIEW_RE.match(stmt.strip())
+        m = _CREATE_VIEW_RE.match(stmt)
         if m:
             from datafusion_wasm_bindings_spark.sources.infoschema import (
                 record_view_definition,
@@ -397,16 +407,15 @@ class SQLEngine:
                 m.group("name").strip('"`').split(".")[-1], m.group("body").strip()
             )
             # fall through: Spark executes the DDL itself
-        m = _DROP_VIEW_RE.match(stmt.strip())
+        m = _DROP_VIEW_RE.match(stmt)
         if m:
             from datafusion_wasm_bindings_spark.sources.infoschema import (
                 forget_view_definition,
             )
 
             forget_view_definition(m.group("name").strip('"`').split(".")[-1])
-        stripped = stmt.strip()
-        m_analyze = _EXPLAIN_ANALYZE_RE.match(stripped)
-        m_explain = None if m_analyze else _EXPLAIN_RE.match(stripped)
+        m_analyze = _EXPLAIN_ANALYZE_RE.match(stmt)
+        m_explain = None if m_analyze else _EXPLAIN_RE.match(stmt)
         if m_explain:
             # reference: DataFusion's EXPLAIN (inherited through the
             # binding's execute_sql pass-through, core.rs:72-80 over
@@ -420,7 +429,7 @@ class SQLEngine:
             # engines' physical operators genuinely differ, and
             # inventing DataFusion physical names for Spark operators
             # would misreport what will run).
-            body = stripped[m_explain.end():]
+            body = stmt[m_explain.end():]
             mode = body.split(None, 1)[0].upper() if body.split() else ""
             if mode in ("EXTENDED", "FORMATTED", "CODEGEN", "COST"):
                 # Spark's own explain modes keep Spark's renderer —
@@ -476,13 +485,13 @@ class SQLEngine:
             # Spark's EXPLAIN never executes, so run the query first and
             # return the post-AQE executed plan (the plan that actually
             # ran, with runtime-chosen joins/partition counts).
-            body = stripped[m_analyze.end():]
+            body = stmt[m_analyze.end():]
             df = self._dispatch(body)
             n = df.count()
             plan = df._jdf.queryExecution().executedPlan().toString()
             lines = [f"rows: {n}"] + plan.splitlines()
             return local_rows(self.spark, [(line,) for line in lines], "plan string")
-        if stripped.upper() == "SHOW ALL":
+        if stmt.upper() == "SHOW ALL":
             # reference: SHOW ALL lists datafusion.* settings via
             # information_schema.df_settings (core.rs:62); Spark's
             # equivalent listing is SET -v

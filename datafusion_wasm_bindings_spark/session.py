@@ -13,6 +13,19 @@ Scale posture: shuffle partitions default to the local core count for
 tests/bench; on a real cluster this would be executors*cores*2-3 or
 left to AQE coalescing, which is enabled here and does the right thing
 at any scale.
+
+Cold start: ``get_spark`` starts a new driver JVM from a class-data-sharing
+archive (``cds.py``), the parsed and verified form of the ~11,000 Spark,
+Scala and Hadoop classes a session loads. It lives in
+``$XDG_CACHE_HOME/datafusion-wasm-bindings-spark/cds/<key>.jsa``
+(``~/.cache`` without ``XDG_CACHE_HOME``). The key hashes the JDK's
+module image and the Spark jar set, so a new JDK or Spark install gets
+a new archive; the JVM itself also ignores an archive that no longer
+fits. The first process that finds no archive writes it when its JVM
+exits, a one-time ~10 s wait at that exit. Deleting the directory is
+always safe: the next start writes it again. A user conf file in the
+Spark conf dir, an extra driver classpath or Spark Connect mode start
+the JVM plainly, as does any archive that is missing or being written.
 """
 
 from __future__ import annotations
@@ -21,6 +34,8 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+
+from datafusion_wasm_bindings_spark import cds
 
 DEFAULT_APP_NAME = "datafusion-wasm-bindings-spark"
 
@@ -106,7 +121,7 @@ def get_spark(
         builder = builder.master(f"local[{default_parallelism()}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = cds.get_or_create(builder, extra_conf or {})
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -56,6 +56,26 @@ def test_error_hierarchy(engine):
         engine.sql("SELEKT 1")
 
 
+def test_execution_errors_are_classified(engine):
+    # the ANSI cast fails only while the statement runs, inside result
+    # formatting
+    engine.spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(EngineError):
+            engine.execute_sql("SELECT CAST('abc' AS INT) AS v")
+    finally:
+        engine.spark.conf.unset("spark.sql.ansi.enabled")
+
+
+def test_sql_dispatches_statements_with_leading_whitespace(engine):
+    # SQLEngine.sql is the registry's path: unlike execute_sql, nothing
+    # strips the statement before dispatch
+    engine.sql("\n    PREPARE p_ws AS SELECT 1 AS x")
+    assert engine.sql("\n  EXECUTE p_ws").collect()[0]["x"] == 1
+    engine.sql("  DEALLOCATE p_ws  ")
+    assert "p_ws" not in engine._prepared
+
+
 def test_create_external_table(engine, sf_dir):
     engine.execute_sql(
         f"CREATE EXTERNAL TABLE ext_nation STORED AS PARQUET LOCATION '{sf_dir}/nation.parquet'"
