@@ -10,6 +10,7 @@ rewrites applied by ``SQLEngine`` before ``spark.sql``:
   pass through, which matches DataFusion's own translation).
 - ``arrow_cast(x, 'Int64')`` → ``CAST(x AS BIGINT)`` with the Arrow
   type-name table from SURVEY §1.1.
+- ``"ident"`` → a backtick identifier (Postgres quoting → Spark's).
 - ``information_schema.tables/columns`` → the emulated temp views
   (sources/infoschema.py) — Spark temp views cannot live in a dotted
   schema, so the reference's relation names are flattened.
@@ -48,16 +49,19 @@ ARROW_TO_SPARK_TYPE = {
 }
 
 
+_QUOTE_OR_COMMENT_RE = re.compile(r"['\"]|--|/\*")
+
+
 def _mask_literals(sql: str) -> tuple[str, list[str]]:
-    """Single left-to-right scan that (a) replaces 'string literals'
-    with placeholders so rewrites never touch literal contents,
-    (b) converts double-quoted identifiers to Spark backticks in place
-    (DataFusion/Postgres dialect, SURVEY §1.1 — unambiguous because ''
-    is the string quote and "" the identifier quote), and (c) masks
-    -- line and /* block */ comments with the SAME placeholders, so a
+    """Single left-to-right scan that replaces with placeholders
+    (a) 'string literals', so rewrites never touch literal contents,
+    (b) "double-quoted identifiers" (DataFusion/Postgres dialect,
+    SURVEY §1.1 — unambiguous because '' is the string quote and "" the
+    identifier quote), and (c) -- line and /* block */ comments, so a
     function name or DISTINCT ON mentioned inside a comment can never
-    trigger a rewrite (ADVICE r4); comments are restored verbatim by
-    ``_unmask``.
+    trigger a rewrite (ADVICE r4). ``_unmask`` restores every masked
+    token verbatim, so a split or match on the masked text maps back to
+    the statement exactly as written.
 
     A regex pass per quote kind cannot do this: a single quote inside
     "a'b" or inside a comment would open a phantom string literal and
@@ -68,6 +72,13 @@ def _mask_literals(sql: str) -> tuple[str, list[str]]:
     out: list[str] = []
     i, n = 0, len(sql)
     while i < n:
+        # plain text up to the next quote or comment start goes as is
+        m = _QUOTE_OR_COMMENT_RE.search(sql, i)
+        if m is None:
+            out.append(sql[i:])
+            break
+        out.append(sql[i : m.start()])
+        i = m.start()
         c = sql[i]
         if c == "'":
             j = i + 1
@@ -90,31 +101,33 @@ def _mask_literals(sql: str) -> tuple[str, list[str]]:
                         continue
                     break
                 j += 1
-            body = sql[i + 1 : j].replace('""', '"').replace("`", "``")
-            out.append("`" + body + "`")
+            literals.append(sql[i : j + 1])
+            out.append(f"\x00I{len(literals) - 1}\x00")
             i = j + 1
-        elif c == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            j = n if j < 0 else j
-            literals.append(sql[i:j])
-            out.append(f"\x00C{len(literals) - 1}\x00")
-            i = j
-        elif c == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            j = n if j < 0 else j + 2
-            literals.append(sql[i:j])
-            out.append(f"\x00C{len(literals) - 1}\x00")
-            i = j
         else:
-            out.append(c)
-            i += 1
+            if c == "-":  # -- line comment, up to its newline
+                j = sql.find("\n", i)
+                j = n if j < 0 else j
+            else:  # /* block */ comment
+                j = sql.find("*/", i + 2)
+                j = n if j < 0 else j + 2
+            literals.append(sql[i:j])
+            out.append(f"\x00C{len(literals) - 1}\x00")
+            i = j
     return "".join(out), literals
 
 
+_PLACEHOLDER_RE = re.compile(r"\x00[LCI](\d+)\x00")
+
+
 def _unmask(sql: str, literals: list[str]) -> str:
-    for i, lit in enumerate(literals):
-        sql = sql.replace(f"\x00L{i}\x00", lit).replace(f"\x00C{i}\x00", lit)
-    return sql
+    return _PLACEHOLDER_RE.sub(lambda m: literals[int(m.group(1))], sql)
+
+
+def _backticked(ident: str) -> str:
+    """A "double-quoted" identifier in Spark's `backtick` quoting."""
+    body = ident[1:-1] if len(ident) > 1 and ident.endswith('"') else ident[1:]
+    return "`" + body.replace('""', '"').replace("`", "``") + "`"
 
 
 def similar_to_regex(pattern: str) -> str:
@@ -539,18 +552,10 @@ def rewrite_groups_frames(masked: str) -> str:
     return masked
 
 
-_SHOW_VAR_RE = re.compile(r"^\s*SHOW\s+((?:\w+\.)+\w+)\s*$", re.IGNORECASE)
-
-
 def rewrite(sql: str) -> str:
     """Apply all dialect rewrites to one statement."""
-    # SHOW <dotted.variable> (DataFusion reads one config var) → Spark
-    # reads a conf with valueless SET; keyword SHOW forms (TABLES,
-    # VIEWS, ...) never start with a dotted identifier
-    m = _SHOW_VAR_RE.match(sql)
-    if m:
-        sql = f"SET {m.group(1)}"
     masked, lits = _mask_literals(sql)
+    lits = [_backticked(t) if t.startswith('"') else t for t in lits]
 
     def _kept_comments(m: re.Match) -> str:
         """Comment placeholders consumed by an adjacency rewrite:

@@ -18,6 +18,16 @@ Differences by design (documented quirks, SURVEY.md §0):
   allow an endpoint override.
 - multi-statement scripts return per-statement outputs joined with
   newlines, matching core.rs:127.
+
+Every statement takes one path (the reference parses a script once
+with DFParser and runs each statement through one pipeline,
+core.rs:103-111): it is masked once with ``compat._mask_literals``
+(literals, quoted identifiers and comments become placeholders), so a
+comment is whitespace to every statement pattern; the pre-hooks and
+then the first row of ``SQLEngine._HANDLERS`` whose pattern matches
+the whole statement run; a statement no row matches is plain SQL for
+Spark. Handlers read their pieces back with ``_unmask``, in the
+statement's original spelling.
 """
 
 from __future__ import annotations
@@ -27,117 +37,65 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_wasm_bindings_spark.errors import EngineError, classify_spark_error
+from datafusion_wasm_bindings_spark import compat
+from datafusion_wasm_bindings_spark.compat import _WS, _WS1, _mask_literals, _parse_args, _unmask
+from datafusion_wasm_bindings_spark.errors import (
+    EngineError,
+    ParseError,
+    PlanError,
+    classify_spark_error,
+)
 from datafusion_wasm_bindings_spark.formats import ResultFormat, format_result
 from datafusion_wasm_bindings_spark.session import get_spark, local_rows
+from datafusion_wasm_bindings_spark.sources.infoschema import (
+    forget_view_definition,
+    record_view_definition,
+    register_information_schema,
+)
+
+# the statement inside its edge whitespace, comments and semicolons
+_EDGES = r"(?:\s|;|\x00C\d+\x00)*"
+_CORE_RE = re.compile(rf"{_EDGES}(?P<core>.*?){_EDGES}", re.DOTALL)
 
 
 def split_statements(sql: str) -> list[str]:
-    """Split a script on ``;`` outside quotes/comments (reference parses
-    multi-statement scripts via DFParser, core.rs:103-111)."""
-    stmts: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    in_s = in_d = in_line_comment = in_block_comment = False
-    while i < n:
-        ch = sql[i]
-        nxt = sql[i + 1] if i + 1 < n else ""
-        if in_line_comment:
-            buf.append(ch)
-            if ch == "\n":
-                in_line_comment = False
-        elif in_block_comment:
-            buf.append(ch)
-            if ch == "*" and nxt == "/":
-                buf.append(nxt)
-                i += 1
-                in_block_comment = False
-        elif in_s:
-            buf.append(ch)
-            if ch == "'":
-                if nxt == "'":
-                    buf.append(nxt)
-                    i += 1
-                else:
-                    in_s = False
-        elif in_d:
-            buf.append(ch)
-            if ch == '"':
-                in_d = False
-        elif ch == "-" and nxt == "-":
-            buf.append(ch)
-            in_line_comment = True
-        elif ch == "/" and nxt == "*":
-            buf.append(ch)
-            in_block_comment = True
-        elif ch == "'":
-            buf.append(ch)
-            in_s = True
-        elif ch == '"':
-            buf.append(ch)
-            in_d = True
-        elif ch == ";":
-            stmts.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    stmts.append("".join(buf))
-    return [s.strip() for s in stmts if s.strip()]
+    """Split a script on the ``;`` outside literals, quoted identifiers
+    and comments (reference parses multi-statement scripts via
+    DFParser, core.rs:103-111). Each statement keeps its original
+    spelling; a piece of only whitespace and comments is dropped, as
+    sqlparser does."""
+    masked, lits = _mask_literals(sql)
+    return [
+        _unmask(piece, lits).strip()
+        for piece in masked.split(";")
+        if _CORE_RE.fullmatch(piece)["core"]
+    ]
 
 
-_EXTERNAL_TABLE_RE = re.compile(
-    r"CREATE\s+EXTERNAL\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"]+)"
-    r"(?P<cols>\s*\(.*?\))?\s+STORED\s+AS\s+(?P<format>\w+)"
-    r"(?:\s+.*?)?\s+LOCATION\s+'(?P<location>[^']+)'"
-    r"(?:\s+OPTIONS\s*\((?P<options>.*?)\))?",
-    re.IGNORECASE | re.DOTALL,
-)
-
-# DataFusion external-table OPTIONS key → Spark reader option. Keys may
-# carry a 'format.' prefix (DataFusion 43+ spelling); unknown keys pass
-# through verbatim so Spark-native options also work.
-_TABLE_OPTION_MAP = {
-    "has_header": "header",
-    "delimiter": "sep",
-    "compression": "compression",
-    "quote": "quote",
-    "escape": "escape",
-}
+def _stmt(pattern: str) -> re.Pattern:
+    """Compile a statement pattern, matched against a whole masked
+    statement: each ``\\s+`` / ``\\s*`` in it also spans comments."""
+    return re.compile(
+        pattern.replace(r"\s+", _WS1).replace(r"\s*", _WS), re.IGNORECASE | re.DOTALL
+    )
 
 
-def _parse_table_options(s: str) -> dict[str, str]:
-    """Parse DataFusion OPTIONS bodies: pairs of tokens in either the
-    `'key' 'value'` or `key = 'value'` spelling, comma-separated."""
-    toks = re.findall(r"'(?:[^']|'')*'|[\w.]+", s)
-    toks = [t for t in toks if t != ","]
-    opts: dict[str, str] = {}
-    for i in range(0, len(toks) - 1, 2):
-        k, v = toks[i], toks[i + 1]
-        k = k.strip("'").lower().removeprefix("format.")
-        opts[_TABLE_OPTION_MAP.get(k, k)] = v.strip("'").replace("''", "'")
-    return opts
+# a table or view name (double-quoted parts are placeholders) and a
+# string literal, in masked text
+_NAME = r"(?:[\w.`]|\x00I\d+\x00)+"
+_LIT = r"\x00L\d+\x00"
 
-# PREPARE name [(types)] AS <statement>  /  EXECUTE name(args)  /
-# DEALLOCATE name — DataFusion statement surface (SURVEY §2.9).
-# Spark SQL has no PREPARE; the engine stores the template plus the
-# declared parameter types. EXECUTE of a query-shaped body uses genuine
-# typed binding: arguments are evaluated ONCE (with declared-type
-# coercion) in a single one-row driver query, then bound as named
-# parameters through Spark's parameterized ``spark.sql(..., args=...)``
-# — so a parameter is always one typed literal, never spliced clause
-# text. Non-query bodies (e.g. a prepared COPY) fall back to
-# typed-literal text substitution of $n.
-_PREPARE_RE = re.compile(
-    r"^PREPARE\s+(?P<name>\w+)\s*"
-    r"(?:\((?P<types>(?:[^()]|\([^()]*\))*)\))?\s+AS\s+(?P<body>.+)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_EXECUTE_RE = re.compile(
-    r"^EXECUTE\s+(?P<name>\w+)\s*(?:\((?P<args>.*)\))?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DEALLOCATE_RE = re.compile(r"^DEALLOCATE\s+(?:PREPARE\s+)?(?P<name>\w+)\s*$", re.IGNORECASE)
+
+def _text(token: str, lits: list[str]) -> str:
+    """A masked token as written, a string literal as its value."""
+    text = _unmask(token, lits).strip()
+    return text[1:-1].replace("''", "'") if text.startswith("'") else text
+
+
+def _name(token: str, lits: list[str]) -> str:
+    """The unquoted last part of a (possibly dotted) object name."""
+    return _unmask(token, lits).split(".")[-1].strip('"`')
+
 
 # SET datafusion.<knob> = <value> — the reference's config surface
 # (core.rs:62 enables information_schema so SHOW ALL lists these).
@@ -145,9 +103,8 @@ _DEALLOCATE_RE = re.compile(r"^DEALLOCATE\s+(?:PREPARE\s+)?(?P<name>\w+)\s*$", r
 # through SHOW / df_settings for free; the knobs with a genuine Spark
 # equivalent are ALSO applied to the session so they change behavior,
 # not just bookkeeping.
-_SET_DF_RE = re.compile(
-    r"^SET\s+(?P<key>datafusion\.[\w.]+)\s*(?:=|\s+TO\s+)\s*(?P<value>.+?)\s*$",
-    re.IGNORECASE,
+_SET_DF_RE = _stmt(
+    r"SET\s+(?P<key>datafusion\.[\w.]+)\s*(?:=|\s+TO\s+)\s*(?P<value>.+)"
 )
 
 _DF_SETTING_TO_SPARK: dict[str, tuple[str, bool]] = {
@@ -168,84 +125,59 @@ _DF_SETTING_TO_SPARK: dict[str, tuple[str, bool]] = {
 # CREATE VIEW / DROP VIEW — executed by Spark as-is; matched here only
 # to record the definition text for information_schema.views (DataFusion
 # reports it; Spark's in-memory catalog forgets it, SURVEY §7.5)
-_CREATE_VIEW_RE = re.compile(
-    r"^CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW\s+"
-    r"(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>[\w.\"`]+)\s*(?:\([^)]*\))?\s+AS\s+(?P<body>.+)$",
-    re.IGNORECASE | re.DOTALL,
+_CREATE_VIEW_RE = _stmt(
+    r"CREATE\s+(?:OR\s+REPLACE\s+)?(?:GLOBAL\s+)?(?:TEMP(?:ORARY)?\s+)?VIEW\s+"
+    rf"(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_NAME})\s*(?:\([^)]*\))?\s+AS\s+(?P<body>.+)"
 )
-_DROP_VIEW_RE = re.compile(
-    r"^DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w.\"`]+)\s*$", re.IGNORECASE
-)
+_DROP_VIEW_RE = _stmt(rf"DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(?P<name>{_NAME})")
 
-# COPY (<query>) TO 'path' [STORED AS fmt] [PARTITIONED BY (cols)]
-# (DataFusion statement, SURVEY §2.1 sink row; DataFusion 45 accepts
-# the two clauses in either order)
-_COPY_RE = re.compile(
-    r"^COPY\s+(?:\((?P<query>.+)\)|(?P<table>[\w.\"]+))\s+TO\s+'(?P<path>[^']+)'"
-    r"(?:\s+STORED\s+AS\s+(?P<format>\w+))?"
-    r"(?:\s+PARTITIONED\s+BY\s*\((?P<partcols>[^)]+)\))?"
-    r"(?:\s+STORED\s+AS\s+(?P<format2>\w+))?\s*$",
-    re.IGNORECASE | re.DOTALL,
+_EXTERNAL_TABLE_RE = _stmt(
+    rf"CREATE\s+EXTERNAL\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>{_NAME})"
+    r"(?:\s*(?P<cols>\(.*?\)))?\s+STORED\s+AS\s+(?P<format>\w+)"
+    rf"(?:\s+.*?)?\s+LOCATION\s+(?P<location>{_LIT})"
+    r"(?:\s+OPTIONS\s*\((?P<options>.*?)\))?"
 )
 
-
-def _split_exec_args(args: str) -> list[str]:
-    """Split EXECUTE's argument list, or PREPARE's type list
-    (DECIMAL(18, 2) holds a nested comma), on top-level commas
-    (respects quoted strings and parentheses)."""
-    out: list[str] = []
-    buf: list[str] = []
-    depth = 0
-    in_s = False
-    i = 0
-    while i < len(args):
-        ch = args[i]
-        if in_s:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < len(args) and args[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_s = False
-        elif ch == "'":
-            buf.append(ch)
-            in_s = True
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            out.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    tail = "".join(buf).strip()
-    if tail:
-        out.append(tail)
-    return out
+# DataFusion external-table OPTIONS key → Spark reader option. Keys may
+# carry a 'format.' prefix (DataFusion 43+ spelling); unknown keys pass
+# through verbatim so Spark-native options also work.
+_TABLE_OPTION_MAP = {
+    "has_header": "header",
+    "delimiter": "sep",
+    "compression": "compression",
+    "quote": "quote",
+    "escape": "escape",
+}
 
 
-_QUERY_SHAPED_RE = re.compile(r"^\s*(SELECT|WITH|VALUES|TABLE)\b", re.IGNORECASE)
-# EXPLAIN-body noise a valid query may legally lead with before its
-# first keyword: whitespace, -- line / /* block */ comments, and
-# opening parens (EXPLAIN (SELECT 1), EXPLAIN /* hint */ SELECT …) —
-# DataFusion plans both forms (ADVICE r10). Stripped only for the
-# SHAPE check; the dispatched body keeps them verbatim (Spark parses
-# both, verified on 4.1.2).
-_QUERY_HEAD_NOISE_RE = re.compile(
-    r"^(?:\s+|--[^\n]*(?:\n|$)|/\*.*?\*/|\()+", re.DOTALL
+def _parse_table_options(masked: str, lits: list[str]) -> dict[str, str]:
+    """Parse DataFusion OPTIONS bodies: pairs of tokens in either the
+    `'key' 'value'` or `key = 'value'` spelling, comma-separated."""
+    toks = [_text(t, lits) for t in re.findall(rf"{_LIT}|[\w.]+", masked)]
+    opts: dict[str, str] = {}
+    for k, v in zip(toks[::2], toks[1::2]):
+        k = k.lower().removeprefix("format.")
+        opts[_TABLE_OPTION_MAP.get(k, k)] = v
+    return opts
+
+
+# PREPARE name [(types)] AS <statement>  /  EXECUTE name(args)  /
+# DEALLOCATE name — DataFusion statement surface (SURVEY §2.9).
+# Spark SQL has no PREPARE; the engine stores the template plus the
+# declared parameter types. EXECUTE of a query-shaped body uses genuine
+# typed binding: arguments are evaluated ONCE (with declared-type
+# coercion) in a single one-row driver query, then bound as named
+# parameters through Spark's parameterized ``spark.sql(..., args=...)``
+# — so a parameter is always one typed literal, never spliced clause
+# text. Non-query bodies (e.g. a prepared COPY) fall back to
+# typed-literal text substitution of $n. Spark's own EXECUTE IMMEDIATE
+# is not an EXECUTE of a prepared name and goes to Spark.
+_PREPARE_RE = _stmt(
+    r"PREPARE\s+(?P<name>\w+)\s*"
+    r"(?P<types>\((?:[^()]|\([^()]*\))*\))?\s+AS\s+(?P<body>.+)"
 )
-
-# EXPLAIN dispatch is separator-agnostic: 'EXPLAIN\nSELECT 1' and
-# tab-separated forms take the same DataFusion two-row branch as the
-# space-separated spelling (ADVICE r9 — literal-space startswith made
-# the result SHAPE depend on the whitespace character).
-_EXPLAIN_RE = re.compile(r"^EXPLAIN\s+", re.IGNORECASE)
-_EXPLAIN_ANALYZE_RE = re.compile(r"^EXPLAIN\s+ANALYZE\s+", re.IGNORECASE)
+_EXECUTE_RE = _stmt(r"EXECUTE\s+(?!IMMEDIATE\b)(?P<name>\w+)\s*(?P<args>\(.*\))?")
+_DEALLOCATE_RE = _stmt(r"DEALLOCATE\s+(?:PREPARE\s+)?(?P<name>\w+)")
 
 # DataFusion PREPARE parameter type spellings → Spark cast targets
 # (same family mapping as SURVEY §1.1; unlisted spellings pass through
@@ -257,6 +189,40 @@ _PREPARE_TYPE_MAP = {
     "REAL": "FLOAT",
     "INTEGER": "INT",
 }
+
+# COPY (<query>) TO 'path' [STORED AS fmt] [PARTITIONED BY (cols)]
+# (DataFusion statement, SURVEY §2.1 sink row; DataFusion 45 accepts
+# the two clauses in either order)
+_COPY_RE = _stmt(
+    rf"COPY\s+(?:\((?P<query>.+)\)|(?P<table>{_NAME}))\s+TO\s+(?P<path>{_LIT})"
+    r"(?:\s+STORED\s+AS\s+(?P<format>\w+))?"
+    r"(?:\s+PARTITIONED\s+BY\s*(?P<partcols>\([^)]*\)))?"
+    r"(?:\s+STORED\s+AS\s+(?P<format2>\w+))?"
+)
+
+# any whitespace or comment may separate EXPLAIN's keywords:
+# 'EXPLAIN\nSELECT 1' takes the same DataFusion two-row branch as the
+# space-separated spelling (ADVICE r9)
+_EXPLAIN_ANALYZE_RE = _stmt(r"EXPLAIN\s+ANALYZE\s+(?P<body>.+)")
+# Spark's own explain modes keep Spark's renderer — they are requests
+# for Spark-specific detail
+_SPARK_EXPLAIN_MODES = ("EXTENDED", "FORMATTED", "CODEGEN", "COST")
+_EXPLAIN_SPARK_RE = _stmt(rf"EXPLAIN\s+(?:{'|'.join(_SPARK_EXPLAIN_MODES)})\s+.+")
+# DataFusion accepts EXPLAIN VERBOSE: the same two-row shape
+_EXPLAIN_RE = _stmt(r"EXPLAIN\s+(?:VERBOSE\s+)?(?P<body>.+)")
+
+# the first keyword of a masked statement, past the comments and
+# opening parens a query may lead with (EXPLAIN (SELECT 1) and
+# EXPLAIN /* hint */ SELECT … are plannable, ADVICE r10)
+_HEAD_RE = re.compile(r"(?:\s|\(|\x00C\d+\x00)*(?P<head>\w*)")
+_QUERY_HEADS = ("SELECT", "WITH", "VALUES", "TABLE")
+
+# SHOW ALL lists the settings (reference: information_schema.df_settings,
+# core.rs:62; Spark's listing is SET -v). SHOW <dotted.variable>
+# (DataFusion reads one config var) → Spark reads a conf with valueless
+# SET; keyword SHOW forms (TABLES, VIEWS, ...) are no dotted identifier
+_SHOW_ALL_RE = _stmt(r"SHOW\s+ALL")
+_SHOW_VAR_RE = _stmt(r"SHOW\s+(?P<var>(?:\w+\.)+\w+)")
 
 
 @contextmanager
@@ -342,166 +308,122 @@ class SQLEngine:
             return format_result(self._dispatch(stmt), self.result_format, self.max_rows)
 
     def _dispatch(self, stmt: str) -> DataFrame:
-        stmt = stmt.strip()
-        m = _SET_DF_RE.match(stmt)
-        if m:
-            mapped = _DF_SETTING_TO_SPARK.get(m.group("key").lower())
-            if mapped:
-                conf, invert = mapped
-                value = m.group("value").strip().strip("'\"")
-                if invert:
-                    value = {"true": "false", "false": "true"}.get(
-                        value.lower(), value
-                    )
-                self.spark.conf.set(conf, value)
-            # fall through: Spark's SET also stores the raw
-            # datafusion.* key, so SHOW and df_settings reflect it
-        m = _EXTERNAL_TABLE_RE.match(stmt)
-        if m:
-            return self._create_external_table(m)
-        m = _PREPARE_RE.match(stmt)
-        if m:
-            self._prepared[m.group("name").lower()] = (
-                m.group("body").strip(),
-                [
-                    _PREPARE_TYPE_MAP.get(t.upper(), t.upper())
-                    for t in _split_exec_args(m.group("types") or "")
-                ],
-            )
-            return local_rows(self.spark, [], "result string")
-        m = _DEALLOCATE_RE.match(stmt)
-        if m:
-            self._prepared.pop(m.group("name").lower(), None)
-            return local_rows(self.spark, [], "result string")
-        m = _EXECUTE_RE.match(stmt)
-        if m and m.group("name").lower() in self._prepared:
-            body, types = self._prepared[m.group("name").lower()]
-            args = _split_exec_args(m.group("args") or "")
-            if types and len(types) != len(args):
-                from datafusion_wasm_bindings_spark.errors import PlanError
+        masked, lits = _mask_literals(stmt)
+        core = _CORE_RE.fullmatch(masked)["core"]
+        for pattern, hook in self._HOOKS:
+            m = pattern.fullmatch(core)
+            if m:
+                hook(self, m, lits)
+        for pattern, handler in self._HANDLERS:
+            m = pattern.fullmatch(core)
+            if m:
+                return handler(self, m, lits)
+        return self._run_sql(_unmask(core, lits))
 
-                raise PlanError(
-                    f"EXECUTE {m.group('name')}: expected {len(types)} "
-                    f"parameters, got {len(args)}"
-                )
-            if args and _QUERY_SHAPED_RE.match(body):
-                return self._execute_bound(body, args, types)
-            # non-query template (COPY, DDL): typed-literal substitution,
-            # highest index first so $12 is not clobbered by $1
-            for n in range(len(args), 0, -1):
-                lit = args[n - 1]
-                if types:
-                    lit = f"CAST(({lit}) AS {types[n - 1]})"
-                body = body.replace(f"${n}", lit)
-            return self._dispatch(body)
-        m = _COPY_RE.match(stmt)
-        if m:
-            return self._copy_to(m)
-        m = _CREATE_VIEW_RE.match(stmt)
-        if m:
-            from datafusion_wasm_bindings_spark.sources.infoschema import (
-                record_view_definition,
-            )
+    # -- pre-hooks: bookkeeping before Spark runs the statement itself --
+    def _apply_datafusion_setting(self, m: re.Match, lits: list[str]) -> None:
+        mapped = _DF_SETTING_TO_SPARK.get(m["key"].lower())
+        if mapped:
+            conf, invert = mapped
+            value = _text(m["value"], lits).strip('"')
+            if invert:
+                value = {"true": "false", "false": "true"}.get(value.lower(), value)
+            self.spark.conf.set(conf, value)
 
-            record_view_definition(
-                m.group("name").strip('"`').split(".")[-1], m.group("body").strip()
-            )
-            # fall through: Spark executes the DDL itself
-        m = _DROP_VIEW_RE.match(stmt)
-        if m:
-            from datafusion_wasm_bindings_spark.sources.infoschema import (
-                forget_view_definition,
-            )
+    def _record_view(self, m: re.Match, lits: list[str]) -> None:
+        record_view_definition(_name(m["name"], lits), _unmask(m["body"], lits).strip())
 
-            forget_view_definition(m.group("name").strip('"`').split(".")[-1])
-        m_analyze = _EXPLAIN_ANALYZE_RE.match(stmt)
-        m_explain = None if m_analyze else _EXPLAIN_RE.match(stmt)
-        if m_explain:
-            # reference: DataFusion's EXPLAIN (inherited through the
-            # binding's execute_sql pass-through, core.rs:72-80 over
-            # DataFusion 45) returns a TWO-ROW relation
-            # (plan_type, plan) — "logical_plan" and "physical_plan" —
-            # not Spark's single text blob. Mirror that shape: the
-            # logical row renders Spark's optimized plan in
-            # DataFusion's node vocabulary (Projection:/Filter:/
-            # TableScan:/…, 2-space indents); the physical row carries
-            # Spark's physical plan verbatim (the honest answer — the
-            # engines' physical operators genuinely differ, and
-            # inventing DataFusion physical names for Spark operators
-            # would misreport what will run).
-            body = stmt[m_explain.end():]
-            mode = body.split(None, 1)[0].upper() if body.split() else ""
-            if mode in ("EXTENDED", "FORMATTED", "CODEGEN", "COST"):
-                # Spark's own explain modes keep Spark's renderer —
-                # they are requests for Spark-specific detail
-                return self._run_sql(stmt)
-            if mode == "VERBOSE":
-                # DataFusion accepts EXPLAIN VERBOSE; render the same
-                # two-row shape from the plan after the keyword
-                parts = body.split(None, 1)
-                if len(parts) < 2:
-                    from datafusion_wasm_bindings_spark.errors import ParseError
+    def _forget_view(self, m: re.Match, lits: list[str]) -> None:
+        forget_view_definition(_name(m["name"], lits))
 
-                    raise ParseError("EXPLAIN VERBOSE requires a statement")
-                body = parts[1]
-            # shape-check past leading comments/parens a valid query
-            # may carry (ADVICE r10: EXPLAIN (SELECT 1) and
-            # EXPLAIN /* hint */ SELECT … are plannable, not
-            # side-effecting); dispatch still receives `body` verbatim
-            shape_head = _QUERY_HEAD_NOISE_RE.sub("", body)
-            if not _QUERY_SHAPED_RE.match(shape_head):
-                # DataFusion's EXPLAIN only PLANS its body; dispatching
-                # a non-query body here would EXECUTE it (COPY writes
-                # files, CREATE VIEW mutates the catalog). Refuse with
-                # a typed error rather than silently running it.
-                from datafusion_wasm_bindings_spark.errors import (
-                    ParseError,
-                    PlanError,
-                )
+    # -- handlers: the engine runs the statement ------------------------
+    def _prepare(self, m: re.Match, lits: list[str]) -> DataFrame:
+        types = _parse_args(m["types"], 0)[0] if m["types"] else []
+        types = [_text(t, lits).upper() for t in types]
+        self._prepared[m["name"].lower()] = (
+            _unmask(m["body"], lits).strip(),
+            [_PREPARE_TYPE_MAP.get(t, t) for t in types],
+        )
+        return local_rows(self.spark, [], "result string")
 
-                head = (
-                    shape_head.split(None, 1)[0].upper()
-                    if shape_head.split()
-                    else ""
-                )
-                if not head:
-                    raise ParseError("EXPLAIN requires a statement")
-                raise PlanError(
-                    "EXPLAIN supports query statements "
-                    "(SELECT/WITH/VALUES/TABLE); refusing to plan a "
-                    f"side-effecting statement: {head}"
-                )
-            df = self._dispatch(body)
-            qe = df._jdf.queryExecution()
-            logical = _datafusion_style_plan(qe.optimizedPlan().toString())
-            physical = qe.executedPlan().toString().rstrip("\n")
-            return local_rows(
-                self.spark,
-                [("logical_plan", logical), ("physical_plan", physical)],
-                "plan_type string, plan string",
+    def _deallocate(self, m: re.Match, lits: list[str]) -> DataFrame:
+        self._prepared.pop(m["name"].lower(), None)
+        return local_rows(self.spark, [], "result string")
+
+    def _execute(self, m: re.Match, lits: list[str]) -> DataFrame:
+        name = m["name"]
+        if name.lower() not in self._prepared:
+            raise PlanError(f"EXECUTE {name}: no prepared statement named {name}")
+        body, types = self._prepared[name.lower()]
+        args = [_unmask(a, lits) for a in _parse_args(m["args"], 0)[0]] if m["args"] else []
+        if types and len(types) != len(args):
+            raise PlanError(
+                f"EXECUTE {name}: expected {len(types)} parameters, got {len(args)}"
             )
-        if m_analyze:
-            # reference: EXPLAIN ANALYZE executes and reports metrics.
-            # Spark's EXPLAIN never executes, so run the query first and
-            # return the post-AQE executed plan (the plan that actually
-            # ran, with runtime-chosen joins/partition counts).
-            body = stmt[m_analyze.end():]
-            df = self._dispatch(body)
-            n = df.count()
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            lines = [f"rows: {n}"] + plan.splitlines()
-            return local_rows(self.spark, [(line,) for line in lines], "plan string")
-        if stmt.upper() == "SHOW ALL":
-            # reference: SHOW ALL lists datafusion.* settings via
-            # information_schema.df_settings (core.rs:62); Spark's
-            # equivalent listing is SET -v
-            stmt = "SET -v"
-        return self._run_sql(stmt)
+        # $n markers are replaced in the masked template, so a $n inside
+        # a string literal or a comment stays as written
+        masked, body_lits = _mask_literals(body)
+        if args and _HEAD_RE.match(masked)["head"].upper() in _QUERY_HEADS:
+            bound = re.sub(r"\$(\d+)", r":dfwb_p\1", masked)
+            return self._execute_bound(_unmask(bound, body_lits), args, types)
+        # non-query template (COPY, DDL): typed-literal substitution,
+        # highest index first so $12 is not clobbered by $1
+        for n in range(len(args), 0, -1):
+            lit = args[n - 1]
+            if types:
+                lit = f"CAST(({lit}) AS {types[n - 1]})"
+            masked = masked.replace(f"${n}", lit)
+        return self._dispatch(_unmask(masked, body_lits))
+
+    def _explain(self, m: re.Match, lits: list[str]) -> DataFrame:
+        # reference: DataFusion's EXPLAIN (inherited through the
+        # binding's execute_sql pass-through, core.rs:72-80 over
+        # DataFusion 45) returns a TWO-ROW relation
+        # (plan_type, plan) — "logical_plan" and "physical_plan" —
+        # not Spark's single text blob. Mirror that shape: the
+        # logical row renders Spark's optimized plan in
+        # DataFusion's node vocabulary (Projection:/Filter:/
+        # TableScan:/…, 2-space indents); the physical row carries
+        # Spark's physical plan verbatim (the honest answer — the
+        # engines' physical operators genuinely differ, and
+        # inventing DataFusion physical names for Spark operators
+        # would misreport what will run).
+        head = _HEAD_RE.match(m["body"])["head"].upper()
+        if head in ("", "VERBOSE", *_SPARK_EXPLAIN_MODES):
+            raise ParseError("EXPLAIN requires a statement")
+        if head not in _QUERY_HEADS:
+            # DataFusion's EXPLAIN only PLANS its body; dispatching
+            # a non-query body here would EXECUTE it (COPY writes
+            # files, CREATE VIEW mutates the catalog). Refuse with
+            # a typed error rather than silently running it.
+            raise PlanError(
+                "EXPLAIN supports query statements "
+                "(SELECT/WITH/VALUES/TABLE); refusing to plan a "
+                f"side-effecting statement: {head}"
+            )
+        qe = self._dispatch(_unmask(m["body"], lits))._jdf.queryExecution()
+        logical = _datafusion_style_plan(qe.optimizedPlan().toString())
+        physical = qe.executedPlan().toString().rstrip("\n")
+        return local_rows(
+            self.spark,
+            [("logical_plan", logical), ("physical_plan", physical)],
+            "plan_type string, plan string",
+        )
+
+    def _explain_analyze(self, m: re.Match, lits: list[str]) -> DataFrame:
+        # reference: EXPLAIN ANALYZE executes and reports metrics.
+        # Spark's EXPLAIN never executes, so run the query first and
+        # return the post-AQE executed plan (the plan that actually
+        # ran, with runtime-chosen joins/partition counts).
+        df = self._dispatch(_unmask(m["body"], lits))
+        n = df.count()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        lines = [f"rows: {n}"] + plan.splitlines()
+        return local_rows(self.spark, [(line,) for line in lines], "plan string")
 
     def _run_sql(self, stmt: str, args: dict | None = None) -> DataFrame:
         """Dialect-rewrite and run one plain SQL statement, optionally
         with named bind parameters (Spark parameterized sql)."""
-        from datafusion_wasm_bindings_spark import compat
         from datafusion_wasm_bindings_spark.functions.shims import ensure_registered
 
         # SQL-callable shims (dfwb_gcd/lcm/regexp_match) that compat
@@ -512,27 +434,22 @@ class SQLEngine:
             # reference enables information_schema at session build
             # (core.rs:62); we materialize the relations the statement
             # names, on demand
-            from datafusion_wasm_bindings_spark.sources.infoschema import (
-                register_information_schema,
-            )
-
             register_information_schema(self.spark, info_relations)
         rewritten = compat.rewrite(stmt)
         if args:
             return self.spark.sql(rewritten, args=args)
         return self.spark.sql(rewritten)
 
-    def _execute_bound(self, body: str, args: list[str], types: list[str]) -> DataFrame:
+    def _execute_bound(self, bound: str, args: list[str], types: list[str]) -> DataFrame:
         """EXECUTE a prepared query with typed parameter binding.
 
         The argument literals are evaluated once, together, in a single
         one-row query (declared types applied as CASTs there — the
         coercion DataFusion performs at bind time), then the template's
-        $n markers are bound as named parameters via Spark's
-        parameterized ``sql()``. Repeated markers ($1 used twice) bind
-        the same value; a parameter can never inject clause text.
-        Limitation (documented): a literal ``$n`` inside a string
-        constant in the template is also treated as a marker.
+        markers (``$n`` spelled ``:dfwb_pn`` in ``bound``) are bound as
+        named parameters via Spark's parameterized ``sql()``. Repeated
+        markers ($1 used twice) bind the same value; a parameter can
+        never inject clause text.
 
         The one-row query selects from ``VALUES (0)``: Catalyst folds a
         projection of a local relation into a local relation, which
@@ -547,10 +464,9 @@ class SQLEngine:
             exprs.append(f"{e} AS p{i}")
         row = self._run_sql("SELECT " + ", ".join(exprs) + " FROM VALUES (0)").collect()[0]
         values = {f"dfwb_p{i + 1}": row[i] for i in range(len(args))}
-        bound = re.sub(r"\$(\d+)", r":dfwb_p\1", body)
         return self._run_sql(bound, args=values)
 
-    def _copy_to(self, m: re.Match) -> DataFrame:
+    def _copy_to(self, m: re.Match, lits: list[str]) -> DataFrame:
         """``COPY (query)|table TO 'path' [STORED AS fmt]`` →
         ``df.write.<fmt>`` (SURVEY §2.1 sink). Format defaults from the
         path suffix like DataFusion, else parquet. Returns the copied
@@ -564,28 +480,27 @@ class SQLEngine:
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        src = m.group("query")
-        df = self.sql(src) if src else self.spark.table(m.group("table").strip('"'))
-        path = m.group("path")
+        if m["query"]:
+            df = self.sql(_unmask(m["query"], lits))
+        else:
+            df = self.spark.table(_unmask(m["table"], lits).strip('"'))
+        path = _text(m["path"], lits)
         if path.startswith("s3://"):
             path = "s3a://" + path[len("s3://"):]
-        fmt = (m.group("format") or m.group("format2") or "").lower()
+        fmt = (m["format"] or m["format2"] or "").lower()
         if not fmt:
             suffix = path.rsplit(".", 1)[-1].lower()
             fmt = suffix if suffix in ("parquet", "csv", "json") else "parquet"
         if fmt not in ("parquet", "csv", "json"):
-            from datafusion_wasm_bindings_spark.errors import PlanError
-
             raise PlanError(f"COPY: unsupported STORED AS format: {fmt}")
         observed = Observation()
         writer = df.observe(observed, F.count(F.lit(1)).alias("rows")).write
         writer = writer.mode("overwrite").format(fmt)
-        partcols = m.group("partcols")
-        if partcols:
+        if m["partcols"]:
             # hive-style layout (col=value dirs) — readers of the output
             # get partition pruning on these columns for free
             writer = writer.partitionBy(
-                *[c.strip().strip('"') for c in partcols.split(",")]
+                *[_name(c, lits) for c in _parse_args(m["partcols"], 0)[0]]
             )
         if fmt == "csv":
             writer = writer.option("header", "true")
@@ -679,7 +594,7 @@ class SQLEngine:
                 raise ExecutionError(f"HTTP object fetch failed for {url}: {exc}") from exc
         return dest
 
-    def _create_external_table(self, m: re.Match) -> DataFrame:
+    def _create_external_table(self, m: re.Match, lits: list[str]) -> DataFrame:
         """``CREATE EXTERNAL TABLE name [(cols)] STORED AS fmt LOCATION 'url'``
         → spark.read registration as a temp view (SURVEY.md §7.5).
 
@@ -687,9 +602,9 @@ class SQLEngine:
         store registry at scan time (object_store.rs:43-74); Spark's
         Hadoop FileSystem does the scheme dispatch for us (file/, s3a://).
         """
-        name = m.group("name").strip('"')
-        fmt = m.group("format").lower()
-        location = m.group("location")
+        name = _unmask(m["name"], lits).strip('"')
+        fmt = m["format"].lower()
+        location = _text(m["location"], lits)
         if location.startswith("s3://"):
             location = "s3a://" + location[len("s3://"):]
         elif location.startswith(("http://", "https://")):
@@ -702,9 +617,8 @@ class SQLEngine:
             location = self._stage_http_object(location)
         # declared column list → explicit schema (DataFusion requires
         # one for CSV; we honor it when present, infer otherwise)
-        cols = (m.group("cols") or "").strip()
-        schema = cols[1:-1].strip() if cols.startswith("(") else None
-        options = _parse_table_options(m.group("options") or "")
+        schema = _unmask(m["cols"], lits)[1:-1].strip() if m["cols"] else None
+        options = _parse_table_options(m["options"] or "", lits)
         reader = self.spark.read
         if schema:
             reader = reader.schema(schema)
@@ -721,12 +635,32 @@ class SQLEngine:
         elif fmt == "json":
             df = reader.options(**options).json(location)
         else:
-            from datafusion_wasm_bindings_spark.errors import PlanError
-
             raise PlanError(f"unsupported STORED AS format: {fmt}")
         df.createOrReplaceTempView(name)
         # DDL yields an empty result relation, like DataFusion's DDL path
         return local_rows(self.spark, [], "result string")
+
+    # (pattern, hook): every hook whose pattern matches the statement
+    # runs, then the statement itself goes on to the handlers
+    _HOOKS = (
+        (_SET_DF_RE, _apply_datafusion_setting),
+        (_CREATE_VIEW_RE, _record_view),
+        (_DROP_VIEW_RE, _forget_view),
+    )
+    # (pattern, handler): the first row whose pattern matches the whole
+    # statement runs it; a statement no row matches goes to Spark
+    _HANDLERS = (
+        (_EXTERNAL_TABLE_RE, _create_external_table),
+        (_PREPARE_RE, _prepare),
+        (_EXECUTE_RE, _execute),
+        (_DEALLOCATE_RE, _deallocate),
+        (_COPY_RE, _copy_to),
+        (_EXPLAIN_ANALYZE_RE, _explain_analyze),
+        (_EXPLAIN_SPARK_RE, lambda self, m, lits: self._run_sql(_unmask(m[0], lits))),
+        (_EXPLAIN_RE, _explain),
+        (_SHOW_ALL_RE, lambda self, m, lits: self._run_sql("SET -v")),
+        (_SHOW_VAR_RE, lambda self, m, lits: self._run_sql(f"SET {m['var']}")),
+    )
 
 
 _DF_NODE_MAP = {

@@ -38,9 +38,6 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
-# Small dimension tables that should always broadcast in joins.
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
 # last sf_dir registered per SparkSession token, to skip redundant re-reads
 _registered: dict[int, str] = {}
 

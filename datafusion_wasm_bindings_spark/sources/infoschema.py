@@ -36,6 +36,13 @@ _COLUMNS_SCHEMA = (
 )
 
 
+def _catalog_tables(spark: SparkSession) -> list:
+    """SHOW TABLES rows, less the temp views register_information_schema
+    binds (the engine's plumbing, not relations of the catalog)."""
+    helpers = {f"information_schema_{name}" for name in _RELATIONS}
+    return [r for r in spark.sql("SHOW TABLES").collect() if r.tableName not in helpers]
+
+
 def _table_rows(spark: SparkSession) -> list[tuple[str, str, str, str]]:
     """The rows of information_schema.tables. table_type mirrors
     DataFusion: 'BASE TABLE' for tables, 'VIEW' for (temp and
@@ -48,7 +55,7 @@ def _table_rows(spark: SparkSession) -> list[tuple[str, str, str, str]]:
             r.tableName,
             "VIEW" if r.isTemporary or r.tableName in views else "BASE TABLE",
         )
-        for r in spark.sql("SHOW TABLES").collect()
+        for r in _catalog_tables(spark)
     ]
 
 
@@ -62,7 +69,7 @@ def information_schema_columns(spark: SparkSession, table: str | None = None) ->
     if table:
         tables = [table]
     else:
-        tables = [r.tableName for r in spark.sql("SHOW TABLES").collect()]
+        tables = [r.tableName for r in _catalog_tables(spark)]
     for name in tables:
         try:
             schema = spark.table(name).schema

@@ -261,12 +261,11 @@ def test_prepare_execute_deallocate(engine, sf_dir):
     out2 = engine.execute_sql("EXECUTE topn(1, 1)")
     assert out2.count("NATION_") == 1
     engine.execute_sql("DEALLOCATE topn")
-    import pytest as _pytest
-
-    from datafusion_wasm_bindings_spark.errors import EngineError
-
-    with _pytest.raises(EngineError):
+    # a name that is not prepared is the engine's error, not Spark's
+    # parse of its own EXECUTE IMMEDIATE
+    with pytest.raises(PlanError, match="topn"):
         engine.sql("EXECUTE topn(1, 1)")
+    assert engine.sql("EXECUTE IMMEDIATE 'SELECT 7 AS x'").collect()[0]["x"] == 7
 
 
 def test_prepare_typed_binding_coerces_and_reuses_markers(engine):
@@ -649,6 +648,186 @@ def test_fuzz_split_statements_semicolons_in_tokens():
         assert got == [s.strip() for s in stmts], (script, got)
 
     check()
+
+
+# Spellings of one statement: what may lead it, and what may follow it.
+# A comment holds a quote, a `;` and a statement keyword, so it must be
+# masked before any statement pattern sees the text.
+_LEADS = ("", "\n  ", "-- it's; a DROP VIEW note\n", "/* ; 'x' EXPLAIN */ ")
+_TAILS = ("", ";", "; -- done")
+
+
+def _statement_forms(sf_dir, out_dir):
+    """name → (setup(engine), statement, effect(engine, output), expected
+    effect) for each statement form the engine runs itself."""
+    from datafusion_wasm_bindings_spark.sources import infoschema
+
+    def prepare(eng, name, body="SELECT 1 AS v"):
+        eng.execute_sql(f"PREPARE {name}(INT) AS {body}")
+
+    def create_view(eng):
+        eng.execute_sql("CREATE OR REPLACE TEMP VIEW shape_dv AS SELECT 1 AS one")
+
+    def view_state(eng, name):
+        present = any(t.name == name for t in eng.spark.catalog.listTables())
+        return present, infoschema.VIEW_DEFINITIONS.get(name)
+
+    copy_out = f"{out_dir}/shape_copy"
+    return {
+        "PREPARE": (
+            lambda eng: eng._prepared.pop("shape_p", None),
+            "PREPARE shape_p(INT, TEXT) AS SELECT $1 + 1 AS v, 'a;$2' AS s, $2 AS t",
+            lambda eng, out: eng._prepared.get("shape_p"),
+            ("SELECT $1 + 1 AS v, 'a;$2' AS s, $2 AS t", ["INT", "STRING"]),
+        ),
+        "EXECUTE": (
+            lambda eng: prepare(eng, "shape_x", "SELECT $1 * 2 AS v, '$1' AS s"),
+            "EXECUTE shape_x(21)",
+            lambda eng, out: ("42" in out, "$1" in out),
+            (True, True),
+        ),
+        "DEALLOCATE": (
+            lambda eng: prepare(eng, "shape_d"),
+            "DEALLOCATE shape_d",
+            lambda eng, out: "shape_d" in eng._prepared,
+            False,
+        ),
+        "COPY": (
+            lambda eng: None,
+            f"COPY (SELECT n_nationkey FROM nation WHERE n_regionkey = 1) "
+            f"TO '{copy_out}' STORED AS PARQUET",
+            lambda eng, out: (out.split("|")[-2].strip(), eng.spark.read.parquet(copy_out).count()),
+            ("5", 5),
+        ),
+        "CREATE EXTERNAL TABLE": (
+            lambda eng: eng.spark.catalog.dropTempView("shape_ext"),
+            f"CREATE EXTERNAL TABLE shape_ext STORED AS PARQUET "
+            f"LOCATION '{sf_dir}/region.parquet'",
+            lambda eng, out: eng.spark.table("shape_ext").count(),
+            5,
+        ),
+        "EXPLAIN": (
+            lambda eng: None,
+            "EXPLAIN SELECT 1 AS one",
+            lambda eng, out: ("logical_plan" in out, "Projection:" in out),
+            (True, True),
+        ),
+        "SET datafusion": (
+            lambda eng: eng.spark.conf.set("spark.sql.shuffle.partitions", "5"),
+            "SET datafusion.execution.target_partitions = 7",
+            lambda eng, out: eng.spark.conf.get("spark.sql.shuffle.partitions"),
+            "7",
+        ),
+        "SHOW ALL": (
+            lambda eng: None,
+            "SHOW ALL",
+            lambda eng, out: "spark.sql.shuffle.partitions" in out,
+            True,
+        ),
+        "CREATE VIEW": (
+            lambda eng: infoschema.forget_view_definition("shape_v"),
+            'CREATE OR REPLACE TEMP VIEW "shape_v" AS SELECT \'x;y\' AS "q"',
+            lambda eng, out: view_state(eng, "shape_v"),
+            (True, "SELECT 'x;y' AS \"q\""),
+        ),
+        "DROP VIEW": (
+            create_view,
+            "DROP VIEW shape_dv",
+            lambda eng, out: view_state(eng, "shape_dv"),
+            (False, None),
+        ),
+    }
+
+
+_FORM_NAMES = (
+    "PREPARE", "EXECUTE", "DEALLOCATE", "COPY", "CREATE EXTERNAL TABLE",
+    "EXPLAIN", "SET datafusion", "SHOW ALL", "CREATE VIEW", "DROP VIEW",
+)
+
+
+@pytest.mark.parametrize("form", _FORM_NAMES)
+def test_statement_forms_agree_across_spellings_and_paths(engine, sf_dir, tmp_path, form):
+    """Property (hypothesis): each statement form the engine runs itself
+    gives the same result and the same side effect through ``sql`` and
+    through ``execute_sql``, bare, after leading whitespace or a
+    comment, and before a trailing ``;`` or a comment after it."""
+    import re
+
+    from hypothesis import given, settings, strategies as st
+
+    from datafusion_wasm_bindings_spark.formats import format_result
+    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
+
+    register_tables(engine.spark, sf_dir)
+    setup, stmt, effect, expected = _statement_forms(sf_dir, tmp_path)[form]
+    # plan text carries per-run expression ids, which also move the
+    # table's column widths
+    norm = lambda out: " ".join(re.sub(r"#\d+|[-+|]", " ", out).split())
+    prev = engine.spark.conf.get("spark.sql.shuffle.partitions")
+
+    @settings(max_examples=len(_LEADS) * len(_TAILS), deadline=None)
+    @given(lead=st.sampled_from(_LEADS), tail=st.sampled_from(_TAILS))
+    def check(lead, tail):
+        text = lead + stmt + tail
+        seen = []
+        for run in (
+            lambda: format_result(engine.sql(text), engine.result_format, engine.max_rows),
+            lambda: engine.execute_sql(text),
+        ):
+            setup(engine)
+            out = run()
+            seen.append((norm(out), effect(engine, out)))
+        assert seen[0] == seen[1], (text, seen)
+        assert seen[0][1] == expected, (text, seen[0][1])
+
+    try:
+        check()
+    finally:
+        engine.spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def test_perfbench_traced_call_sequence_matches_execute_sql(engine):
+    """perfbench's traced runs (``--trace 1``) time execute_sql one layer
+    at a time with this call sequence: split_statements, compat.rewrite,
+    SQLEngine.sql, then formats.format_result(df, fmt, max_rows). It must
+    keep giving execute_sql's output, leading and trailing comments
+    included."""
+    from datafusion_wasm_bindings_spark import compat, engine as engine_mod, formats
+
+    script = (
+        "-- leading comment; it's here\n"
+        "SELECT 1 AS a, 'x;y' AS \"q\";\n"
+        "PREPARE trace_p(INT) AS SELECT $1 + 1 AS v;\n"
+        "EXECUTE trace_p(41);\n"
+        "DEALLOCATE trace_p;\n"
+        "SET datafusion.explain.logical_plan_only = true;\n"
+        "SHOW datafusion.explain.logical_plan_only;\n"
+        "/* block */ SELECT 2 AS b; -- trailing comment"
+    )
+    stmts = engine_mod.split_statements(script)
+    assert len(stmts) == 7
+    for s in stmts:
+        compat.rewrite(s)
+    outs = []
+    for s in stmts:
+        df = engine.sql(s)
+        df._jdf.queryExecution().executedPlan()
+        outs.append(formats.format_result(df, engine.result_format, engine.max_rows))
+    assert "\n".join(outs) == engine.execute_sql(script)
+
+
+def test_information_schema_hides_its_helper_views(engine):
+    # each relation a statement names is bound as an
+    # information_schema_* temp view; a later statement must not list
+    # those as catalog relations
+    script = (
+        "SELECT table_name FROM information_schema.tables; "
+        "SELECT table_name, definition FROM information_schema.views; "
+        "SELECT DISTINCT table_name FROM information_schema.columns; "
+        "SELECT name FROM information_schema.df_settings LIMIT 1"
+    )
+    engine.execute_sql(script)
+    assert "information_schema_" not in engine.execute_sql(script)
 
 
 def test_size_scan_splits_clamps_and_sets_confs(spark, tmp_path):

@@ -1,5 +1,6 @@
 """Differential expression fuzzing: random scalar-expression trees run
-through Spark SQL and DuckDB over the same inline relation must agree.
+through SQLEngine (statement dispatch, compat.rewrite, Spark SQL) and
+DuckDB over the same inline relation must agree.
 
 This mirrors how the reference's engine is itself validated upstream
 (sqllogictest corpora, SURVEY.md §5) — generative differential testing
@@ -14,6 +15,8 @@ constant folding, predicate simplification, and null propagation.
 from __future__ import annotations
 
 from hypothesis import given, settings, strategies as st
+
+from datafusion_wasm_bindings_spark.engine import SQLEngine
 
 # inline fixture: three int columns with NULLs, small values so any
 # expression tree of depth <= 3 stays far from 64-bit overflow
@@ -63,12 +66,19 @@ def _bool_expr(depth: int):
     )
 
 
+def _engine_sql(spark, sql: str):
+    """Run ``sql`` down the product path — SQLEngine's statement dispatch
+    and compat.rewrite, then Spark — so a disagreement found here is
+    one the engine's users would see."""
+    return SQLEngine(spark).sql(sql)
+
+
 def _run_both(spark, duck, select_expr: str, where: str | None = None, relation: str | None = None):
     sql = f"SELECT {select_expr} AS r FROM {relation or VALUES_SQL}"
     if where:
         sql += f" WHERE {where}"
     got = sorted(
-        [("NULL" if row.r is None else row.r) for row in spark.sql(sql).collect()], key=str
+        [("NULL" if row.r is None else row.r) for row in _engine_sql(spark, sql).collect()], key=str
     )
     want = sorted(
         [("NULL" if v is None else v) for (v,) in duck.sql(sql).fetchall()], key=str
@@ -137,7 +147,7 @@ def test_string_expressions_agree(spark, duck, expr):
 def test_string_lengths_and_predicates_agree(spark, duck, expr):
     _run_both(spark, duck, f"LENGTH({expr})", relation=STR_VALUES_SQL)
     sql = f"SELECT COUNT(1) AS n FROM {STR_VALUES_SQL.replace('t(s, u)', 'q(s, u)')} WHERE {expr} = s"
-    got = [r.n for r in spark.sql(sql).collect()]
+    got = [r.n for r in _engine_sql(spark, sql).collect()]
     want = [v for (v,) in duck.sql(sql).fetchall()]
     assert got == want, sql
 
@@ -149,7 +159,7 @@ def test_aggregates_over_fuzzed_exprs_agree(spark, duck, expr, pred):
         f"SELECT COUNT(*) AS n, SUM({expr}) AS s, MIN({expr}) AS lo, MAX({expr}) AS hi "
         f"FROM {VALUES_SQL} WHERE {pred}"
     )
-    got = [tuple(r) for r in spark.sql(sql).collect()]
+    got = [tuple(r) for r in _engine_sql(spark, sql).collect()]
     want = [tuple(int(v) if v is not None else None for v in r) for r in duck.sql(sql).fetchall()]
     norm = lambda rows: [tuple(None if v is None else int(v) for v in r) for r in rows]
     assert norm(got) == norm(want), sql
@@ -225,7 +235,7 @@ def test_join_shapes_agree(spark, duck, jt, extra):
         "+ COALESCE(LENGTH(bv), 5) AS r "
         f"FROM {JOIN_A_SQL} {jt} {JOIN_B_SQL} ON ak = bk{extra}"
     )
-    got = sorted([row.r for row in spark.sql(sql).collect()], key=str)
+    got = sorted([row.r for row in _engine_sql(spark, sql).collect()], key=str)
     want = sorted([v for (v,) in duck.sql(sql).fetchall()], key=str)
     assert got == want, f"{sql}\n spark={got}\n duck={want}"
 
@@ -244,7 +254,7 @@ def test_semi_anti_join_shapes_agree(spark, duck, jt, extra):
         f"FROM {JOIN_A_SQL} WHERE {exists} "
         f"(SELECT 1 FROM {JOIN_B_SQL} WHERE ak = bk{extra})"
     )
-    got = sorted(row.r for row in spark.sql(spark_sql).collect())
+    got = sorted(row.r for row in _engine_sql(spark, spark_sql).collect())
     want = sorted(v for (v,) in duck.sql(duck_sql).fetchall())
     assert got == want, f"{spark_sql}\n vs {duck_sql}\n spark={got}\n duck={want}"
 
@@ -282,7 +292,7 @@ def test_window_aggregate_frames_agree(spark, duck, fn, part, frame):
         f"SELECT id, CAST({fn} OVER ({over}) AS DOUBLE) AS r "
         f"FROM {WIN_VALUES_SQL} ORDER BY id"
     )
-    got = [row.r for row in spark.sql(sql).collect()]
+    got = [row.r for row in _engine_sql(spark, sql).collect()]
     want = [float(v) if v is not None else None for (_, v) in duck.sql(sql).fetchall()]
     assert got == want, f"{sql}\n spark={got}\n duck={want}"
 
@@ -294,7 +304,7 @@ def test_window_navigation_agree(spark, duck, fn, part):
         f"SELECT id, {fn} OVER ({part}ORDER BY id ASC) AS r "
         f"FROM {WIN_VALUES_SQL} ORDER BY id"
     )
-    got = [row.r for row in spark.sql(sql).collect()]
+    got = [row.r for row in _engine_sql(spark, sql).collect()]
     want = [v for (_, v) in duck.sql(sql).fetchall()]
     assert got == want, f"{sql}\n spark={got}\n duck={want}"
 
@@ -325,7 +335,7 @@ def test_grouped_aggregates_agree(spark, duck, key, agg, having):
     norm = lambda rows: sorted(
         [tuple("N" if v is None else int(v) for v in r) for r in rows], key=str
     )
-    got = norm([tuple(r) for r in spark.sql(sql).collect()])
+    got = norm([tuple(r) for r in _engine_sql(spark, sql).collect()])
     want = norm(duck.sql(sql).fetchall())
     assert got == want, sql
 
@@ -344,7 +354,7 @@ def test_grouping_set_forms_agree(spark, duck, agg, form):
     norm = lambda rows: sorted(
         [tuple("N" if v is None else str(v) for v in r) for r in rows], key=str
     )
-    got = norm([tuple(r) for r in spark.sql(sql).collect()])
+    got = norm([tuple(r) for r in _engine_sql(spark, sql).collect()])
     want = norm(duck.sql(sql).fetchall())
     assert got == want, sql
 
@@ -380,7 +390,7 @@ def test_exists_subquery_shapes_agree(spark, duck, neg, op, extra):
         "SELECT COALESCE(ok, -1) * 100 + COALESCE(ov, -2) AS r "
         f"FROM {CORR_O_SQL} WHERE {neg} {sub}"
     )
-    got = sorted(row.r for row in spark.sql(sql).collect())
+    got = sorted(row.r for row in _engine_sql(spark, sql).collect())
     # fuzzer finding (2026-08-13, DuckDB 1.0.0): DuckDB's WHERE-EXISTS
     # decorrelation keeps an outer row whose NULL correlation value
     # makes every inner predicate UNKNOWN (e.g. `ik <> ok` with
@@ -411,7 +421,7 @@ def test_in_subquery_shapes_agree(spark, duck, neg, inner, extra):
         f"FROM {CORR_O_SQL} WHERE ok {neg} "
         f"(SELECT {inner} FROM {CORR_I_SQL} WHERE {where})"
     )
-    got = sorted(row.r for row in spark.sql(sql).collect())
+    got = sorted(row.r for row in _engine_sql(spark, sql).collect())
     want = sorted(v for (v,) in duck.sql(sql).fetchall())
     assert got == want, f"{sql}\n spark={got}\n duck={want}"
 
@@ -432,7 +442,7 @@ def test_scalar_correlated_subqueries_agree(spark, duck, agg, op):
     norm = lambda rows: sorted(
         [(k, None if m is None else float(m)) for (k, m) in rows], key=str
     )
-    got = norm([tuple(r) for r in spark.sql(sql).collect()])
+    got = norm([tuple(r) for r in _engine_sql(spark, sql).collect()])
     want = norm(duck.sql(sql).fetchall())
     assert got == want, f"{sql}\n spark={got}\n duck={want}"
 
@@ -447,7 +457,7 @@ def test_correlated_in_subqueries_agree(spark, duck, op, extra):
         f"FROM {CORR_O_SQL} WHERE ov IN "
         f"(SELECT iv * 10 FROM {CORR_I_SQL} WHERE ik {op} ok{extra})"
     )
-    got = sorted(row.r for row in spark.sql(sql).collect())
+    got = sorted(row.r for row in _engine_sql(spark, sql).collect())
     want = sorted(v for (v,) in duck.sql(sql).fetchall())
     assert got == want, f"{sql}\n spark={got}\n duck={want}"
 
@@ -461,7 +471,7 @@ def test_set_operation_chains_agree(spark, duck, op1, op2):
         f"(SELECT x FROM {SET_B_SQL})) s {op2} (SELECT x FROM {SET_A_SQL})"
     )
     norm = lambda rows: sorted(("N" if r[0] is None else int(r[0]) for r in rows), key=str)
-    got = norm([tuple(r) for r in spark.sql(sql).collect()])
+    got = norm([tuple(r) for r in _engine_sql(spark, sql).collect()])
     want = norm(duck.sql(sql).fetchall())
     assert got == want, sql
 
@@ -538,7 +548,7 @@ def test_try_cast_sign_whitespace_divergence_documented(spark, duck):
         ("+ ", None, 0),
         ("-", None, None),  # no trailing whitespace: both NULL
     ):
-        got_s = spark.sql(
+        got_s = _engine_sql(spark, 
             f"SELECT TRY_CAST('{s}' AS BIGINT) AS r"
         ).collect()[0].r
         got_d = duck.sql(f"SELECT TRY_CAST('{s}' AS BIGINT) AS r").fetchone()[0]
@@ -596,11 +606,8 @@ def test_double_to_decimal_and_string_agree(spark, duck, x):
 def test_numeric_trunc_shim_agrees(spark, duck, x):
     # engine trunc(x) rewrite (compat.py) vs DuckDB's native trunc;
     # doubles enter as STRING casts (divergence 5)
-    from datafusion_wasm_bindings_spark.compat import rewrite
-
     lit = f"CAST('{x!r}' AS DOUBLE)"
-    expr = rewrite(f"SELECT trunc({lit}) AS r").split("SELECT ")[1].rsplit(" AS r")[0]
-    got = spark.sql(f"SELECT {expr} AS r FROM {_ONE_ROW}").collect()[0].r
+    got = _engine_sql(spark, f"SELECT trunc({lit}) AS r FROM {_ONE_ROW}").collect()[0].r
     want = duck.sql(f"SELECT trunc({lit}) AS r").fetchall()[0][0]
     assert got == want, f"trunc({x!r}): spark={got} duck={want}"
 
@@ -623,27 +630,27 @@ def test_cast_divergences_documented(spark, duck):
     the division/null-order analogues)."""
     # 1. double->int: Spark truncates (matches DataFusion/Arrow), DuckDB
     #    rounds half-even
-    assert spark.sql("SELECT CAST(CAST(1.5 AS DOUBLE) AS INT) AS r").collect()[0].r == 1
+    assert _engine_sql(spark, "SELECT CAST(CAST(1.5 AS DOUBLE) AS INT) AS r").collect()[0].r == 1
     assert duck.sql("SELECT CAST(CAST(1.5 AS DOUBLE) AS INT) AS r").fetchall()[0][0] == 2
     # 2. decimal-shaped string->int: Spark NULL, DuckDB parses+rounds
-    assert spark.sql("SELECT TRY_CAST('1.5' AS INT) AS r").collect()[0].r is None
+    assert _engine_sql(spark, "SELECT TRY_CAST('1.5' AS INT) AS r").collect()[0].r is None
     assert duck.sql("SELECT TRY_CAST('1.5' AS INT) AS r").fetchall()[0][0] == 2
     # 3. slash dates: Spark NULL, DuckDB parses
-    assert spark.sql("SELECT TRY_CAST('2020/01/02' AS DATE) AS r").collect()[0].r is None
+    assert _engine_sql(spark, "SELECT TRY_CAST('2020/01/02' AS DATE) AS r").collect()[0].r is None
     assert duck.sql("SELECT TRY_CAST('2020/01/02' AS DATE) AS r").fetchall()[0][0] is not None
     # 4. 'yes' boolean: Spark parses, DuckDB NULL
-    assert spark.sql("SELECT TRY_CAST('yes' AS BOOLEAN) AS r").collect()[0].r is True
+    assert _engine_sql(spark, "SELECT TRY_CAST('yes' AS BOOLEAN) AS r").collect()[0].r is True
     assert duck.sql("SELECT TRY_CAST('yes' AS BOOLEAN) AS r").fetchall()[0][0] is None
     # 5. high-precision decimal literal -> double: DuckDB lands 1 ulp
     #    off correctly-rounded; string -> double agrees in both
     q = "SELECT CAST(CAST(900719.9999999999 AS DOUBLE) AS STRING) AS r"
-    assert spark.sql(q).collect()[0].r == "900719.9999999999"
+    assert _engine_sql(spark, q).collect()[0].r == "900719.9999999999"
     assert duck.sql(q).fetchall()[0][0] == "900720.0"
     q = "SELECT CAST(CAST('900719.9999999999' AS DOUBLE) AS STRING) AS r"
-    assert spark.sql(q).collect()[0].r == "900719.9999999999"
+    assert _engine_sql(spark, q).collect()[0].r == "900719.9999999999"
     assert duck.sql(q).fetchall()[0][0] == "900719.9999999999"
     # 6. sub-4-digit years: DuckDB parses, Spark NULL
-    assert spark.sql("SELECT TRY_CAST('1-1-1' AS DATE) AS r").collect()[0].r is None
+    assert _engine_sql(spark, "SELECT TRY_CAST('1-1-1' AS DATE) AS r").collect()[0].r is None
     assert duck.sql("SELECT TRY_CAST('1-1-1' AS DATE) AS r").fetchall()[0][0] is not None
 
 
@@ -672,7 +679,7 @@ def test_order_limit_offset_agree(spark, duck, key, d, nl, lim, off):
         f"SELECT COALESCE(a, -999) AS r FROM {VALUES_SQL} "
         f"ORDER BY 0 + ({key}) {d}{nl}, a ASC NULLS LAST LIMIT {lim} OFFSET {off}"
     )
-    got = [row.r for row in spark.sql(sql).collect()]
+    got = [row.r for row in _engine_sql(spark, sql).collect()]
     want = [v for (v,) in duck.sql(sql).fetchall()]
     assert got == want, f"{sql}\n spark={got}\n duck={want}"
 
@@ -682,7 +689,7 @@ def test_default_null_ordering_divergence_documented(spark, duck):
     Spark but last in DuckDB/Postgres/DataFusion — why every checked
     query spells the null position explicitly."""
     sql = f"SELECT COALESCE(b, -999) AS r FROM {VALUES_SQL} ORDER BY b ASC, a ASC NULLS LAST"
-    got = [row.r for row in spark.sql(sql).collect()]
+    got = [row.r for row in _engine_sql(spark, sql).collect()]
     want = [v for (v,) in duck.sql(sql).fetchall()]
     assert got[0] == -999 and got[1] == -999  # Spark: NULLs first
     assert want[-1] == -999 and want[-2] == -999  # DuckDB: NULLs last
@@ -753,20 +760,16 @@ _g_dir = st.sampled_from(["ASC", "DESC"])
 @settings(max_examples=30, deadline=None)
 @given(agg=_g_agg, part=_g_part, d=_g_dir, lo=_g_lo, hi=_g_hi)
 def test_groups_frames_match_python_oracle(spark, agg, part, d, lo, hi):
-    from datafusion_wasm_bindings_spark.compat import rewrite
-
     sql = (
         f"SELECT id, {agg} OVER ({part}ORDER BY o {d} "
         f"GROUPS BETWEEN {lo} AND {hi}) AS r FROM {GROUPS_VALUES_SQL} ORDER BY id"
     )
-    got = {row.id: row.r for row in spark.sql(rewrite(sql)).collect()}
+    got = {row.id: row.r for row in _engine_sql(spark, sql).collect()}
     want = _groups_oracle(GROUPS_ROWS, bool(part), d == "DESC", lo, hi, agg)
     assert got == want, f"{sql}\n spark={got}\n oracle={want}"
 
 
 def test_groups_frame_with_where_and_two_windows(spark):
-    from datafusion_wasm_bindings_spark.compat import rewrite
-
     sql = (
         "SELECT id, "
         "SUM(x) OVER (PARTITION BY p ORDER BY o GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS s, "
@@ -777,7 +780,7 @@ def test_groups_frame_with_where_and_two_windows(spark):
     s = _groups_oracle(rows, True, False, "1 PRECEDING", "1 FOLLOWING", "SUM(x)")
     c = _groups_oracle(rows, False, False, "UNBOUNDED PRECEDING", "CURRENT ROW", "COUNT(x)")
     want = [(i, s[i], c[i]) for i, _, _, _ in rows][:7]
-    got = [tuple(r) for r in spark.sql(rewrite(sql)).collect()]
+    got = [tuple(r) for r in _engine_sql(spark, sql).collect()]
     assert got == want, f"{sql}\n spark={got}\n oracle={want}"
 
 
@@ -823,7 +826,7 @@ def test_like_backslash_divergence_documented(spark, duck):
     a literal. Oracle queries must avoid bare backslash patterns or
     spell ESCAPE explicitly."""
     q = r"SELECT 'a_c' LIKE 'a\_c' AS r"
-    assert spark.sql(q).collect()[0].r is True  # escape: literal _
+    assert _engine_sql(spark, q).collect()[0].r is True  # escape: literal _
     assert duck.sql(q).fetchall()[0][0] is False  # literal backslash
 
 
@@ -865,7 +868,8 @@ _re_subject = st.text(alphabet="ab01 x.", max_size=10)
 @given(s=_re_subject, pat=_re_pattern)
 def test_regexp_functions_agree(spark, duck, s, pat):
     # NAMED parameters on the Spark side: positional `?` markers
-    # mis-bind here (see test_positional_params_shift_documented)
+    # mis-bind here (see test_positional_params_shift_documented). The
+    # engine's sql() takes no bind parameters, so this one calls Spark.
     got = spark.sql(
         "SELECT regexp_like(:s, :p) AS l, regexp_extract_all(:s, :p, 0) AS e, "
         "regexp_replace(:s, :p, 'X') AS r",
@@ -930,15 +934,15 @@ def test_similar_to_translation_agrees(spark, duck, s, p, neg):
     the SAME translated pattern (its SIMILAR TO is raw-regex, see the
     divergence pin above) — Java regex and RE2 must agree over %/_
     wildcards and | alternation, and the NOT form must negate."""
-    from datafusion_wasm_bindings_spark.compat import rewrite, similar_to_regex
+    from datafusion_wasm_bindings_spark.compat import similar_to_regex
 
     op = "NOT SIMILAR TO" if neg else "SIMILAR TO"
     sql = f"SELECT ('{s}' {op} '{p}') AS r"
-    got = spark.sql(rewrite(sql)).collect()[0].r
+    got = _engine_sql(spark, sql).collect()[0].r
     body = similar_to_regex(p)[len("^(?:"):-len(")$")]
     want = duck.sql(
         "SELECT regexp_full_match(?, ?)", params=[s, body]
     ).fetchall()[0][0]
     if neg:
         want = not want
-    assert got == want, (sql, rewrite(sql), got, want)
+    assert got == want, (sql, got, want)
