@@ -602,7 +602,12 @@ class SQLEngine:
         store registry at scan time (object_store.rs:43-74); Spark's
         Hadoop FileSystem does the scheme dispatch for us (file/, s3a://).
         """
-        name = _unmask(m["name"], lits).strip('"')
+        name = _unmask(m["name"], lits)
+        if len(name) > 1 and name[0] == name[-1] == '"':
+            # createOrReplaceTempView parses its argument: hand it the
+            # quoted identifier as a backtick one, so "ext q" names a
+            # view instead of failing as an invalid view name
+            name = "`" + name[1:-1].replace('""', '"').replace("`", "``") + "`"
         fmt = m["format"].lower()
         location = _text(m["location"], lits)
         if location.startswith("s3://"):

@@ -368,14 +368,14 @@ def duplicated_spans(
     substr(text, i, L) is an O(i) codepoint scan, so the naive
     positions-explode costs O(width²) per document — measured
     17.6 s → 83.8 s for the SAME corpus bytes when average doc width
-    grew 2k → 20k chars (probe_widerow; isolated: positional substr
+    grew 2k → 20k chars (scale probe `widerow`; isolated: positional substr
     79.4 s vs constant-offset 5.3 s at 20k width). Exploding
     fixed-stride chunks first bounds every per-span substr offset at
     ``_SPAN_CHUNK + L`` regardless of document width. The second
     (super-chunk) level is the r11 megadoc fix: single-level chunk
     extraction itself scans O(width²/_SPAN_CHUNK) per doc — measured
     6.1× wall at 2 MB docs vs 20k docs at constant corpus bytes
-    (probe_megadoc: 64.7 s → 16.1 s at that point after the fix;
+    (scale probe `megadoc`: 64.7 s → 16.1 s at that point after the fix;
     saturated 32-doc probe reads 1.07× wall at 100× width —
     width-parity, no quadratic term left). With both levels the
     residual per-doc scan is

@@ -377,7 +377,7 @@ def ivf_index(
     ``centroids``: cell, cv (array<double>) — tiny, broadcast at probe
     time.
 
-    Scale (r8 rewrite, measured by probe_ann_xl): assignment is a PURE
+    Scale (r8 rewrite, measured by scale probe `ann_xl`): assignment is a PURE
     MAP — the centroid state (cells × dims doubles, the same bounded
     driver state operators/clustering.py holds) ships as a one-row
     broadcast and the nearest cell is an argmin projection
@@ -670,7 +670,7 @@ def editdist_join(
     candidates are exactly the pairs sharing a signature, deduped
     BEFORE the one exact levenshtein per pair. Candidate volume tracks
     true-near-match density, not vocabulary size: the r9 probe
-    (probe_editdist_xl) measured the previous length-band blocking
+    (scale probe `editdist_xl`) measured the previous length-band blocking
     QUADRATIC — Σ_L |L|·|L±d| is Θ(|V|²) once bands hold |V|/10 words;
     at 30k words the band join ran 194.8 s vs FastSS 1.4 s (identical
     pairs), and at 300k the band join was killed at 10 min where

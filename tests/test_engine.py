@@ -84,6 +84,15 @@ def test_create_external_table(engine, sf_dir):
     assert "25" in out
 
 
+def test_create_external_table_quoted_name(engine, sf_dir):
+    # a double-quoted name may hold any character, as in DataFusion
+    engine.execute_sql(
+        f'CREATE EXTERNAL TABLE "ext q" STORED AS PARQUET LOCATION \'{sf_dir}/region.parquet\''
+    )
+    out = engine.execute_sql('SELECT count(*) AS n FROM "ext q"')
+    assert "5" in out
+
+
 def test_set_show_config_through_engine(engine):
     # SET / SHOW pass through to Spark's native statement handlers
     # (reference: datafusion.* vars via SET, SURVEY §2.9)

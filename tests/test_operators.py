@@ -2131,7 +2131,7 @@ def test_iterative_checkpoints_release_previous_rounds(spark):
     round's localCheckpoint blocks once the new round materializes, so
     persistent-RDD storage stays O(1) in round count (a 10M-node-chain
     star CC otherwise accumulated ~30 rounds x ~200 MB and OOM'd an
-    8 g heap — tools_scale_probe.py probe_cc_chain_xl). A 2000-node
+    8 g heap — the `cc_chain_xl` case of tools_scale_probe.py). A 2000-node
     chain drives ~10 star alternations and ~7 BFS/pagerank rounds; the
     persistent-RDD delta must stay at the final-state constant, never
     grow with rounds."""

@@ -1,2309 +1,49 @@
-"""Scale-headroom probes: replay a registered query's physical SHAPE
-over a generated 10M-row relation and report warm wall-clock, so
-BASELINE.md's 100 TB-posture claims are measured, not prose
-(VERDICT r3 next-round #6).
+"""Scale-headroom probes: replay a registered query's or operator's
+physical SHAPE over generated inputs far past the fixtures and report
+warm wall-clock, so BASELINE.md's 100 TB-posture claims are measured.
 
-Usage: ``python tools_scale_probe.py [ols2] [survival]`` (default:
-both). Each probe builds its input with spark.range (no fixture
-dependency), runs the shape once cold to pay codegen, then reports the
-median of 3 warm runs.
+Usage: ``python tools_scale_probe.py [id ...]``. No ids runs the 26
+``sweep=True`` cases; the rest (the ``*_xl`` 10x headroom probes,
+``pagerank_deep``, ``widerow``, ``megadoc``, ``tokenizer_ab``) take tens
+of minutes and run by id. Result lines are teed to
+``$SPARK_GRAFT_PROBE_LOG`` (default /tmp/dfwb_probe_log.txt). A ``Case``
+is data; ``run_case`` is the one harness, shared with the smoke tests.
 """
 
 from __future__ import annotations
 
+import math
+import os
+import shutil
 import statistics
 import sys
+import tempfile
 import time
+from collections.abc import Callable, Sequence
+from dataclasses import dataclass
+from types import SimpleNamespace
+from typing import Any, NamedTuple
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-sys.path.insert(0, __import__("os").path.dirname(__import__("os").path.abspath(__file__)))
-
-from datafusion_wasm_bindings_spark.queries._util import DEC, dsum
-from datafusion_wasm_bindings_spark.session import get_spark
-
-N = 10_000_000
-
-
-def _gen_ols(spark):
-    # 3 groups, deterministic pseudo-random regressors via hash mixing
-    return (
-        spark.range(N)
-        .select(
-            "id",
-            (F.col("id") % 3).cast("string").alias("flag"),
-            ((F.col("id") * 2654435761) % 50 + 1).cast("double").alias("x1"),
-            (((F.col("id") * 40503) % 100) / 100.0).alias("x2"),
-        )
-        .withColumn("y", F.col("x1") * 3.0 - F.col("x2") * 7.0 + (F.col("id") % 97).cast("double"))
-        .drop("id")
-    )
-
-
-def probe_ols2(spark) -> None:
-    """q_stats_ols2's shape: ONE map-combinable aggregate collecting 10
-    exact DECIMAL(18,6) cross-moments per group, then a scalar Cramer
-    solve on the 3-row aggregate."""
-    df = _gen_ols(spark).localCheckpoint()  # exclude generation from timing
-
-    def run():
-        g = df.groupBy("flag").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            dsum(F.col("x1"), "sx1"),
-            dsum(F.col("x2"), "sx2"),
-            dsum(F.col("y"), "sy"),
-            dsum(F.col("x1") * F.col("x1"), "sx1x1"),
-            dsum(F.col("x1") * F.col("x2"), "sx1x2"),
-            dsum(F.col("x2") * F.col("x2"), "sx2x2"),
-            dsum(F.col("x1") * F.col("y"), "sx1y"),
-            dsum(F.col("x2") * F.col("y"), "sx2y"),
-            dsum(F.col("y") * F.col("y"), "syy"),
-        )
-        n = F.col("n")
-        s11 = F.col("sx1x1") - F.col("sx1") * F.col("sx1") / n
-        s12 = F.col("sx1x2") - F.col("sx1") * F.col("sx2") / n
-        s22 = F.col("sx2x2") - F.col("sx2") * F.col("sx2") / n
-        s1y = F.col("sx1y") - F.col("sx1") * F.col("sy") / n
-        s2y = F.col("sx2y") - F.col("sx2") * F.col("sy") / n
-        det = s11 * s22 - s12 * s12
-        b1 = (s1y * s22 - s2y * s12) / det
-        b2 = (s2y * s11 - s1y * s12) / det
-        rows = g.select(
-            "flag", "n", b1.cast(DEC).cast("double").alias("b1"),
-            b2.cast(DEC).cast("double").alias("b2"),
-        ).collect()
-        assert len(rows) == 3 and all(r.n > 3_000_000 for r in rows)
-
-    _time("ols2 (10 decimal cross-moments, 10M rows, 3 groups)", run)
-
-
-def probe_survival(spark) -> None:
-    """q_stats_survival's shape: 10M events → per-user reduce (1M
-    users) → hour-grid reduce (bounded rows) → tiny global windows for
-    the KM product."""
-    ev = (
-        spark.range(N)
-        .select(
-            (F.col("id") % 1_000_000).alias("user_id"),
-            # xxhash64 scatters event times uniformly over the 90-day
-            # span (a multiplicative lattice collapses every user onto
-            # ~10 distinct durations and the grid degenerates)
-            (F.lit(1_700_000_000_000_000) + F.expr(f"pmod(xxhash64(id), {90 * 86_400_000_000})")).alias("us"),
-            F.when((F.col("id") * 2654435761) % 50 == 0, "error").otherwise("view").alias("event_type"),
-        )
-        .localCheckpoint()
-    )
-
-    def run():
-        u = ev.groupBy("user_id").agg(
-            F.min("us").alias("lo"),
-            F.max("us").alias("hi"),
-            F.max((F.col("event_type") == "error").cast("long")).alias("died"),
-        )
-        grid = (
-            u.select(
-                F.floor((F.col("hi") - F.col("lo")) / F.lit(3_600_000_000)).cast("long").alias("dur_h"),
-                "died",
-            )
-            .groupBy("dur_h")
-            .agg(
-                F.sum("died").cast("long").alias("d"),
-                F.sum(1 - F.col("died")).cast("long").alias("c"),
-            )
-        )
-        w_all = Window.orderBy("dur_h").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        w_prev = Window.orderBy("dur_h").rowsBetween(Window.unboundedPreceding, -1)
-        w_cum = Window.orderBy("dur_h").rowsBetween(Window.unboundedPreceding, 0)
-        staged = grid.select(
-            "dur_h",
-            "d",
-            (
-                F.sum(F.col("d") + F.col("c")).over(w_all)
-                - F.coalesce(F.sum(F.col("d") + F.col("c")).over(w_prev), F.lit(0))
-            ).cast("long").alias("n_risk"),
-        )
-        qln = F.when(
-            F.col("d") < F.col("n_risk"),
-            F.floor(
-                F.log(F.lit(1.0) - F.col("d") / F.cast("double", F.col("n_risk"))) * F.lit(1e6)
-                + F.lit(0.5)
-            ).cast("long"),
-        ).otherwise(F.lit(-100_000_000))
-        rows = (
-            staged.withColumn("qln", qln)
-            .select(
-                "dur_h", "n_risk",
-                F.exp(F.sum("qln").over(w_cum) / F.lit(1e6)).cast(DEC).cast("double").alias("survival"),
-            )
-            .collect()
-        )
-        assert len(rows) > 100  # grid is bounded, not corpus-sized
-
-    _time("survival (KM over 10M events / 1M users)", run)
-
-
-def probe_changepoint(spark) -> None:
-    """q_events_changepoint's two-pass bucketed CUSUM vs the naive
-    per-type window over 10M rows × 5 types: with ~5 series the naive
-    window is 5 sequential tasks regardless of input size; the bucketed
-    rewrite keeps parallelism ∝ time span."""
-    from datafusion_wasm_bindings_spark.queries._util import DEC
-
-    ev = (
-        spark.range(N)
-        .select(
-            (F.col("id") % 5).cast("string").alias("event_type"),
-            F.col("id").alias("event_id"),
-            (F.lit(1_700_000_000_000_000) + F.expr(f"pmod(xxhash64(id), {90 * 86_400_000_000})")).alias("us"),
-            ((F.col("id") * 2654435761) % 10000 / 100.0).alias("value"),
-        )
-        .localCheckpoint()
-    )
-
-    def _stats():
-        g = ev.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("s"),
-        )
-        return g.select(
-            "event_type", "n", (F.col("s") / F.col("n")).alias("mu")
-        )
-
-    def run_naive():
-        w_cum = (
-            Window.partitionBy("event_type")
-            .orderBy(F.col("us").asc(), F.col("event_id").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        staged = ev.join(F.broadcast(_stats()), "event_type").withColumn(
-            "cusum", F.sum((F.col("value") - F.col("mu")).cast(DEC)).over(w_cum).cast("double")
-        )
-        rows = staged.groupBy("event_type").agg(F.max(F.abs(F.col("cusum"))).alias("m")).collect()
-        assert len(rows) == 5
-
-    def run_bucketed():
-        bkt_us = 6 * 3_600_000_000
-        rows_df = (
-            ev.join(F.broadcast(_stats()), "event_type")
-            .withColumn("bkt", F.floor(F.col("us") / F.lit(bkt_us)).cast("long"))
-            .withColumn("dev", (F.col("value") - F.col("mu")).cast(DEC))
-        )
-        bs = rows_df.groupBy("event_type", "bkt").agg(F.sum("dev").alias("bsum"))
-        w_pref = (
-            Window.partitionBy("event_type")
-            .orderBy(F.col("bkt").asc())
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offs = bs.select(
-            "event_type", "bkt",
-            F.coalesce(F.sum("bsum").over(w_pref), F.lit(0).cast(DEC)).alias("sum_off"),
-        )
-        w_bcum = (
-            Window.partitionBy("event_type", "bkt")
-            .orderBy(F.col("us").asc(), F.col("event_id").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        staged = rows_df.join(F.broadcast(offs), ["event_type", "bkt"]).withColumn(
-            "cusum", (F.sum("dev").over(w_bcum) + F.col("sum_off")).cast("double")
-        )
-        rows = staged.groupBy("event_type").agg(F.max(F.abs(F.col("cusum"))).alias("m")).collect()
-        assert len(rows) == 5
-
-    _time("cusum naive per-type window (10M rows, 5 types)", run_naive)
-    _time("cusum two-pass bucketed (10M rows, 5 types)", run_bucketed)
-
-
-def probe_rank(spark) -> None:
-    """operators/scale.bucketed_rank vs the naive per-key window over
-    10M rows × 5 keys — the primitive behind the gini / winsorize /
-    balanced / neyman migrations. Local[32] mostly shows the removed
-    single-task sort; at 100 TB the naive form simply cannot run."""
-    from datafusion_wasm_bindings_spark.operators.scale import bucketed_rank
-
-    df = (
-        spark.range(N)
-        .select(
-            # ~1/16 NULL keys: exercises the null-safe offset join the
-            # r5 fix added (a plain equi-join dropped NULL-keyed rows)
-            F.when(F.col("id") % 16 == 0, F.lit(None))
-            .otherwise((F.col("id") % 5).cast("string"))
-            .alias("k"),
-            ((F.col("id") * 2654435761) % 1_000_000 / 100.0).alias("v"),
-            F.col("id"),
-        )
-        .localCheckpoint()
-    )
-
-    def run_naive():
-        w = Window.partitionBy("k").orderBy(F.col("v").asc(), F.col("id").asc())
-        out = (
-            df.withColumn("rn", F.row_number().over(w).cast("long"))
-            .groupBy("k")
-            .agg(F.max("rn").alias("mx"), F.sum("rn").alias("s"))
-            .collect()
-        )
-        assert len(out) == 6  # 5 keys + the NULL group
-
-    def run_bucketed():
-        out = (
-            bucketed_rank(
-                df, ["k"], F.floor(F.col("v") / 100.0), [F.col("v").asc(), F.col("id").asc()]
-            )
-            .groupBy("k")
-            .agg(F.max("rn").alias("mx"), F.sum("rn").alias("s"))
-            .collect()
-        )
-        assert len(out) == 6
-        assert sum(r.mx for r in out) == N  # ranks cover every row, NULLs kept
-
-    _time("per-key rank naive window (10M rows, 5 keys)", run_naive)
-    _time("per-key rank bucketed two-pass (10M rows, 5 keys)", run_bucketed)
-
-
-
-def probe_minhash(spark) -> None:
-    """End-to-end MinHash-LSH dedup over a 100,000-document corpus (20
-    token-disjoint replicas of the sf0.1 documents: every token gets a
-    per-replica suffix, so shingles never match across replicas and
-    the verified pair count must be exactly 20x the per-replica
-    count). Refreshes BASELINE's stale pre-r3-fix datapoint."""
-    from pyspark.sql import DataFrame
-
-    from datafusion_wasm_bindings_spark.operators.dedup import minhash_lsh_pairs
-    from datafusion_wasm_bindings_spark.sources.catalog import table
-
-    docs = table(spark, "/root/testdata/sf0.1", "documents").select("doc_id", "text")
-    n_docs = docs.count()
-    reps = [
-        docs.select(
-            (F.col("doc_id") + i * 1_000_000).alias("doc_id"),
-            F.regexp_replace("text", r"([A-Za-z0-9]+)", f"$1q{i}").alias("text"),
-        )
-        for i in range(20)
-    ]
-    corpus: DataFrame = reps[0]
-    for r in reps[1:]:
-        corpus = corpus.unionByName(r)
-    corpus = corpus.localCheckpoint()
-    base_pairs = minhash_lsh_pairs(
-        docs, bands=8, rows_per_band=2, jaccard_threshold=0.5
-    ).count()
-
-    def run():
-        n = minhash_lsh_pairs(
-            corpus, bands=8, rows_per_band=2, jaccard_threshold=0.5
-        ).count()
-        # exact only while verified fixture pairs are J=1 duplicates;
-        # tolerate per-replica LSH hash-draw variance (see probe_minhash_xl)
-        assert abs(n - 20 * base_pairs) <= max(2, 0.02 * 20 * base_pairs), (
-            n,
-            base_pairs,
-        )
-
-    _emit(f"minhash corpus: {n_docs} docs x 20 replicas, {base_pairs} pairs/replica")
-    _time(f"minhash-LSH dedup (100k docs, {20 * base_pairs} verified pairs)", run)
-
-
-
-def probe_embedding(spark) -> None:
-    """Hyperplane-LSH embedding dedup (q_dedup_embedding's operator) at
-    40,000 x 64-dim vectors with 20,000 PLANTED near-dup pairs (vector
-    i+20000 = vector i plus small deterministic noise, cosine ~0.97):
-    measures the bucketed candidate path at 20x the fixture corpus and
-    asserts >=99% planted-pair recall with essentially no false extras
-    (random 64-dim cosines at the 0.8 threshold are ~6-sigma events).
-    The r3 verdict graded the LSH re-back 'fixed' on shape; this is the
-    measured datapoint."""
-    from datafusion_wasm_bindings_spark.operators.similarity import cosine_pairs_lsh
-
-    half = 20_000
-    base = spark.range(half).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), d ->"
-            " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0)"
-        ).alias("embedding"),
-    )
-    noisy = spark.range(half).select(
-        (F.col("id") + half).alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), d ->"
-            " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
-            " + CAST(pmod(xxhash64(id * 64 + d + 99991), 2001) - 1000 AS DOUBLE) / 4000.0)"
-        ).alias("embedding"),
-    )
-    corpus = base.unionByName(noisy).localCheckpoint()
-
-    def run():
-        pairs = cosine_pairs_lsh(
-            corpus, threshold=0.8, planes=10, tables=16
-        ).collect()
-        planted = sum(1 for r in pairs if r.id_b - r.id_a == half)
-        extras = len(pairs) - planted
-        assert planted >= 0.99 * half, (planted, half)
-        assert extras <= 100, extras
-        run.stats = (planted, extras)
-
-    _time("hyperplane-LSH embedding dedup (40k x 64-dim, 20k planted pairs)", run)
-    _emit(f"planted found / extras: {run.stats}")
-
-
-
-def probe_ann(spark) -> None:
-    """The ANN triad at 40,000 x 64-dim (same planted corpus as
-    `embedding`: vector q+20000 is a cosine~0.97 near-copy of vector
-    q): brute-force exact top-3 as the baseline, IVF (32 cells, probe
-    4) and PQ-ADC (8 subspaces, 16 codes, exact re-rank) as the scale
-    paths. Each method must place every query's planted partner in its
-    top-3 — top-1-neighbor recall on structure we KNOW exists."""
-    from datafusion_wasm_bindings_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        ivf_topk,
-        pq_topk,
-    )
-
-    half = 20_000
-    base = spark.range(half).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), d ->"
-            " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0)"
-        ).alias("embedding"),
-    )
-    noisy = spark.range(half).select(
-        (F.col("id") + half).alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 63), d ->"
-            " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
-            " + CAST(pmod(xxhash64(id * 64 + d + 99991), 2001) - 1000 AS DOUBLE) / 4000.0)"
-        ).alias("embedding"),
-    )
-    corpus = base.unionByName(noisy).localCheckpoint()
-    qids = list(range(8))
-
-    def check(rows):
-        got = {}
-        for r in rows:
-            got.setdefault(r.query_id, set()).add(r.cand_id)
-        for q in qids:
-            assert q + half in got.get(q, set()), (q, sorted(got.get(q, set())))
-
-    def run_bf():
-        check(cosine_topk_bruteforce(corpus, query_ids=qids, k=3).collect())
-
-    def run_ivf():
-        check(ivf_topk(corpus, query_ids=qids, k=3, n_centroids=32, n_probe=4).collect())
-
-    def run_pq():
-        check(pq_topk(corpus, query_ids=qids, k=3, m_subspaces=8, n_codes=16, rerank=64).collect())
-
-    _time("ANN brute-force exact top-3 (40k x 64-dim, 8 queries)", run_bf)
-    _time("ANN IVF top-3 (32 cells, probe 4)", run_ivf)
-    _time("ANN PQ-ADC top-3 (8 subspaces, 16 codes, re-rank 64)", run_pq)
-
-
-def probe_q1_100m(spark) -> None:
-    """TPC-H Q1's pricing-summary shape (the flagship headline) at
-    100,000,000 rows — 10x the other probes, ~2 GB of working set: one
-    map-side-combinable aggregate over 4 decimal-quantized measures
-    into 6 groups. The shape's shuffle bytes are 6 groups x partitions
-    regardless of input size, so throughput here IS the 100 TB
-    per-core story (scan + quantize + partial-agg, no data movement).
-    The 100M-row input is NOT checkpointed (2+ GB exceeds the 8 g
-    driver-mem session's storage comfort): range generation is fused
-    whole-stage codegen, a few % of the aggregate cost, so the timing
-    is the honest generate+aggregate pipeline."""
-    n = 100_000_000
-    df = (
-        spark.range(n)
-        .select(
-            F.element_at(
-                F.array(F.lit("A"), F.lit("N"), F.lit("R")),
-                (F.col("id") % 3 + 1).cast("int"),
-            ).alias("rf"),
-            F.element_at(
-                F.array(F.lit("F"), F.lit("O")), (F.col("id") % 2 + 1).cast("int")
-            ).alias("ls"),
-            ((F.col("id") * 2654435761) % 5000 / 100.0).alias("qty"),
-            ((F.col("id") * 40503) % 100000 / 100.0).alias("price"),
-            ((F.col("id") * 69069) % 10 / 100.0).alias("disc"),
-            ((F.col("id") * 12345) % 8 / 100.0).alias("tax"),
-        )
-    )
-
-    def run():
-        rows = (
-            df.groupBy("rf", "ls")
-            .agg(
-                dsum(F.col("qty"), "sum_qty"),
-                dsum(F.col("price"), "sum_base"),
-                dsum(F.col("price") * (1 - F.col("disc")), "sum_disc"),
-                dsum(F.col("price") * (1 - F.col("disc")) * (1 + F.col("tax")), "sum_charge"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        assert len(rows) == 6 and sum(r.n for r in rows) == n
-
-    _time("TPC-H Q1 shape, 100M rows -> 6 groups (4 decimal measures)", run)
-
-
-def probe_multimodal(spark) -> None:
-    """Arrow-batched multimodal plumbing throughput: 200,000 binary
-    payloads of ~3.7 KB (~740 MB total) through the mapInPandas decode +
-    feature-extract path (operators/multimodal.extract_features, the
-    STUB decoder standing in for PIL/ffmpeg). Measures the real cost
-    component a 100 TB media pipeline pays per row: Arrow
-    serialization of binary columns into Python workers — payloads
-    never shuffle (map-only plan)."""
-    from datafusion_wasm_bindings_spark.operators.multimodal import extract_features
-
-    n = 200_000
-    media = spark.range(n).select(
-        F.col("id").alias("doc_id"),
-        F.encode(
-            F.expr("repeat(concat('payload-', CAST(id AS STRING), '-'), 256)"),
-            "UTF-8",
-        ).alias("media"),
-        F.struct(
-            F.when(F.col("id") % 2 == 0, F.lit("png")).otherwise(F.lit("jpeg")).alias("format"),
-            F.lit(5000).cast("bigint").alias("declared_len"),
-        ).alias("meta"),
-    ).localCheckpoint()
-
-    def run():
-        agg = extract_features(media).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("n_bytes").alias("total_bytes"),
-        ).collect()[0]
-        assert agg.n == n and agg.total_bytes > n * 3000, agg
-
-    _time("multimodal decode plumbing, 200k x ~3.7KB payloads (~740MB)", run)
-
-
-def probe_kmeans(spark) -> None:
-    """Deterministic Lloyd k-means (operators/clustering.fit_kmeans) at
-    500,000 x 32-dim quantized vectors, k=8, 2 iterations: assignment
-    is a pure map against broadcast integer-centroid literals (the
-    corpus never shuffles); each update reduces to k x dims cells.
-    Inertia monotonicity across the fit is the correctness signal."""
-    from datafusion_wasm_bindings_spark.operators.clustering import fit_kmeans
-
-    n = 500_000
-    corpus = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 31), d ->"
-            " CAST(pmod(xxhash64(id * 37 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
-            " + CAST(pmod(id, 8) AS DOUBLE) * CASE WHEN d = pmod(id, 8) THEN 2.0 ELSE 0.0 END)"
-        ).alias("embedding"),
-    ).localCheckpoint()
-
-    def run():
-        assigned, centroids = fit_kmeans(corpus, k=8, iters=2)
-        agg = assigned.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("cid").alias("k_used"),
-        ).collect()[0]
-        assert agg.n == n and agg.k_used >= 2, agg
-        assert len(centroids) == 8
-
-    _time("k-means fit, 500k x 32-dim, k=8, 2 iterations", run)
-
-
-def probe_cc_chain(spark) -> None:
-    """Adversarial-diameter connected components: a single
-    1,000,000-node CHAIN (diameter 1e6 — min-label propagation would
-    need 1e6 rounds; the large-star/small-star variant converges in
-    O(log n) alternations) plus 500k isolated 2-cliques as ballast.
-    Verifies the one-component/500k-component structure exactly."""
-    from datafusion_wasm_bindings_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    n = 1_000_000
-    chain = spark.range(n - 1).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
-    pairs = chain.unionByName(
-        spark.range(500_000).select(
-            (F.col("id") * 2 + n).alias("id_a"), (F.col("id") * 2 + n + 1).alias("id_b")
-        )
-    ).localCheckpoint()
-
-    def run():
-        comps = connected_components_star(pairs)
-        agg = comps.agg(
-            F.countDistinct("comp").alias("n_comp"),
-            F.count(F.lit(1)).alias("n_nodes"),
-        ).collect()[0]
-        assert agg.n_comp == 1 + 500_000, agg
-        assert agg.n_nodes == n + 1_000_000, agg
-
-    _time("connected components, 1M-node chain + 500k cliques (star variant)", run)
-
-
-def probe_durable(spark) -> None:
-    """Cost of the r5 durable-checkpoint knob: pagerank over a 2M-edge
-    graph with the default localCheckpoint lineage cut vs the
-    fault-tolerant storage checkpoint (operators/checkpoint.py).
-    Identical ranks asserted; the delta is the per-round storage
-    round-trip a real cluster pays for executor-loss recovery."""
-    import shutil
-    import tempfile
-
-    from datafusion_wasm_bindings_spark.operators.graph import pagerank
-
-    n_nodes = 200_000
-    base = spark.range(n_nodes)
-    edges = (
-        base.select(F.col("id").alias("src"), ((F.col("id") * 7 + 1) % n_nodes).alias("dst"))
-        .unionByName(
-            base.select(F.col("id").alias("src"), ((F.col("id") + 1) % n_nodes).alias("dst"))
-        )
-        .unionByName(
-            spark.range(8 * n_nodes).select(
-                F.expr(f"pmod(xxhash64(id), {n_nodes})").alias("src"),
-                F.expr(f"pmod(xxhash64(id + 13), {n_nodes})").alias("dst"),
-            )
-        )
-        .localCheckpoint()
-    )
-    ckdir = tempfile.mkdtemp(prefix="dfwb_durable_probe_")
-    state = {}
-
-    def run_local():
-        state["local"] = sorted(
-            (r.node, round(r.rank, 9)) for r in pagerank(edges, iters=3).collect()
-        )
-
-    def run_durable():
-        state["durable"] = sorted(
-            (r.node, round(r.rank, 9))
-            for r in pagerank(edges, iters=3, checkpoint_dir=ckdir).collect()
-        )
-
-    try:
-        _time("pagerank 2M edges, localCheckpoint cuts (3 rounds)", run_local)
-        _time("pagerank 2M edges, durable storage checkpoints", run_durable)
-        assert state["local"] == state["durable"]
-    finally:
-        shutil.rmtree(ckdir, ignore_errors=True)
-
-
-def probe_join_100m(spark) -> None:
-    """Broadcast dim join at 100,000,000 fact rows (q_join_inner's
-    shape at 1000x bench scale): the 25-row dim broadcasts, the fact
-    never shuffles, and the post-join aggregate partial-combines — the
-    plan whose per-core scan rate carries directly to 100 TB."""
-    n = 100_000_000
-    fact = spark.range(n).select(
-        (F.col("id") % 25).alias("nk"),
-        ((F.col("id") * 2654435761) % 10000 / 100.0).alias("v"),
-    )
-    dim = spark.range(25).select(
-        F.col("id").alias("nk"), F.concat(F.lit("NATION_"), F.col("id")).alias("name")
-    )
-
-    def run():
-        rows = (
-            fact.join(F.broadcast(dim), "nk")
-            .groupBy("name")
-            .agg(F.count(F.lit(1)).alias("cnt"), F.sum("v").alias("sv"))
-            .collect()
-        )
-        assert len(rows) == 25 and sum(r.cnt for r in rows) == n
-
-    _time("fact join broadcast dim, 100M rows -> 25 groups", run)
-
-
-def probe_ntile(spark) -> None:
-    """q_events_rfm's r5 rewrite, measured at scale: global ntile(5)
-    over a 10M-row per-user table (ONE sequential sort task, whatever
-    the cluster size) vs the bucketed two-pass rank + arithmetic ntile
-    (parallel by bucket). Identical outputs asserted per run."""
-    from pyspark.sql import Window
-
-    from datafusion_wasm_bindings_spark.operators.scale import _idiv, bucketed_rank
-
-    df = (
-        spark.range(N)
-        .select(
-            F.col("id").alias("user_id"),
-            ((F.col("id") * 2654435761) % 1_000_000 / 100.0).alias("monetary"),
-        )
-        .localCheckpoint()
-    )
-
-    def seg_counts(seg):
-        out = seg.groupBy("m_q").agg(F.count(F.lit(1)).alias("n")).collect()
-        assert len(out) == 5 and sum(r.n for r in out) == N
-        return {r.m_q: r.n for r in out}
-
-    state = {}
-
-    def run_naive():
-        w = Window.orderBy(F.col("monetary").asc(), F.col("user_id").asc())
-        state["naive"] = seg_counts(
-            df.select(F.ntile(5).over(w).cast("long").alias("m_q"))
-        )
-
-    def run_bucketed():
-        ranked = bucketed_rank(
-            df, [], F.floor(F.col("monetary") / 16.0),
-            [F.col("monetary").asc(), F.col("user_id").asc()],
-        )
-        q = _idiv(F.lit(N).cast("long"), F.lit(5))
-        r = F.lit(N).cast("long") - q * 5
-        cut = r * (q + 1)
-        rn = F.col("rn")
-        tile = F.when(rn <= cut, _idiv(rn - 1, q + 1) + 1).otherwise(
-            r + _idiv(rn - cut - 1, q) + 1
-        )
-        state["bucketed"] = seg_counts(ranked.select(tile.cast("long").alias("m_q")))
-
-    _time("global ntile(5), one sort task (10M rows)", run_naive)
-    _time("bucketed rank + arithmetic ntile (10M rows)", run_bucketed)
-    assert state["naive"] == state["bucketed"], state
-
-
-def probe_rfm_chain(spark) -> None:
-    """q_events_rfm's THREE chained bucketed global ranks at 10M rows,
-    uncut vs localCheckpoint-between. MEASURED VERDICT: uncut wins ~3x
-    (7.8 s vs 21.7 s) — the fixed-width buckets are lazy expressions,
-    so the whole chain is ONE action and Spark reuses each rank's
-    exchanges (ReusedExchange); per-rank checkpoints just pay three
-    10M-row materializations. This is the mirror of probe_rrf, where
-    equidepth_bucket's EAGER approxQuantile action re-derives its
-    input outside any exchange reuse and checkpointing wins. Rule:
-    checkpoint what eager sub-actions consume, never lazy chains."""
-    from datafusion_wasm_bindings_spark.operators.scale import bucketed_rank
-
-    df = (
-        spark.range(N)
-        .select(
-            F.col("id").alias("user_id"),
-            ((F.col("id") * 2654435761) % 1_000_000 / 100.0).alias("m1"),
-            ((F.col("id") * 40503) % 730).alias("m2"),
-            ((F.col("id") * 69069) % 5_000).alias("m3"),
-        )
-        .localCheckpoint()
-    )
-
-    state = {}
-
-    def chain(cut: bool):
-        seg = df
-        for i, c in enumerate(("m1", "m2", "m3")):
-            seg = bucketed_rank(
-                seg, [], F.floor(F.col(c) / 16.0),
-                [F.col(c).asc(), F.col("user_id").asc()],
-                rank_col=f"__rn_{i}",
-            )
-            if cut:
-                seg = seg.localCheckpoint(eager=True)
-        row = seg.agg(
-            *[
-                F.sum((F.col(f"__rn_{i}") * F.col("user_id")).cast("decimal(38,0)"))
-                .alias(f"s{i}")
-                for i in range(3)
-            ]
-        ).collect()[0]
-        return tuple(row)
-
-    def run_uncut():
-        state["uncut"] = chain(cut=False)
-
-    def run_cut():
-        state["cut"] = chain(cut=True)
-
-    _time("3 chained bucketed ranks, uncut lineage (10M rows)", run_uncut)
-    _time("3 chained bucketed ranks, checkpoint between (10M rows)", run_cut)
-    assert state["uncut"] == state["cut"], state
-
-
-def probe_triangles(spark) -> None:
-    """operators/graph.triangle_count over a 2M-edge graph whose node
-    count (200k) makes the degree-rank table a real join side: r5
-    removed the forced broadcast so AQE picks the strategy from runtime
-    sizes (broadcast here, shuffle join at 1e9+ nodes) instead of dying
-    past the ceiling. Triangle count is cross-checked on a planted
-    construction: nodes i, i+1, i+2 ring edges plus chords."""
-    from datafusion_wasm_bindings_spark.operators.graph import triangle_count
-
-    n_nodes = 200_000
-    # each node i contributes edges (i, i+1) and (i, i+2) mod n: every
-    # consecutive triple {i, i+1, i+2} closes exactly one triangle
-    base = spark.range(n_nodes)
-    e1 = base.select(F.col("id").alias("u"), ((F.col("id") + 1) % n_nodes).alias("v"))
-    e2 = base.select(F.col("id").alias("u"), ((F.col("id") + 2) % n_nodes).alias("v"))
-    # pad with provably non-closing edges to reach 2M: each pad edge
-    # gets a UNIQUE high endpoint (degree 1 — no wedges can form there;
-    # a hash-scattered pad closed ~130 accidental triangles)
-    pad = spark.range(8 * n_nodes).select(
-        F.expr(f"pmod(xxhash64(id), {n_nodes})").alias("u"),
-        (F.col("id") + n_nodes).alias("v"),
-    )
-    edges = e1.unionByName(e2).unionByName(pad).localCheckpoint()
-
-    def run():
-        n = triangle_count(edges).collect()[0]["n_triangles"]
-        assert n == n_nodes, n  # degree-1 pad endpoints close nothing
-
-    _time("triangle count, AQE-chosen joins (2M edges, 200k nodes)", run)
-
-
-def probe_pagerank_prepared(spark) -> None:
-    """Bucketed-edge PageRank (operators/graph.prepare_pagerank_edges)
-    vs the plain path at 10,000,000 edges / 500,000 nodes, 3 damped
-    iterations each. The prepared table bakes the src hash
-    distribution into files, so every iteration's rank join exchanges
-    only the O(|V|) rank table — the probe measures what the one-time
-    bucketed write buys across iterations (at 100 TB the edge side is
-    the whole game: 20x the rank table here, far more on web graphs).
-    Ranks must be BIT-identical between paths (decimal-summed
-    contributions are order-independent)."""
-    import tempfile
-
-    from datafusion_wasm_bindings_spark.operators.graph import (
-        pagerank,
-        prepare_pagerank_edges,
-    )
-
-    n_edges, n_nodes = 10_000_000, 500_000
-    edges = (
-        spark.range(n_edges)
-        .select(
-            (F.col("id") % n_nodes).alias("src"),
-            ((F.col("id") * 2654435761 + 7) % n_nodes).alias("dst"),
-        )
-        .localCheckpoint()
-    )
-
-    def run_plain():
-        assert pagerank(edges, iters=3).count() == n_nodes
-
-    _time("pagerank 3 iters, plain (10M edges, 500k nodes)", run_plain)
-
-    d = tempfile.mkdtemp(prefix="pr_bkt_")
-    prep = prepare_pagerank_edges(spark, edges, "probe_pr_edges", buckets=32, path=d)
-
-    def run_prep():
-        assert pagerank(prep, iters=3, prepared=True).count() == n_nodes
-
-    try:
-        _time("pagerank 3 iters, prepared bucketed edges (same input)", run_prep)
-        a = pagerank(edges, iters=3).orderBy("node").collect()
-        b = pagerank(prep, iters=3, prepared=True).orderBy("node").collect()
-        assert [tuple(r) for r in a] == [tuple(r) for r in b], "rank mismatch"
-        _emit("  prepared ranks bit-identical to plain: yes")
-    finally:
-        import shutil
-
-        spark.sql("DROP TABLE IF EXISTS probe_pr_edges")
-        shutil.rmtree(d, ignore_errors=True)  # path-backed: files outlive DROP
-
-
-def probe_bloom_join(spark) -> None:
-    """hash_prefilter_join vs plain shuffle join at 40,000,000 fact
-    rows x 200,000-key dim filtered to 1% selectivity, broadcast
-    DISABLED so both paths pay the SMJ shuffle (the 100 TB regime
-    where neither side fits the broadcast ceiling). Fact rows carry a
-    ~120 B payload because the pattern's whole value is shuffle
-    BYTES; the probe also prints the measured exchange-row reduction
-    (~83x: 40M -> ~481k = 400k true matches + ~81k false positives,
-    exactly the 2k/2^20 bucket FP rate). Honest local accounting: a
-    single-box shuffle is memcpy-bound, so the sketch's ~0.3 s fixed
-    cost only pays for itself once enough bytes are avoided — at 20M
-    narrow 16 B rows the prefilter LOSES (1.0 s vs 0.6 s), at 10M
-    wide rows it still loses (1.1 s vs 0.8 s), and the crossover
-    lands here at 40M wide rows. On a network-bound cluster the
-    crossover is far earlier and the gap far wider: 5 GB avoided per
-    83x reduction here stands in for the TB-scale exchanges the
-    pattern exists for. Results must be identical."""
-    from datafusion_wasm_bindings_spark.operators.scale import hash_prefilter_join
-
-    n_fact, n_dim = 40_000_000, 200_000
-    fact = (
-        spark.range(n_fact)
-        .select(
-            ((F.col("id") * 2654435761) % n_dim).alias("k"),
-            (F.col("id") % 1000 / 10.0).alias("v"),
-            F.expr("repeat(uuid(), 3)").alias("payload"),
-        )
-        .localCheckpoint()
-    )
-    dim = (
-        spark.range(n_dim)
-        .select(F.col("id").alias("k"), (F.col("id") % 100).alias("grp"))
-        .filter(F.col("grp") == 42)  # 1% of keys survive
-        .localCheckpoint()
-    )
-    expect = None
-
-    # aggregate over the payload so it cannot be pruned before the
-    # join exchange — with a bare count() Catalyst ships only the key
-    # and both paths shuffle 16 B rows (the narrow case above)
-    def _total(df):
-        return df.agg(
-            F.count(F.lit(1)).alias("n"), F.sum(F.length("payload")).alias("b")
-        ).collect()[0]
-
-    def run_plain():
-        nonlocal expect
-        expect = _total(fact.join(dim, "k"))
-
-    def run_pre():
-        assert _total(hash_prefilter_join(fact, dim, "k")) == expect
-
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        _time("selective join, plain SMJ (40M x ~120B fact, 1% dim)", run_plain)
-        _time("selective join, hash-prefiltered (same input)", run_pre)
-        buckets = dim.select(
-            F.pmod(F.xxhash64(F.col("k")), F.lit(1 << 20)).alias("__pfb")
-        ).distinct()
-        surv = fact.join(
-            F.broadcast(buckets),
-            F.pmod(F.xxhash64(fact["k"]), F.lit(1 << 20)) == F.col("__pfb"),
-            "left_semi",
-        ).count()
-        _emit(
-            f"  rows entering join exchange: plain {n_fact:,} vs prefiltered {surv:,}"
-        )
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def probe_ks(spark) -> None:
-    """q_ml_ks_drift's shape at 10,000,000 rows / ~100k distinct
-    scores: two-slice exact KS via the bucketed two-pass CDF prefix
-    sums (queries/analytics5.ks_from_scores). The corpus-sized work is
-    one combinable groupBy(score) shuffle; everything after runs over
-    the distinct-score table with __bkt-partitioned windows. Slice A
-    is shifted +0.01 so the probe asserts a genuinely nonzero D."""
-    from datafusion_wasm_bindings_spark.queries.analytics5 import ks_from_scores
-
-    n = 10_000_000
-    df = (
-        spark.range(n)
-        .select(
-            (F.col("id") % 2 == 0).alias("is_a"),
-            (
-                ((F.col("id") * 2654435761) % 100003).cast("double") / 100003.0
-                + F.when(F.col("id") % 2 == 0, 0.01).otherwise(0.0)
-            ).alias("score"),
-        )
-        .localCheckpoint()
-    )
-
-    def run():
-        row = ks_from_scores(df, bucket_scale=1000.0).collect()[0]
-        assert row["n_a"] == n // 2 and row["n_b"] == n - n // 2, row
-        assert row["ks_d"] > 0.001, row
-
-    _time("exact two-sample KS (10M rows, ~200k distinct scores)", run)
-
-
-def probe_rrf(spark) -> None:
-    """q_rank_rrf's shape at 1,000,000 x 16-dim vectors: two exact
-    integer dot products map-side against broadcast query literals,
-    two bucketed global ranks (equi-depth buckets, no partition-less
-    corpus window), fused-score top-10 via TakeOrdered. Matches the
-    registered shape: score table and first rank localCheckpointed
-    (single-scan rule, r5 wave-13 (a)) — the uncut variant re-derived
-    the dot-product stage ~6x and ran 12.7 s vs 8.0 s here."""
-    from datafusion_wasm_bindings_spark.operators.scale import (
-        bucketed_rank,
-        equidepth_bucket,
-    )
-    from datafusion_wasm_bindings_spark.operators.similarity import _dot
-
-    n = 1_000_000
-    v = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 15), d ->"
-            " CAST(pmod(xxhash64(id * 53 + d), 2001) - 1000 AS BIGINT))"
-        ).alias("x"),
-    ).localCheckpoint()
-    q1 = F.array(*[F.lit((i * 911) % 2001 - 1000).cast("long") for i in range(16)])
-    q2 = F.array(*[F.lit((i * 389) % 2001 - 1000).cast("long") for i in range(16)])
-
-    def run():
-        c = v.select(
-            "vec_id", _dot(F.col("x"), q1).alias("s1"), _dot(F.col("x"), q2).alias("s2")
-        ).localCheckpoint(eager=True)
-        r1 = bucketed_rank(
-            c, [], equidepth_bucket(c, -F.col("s1")),
-            [F.col("s1").desc(), F.col("vec_id").asc()], rank_col="r1",
-        ).localCheckpoint(eager=True)
-        r2 = bucketed_rank(
-            r1, [], equidepth_bucket(r1, -F.col("s2")),
-            [F.col("s2").desc(), F.col("vec_id").asc()], rank_col="r2",
-        )
-        fused = (
-            F.lit(1).cast("double") / (F.lit(60) + F.col("r1"))
-            + F.lit(1).cast("double") / (F.lit(60) + F.col("r2"))
-        ).alias("rrf")
-        top = (
-            r2.select("vec_id", "r1", "r2", fused)
-            .orderBy(F.col("rrf").desc(), F.col("vec_id").asc())
-            .limit(10)
-            .collect()
-        )
-        assert len(top) == 10 and top[0]["rrf"] >= top[-1]["rrf"]
-
-    _time("RRF fusion (1M x 16-dim, two bucketed global ranks)", run)
-
-
-def probe_semdedup(spark) -> None:
-    """operators/clustering.semantic_dedup at 500,000 x 32-dim, k=8:
-    probe_kmeans's fit cost plus representative election (k-row
-    groupBy), broadcast rep scoring (pure map), and one final
-    aggregate — the increment over the bare fit is the point."""
-    from datafusion_wasm_bindings_spark.operators.clustering import semantic_dedup
-
-    n = 500_000
-    corpus = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 31), d ->"
-            " CAST(pmod(xxhash64(id * 37 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
-            " + CAST(pmod(id, 8) AS DOUBLE) * CASE WHEN d = pmod(id, 8) THEN 2.0 ELSE 0.0 END)"
-        ).alias("embedding"),
-    ).localCheckpoint()
-
-    def run():
-        out = semantic_dedup(corpus, k=8, iters=2, threshold=0.9).collect()
-        assert sum(r["n_members"] for r in out) == n
-        assert all(r["n_kept"] + r["n_dups"] == r["n_members"] for r in out)
-
-    _time("SemDeDup prune (500k x 32-dim, k=8, tau=0.9)", run)
-
-
-def probe_session(spark) -> None:
-    """q_events_session's shape at 10M events / 1M users: Spark's
-    native session_window groupBy (streaming/events.sessionized — the
-    same operator the registered query runs). The state is per-user
-    per-gap merges; parallelism follows the hash of the grouping key,
-    so user cardinality (1M) keeps every core busy at any input size —
-    no low-cardinality window anywhere."""
-    from datafusion_wasm_bindings_spark.streaming.events import sessionized
-
-    ev = (
-        spark.range(N)
-        .select(
-            (F.col("id") % 1_000_000).alias("user_id"),
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000)
-                + F.expr(f"pmod(xxhash64(id), {30 * 86_400_000_000})")
-            ).alias("ts"),
-            ((F.col("id") * 2654435761) % 10_000 / 100.0).alias("value"),
-        )
-        .localCheckpoint()
-    )
-
-    def run():
-        out = sessionized(ev).agg(
-            F.count(F.lit(1)).alias("sessions"),
-            F.sum("n").alias("events"),
-        ).collect()[0]
-        assert out["events"] == N and out["sessions"] >= 1_000_000
-
-    _time("session_window sessionization (10M events, 1M users)", run)
-
-
-def probe_profile(spark) -> None:
-    """q_profile_columns' one-scan wide aggregate at 10M rows x 4
-    columns, exact count(DISTINCT) mode vs approx (HLL) mode — the
-    documented 100 TB escape hatch (profiling.profile_columns
-    exact_distinct=False), measured: the exact mode pays
-    RewriteDistinctAggregates' Expand (5x row replication here), the
-    HLL mode stays a true single-pass map-side aggregate."""
-    from datafusion_wasm_bindings_spark.operators.profiling import profile_columns
-
-    df = (
-        spark.range(N)
-        .select(
-            ((F.col("id") * 2654435761) % 1_000_000 / 100.0).alias("a"),
-            F.when(F.col("id") % 97 == 0, None)
-            .otherwise((F.col("id") * 40503) % 50_000)
-            .cast("double")
-            .alias("b"),
-            ((F.col("id") * 69069) % 365).cast("double").alias("c"),
-            F.expr("CAST(pmod(xxhash64(id), 1000000) AS DOUBLE) / 7.0").alias("d"),
-        )
-        .localCheckpoint()
-    )
-    cols = ["a", "b", "c", "d"]
-
-    def run_exact():
-        out = profile_columns(df, cols, exact_distinct=True).collect()
-        assert len(out) == 4 and all(r["n"] > 0 for r in out)
-
-    def run_hll():
-        out = profile_columns(df, cols, exact_distinct=False).collect()
-        assert len(out) == 4 and all(r["n_distinct"] > 0 for r in out)
-
-    _time("column profile, exact countDistinct (10M rows x 4 cols)", run_exact)
-    _time("column profile, HLL mode (same input)", run_hll)
-
-
-def _gen_docs(spark, n_docs: int):
-    """Deterministic ~60-token synthetic docs (doc_id, lang, text)."""
-    words = (
-        "the quick brown fox jumps over a lazy dog and then runs to "
-        "data spark engine query shuffle partition broadcast join"
-    ).split()
-    arr = F.array(*[F.lit(w) for w in words])
-    return (
-        spark.range(n_docs)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.lit("en").alias("lang"),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(60)),
-                    lambda i: F.element_at(
-                        arr, (F.pmod(F.xxhash64(F.col("id") * 31 + i), F.lit(len(words))) + 1).cast("int")
-                    ),
-                ),
-                " ",
-            ).alias("text"),
-        )
-        .localCheckpoint()
-    )
-
-
-def probe_textmap(spark) -> None:
-    """The text-analysis map path (q_text_quality shape,
-    operators/text.quality_scores) over 2M synthetic ~60-token docs:
-    pure whole-stage-codegen expressions (regexp + HOF token filters),
-    zero shuffles until the final bounded aggregate — the throughput
-    every corpus-quality pre-filter runs at before model scoring."""
-    from datafusion_wasm_bindings_spark.operators.text import quality_scores
-
-    n_docs = 2_000_000
-    docs = _gen_docs(spark, n_docs)
-
-    def run():
-        out = quality_scores(docs).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg("quality").alias("q"),
-        ).collect()[0]
-        assert out["n"] == n_docs and 0.0 < out["q"] <= 1.0
-
-    _time("text quality map path (2M x ~60-token docs, codegen-only)", run)
-
-
-def probe_langid(spark) -> None:
-    """operators/text.language_id at 2M docs: the r5 pure-map rewrite
-    (per-language HOF hit counts + array_max argmax, zero shuffles)
-    vs the previous explode → broadcast-join → groupBy(doc, lang) →
-    groupBy(doc) → join-back formulation (shuffles O(corpus tokens)
-    twice and re-joins the corpus). Identical (lang_pred, best_hits)
-    aggregate checksums asserted per run."""
-    from datafusion_wasm_bindings_spark.operators.text import (
-        LANG_LEXICON,
-        language_id,
-        tokens_col,
-    )
-
-    n_docs = 2_000_000
-    docs = _gen_docs(spark, n_docs)
-
-    def summarize(df):
-        rows = (
-            df.groupBy("lang_pred")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("best_hits").alias("h"),
-            )
-            .collect()
-        )
-        return sorted((r["lang_pred"], r["n"], int(r["h"])) for r in rows)
-
-    state = {}
-
-    def run_map():
-        state["map"] = summarize(language_id(docs))
-
-    def run_joins():
-        lex_rows = [(l, w) for l, ws in LANG_LEXICON.items() for w in ws]
-        lexicon = spark.createDataFrame(lex_rows, "lang_cand string, tok string")
-        toks = docs.select("doc_id", F.explode(tokens_col()).alias("tok"))
-        hits = (
-            toks.join(F.broadcast(lexicon), "tok")
-            .groupBy("doc_id", "lang_cand")
-            .agg(F.count("*").alias("hits"))
-        )
-        best = hits.groupBy("doc_id").agg(
-            F.expr("max_by(lang_cand, struct(hits, lang_cand))").alias("lang_pred"),
-            F.max("hits").alias("best_hits"),
-        )
-        joined = (
-            docs.select("doc_id")
-            .join(best, "doc_id", "left")
-            .select(
-                F.coalesce("lang_pred", F.lit("und")).alias("lang_pred"),
-                F.coalesce("best_hits", F.lit(0)).alias("best_hits"),
-            )
-        )
-        state["joins"] = summarize(joined)
-
-    _time("langid pure-map argmax (2M docs)", run_map)
-    _time("langid explode+join formulation (same input)", run_joins)
-    assert state["map"] == state["joins"], state
-
-
-def probe_pack(spark) -> None:
-    """pack_sequences' shape at 10M docs / 8 shards (token counts
-    pre-computed — the tokenizer is probed separately in `textmap`):
-    the naive PARTITION BY shard running sum (8 sequential tasks,
-    whatever the cluster) vs the r5 bucketed_prefix_sum migration.
-    Identical per-(shard, seq_id) rollups asserted."""
-    from datafusion_wasm_bindings_spark.operators.scale import bucketed_prefix_sum
-
-    n_shards, budget = 8, 512
-    docs = (
-        spark.range(N)
-        .select(
-            F.col("id").alias("doc_id"),
-            (F.col("id") % n_shards).alias("shard"),
-            (F.expr("pmod(xxhash64(id * 19), 120)") + 1).alias("n_tokens"),
-        )
-        .localCheckpoint()
-    )
-
-    def rollup(placed):
-        out = (
-            placed.select(
-                "shard",
-                "n_tokens",
-                F.floor(F.col("start_off") / budget).cast("long").alias("seq_id"),
-            )
-            .groupBy("shard", "seq_id")
-            .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("t"))
-            .agg(
-                F.count(F.lit(1)).alias("n_seqs"),
-                F.sum(F.col("seq_id") * F.col("n_docs")).alias("chk"),
-                F.sum("t").alias("tok"),
-            )
-            .collect()[0]
-        )
-        return tuple(out)
-
-    state = {}
-
-    def run_naive():
-        w = (
-            Window.partitionBy("shard")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        placed = docs.select(
-            "shard",
-            "n_tokens",
-            (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("start_off"),
-        )
-        state["naive"] = rollup(placed)
-
-    def run_bucketed():
-        placed = bucketed_prefix_sum(
-            docs, ["shard"], F.floor(F.col("doc_id") / 4096),
-            [F.col("doc_id").asc()], F.col("n_tokens"), sum_col="end_off",
-        ).select(
-            "shard", "n_tokens",
-            (F.col("end_off") - F.col("n_tokens")).alias("start_off"),
-        )
-        state["bucketed"] = rollup(placed)
-
-    _time("packing offsets, naive per-shard window (10M docs, 8 shards)", run_naive)
-    _time("packing offsets, bucketed prefix sum (same input)", run_bucketed)
-    assert state["naive"] == state["bucketed"], state
-
-
-def probe_pagerank_xl(spark) -> None:
-    """VERDICT r6 #4: prepared-edge PageRank ONE ORDER OF MAGNITUDE past
-    the standing probe — 10M vs 100M edges (500k vs 5M nodes), 3 damped
-    iterations, bucketed-edge path both times. Prints the measured
-    scaling exponent log(t2/t1)/log(10): ~1.0 means the per-iteration
-    cost is linear in |E| with no O(n^2) constant hiding in the bucket
-    parameters (buckets track shuffle.partitions at both scales)."""
-    import tempfile
-
-    from datafusion_wasm_bindings_spark.operators.graph import (
-        pagerank,
-        prepare_pagerank_edges,
-    )
-
-    times = {}
-    for scale, (n_edges, n_nodes) in {
-        "10M": (10_000_000, 500_000),
-        "100M": (100_000_000, 5_000_000),
-    }.items():
-        edges = spark.range(n_edges).select(
-            (F.col("id") % n_nodes).alias("src"),
-            ((F.col("id") * 2654435761 + 7) % n_nodes).alias("dst"),
-        )
-        d = tempfile.mkdtemp(prefix=f"pr_xl_{scale}_")
-        name = f"probe_pr_xl_{scale.lower()}"
-        prep = prepare_pagerank_edges(spark, edges, name, buckets=32, path=d)
-
-        def run():
-            assert pagerank(prep, iters=3, prepared=True).count() == n_nodes
-
-        try:
-            times[scale] = _time(
-                f"pagerank 3 iters, prepared ({scale} edges, {n_nodes//1000}k nodes)",
-                run,
-                repeats=2 if scale == "100M" else 3,
-            )
-        finally:
-            # DROP TABLE on a path-backed table is external — it leaves
-            # the multi-GB bucketed parquet behind; remove it explicitly
-            import shutil
-
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(d, ignore_errors=True)
-    import math
-
-    exp = math.log(times["100M"] / times["10M"]) / math.log(10)
-    _emit(f"  pagerank prepared scaling exponent (10M -> 100M edges): {exp:.2f}")
-
-
-def probe_pagerank_deep(spark) -> None:
-    """Iteration-depth headroom at 100M edges (r7 release convention):
-    3 vs 10 damped iterations on the prepared bucketed-edge path. Two
-    claims measured: (a) the marginal cost per extra iteration is a
-    constant (each round is ONE O(|V|) exchange against the exchange-
-    free edge scan), and (b) ten rounds of rank state fit the same 8 g
-    heap because each round's checkpoint blocks are released when the
-    next materializes — before the r7 fix this accumulated
-    O(iters x |V|) deserialized blocks."""
-    import tempfile
-
-    from datafusion_wasm_bindings_spark.operators.graph import (
-        pagerank,
-        prepare_pagerank_edges,
-    )
-
-    n_edges, n_nodes = 100_000_000, 5_000_000
-    edges = spark.range(n_edges).select(
-        (F.col("id") % n_nodes).alias("src"),
-        ((F.col("id") * 2654435761 + 7) % n_nodes).alias("dst"),
-    )
-    d = tempfile.mkdtemp(prefix="pr_deep_")
-    prep = prepare_pagerank_edges(spark, edges, "probe_pr_deep", buckets=32, path=d)
-    times = {}
-    try:
-        for iters in (3, 10):
-
-            def run():
-                assert pagerank(prep, iters=iters, prepared=True).count() == n_nodes
-
-            times[iters] = _time(
-                f"pagerank {iters} iters, prepared (100M edges)", run, repeats=2
-            )
-        marginal = (times[10] - times[3]) / 7
-        _emit(f"  marginal cost per extra iteration: {marginal:.2f} s")
-    finally:
-        import shutil
-
-        spark.sql("DROP TABLE IF EXISTS probe_pr_deep")
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def probe_cc_chain_xl(spark) -> None:
-    """VERDICT r6 #4: star CC at 10x the standing adversarial chain —
-    1M-node vs 10M-node single chain (diameter = n, the worst case for
-    label propagation; large-star/small-star alternations converge in
-    O(log n) rounds) plus 10% isolated 2-cliques as ballast. Exact
-    component structure asserted; prints the scaling exponent."""
-    from datafusion_wasm_bindings_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    times = {}
-    for scale, n in {"1M": 1_000_000, "10M": 10_000_000}.items():
-        n_cliques = n // 10
-        chain = spark.range(n - 1).select(
-            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-        )
-        pairs = chain.unionByName(
-            spark.range(n_cliques).select(
-                (F.col("id") * 2 + n).alias("id_a"),
-                (F.col("id") * 2 + n + 1).alias("id_b"),
-            )
-        ).localCheckpoint()
-
-        def run():
-            comps = connected_components_star(pairs)
-            agg = comps.agg(
-                F.countDistinct("comp").alias("n_comp"),
-                F.count(F.lit(1)).alias("n_nodes"),
-            ).collect()[0]
-            assert agg.n_comp == 1 + n_cliques, agg
-            assert agg.n_nodes == n + 2 * n_cliques, agg
-
-        times[scale] = _time(
-            f"star CC, {scale}-node chain + {n_cliques//1000}k cliques",
-            run,
-            repeats=2 if scale == "10M" else 3,
-        )
-    import math
-
-    # O(log n) extra alternations at 10x is expected: report both the
-    # raw exponent and the log-round-adjusted one
-    exp = math.log(times["10M"] / times["1M"]) / math.log(10)
-    _emit(f"  star CC scaling exponent (1M -> 10M chain): {exp:.2f}")
-
-
-def probe_minhash_xl(spark) -> None:
-    """VERDICT r6 #4: MinHash-LSH dedup at 10x the standing 100k-doc
-    probe — 1,000,000 documents (200 token-disjoint replicas of the
-    sf0.1 corpus, per-replica token suffix so shingles never match
-    across replicas; verified pair count must be exactly 200x the
-    per-replica count). Prints the scaling exponent vs the 100k run
-    executed in the same session: banded LSH candidate generation is
-    bucket-keyed, so ~1.0 is the pass bar (an all-pairs constant would
-    show ~2.0)."""
-    from pyspark.sql import DataFrame
-
-    from datafusion_wasm_bindings_spark.operators.dedup import minhash_lsh_pairs
-    from datafusion_wasm_bindings_spark.sources.catalog import table
-
-    docs = table(spark, "/root/testdata/sf0.1", "documents").select("doc_id", "text")
-    base_pairs = minhash_lsh_pairs(
-        docs, bands=8, rows_per_band=2, jaccard_threshold=0.5
-    ).count()
-    times = {}
-    for scale, n_reps in {"100k": 20, "1M": 200}.items():
-        corpus: DataFrame = (
-            docs.crossJoin(spark.range(n_reps).select(F.col("id").alias("rep")))
-            .select(
-                (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
-                F.regexp_replace(
-                    "text",
-                    F.lit(r"([A-Za-z0-9]+)"),
-                    F.concat(F.lit("$1q"), F.col("rep").cast("string")),
-                ).alias("text"),
-            )
-            .localCheckpoint()
-        )
-
-        def run():
-            n = minhash_lsh_pairs(
-                corpus, bands=8, rows_per_band=2, jaccard_threshold=0.5
-            ).count()
-            # per-replica token suffixes re-draw every shingle hash, so
-            # banded-LSH CANDIDATE capture of any verified pair with
-            # J < 1 is an independent coin per replica (catch prob
-            # 1-(1-J^2)^bands) — exact equality holds only while the
-            # fixture's verified pairs are exact duplicates (J = 1,
-            # always caught). Allow the hash-draw variance so a future
-            # near-dup fixture doesn't fake a scaling regression.
-            expect = n_reps * base_pairs
-            assert abs(n - expect) <= max(2, 0.02 * expect), (n, expect)
-
-        times[scale] = _time(
-            f"minhash-LSH dedup ({scale} docs, {n_reps * base_pairs} pairs)",
-            run,
-            repeats=2 if scale == "1M" else 3,
-        )
-    import math
-
-    exp = math.log(times["1M"] / times["100k"]) / math.log(10)
-    _emit(f"  minhash-LSH scaling exponent (100k -> 1M docs): {exp:.2f}")
-
-
-def probe_embedding_xl(spark) -> None:
-    """VERDICT r7 #3: hyperplane-LSH embedding near-dup ONE ORDER OF
-    MAGNITUDE past the standing 40k probe — 40k vs 400k x 64-dim
-    vectors, half of each corpus PLANTED cosine~0.97 near-copies
-    (recall >=99% asserted at both scales). `planes` is the occupancy
-    knob a 100 TB deployment sizes to its data (2^planes buckets per
-    table): 10 planes at 40k (~39 vectors/bucket) vs 14 at 400k (~24)
-    hold per-bucket occupancy ~constant, exactly how the operator is
-    meant to be driven — with FIXED planes the within-bucket self-join
-    is quadratic in occupancy by construction, which is a sizing
-    error, not an operator cost. Recall stays high by design: a 0.97
-    pair agrees per bit with p~0.92, so 14 planes x 16 tables catch
-    1-(1-0.92^14)^16 ~ 0.998. Prints the measured exponent
-    log(t2/t1)/log(10)."""
-    from datafusion_wasm_bindings_spark.operators.similarity import cosine_pairs_lsh
-
-    times = {}
-    for scale, (half, planes) in {
-        "40k": (20_000, 10),
-        "400k": (200_000, 14),
-    }.items():
-        base = spark.range(half).select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                "transform(sequence(0, 63), d ->"
-                " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0)"
-            ).alias("embedding"),
-        )
-        noisy = spark.range(half).select(
-            (F.col("id") + half).alias("vec_id"),
-            F.expr(
-                "transform(sequence(0, 63), d ->"
-                " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
-                " + CAST(pmod(xxhash64(id * 64 + d + 99991), 2001) - 1000 AS DOUBLE) / 4000.0)"
-            ).alias("embedding"),
-        )
-        corpus = base.unionByName(noisy).localCheckpoint()
-
-        def run():
-            pairs = cosine_pairs_lsh(
-                corpus, threshold=0.8, planes=planes, tables=16
-            ).collect()
-            planted = sum(1 for r in pairs if r.id_b - r.id_a == half)
-            extras = len(pairs) - planted
-            assert planted >= 0.99 * half, (planted, half)
-            # random 64-dim cosines >=0.8 are ~6-sigma events; extras
-            # stay O(1) even at 77M candidate pairs
-            assert extras <= 100, extras
-            run.stats = (planted, extras)
-
-        times[scale] = _time(
-            f"hyperplane-LSH near-dup ({scale} x 64-dim, planes={planes})",
-            run,
-            repeats=2 if scale == "400k" else 3,
-        )
-        _emit(f"  planted found / extras @ {scale}: {run.stats}")
-    import math
-
-    exp = math.log(times["400k"] / times["40k"]) / math.log(10)
-    _emit(f"  embedding-LSH scaling exponent (40k -> 400k vectors): {exp:.2f}")
-
-
-def probe_triangles_xl(spark) -> None:
-    """Triangle counting ONE ORDER OF MAGNITUDE past the standing
-    probe — 2M vs 20M edges (200k vs 2M nodes), same planted ring +
-    chords + degree-1 pad construction so the exact count is known at
-    both scales. Degree-oriented wedge generation bounds per-node work
-    by the lower-degree endpoint; the exponent checks no superlinear
-    constant hides in the degree-rank join or the wedge-close join as
-    AQE re-picks strategies at the bigger size."""
-    from datafusion_wasm_bindings_spark.operators.graph import triangle_count
-
-    times = {}
-    for scale, n_nodes in {"2M": 200_000, "20M": 2_000_000}.items():
-        base = spark.range(n_nodes)
-        e1 = base.select(
-            F.col("id").alias("u"), ((F.col("id") + 1) % n_nodes).alias("v")
-        )
-        e2 = base.select(
-            F.col("id").alias("u"), ((F.col("id") + 2) % n_nodes).alias("v")
-        )
-        pad = spark.range(8 * n_nodes).select(
-            F.expr(f"pmod(xxhash64(id), {n_nodes})").alias("u"),
-            (F.col("id") + n_nodes).alias("v"),
-        )
-        edges = e1.unionByName(e2).unionByName(pad).localCheckpoint()
-
-        def run():
-            n = triangle_count(edges).collect()[0]["n_triangles"]
-            assert n == n_nodes, n
-
-        times[scale] = _time(
-            f"triangle count ({scale} edges, {n_nodes // 1000}k nodes)",
-            run,
-            repeats=2 if scale == "20M" else 3,
-        )
-    import math
-
-    exp = math.log(times["20M"] / times["2M"]) / math.log(10)
-    _emit(f"  triangle-count scaling exponent (2M -> 20M edges): {exp:.2f}")
-
-
-def probe_ann_xl(spark) -> None:
-    """The ANN scale paths (IVF and PQ-ADC) ONE ORDER OF MAGNITUDE past
-    the standing 40k probe — 40k vs 400k x 64-dim vectors, same planted
-    cosine~0.97 partner construction, 8 probe queries, top-1-partner
-    recall asserted at both scales. Centroid/codebook counts follow the
-    deployment sizing rule (cells ~ sqrt(n): 32 -> 96; PQ codes fixed
-    at 16 per 8 subspaces — code capacity is dimension-, not
-    corpus-bound). Brute force is deliberately excluded: it IS the
-    O(n·q) oracle, not the scale path."""
-    from datafusion_wasm_bindings_spark.operators.similarity import (
-        ivf_topk,
-        pq_topk,
-    )
-
-    qids = list(range(8))
-
-    def check(rows, half):
-        got = {}
-        for r in rows:
-            got.setdefault(r.query_id, set()).add(r.cand_id)
-        for q in qids:
-            assert q + half in got.get(q, set()), (q, sorted(got.get(q, set())))
-
-    times_ivf, times_pq = {}, {}
-    for scale, (half, cells) in {"40k": (20_000, 32), "400k": (200_000, 96)}.items():
-        base = spark.range(half).select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                "transform(sequence(0, 63), d ->"
-                " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0)"
-            ).alias("embedding"),
-        )
-        noisy = spark.range(half).select(
-            (F.col("id") + half).alias("vec_id"),
-            F.expr(
-                "transform(sequence(0, 63), d ->"
-                " CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
-                " + CAST(pmod(xxhash64(id * 64 + d + 99991), 2001) - 1000 AS DOUBLE) / 4000.0)"
-            ).alias("embedding"),
-        )
-        corpus = base.unionByName(noisy).localCheckpoint()
-
-        def run_ivf():
-            check(
-                ivf_topk(
-                    corpus, query_ids=qids, k=3, n_centroids=cells, n_probe=4
-                ).collect(),
-                half,
-            )
-
-        def run_pq():
-            check(
-                pq_topk(
-                    corpus, query_ids=qids, k=3, m_subspaces=8, n_codes=16, rerank=64
-                ).collect(),
-                half,
-            )
-
-        reps = 2 if scale == "400k" else 3
-        times_ivf[scale] = _time(f"IVF top-3 ({scale}, {cells} cells)", run_ivf, repeats=reps)
-        times_pq[scale] = _time(f"PQ-ADC top-3 ({scale})", run_pq, repeats=reps)
-    import math
-
-    for name, t in (("IVF", times_ivf), ("PQ-ADC", times_pq)):
-        exp = math.log(t["400k"] / t["40k"]) / math.log(10)
-        _emit(f"  {name} scaling exponent (40k -> 400k vectors): {exp:.2f}")
-
-
-def probe_asof_xl(spark) -> None:
-    """As-of join (operators/asof.asof_join — the union-merge rewrite,
-    one shuffle + in-partition sweep) at 5M vs 50M left rows against a
-    10-rows-per-key reference table, KNOWN-ANSWER construction: right
-    rows sit at ts = j·1000 per key with payload user·1000003 + j, so
-    every left row's expected match is floor(ts/1000) — the assert
-    checks ref_ts AND ref payload exactly for every row. Exponent
-    log(t2/t1)/log(10): the rewrite's claim is one corpus shuffle and
-    linear within-partition work, no range-probe blowup."""
-    from datafusion_wasm_bindings_spark.operators.asof import asof_join
-
-    times = {}
-    for scale, (n_left, n_keys) in {
-        "5M": (5_000_000, 100_000),
-        "50M": (50_000_000, 1_000_000),
-    }.items():
-        per_key = 10
-        right = spark.range(n_keys * per_key).select(
-            (F.col("id") % n_keys).alias("user_id"),
-            ((F.col("id") / n_keys).cast("long") * 1000).alias("ts"),
-            (
-                (F.col("id") % n_keys) * 1000003
-                + (F.col("id") / n_keys).cast("long")
-            ).alias("val"),
-        )
-        left = spark.range(n_left).select(
-            (F.col("id") % n_keys).alias("user_id"),
-            F.expr(f"pmod(xxhash64(id), {per_key * 1000})").alias("ts"),
-            F.col("id").alias("row_id"),
-        )
-        left = left.localCheckpoint()
-        right = right.localCheckpoint()
-
-        def run():
-            j = asof_join(left, right, on=["user_id"], ts="ts")
-            bad = j.filter(
-                (F.col("ref_ts") != (F.col("ts") / 1000).cast("long") * 1000)
-                | (
-                    F.col("ref_val")
-                    != F.col("user_id") * 1000003
-                    + (F.col("ts") / 1000).cast("long")
-                )
-            ).count()
-            assert bad == 0, bad
-
-        times[scale] = _time(
-            f"as-of join ({scale} left rows, {n_keys // 1000}k keys x {per_key} refs)",
-            run,
-            repeats=2 if scale == "50M" else 3,
-        )
-    import math
-
-    exp = math.log(times["50M"] / times["5M"]) / math.log(10)
-    _emit(f"  as-of join scaling exponent (5M -> 50M rows): {exp:.2f}")
-
-
-def probe_tokenizer_ab(spark) -> None:
-    """VERDICT r7 #5: A/B the tokenizer hot path — the largest per-row
-    map cost in quality_scores/repetition (~16 µs/doc/core at 2M docs).
-    A = the standing `regexp_extract_all(lower(text), '[a-z0-9]+', 0)`;
-    B = `filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')` —
-    identical token arrays by construction (split on the complement
-    class yields exactly the maximal [a-z0-9] runs plus empty edge
-    fragments the filter drops). Identity is asserted EXACTLY (count
-    of rows where the two arrays differ must be 0) on both the 2M-doc
-    synthetic corpus and the real sf0.1 documents (unicode, emoji,
-    newlines). Timed over the full quality_scores-shaped consumer
-    (tokens -> size/filter/aggregate) so the measurement includes the
-    downstream HOF work that dominates alongside the tokenize.
-    Adoption bar (VERDICT r7): >=1.3x with identical output."""
-    from datafusion_wasm_bindings_spark.operators.text import LANG_LEXICON
-    from datafusion_wasm_bindings_spark.sources.catalog import table
-
-    tok_a = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
-    tok_b = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-
-    # exact identity on real data first (unicode/emoji/newline edges)
-    real = table(spark, "/root/testdata/sf0.1", "documents").select("text")
-    n_diff = real.filter(F.expr(f"NOT ({tok_a} <=> {tok_b})")).count()
-    assert n_diff == 0, f"{n_diff} real docs tokenize differently"
-
-    docs = _gen_docs(spark, 2_000_000)
-    n_diff = docs.filter(F.expr(f"NOT ({tok_a} <=> {tok_b})")).count()
-    assert n_diff == 0, f"{n_diff} synthetic docs tokenize differently"
-
-    en_stop = F.array([F.lit(w) for w in LANG_LEXICON["en"]])
-
-    def consumer(tok_expr: str):
-        staged = docs.select(
-            "doc_id",
-            F.length("text").alias("__n_chars"),
-            F.expr(tok_expr).alias("__toks"),
-        ).select(
-            "doc_id",
-            "__n_chars",
-            F.size("__toks").alias("__n_tok"),
-            F.size(
-                F.filter(F.col("__toks"), lambda t: F.array_contains(en_stop, t))
-            ).alias("__n_stop"),
-        )
-        return staged.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("__n_tok").alias("toks"),
-            F.sum("__n_stop").alias("stops"),
-        ).collect()[0]
-
-    base = consumer(tok_a)
-
-    def run_a():
-        assert consumer(tok_a) == base
-
-    def run_b():
-        assert consumer(tok_b) == base
-
-    ta = _time("tokenize A: regexp_extract_all (2M docs)", run_a)
-    tb = _time("tokenize B: split+filter (2M docs)", run_b)
-    _emit(f"  tokenizer A/B speedup: {ta / tb:.2f}x (adopt bar 1.3x)")
-
-
-def probe_semdedup_xl(spark) -> None:
-    """VERDICT r7 #3: SemDeDup at 4x the standing 500k probe — 500k vs
-    2,000,000 x 32-dim vectors, k=8 clusters, 2 k-means rounds,
-    tau=0.9. Every stage is corpus-linear by construction (quantized
-    fit scans, k-row representative election, broadcast rep scoring as
-    a pure map, one final aggregate); the exponent log(t2/t1)/log(4)
-    measures whether any hidden superlinear constant (checkpoint
-    re-derivation, rep-join skew) creeps in. Membership identity
-    asserted at both scales."""
-    from datafusion_wasm_bindings_spark.operators.clustering import semantic_dedup
-
-    times = {}
-    for scale, n in {"500k": 500_000, "2M": 2_000_000}.items():
-        corpus = spark.range(n).select(
-            F.col("id").alias("vec_id"),
-            F.expr(
-                "transform(sequence(0, 31), d ->"
-                " CAST(pmod(xxhash64(id * 37 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
-                " + CAST(pmod(id, 8) AS DOUBLE) * CASE WHEN d = pmod(id, 8) THEN 2.0 ELSE 0.0 END)"
-            ).alias("embedding"),
-        ).localCheckpoint()
-
-        def run():
-            out = semantic_dedup(corpus, k=8, iters=2, threshold=0.9).collect()
-            assert sum(r["n_members"] for r in out) == n
-            assert all(r["n_kept"] + r["n_dups"] == r["n_members"] for r in out)
-
-        times[scale] = _time(
-            f"SemDeDup prune ({scale} x 32-dim, k=8, tau=0.9)",
-            run,
-            repeats=2 if scale == "2M" else 3,
-        )
-    import math
-
-    exp = math.log(times["2M"] / times["500k"]) / math.log(4)
-    _emit(f"  SemDeDup scaling exponent (500k -> 2M vectors): {exp:.2f}")
-
-
-def probe_substring_xl(spark) -> None:
-    """VERDICT r9 (registry addition q_dedup_substring): exact
-    duplicated-substring detection at 30k vs 300k synthetic docs of
-    ~290 random-hex chars (md5 chains — 20-char windows collide with
-    probability ~16^-20, so every duplicated span is the PLANTED
-    20-char uppercase marker or one of its flanked overlap windows —
-    hex context never collides). The exact-marker row's count equals
-    the planted-doc count, and every other row is provably
-    marker-overlap (contains an uppercase char) — asserted at both
-    scales. The exponent
-    log(t2/t1)/log(10) measures the single groupBy(span) shuffle
-    (~36 B per corpus char) staying linear."""
-    from datafusion_wasm_bindings_spark.operators.dedup import duplicated_spans
-
-    marker = "PLANTEDMARKERSPAN-20"
-    assert len(marker) == 20  # uppercase: disjoint from the hex context
-    times = {}
-    for scale, n in {"30k": 30_000, "300k": 300_000}.items():
-        base = spark.range(n).select(
-            F.col("id").alias("doc_id"),
-            F.expr(
-                "array_join(transform(sequence(0, 8),"
-                " b -> md5(concat(CAST(id AS STRING), ':', CAST(b AS STRING)))), '')"
-            ).alias("t"),
-        )
-        docs = base.select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 10 == 0,
-                F.concat(
-                    F.expr("substr(t, 1, 100)"),
-                    F.lit(marker),
-                    F.expr("substr(t, 101, length(t))"),
-                ),
-            )
-            .otherwise(F.col("t"))
-            .alias("text"),
-        ).localCheckpoint()
-        planted = n // 10  # ids 0, 10, ... — exact by construction
-
-        def run():
-            rows = duplicated_spans(docs, span_len=20, top_k=None).collect()
-            got = {r.span: r for r in rows}
-            m = got[marker]
-            assert m.n_occurrences == planted == m.n_docs
-            # every OTHER duplicated span is a marker-overlap window
-            # (shares >=1 uppercase marker char): pure-hex 20-char
-            # windows collide with probability ~16^-20
-            assert all(
-                any(c.isupper() or c == "-" for c in s) for s in got
-            ), [s for s in got if not any(c.isupper() for c in s)][:5]
-            run.n_spans = len(rows)
-
-        times[scale] = _time(
-            f"duplicated spans ({scale} docs x ~290 chars, 1 planted marker)",
-            run,
-            repeats=2 if scale == "300k" else 3,
-        )
-        _emit(f"  duplicated spans @ {scale}: {run.n_spans} (marker-overlap family)")
-    import math
-
-    exp = math.log(times["300k"] / times["30k"]) / math.log(10)
-    _emit(f"  substring-dedup scaling exponent (30k -> 300k docs): {exp:.2f}")
-
-
-def probe_editdist_xl(spark) -> None:
-    """VERDICT r9 #3 (pair-fan-out family): editdist_join at 30k vs
-    300k distinct words (lengths 5-12 over a 12-letter alphabet, plus
-    one PLANTED 1-edit partner per 10 base words so the true-pair
-    count is known and checked exactly at both scales). The r9 FastSS
-    deletion-signature rewrite exists because this probe measured the
-    length-band blocking QUADRATIC: bands hold |V|/8 words each, so
-    candidate volume is TH(|V|^2) — measured 194.8 s warm at 30k words
-    (139x FastSS's 1.4 s, identical 21,913 pairs) and KILLED at the
-    10-min timeout at 300k (quadratic extrapolation ~5.4 h; FastSS:
-    6.7 s). Prints the signature-path exponent log(t2/t1)/log(10)
-    (measured 0.69)."""
-    from datafusion_wasm_bindings_spark.operators.similarity import editdist_join
-
-    times = {}
-    for scale, n in {"30k": 30_000, "300k": 300_000}.items():
-        # deterministic base words: 5-12 chars over 12 letters, id-keyed
-        base = spark.range(n).select(
-            F.col("id"),
-            F.concat(
-                F.lit("w"),
-                F.expr(
-                    "array_join(transform(sequence(1, CAST(pmod(xxhash64(id), 8) + 4 AS INT)),"
-                    " i -> chr(97 + CAST(pmod(xxhash64(id * 131 + i), 12) AS INT))), '')"
-                ),
-            ).alias("w"),
-        )
-        planted = base.filter(F.col("id") % 10 == 0).select(
-            "id",
-            # substitute the LAST char with a letter outside the base
-            # alphabet: a guaranteed distance-1 partner that cannot
-            # collide with any other base word
-            F.concat(
-                F.expr("substr(w, 1, length(w) - 1)"), F.lit("z")
-            ).alias("w"),
-        )
-        vocab = (
-            base.select("w").unionByName(planted.select("w")).distinct().localCheckpoint()
-        )
-        n_planted = planted.select("w").distinct().join(
-            base.select("w").distinct(), "w", "left_anti"
-        ).count()
-
-        def run():
-            pairs = editdist_join(vocab, max_dist=1)
-            got = pairs.count()
-            # every planted partner is a true distance-1 pair; base-base
-            # accidental pairs add on top, so >= is the exact floor
-            assert got >= n_planted, (got, n_planted)
-            run.n_pairs = got
-
-        times[scale] = _time(
-            f"editdist FastSS join ({scale} words, d=1)",
-            run,
-            repeats=2 if scale == "300k" else 3,
-        )
-        _emit(f"  pairs found @ {scale}: {run.n_pairs} (planted floor {n_planted})")
-    import math
-
-    exp = math.log(times["300k"] / times["30k"]) / math.log(10)
-    _emit(f"  editdist FastSS scaling exponent (30k -> 300k words): {exp:.2f}")
-
-
-def probe_interval_xl(spark) -> None:
-    """VERDICT r9 #3 (pair-fan-out family): the dual-bucket-explode
-    interval join (operators/rangejoin.interval_join — q_join_range /
-    q_join_interval_overlap's engine) at 5M vs 50M events against
-    events/10 intervals over 1,000 keys. Intervals sit on a REGULAR
-    GRID (per key: one [k*3600, k*3600+1800] interval per hour), so
-    the exact expected match count is computable by a separate
-    aggregate: an event matches exactly 1 interval iff its in-hour
-    offset is <= 1800 s AND its key's grid covers that hour. The
-    exponent log(t2/t1)/log(10) checks the equi-join on (key, bucket)
-    stays linear — per-bucket work is bounded by bucket population x
-    interval fan-in by construction."""
-    from datafusion_wasm_bindings_spark.operators.rangejoin import interval_join
-
-    n_keys = 1_000
-    span_s = 14 * 86_400  # 14 days of hourly intervals per key
-    times = {}
-    for scale, n_ev in {"5M": 5_000_000, "50M": 50_000_000}.items():
-        ev = (
-            spark.range(n_ev)
-            .select(
-                (F.col("id") % n_keys).alias("k"),
-                F.timestamp_seconds(
-                    F.lit(1_700_000_000) + F.expr(f"pmod(xxhash64(id), {span_s})")
-                ).alias("ts"),
-            )
-            .localCheckpoint()
-        )
-        iv = (
-            spark.range(n_keys * (span_s // 3600))
-            .select(
-                (F.col("id") % n_keys).alias("k"),
-                F.timestamp_seconds(
-                    F.lit(1_700_000_000) + (F.col("id") / n_keys).cast("long") * 3600
-                ).alias("start"),
-                F.timestamp_seconds(
-                    F.lit(1_700_000_000) + (F.col("id") / n_keys).cast("long") * 3600 + 1800
-                ).alias("end"),
-            )
-            .localCheckpoint()
-        )
-        expect = ev.filter(
-            F.expr("pmod(unix_seconds(ts) - 1700000000, 3600)") <= 1800
-        ).count()
-
-        def run():
-            got = interval_join(ev, iv, on=["k"], bucket_seconds=3600).count()
-            assert got == expect, (got, expect)
-
-        times[scale] = _time(
-            f"interval join ({scale} events x {n_keys * (span_s // 3600) // 1000}k intervals)",
-            run,
-            repeats=2 if scale == "50M" else 3,
-        )
-    import math
-
-    exp = math.log(times["50M"] / times["5M"]) / math.log(10)
-    _emit(f"  interval-join scaling exponent (5M -> 50M events): {exp:.2f}")
-
-
-def probe_itemsets_xl(spark) -> None:
-    """VERDICT r9 #3 (pair-fan-out family): the basket-keyed pair join
-    behind q_pipeline_itemsets at 1M vs 10M baskets (7 items each from
-    a catalog scaling with basket count, so per-item margins stay
-    bounded). The pair fan-out is C(7,2)=21 per basket by
-    construction — the probe asserts the exact total pair count
-    Sum_b C(k_b, 2) from a separate per-basket aggregate, then checks
-    the measured exponent log(t2/t1)/log(10) stays ~1: basket-keyed
-    generation is linear where an item-keyed self-join would square
-    the hot items."""
-    times = {}
-    for scale, n_baskets in {"1M": 1_000_000, "10M": 10_000_000}.items():
-        n_parts = n_baskets // 5
-        items = (
-            spark.range(n_baskets * 7)
-            .select(
-                (F.col("id") / 7).cast("long").alias("bkt"),
-                F.expr(f"pmod(xxhash64(id * 2654435761), {n_parts})").alias("part"),
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        per_b = items.groupBy("bkt").agg(F.count(F.lit(1)).alias("kb"))
-        expect = per_b.agg(
-            F.sum(F.col("kb") * (F.col("kb") - 1) / 2).cast("long").alias("p")
-        ).collect()[0]["p"]
-
-        def run():
-            a, b = items.alias("a"), items.alias("b")
-            pairs = (
-                a.join(
-                    b,
-                    (F.col("a.bkt") == F.col("b.bkt"))
-                    & (F.col("a.part") < F.col("b.part")),
-                )
-                .groupBy(F.col("a.part").alias("pa"), F.col("b.part").alias("pb"))
-                .agg(F.count(F.lit(1)).alias("n_ab"))
-            )
-            got = pairs.agg(F.sum("n_ab").cast("long").alias("s")).collect()[0]["s"]
-            assert got == expect, (got, expect)
-
-        times[scale] = _time(
-            f"itemset pair join ({scale} baskets x 7 items)",
-            run,
-            repeats=2 if scale == "10M" else 3,
-        )
-    import math
-
-    exp = math.log(times["10M"] / times["1M"]) / math.log(10)
-    _emit(f"  itemset pair-join scaling exponent (1M -> 10M baskets): {exp:.2f}")
-
-
-def _shuffle_bytes(df) -> int:
-    """Total 'shuffle bytes written' over one fresh execution of ``df``
-    (collects it), summed across every ShuffleExchange in the executed
-    (post-AQE) plan. Reused exchanges are skipped (their metrics alias
-    the original); query stages are entered via .plan() so the wrapped
-    exchange is counted exactly once. Call on a FRESHLY-built
-    DataFrame: SQLMetrics accumulate across re-runs of one plan."""
-    df.collect()
-    total = 0
-
-    def walk(node):
-        nonlocal total
-        cls = node.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan())
-            return
-        if cls.startswith("Reused"):
-            return
-        if "ShuffleExchange" in cls:
-            opt = node.metrics().get("shuffleBytesWritten")
-            if opt.isDefined():
-                total += opt.get().value()
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-        if cls.endswith("QueryStageExec"):
-            walk(node.plan())
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return total
-
-
-def _gen_wide_docs(spark, n_docs: int, n_blocks: int):
-    """n_docs documents of n_blocks*32 chars of effectively-unique text
-    (md5 blocks keyed by (doc, block) — no cross-doc span collisions,
-    so map-side combine can't hide the true span volume)."""
-    return (
-        spark.range(n_docs)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                "",
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(n_blocks)),
-                    lambda i: F.md5(
-                        F.concat(F.col("id").cast("string"), F.lit("-"), i.cast("string"))
-                    ),
-                ),
-            ).alias("text"),
-        )
-        .localCheckpoint()
-    )
-
-
-def probe_widerow(spark) -> None:
-    """Row-WIDTH scaling (VERDICT r9 #5): every other probe scales row
-    COUNT; this one holds corpus BYTES constant and grows average doc
-    width 10x (2,000 -> 20,000 chars), measuring wall time AND actual
-    shuffle-write bytes for the two payload-heavy dedup shapes:
-
-    - digest dedup (q_multimodal_dedup shape): md5 prehash means the
-      exchange carries 32-char digests, never payloads — shuffle bytes
-      must track ROW COUNT (so 10x width at constant corpus bytes
-      = ~10x FEWER bytes), and stay <1% of corpus bytes at both widths.
-    - duplicated_spans (q_dedup_substring shape): shuffles ~(L+16)
-      bytes per corpus CHARACTER by design — shuffle bytes must be
-      width-INVARIANT at constant corpus bytes (ratio within
-      [0.7, 1.4]), i.e. no hidden O(width) blowup per row.
-    """
-    from datafusion_wasm_bindings_spark.operators.dedup import duplicated_spans
-
-    results: dict[str, dict[str, float]] = {}
-    # ~200 MB corpus for the digest shape, ~20 MB for the span shape
-    # (spans shuffle ~36x their corpus; digests shuffle almost nothing)
-    for label, n_docs, n_blocks in (
-        ("narrow 2k-char", 100_000, 62),
-        ("wide 20k-char", 10_000, 625),
-    ):
-        docs = _gen_wide_docs(spark, n_docs, n_blocks)
-        corpus_bytes = n_docs * n_blocks * 32
-
-        def digest_df():
-            per_key = (
-                docs.select(F.md5(F.encode("text", "UTF-8")).alias("key"))
-                .groupBy("key")
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            return per_key.agg(
-                F.count(F.lit(1)).alias("n_payloads"),
-                F.sum("n").alias("n_media"),
-            )
-
-        t_digest = _time(f"widerow digest dedup, {label} x {n_docs:,} docs", lambda: digest_df().collect())
-        b_digest = _shuffle_bytes(digest_df())
-
-        span_docs = _gen_wide_docs(spark, n_docs // 5, n_blocks)
-
-        def span_df():
-            return duplicated_spans(span_docs, span_len=20, top_k=50)
-
-        t_span = _time(f"widerow duplicated_spans, {label} x {n_docs // 5:,} docs", lambda: span_df().collect())
-        b_span = _shuffle_bytes(span_df())
-        span_corpus = (n_docs // 5) * n_blocks * 32
-        _emit(
-            f"  {label}: digest shuffle {b_digest:,} B "
-            f"({100.0 * b_digest / corpus_bytes:.3f}% of {corpus_bytes:,} B corpus); "
-            f"span shuffle {b_span:,} B ({b_span / span_corpus:.1f} B/char)"
-        )
-        results[label] = {
-            "t_digest": t_digest,
-            "b_digest": b_digest,
-            "t_span": t_span,
-            "b_span": b_span,
-            "corpus": corpus_bytes,
-            "span_corpus": span_corpus,
-            "n_docs": n_docs,
-        }
-        docs.unpersist()
-        span_docs.unpersist()
-
-    nar, wid = results["narrow 2k-char"], results["wide 20k-char"]
-    # digest: payload bytes never shuffle — the exchange carries a
-    # bounded per-ROW record (digest + count), independent of payload
-    # width: 10x fewer rows => fewer bytes, and <100 B/row both widths
-    assert wid["b_digest"] < nar["b_digest"], results
-    assert nar["b_digest"] < 100 * nar["n_docs"], results
-    assert wid["b_digest"] < 100 * wid["n_docs"], results
-    # spans: width-invariant shuffle per corpus byte
-    ratio = (wid["b_span"] / wid["span_corpus"]) / (nar["b_span"] / nar["span_corpus"])
-    _emit(
-        f"  span shuffle B/char ratio wide/narrow: {ratio:.2f} "
-        f"(contract [0.7, 1.4]); digest bytes wide/narrow: "
-        f"{wid['b_digest'] / nar['b_digest']:.2f} (contract < 1)"
-    )
-    assert 0.7 <= ratio <= 1.4, results
-
-
-def probe_megadoc(spark) -> None:
-    """Multi-megabyte single documents (VERDICT r10 #5): widerow
-    certified width-parity up to 20k-char docs; this point holds
-    corpus bytes constant (~64 MB) and grows width 100× further
-    (20k → 2M chars/doc), with ≥32 docs at BOTH widths so neither
-    point is parallelism-starved (a 10-doc first cut read 4.3× that
-    was the 10-of-32-cores floor, not a width term). Single-level
-    chunking scans O(width²/_SPAN_CHUNK) per doc during chunk
-    EXTRACTION — measured 64.7 s vs 10.6 s at constant 20 MB corpus
-    before the r11 super-chunk level; with the second level the
-    residual top scan is O(width²/_SUPER_CHUNK) per doc and the mega
-    point must stay within 3× of the narrow wall (measured 19.5 vs
-    18.2 s warm medians = 1.07× at 100× width — width-parity; a
-    loaded-box reading of the same config reached 2.2×, still in
-    contract; stride A/B at 2 MB: S2 16k/32k/64k/128k →
-    17.8/18.6/14.9/18.6 s, 64 KiB kept)."""
-    from datafusion_wasm_bindings_spark.operators.dedup import duplicated_spans
-
-    results = {}
-    for label, n_docs, n_blocks in (
-        ("narrow 20k-char", 3200, 625),
-        ("mega 2M-char", 32, 65536),
-    ):
-        docs = _gen_wide_docs(spark, n_docs, n_blocks)
-
-        def span_df():
-            return duplicated_spans(docs, span_len=20, top_k=50)
-
-        t = _time(f"megadoc duplicated_spans, {label} x {n_docs:,} docs", lambda: span_df().collect())
-        b = _shuffle_bytes(span_df())
-        corpus = n_docs * n_blocks * 32
-        _emit(f"  {label}: {t:.1f} s, span shuffle {b:,} B ({b / corpus:.1f} B/char)")
-        results[label] = {"t": t, "b_per_char": b / corpus}
-        docs.unpersist()
-
-    ratio_t = results["mega 2M-char"]["t"] / results["narrow 20k-char"]["t"]
-    ratio_b = (
-        results["mega 2M-char"]["b_per_char"]
-        / results["narrow 20k-char"]["b_per_char"]
-    )
-    _emit(
-        f"  megadoc wall ratio mega/narrow: {ratio_t:.2f} (contract < 3); "
-        f"shuffle B/char ratio: {ratio_b:.2f} (contract [0.7, 1.4])"
-    )
-    assert ratio_t < 3.0, results
-    assert 0.7 <= ratio_b <= 1.4, results
-
-
-def _gen_clustered_docs(spark, n_docs: int):
-    """Deterministic corpus with planted near-dup CLUSTERS: the first
-    10% of doc_ids form 3-doc clusters with IDENTICAL 20-token text
-    (word-set jaccard 1.0 >= the 0.9 threshold); every other doc draws
-    a private hash-hex vocabulary, so distinct docs share NO token
-    (64-bit space — expected accidental collisions < 1e-4 at 2M docs)
-    and the inverted index generates candidate pairs ONLY inside
-    planted clusters (token doc-freq <= 3, far under the df cut)."""
-    n_clustered = n_docs // 10
-    key = (
-        F.when(
-            F.col("id") < n_clustered,
-            F.col("id") - F.pmod(F.col("id"), F.lit(3)),
-        )
-        .otherwise(F.col("id") + n_docs)
-    )
-    return (
-        spark.range(n_docs)
-        .withColumn("k", key)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.array_join(
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(20)),
-                    lambda i: F.hex(F.xxhash64(F.col("k") * 131 + i)),
-                ),
-                " ",
-            ).alias("text"),
-        )
-        .localCheckpoint()
-    )
-
-
-def probe_clustersplit_xl(spark) -> None:
-    """q_pipeline_cluster_split's composed shape at 10x headroom
-    (r11 addition; the registered query caps the fixture at 200 docs
-    for the recursive-CTE oracle — this probe runs the SAME
-    composition, ngram_jaccard_pairs -> connected_components ->
-    representative md5 split -> in-query leakage audit, over 200k and
-    2M planted-cluster docs and reports the row-scaling exponent).
-    The audit column must read 0 at BOTH scales (cluster-aware
-    assignment cannot leak by construction) and every planted cluster
-    must be recovered (n_clusters = 0.9n singletons + n/30 triples)."""
-    from datafusion_wasm_bindings_spark.operators.dedup import (
-        connected_components,
-        ngram_jaccard_pairs,
-    )
-
-    def split_of(c):
-        h = F.substring(F.md5(F.concat(c.cast("string"), F.lit("dfwb-split"))), 1, 8)
-        return (
-            F.when(h < "cccccccc", F.lit("train"))
-            .when(h < "e6666666", F.lit("val"))
-            .otherwise(F.lit("test"))
-        )
-
-    results = {}
-    for label, n_docs in (("200k", 200_000), ("2M", 2_000_000)):
-        docs = _gen_clustered_docs(spark, n_docs)
-        # ceil-divide the clustered block: a trailing partial group of
-        # 2 docs is still one planted pair -> one component
-        expect_clusters = (n_docs - n_docs // 10) + (n_docs // 10 + 2) // 3
-
-        def run(n_docs=n_docs, docs=docs, expect_clusters=expect_clusters):
-            pairs = ngram_jaccard_pairs(
-                docs, threshold=0.9, max_doc_freq=160
-            ).localCheckpoint()
-            comps = connected_components(pairs).selectExpr(
-                "node AS doc_id", "comp AS cluster_id"
-            )
-            assign = (
-                docs.select("doc_id")
-                .join(comps, "doc_id", "left")
-                .withColumn("rep", F.coalesce("cluster_id", "doc_id"))
-                .withColumn("split", split_of(F.col("rep")))
-            )
-            leaked = (
-                pairs.select("id_a", "id_b")
-                .join(
-                    comps.select(
-                        F.col("doc_id").alias("id_a"),
-                        split_of(F.col("cluster_id")).alias("sa"),
-                    ),
-                    "id_a",
-                )
-                .join(
-                    comps.select(
-                        F.col("doc_id").alias("id_b"),
-                        split_of(F.col("cluster_id")).alias("sb"),
-                    ),
-                    "id_b",
-                )
-                .filter(F.col("sa") != F.col("sb"))
-                .agg(F.count(F.lit(1)).cast("long").alias("n_cross_split_pairs"))
-            )
-            rows = (
-                assign.groupBy("split")
-                .agg(
-                    F.count(F.lit(1)).cast("long").alias("n_docs"),
-                    F.countDistinct("rep").cast("long").alias("n_clusters"),
-                )
-                .crossJoin(F.broadcast(leaked))
-                .collect()
-            )
-            assert sum(r["n_docs"] for r in rows) == n_docs, rows
-            assert all(r["n_cross_split_pairs"] == 0 for r in rows), rows
-            assert sum(r["n_clusters"] for r in rows) == expect_clusters, rows
-
-        t = _time(f"cluster split composed (pairs+CC+assign+audit), {label} docs", run)
-        results[label] = t
-        docs.unpersist()
-
-    import math
-
-    exp = math.log(results["2M"] / results["200k"]) / math.log(10)
-    _emit(f"  clustersplit_xl 10x exponent: {exp:.2f} (contract <= 1.1)")
-    assert exp <= 1.1, results
-
-
-_PROBE_LOG = __import__("os").environ.get(
-    "SPARK_GRAFT_PROBE_LOG", "/tmp/dfwb_probe_log.txt"
+from datafusion_wasm_bindings_spark.operators import (
+    asof, clustering, dedup, graph, multimodal, profiling, rangejoin, scale, similarity,
 )
+from datafusion_wasm_bindings_spark.operators import text as optext
+from datafusion_wasm_bindings_spark.operators.checkpoint import make_checkpointer
+from datafusion_wasm_bindings_spark.queries._util import DEC, dsum
+from datafusion_wasm_bindings_spark.queries.analytics5 import ks_from_scores
+from datafusion_wasm_bindings_spark.session import get_spark
+from datafusion_wasm_bindings_spark.sources.catalog import DEFAULT_SF_DIR, table
+from datafusion_wasm_bindings_spark.streaming.events import sessionized
+
+_PROBE_LOG = os.environ.get("SPARK_GRAFT_PROBE_LOG", "/tmp/dfwb_probe_log.txt")
+SF01 = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.1")  # next to the default sf dir
 
 
 def _emit(line: str) -> None:
-    """Print a probe RESULT line and tee it to the append-only probe
-    log (ADVICE r8: result lines captured through ``grep -v Stage``
-    were occasionally swallowed by Spark's \r progress fragments on
-    stdout — costing a 10-minute probe rerun; the log file is immune,
-    and the probe session disables the console progress bar at the
-    source)."""
+    """Print a RESULT line and tee it to the append-only probe log (immune to \\r fragments)."""
     print(line, flush=True)
     try:
         with open(_PROBE_LOG, "a") as fh:
@@ -2313,111 +53,945 @@ def _emit(line: str) -> None:
 
 
 def _time(label: str, run, repeats: int = 3) -> float:
-    run()  # cold: codegen + checkpoint warmup
+    """Run once cold (codegen, checkpoint warm-up), then ``repeats`` times
+    warm; emit and return the warm median (the cold time if no repeats)."""
     times = []
-    for _ in range(repeats):
+    for _ in range(1 + repeats):
         t0 = time.monotonic()
         run()
         times.append(time.monotonic() - t0)
+    times = times[1:] or times
     med = statistics.median(times)
-    _emit(f"{label}: warm median {med:.1f} s ({[round(t,1) for t in times]})")
+    _emit(f"{label}: warm median {med:.1f} s ({[round(t, 1) for t in times]})")
     return med
 
 
-if __name__ == "__main__":
-    # the _xl probes (VERDICT r6 #4, 10x headroom) are opt-in by name —
-    # they run tens of minutes and would crowd the default sweep
-    which = set(sys.argv[1:]) or {"ols2", "survival", "changepoint", "rank", "minhash", "embedding", "ann", "triangles", "q1_100m", "ntile", "join_100m", "durable", "cc_chain", "kmeans", "multimodal", "pagerank_prepared", "bloom_join", "ks", "rrf", "semdedup", "rfm_chain", "session", "profile", "textmap", "langid", "pack"}
-    spark = get_spark(
-        "dfwb-scale-probe",
-        # no \r progress fragments on this session's stdout — result
-        # lines must survive naive pipe captures (ADVICE r8)
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
+def _h(n: int) -> str:
+    return f"{n // 10**6}M" if n >= 10**6 else f"{n // 1000}k" if n >= 1000 else str(n)
+
+
+class Size(SimpleNamespace):
+    """One size of a case: its fields, its inputs, its operators' warm
+    medians ``t`` and the undo list run, newest first, when it is done."""
+
+    def rows(self, *cols, n: int | None = None):
+        """``n`` generated rows, localCheckpointed: generation stays out of the timing."""
+        return self.cp(self.spark.range(self.n if n is None else n).select(*cols))
+
+    def cp(self, df):
+        df = df.localCheckpoint()
+        self.undo.append(lambda: make_checkpointer(None).release(df))
+        return df
+
+    def tmpdir(self, prefix: str) -> str:
+        d = tempfile.mkdtemp(prefix=prefix)
+        self.undo.append(lambda: shutil.rmtree(d, ignore_errors=True))
+        return d
+
+    def conf(self, key: str, value: str) -> None:
+        old, conf = self.spark.conf.get(key, None), self.spark.conf
+        conf.set(key, value)
+        self.undo.append(lambda: conf.set(key, old) if old is not None else conf.unset(key))
+
+
+class Op(NamedTuple):
+    label: str | Callable[[Size], str]  # str.format over the size's fields, or a function of it
+    fn: Callable[[Size], Any]  # one run; asserts the invariant
+    exp: str | None = None  # exponent line: {0}, {1} the two scales, {e} the exponent
+
+
+@dataclass
+class Case:
+    id: str
+    gen: Callable[[Size], Any]  # builds one size's input onto it; what it returns becomes ``df``
+    ops: list[Op]
+    sizes: Sequence = (10_000_000,)  # one or two sizes: n, or a dict of fields with n
+    smoke: Sequence = (20_000,)  # the same fields, small enough for the test suite
+    sweep: bool = False  # run by the no-argument sweep
+    repeats: tuple[int, ...] = (3, 2)  # warm runs per size
+    agree: bool = False  # every operator returns the same value
+    max_exp: float | None = None  # bound on every exponent
+    after: Callable[[Size], None] | None = None  # per size, after its timings
+    finish: Callable[[list[Size]], None] | None = None  # after every size
+
+
+def run_case(spark, case: Case, smoke: bool = False) -> list[Size]:
+    """Run every size of ``case`` (the smoke sizes, cold runs only, if
+    ``smoke``), emit timings and exponents, assert the case's invariants."""
+    xs = []
+    for i, p in enumerate(case.smoke if smoke else case.sizes):
+        p = p if isinstance(p, dict) else {"n": p}
+        x = Size(spark=spark, undo=[], t=[], **{"scale": _h(p["n"]), **p})
+        xs.append(x)
+        try:
+            x.df = case.gen(x) or getattr(x, "df", None)
+            last = []  # each operator's value from its last run
+            for op in case.ops:
+                label = op.label(x) if callable(op.label) else op.label.format_map(vars(x))
+                out = []
+                x.t.append(_time(label, lambda: out.append(op.fn(x)), 0 if smoke else case.repeats[i]))
+                last.append(out[-1])
+            if case.agree:
+                assert all(v == last[0] for v in last), [str(v)[:300] for v in last]
+            if case.after:
+                case.after(x)
+        finally:
+            for undo in reversed(x.undo):
+                undo()
+    for i, op in enumerate(case.ops):
+        if op.exp:
+            e = math.log(xs[1].t[i] / xs[0].t[i]) / math.log(xs[1].n / xs[0].n)
+            _emit(op.exp.format(xs[0].scale, xs[1].scale, e=e))
+            assert case.max_exp is None or e <= case.max_exp, [x.t for x in xs]
+    if case.finish:
+        case.finish(xs)
+    return xs
+
+
+def _shuffle_bytes(df) -> int:
+    """Shuffle bytes written by one run of ``df``, summed over the executed
+    post-AQE plan's exchanges (reused ones alias the original's metrics).
+    Call on a FRESHLY built DataFrame: SQLMetrics accumulate across runs."""
+
+    def walk(node) -> int:
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if cls.startswith("Reused"):
+            return 0
+        opt = node.metrics().get("shuffleBytesWritten") if "ShuffleExchange" in cls else None
+        own = opt.get().value() if opt is not None and opt.isDefined() else 0
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        # a query stage wraps its exchange: enter it once, via .plan()
+        return own + sum(map(walk, kids + ([node.plan()] if cls.endswith("QueryStageExec") else [])))
+
+    df.collect()
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def _hashed(mult: int, mod: int, div: float | None = None):
+    c = (F.col("id") * mult) % mod
+    return c if div is None else c / div
+
+
+def _us(days: int):
+    # xxhash64 scatters times (a multiplicative lattice degenerated the survival grid)
+    return F.lit(1_700_000_000_000_000) + F.expr(f"pmod(xxhash64(id), {days * 86_400_000_000})")
+
+
+def _ols(x):
+    # 3 groups, hash-mixed regressors
+    x1, x2 = (_hashed(2654435761, 50) + 1).cast("double"), _hashed(40503, 100, 100.0)
+    y = x1 * 3.0 - x2 * 7.0 + (F.col("id") % 97).cast("double")
+    return x.rows((F.col("id") % 3).cast("string").alias("flag"), x1.alias("x1"), x2.alias("x2"), y.alias("y"))
+
+
+def _ols_fit(x):
+    c = F.col
+    pairs = [("x1", "x1"), ("x1", "x2"), ("x2", "x2"), ("x1", "y"), ("x2", "y"), ("y", "y")]
+    sums = [dsum(c(v), f"s{v}") for v in ("x1", "x2", "y")] + [dsum(c(a) * c(b), f"s{a}{b}") for a, b in pairs]
+    g = x.df.groupBy("flag").agg(F.count(F.lit(1)).cast("long").alias("n"), *sums)
+    s11, s12, s22, s1y, s2y = (c(f"s{a}{b}") - c(f"s{a}") * c(f"s{b}") / c("n") for a, b in pairs[:5])
+    det = s11 * s22 - s12 * s12
+    b1 = (s1y * s22 - s2y * s12) / det
+    b2 = (s2y * s11 - s1y * s12) / det
+    rows = g.select(
+        "flag", "n", b1.cast(DEC).cast("double").alias("b1"), b2.cast(DEC).cast("double").alias("b2")
+    ).collect()
+    assert len(rows) == 3 and all(r.n > 3 * x.n // 10 for r in rows)
+
+
+def _survival(x):
+    u = x.df.groupBy("user_id").agg(
+        F.min("us").alias("lo"), F.max("us").alias("hi"),
+        F.max((F.col("event_type") == "error").cast("long")).alias("died"))
+    dur_h = F.floor((F.col("hi") - F.col("lo")) / F.lit(3_600_000_000)).cast("long").alias("dur_h")
+    grid = u.select(dur_h, "died").groupBy("dur_h").agg(
+        F.sum("died").cast("long").alias("d"), F.sum(1 - F.col("died")).cast("long").alias("c"))
+    w = Window.orderBy("dur_h")
+    at_risk = F.col("d") + F.col("c")
+    n_risk = (
+        F.sum(at_risk).over(w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        - F.coalesce(F.sum(at_risk).over(w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0))
+    ).cast("long").alias("n_risk")
+    qln = F.when(F.col("d") < F.col("n_risk"), F.floor(
+        F.log(F.lit(1.0) - F.col("d") / F.cast("double", F.col("n_risk"))) * F.lit(1e6) + F.lit(0.5)
+    ).cast("long")).otherwise(F.lit(-100_000_000))
+    km = F.exp(F.sum("qln").over(w.rowsBetween(Window.unboundedPreceding, 0)) / F.lit(1e6))
+    rows = grid.select("dur_h", "d", n_risk).withColumn("qln", qln).select(
+        "dur_h", "n_risk", km.cast(DEC).cast("double").alias("survival")).collect()
+    assert len(rows) > 100  # grid is bounded, not corpus-sized
+
+
+def _cusum(x, bucketed: bool):
+    g = x.df.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n"), F.sum(F.col("value").cast(DEC)).cast("double").alias("s"))
+    staged = x.df.join(F.broadcast(g.select("event_type", (F.col("s") / F.col("n")).alias("mu"))), "event_type")
+    dev, keys = (F.col("value") - F.col("mu")).cast(DEC), ["event_type"]
+    if bucketed:  # 6-hour buckets: prefix offsets from bucket sums, then in-bucket running sums
+        staged = staged.withColumn("bkt", F.floor(F.col("us") / F.lit(6 * 3_600_000_000)).cast("long"))
+        keys = keys + ["bkt"]
+        w_pref = Window.partitionBy("event_type").orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
+        offs = staged.groupBy(*keys).agg(F.sum(dev).alias("bsum")).select(
+            *keys, F.coalesce(F.sum("bsum").over(w_pref), F.lit(0).cast(DEC)).alias("sum_off"))
+        staged = staged.join(F.broadcast(offs), keys)
+    w = Window.partitionBy(*keys).orderBy(F.col("us").asc(), F.col("event_id").asc())
+    cusum = F.sum(dev).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    cusum = cusum + F.col("sum_off") if bucketed else cusum
+    rows = staged.withColumn("cusum", cusum.cast("double")).groupBy("event_type").agg(
+        F.max(F.abs(F.col("cusum"))).alias("m")).collect()
+    assert len(rows) == 5
+
+
+def _rank(x, bucketed: bool):
+    order = [F.col("v").asc(), F.col("id").asc()]
+    ranked = (
+        scale.bucketed_rank(x.df, ["k"], F.floor(F.col("v") / 100.0), order) if bucketed
+        else x.df.withColumn("rn", F.row_number().over(Window.partitionBy("k").orderBy(*order)).cast("long")))
+    out = ranked.groupBy("k").agg(F.max("rn").alias("mx"), F.sum("rn").alias("s")).collect()
+    assert len(out) == 6  # 5 keys + the NULL group
+    if bucketed:
+        assert sum(r.mx for r in out) == x.n  # ranks cover every row, NULLs kept
+
+
+def _users(x, *extra):
+    return x.rows(F.col("id").alias("user_id"), _hashed(2654435761, 1_000_000, 100.0).alias("monetary"), *extra)
+
+
+def _ntile(x, bucketed: bool):
+    order = [F.col("monetary").asc(), F.col("user_id").asc()]
+    if bucketed:
+        rn = F.col("rn")
+        n = F.lit(x.n).cast("long")
+        q = scale._idiv(n, F.lit(5))
+        r = n - q * 5
+        cut = r * (q + 1)
+        tile = F.when(rn <= cut, scale._idiv(rn - 1, q + 1) + 1).otherwise(r + scale._idiv(rn - cut - 1, q) + 1)
+        seg = scale.bucketed_rank(x.df, [], F.floor(F.col("monetary") / 16.0), order).select(
+            tile.cast("long").alias("m_q"))
+    else:
+        seg = x.df.select(F.ntile(5).over(Window.orderBy(*order)).cast("long").alias("m_q"))
+    out = seg.groupBy("m_q").agg(F.count(F.lit(1)).alias("n")).collect()
+    assert len(out) == 5 and sum(r.n for r in out) == x.n
+    return {r.m_q: r.n for r in out}
+
+
+def _rank_chain(x, cut: bool):
+    seg = x.df
+    for i, c in enumerate(("monetary", "m2", "m3")):
+        seg = scale.bucketed_rank(
+            seg, [], F.floor(F.col(c) / 16.0), [F.col(c).asc(), F.col("user_id").asc()], rank_col=f"__rn_{i}")
+        if cut:
+            seg = seg.localCheckpoint(eager=True)
+    sums = [F.sum((F.col(f"__rn_{i}") * F.col("user_id")).cast("decimal(38,0)")).alias(f"s{i}") for i in range(3)]
+    return tuple(seg.agg(*sums).collect()[0])
+
+
+def _pack(x, bucketed: bool):
+    if bucketed:
+        placed = scale.bucketed_prefix_sum(
+            x.df, ["shard"], F.floor(F.col("doc_id") / 4096), [F.col("doc_id").asc()], F.col("n_tokens"),
+            sum_col="end_off").withColumn("start_off", F.col("end_off") - F.col("n_tokens"))
+    else:
+        w = Window.partitionBy("shard").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        placed = x.df.withColumn("start_off", F.sum("n_tokens").over(w) - F.col("n_tokens"))
+    seq = F.floor(F.col("start_off") / 512).cast("long").alias("seq_id")
+    return tuple(
+        placed.select("shard", "n_tokens", seq).groupBy("shard", "seq_id")
+        .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_tokens").alias("t"))
+        .agg(F.count(F.lit(1)).alias("n_seqs"), F.sum(F.col("seq_id") * F.col("n_docs")).alias("chk"),
+             F.sum("t").alias("tok"))
+        .collect()[0]
     )
+
+
+def _ks(x):
+    row = ks_from_scores(x.df, bucket_scale=1000.0).collect()[0]
+    assert row["n_a"] == x.n // 2 and row["n_b"] == x.n - x.n // 2, row
+    assert row["ks_d"] > 0.001, row
+
+
+def _session(x):
+    out = sessionized(x.df).agg(F.count(F.lit(1)).alias("sessions"), F.sum("n").alias("events")).collect()[0]
+    assert out["events"] == x.n and out["sessions"] >= x.n // 10
+
+
+def _profile(x, exact: bool):
+    out = profiling.profile_columns(x.df, ["a", "b", "c", "d"], exact_distinct=exact).collect()
+    assert len(out) == 4 and all(r["n" if exact else "n_distinct"] > 0 for r in out)
+
+
+def _q1(x):
+    net = F.col("price") * (1 - F.col("disc"))
+    rows = x.df.groupBy("rf", "ls").agg(
+        dsum(F.col("qty"), "sum_qty"), dsum(F.col("price"), "sum_base"), dsum(net, "sum_disc"),
+        dsum(net * (1 + F.col("tax")), "sum_charge"), F.count(F.lit(1)).alias("n")).collect()
+    assert len(rows) == 6 and sum(r.n for r in rows) == x.n
+
+
+def _star_join(x):
+    dim = x.spark.range(25).select(F.col("id").alias("nk"), F.concat(F.lit("NATION_"), F.col("id")).alias("name"))
+    rows = x.df.join(F.broadcast(dim), "nk").groupBy("name").agg(
+        F.count(F.lit(1)).alias("cnt"), F.sum("v").alias("sv")).collect()
+    assert len(rows) == 25 and sum(r.cnt for r in rows) == x.n
+
+
+def _selective(x):
+    x.fact = x.rows(_hashed(2654435761, x.keys).alias("k"), (F.col("id") % 1000 / 10.0).alias("v"),
+                    F.expr("repeat(uuid(), 3)").alias("payload"))
+    dim = x.spark.range(x.keys).select(F.col("id").alias("k"), (F.col("id") % 100).alias("grp"))
+    x.dim = x.cp(dim.filter(F.col("grp") == 42))  # 1% of keys survive
+    x.conf("spark.sql.autoBroadcastJoinThreshold", "-1")
+
+
+def _selective_join(x, prefilter: bool):
+    joined = scale.hash_prefilter_join(x.fact, x.dim, "k") if prefilter else x.fact.join(x.dim, "k")
+    # aggregate the payload, or Catalyst prunes it and ships only the key
+    total = joined.agg(F.count(F.lit(1)).alias("n"), F.sum(F.length("payload")).alias("b")).collect()[0]
+    if prefilter:
+        assert total == x.expect
+    x.expect = total
+
+
+def _exchange_rows(x):
+    buckets = x.dim.select(F.pmod(F.xxhash64(F.col("k")), F.lit(1 << 20)).alias("__pfb")).distinct()
+    surv = x.fact.join(F.broadcast(buckets), F.pmod(F.xxhash64(x.fact["k"]), F.lit(1 << 20)) == F.col("__pfb"),
+                       "left_semi").count()
+    _emit(f"  rows entering join exchange: plain {x.n:,} vs prefiltered {surv:,}")
+
+
+def _asof_input(x):
+    # refs at ts = j*1000 with payload user*1000003 + j: each left row matches floor(ts/1000)
+    j, key = (F.col("id") / x.keys).cast("long"), F.col("id") % x.keys
+    x.right = x.rows(key.alias("user_id"), (j * 1000).alias("ts"), (key * 1000003 + j).alias("val"), n=x.keys * 10)
+    x.left = x.rows(
+        key.alias("user_id"), F.expr("pmod(xxhash64(id), 10000)").alias("ts"), F.col("id").alias("row_id"))
+
+
+def _asof(x):
+    ref = (F.col("ts") / 1000).cast("long")
+    bad = asof.asof_join(x.left, x.right, on=["user_id"], ts="ts").filter(
+        (F.col("ref_ts") != ref * 1000) | (F.col("ref_val") != F.col("user_id") * 1000003 + ref)).count()
+    assert bad == 0, bad
+
+
+_HOURS = 14 * 24  # 14 days of hourly intervals per key
+
+
+def _intervals(x):
+    key = (F.col("id") % x.keys).alias("k")
+    x.ev = x.rows(key, F.timestamp_seconds(
+        F.lit(1_700_000_000) + F.expr(f"pmod(xxhash64(id), {_HOURS * 3600})")).alias("ts"))
+    hour = F.lit(1_700_000_000) + (F.col("id") / x.keys).cast("long") * 3600
+    x.iv = x.rows(key, F.timestamp_seconds(hour).alias("start"), F.timestamp_seconds(hour + 1800).alias("end"),
+                  n=x.keys * _HOURS)
+    # an event matches exactly one interval iff its in-hour offset is <= 1800 s
+    x.expect = x.ev.filter(F.expr("pmod(unix_seconds(ts) - 1700000000, 3600)") <= 1800).count()
+
+
+def _interval(x):
+    got = rangejoin.interval_join(x.ev, x.iv, on=["k"], bucket_seconds=3600).count()
+    assert got == x.expect, (got, x.expect)
+
+
+def _baskets(x):
+    # 7 items a basket from a catalog of n/5 parts
+    part = F.expr(f"pmod(xxhash64(id * 2654435761), {x.n // 5})").alias("part")
+    x.items = x.cp(x.spark.range(x.n * 7).select((F.col("id") / 7).cast("long").alias("bkt"), part).distinct())
+    kb = F.col("kb")
+    x.expect = x.items.groupBy("bkt").agg(F.count(F.lit(1)).alias("kb")).agg(
+        F.sum(kb * (kb - 1) / 2).cast("long").alias("p")).collect()[0]["p"]
+
+
+def _itemsets(x):
+    a, b = x.items.alias("a"), x.items.alias("b")
+    pairs = (
+        a.join(b, (F.col("a.bkt") == F.col("b.bkt")) & (F.col("a.part") < F.col("b.part")))
+        .groupBy(F.col("a.part").alias("pa"), F.col("b.part").alias("pb"))
+        .agg(F.count(F.lit(1)).alias("n_ab"))
+    )
+    got = pairs.agg(F.sum("n_ab").cast("long").alias("s")).collect()[0]["s"]
+    assert got == x.expect, (got, x.expect)
+
+
+def _ring(x):
+    # (i, i+1), (i, i+2) mod n close n triangles; pad edges' degree-1 ends close none
+    base = x.spark.range(x.n)
+    ring = [base.select(F.col("id").alias("u"), ((F.col("id") + k) % x.n).alias("v")) for k in (1, 2)]
+    pad = x.spark.range(8 * x.n).select(
+        F.expr(f"pmod(xxhash64(id), {x.n})").alias("u"), (F.col("id") + x.n).alias("v"))
+    return x.cp(ring[0].unionByName(ring[1]).unionByName(pad))
+
+
+def _triangles(x):
+    n = graph.triangle_count(x.df).collect()[0]["n_triangles"]
+    assert n == x.n, n
+
+
+def _chain(x):
+    # diameter n: label propagation needs n rounds, large/small-star O(log n)
+    chain = x.spark.range(x.n - 1).select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
+    cliques = x.spark.range(x.cliques).select(
+        (F.col("id") * 2 + x.n).alias("id_a"), (F.col("id") * 2 + x.n + 1).alias("id_b"))
+    return x.cp(chain.unionByName(cliques))
+
+
+def _star_cc(x):
+    agg = dedup.connected_components_star(x.df).agg(
+        F.countDistinct("comp").alias("n_comp"), F.count(F.lit(1)).alias("n_nodes")).collect()[0]
+    assert agg.n_comp == 1 + x.cliques, agg
+    assert agg.n_nodes == x.n + 2 * x.cliques, agg
+
+
+def _pr_graph(x, plain: bool = False):
+    edges = x.spark.range(x.n).select(
+        (F.col("id") % x.nodes).alias("src"), ((F.col("id") * 2654435761 + 7) % x.nodes).alias("dst"))
+    if plain:
+        x.edges = edges = x.cp(edges)
+    name = f"probe_pr_{x.scale.lower()}"
+    d = x.tmpdir(f"{name}_")
+    x.prep = graph.prepare_pagerank_edges(x.spark, edges, name, buckets=32, path=d)
+    # DROP TABLE on a path-backed table leaves its files to the temp dir
+    x.undo.append(lambda: x.spark.sql(f"DROP TABLE IF EXISTS {name}"))
+
+
+def _pr_iters(x, iters: int, plain: bool = False):
+    ranks = graph.pagerank(x.edges, iters=iters) if plain else graph.pagerank(x.prep, iters=iters, prepared=True)
+    assert ranks.count() == x.nodes
+
+
+def _pr_identical(x):
+    a = graph.pagerank(x.edges, iters=3).orderBy("node").collect()
+    b = graph.pagerank(x.prep, iters=3, prepared=True).orderBy("node").collect()
+    assert [tuple(r) for r in a] == [tuple(r) for r in b], "rank mismatch"
+    _emit("  prepared ranks bit-identical to plain: yes")
+
+
+def _pr_mixed(x):
+    n = x.nodes
+    src = F.col("id").alias("src")
+    x.df = x.cp(
+        x.spark.range(n).select(src, ((F.col("id") * 7 + 1) % n).alias("dst"))
+        .unionByName(x.spark.range(n).select(src, ((F.col("id") + 1) % n).alias("dst")))
+        .unionByName(x.spark.range(8 * n).select(
+            F.expr(f"pmod(xxhash64(id), {n})").alias("src"), F.expr(f"pmod(xxhash64(id + 13), {n})").alias("dst"))))
+    x.ckdir = x.tmpdir("dfwb_durable_probe_")
+
+
+def _pr_ranks(x, ckdir=None):
+    return sorted((r.node, round(r.rank, 9)) for r in graph.pagerank(x.df, iters=3, checkpoint_dir=ckdir).collect())
+
+
+_VEC = "CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
+_NOISE = "CAST(pmod(xxhash64(id * 64 + d + 99991), 2001) - 1000 AS DOUBLE) / 4000.0"
+_QIDS = list(range(8))
+
+
+def _planted(x):
+    # vector i + n/2 is a cosine~0.97 near-copy of vector i
+    x.half = half = x.n // 2
+    base = x.spark.range(half).select(
+        F.col("id").alias("vec_id"), F.expr(f"transform(sequence(0, 63), d -> {_VEC})").alias("embedding"))
+    noisy = x.spark.range(half).select(
+        (F.col("id") + half).alias("vec_id"),
+        F.expr(f"transform(sequence(0, 63), d -> {_VEC} + {_NOISE})").alias("embedding"))
+    return x.cp(base.unionByName(noisy))
+
+
+def _lsh(x):
+    pairs = similarity.cosine_pairs_lsh(x.df, threshold=0.8, planes=x.planes, tables=16).collect()
+    planted = sum(1 for r in pairs if r.id_b - r.id_a == x.half)
+    extras = len(pairs) - planted
+    assert planted >= 0.99 * x.half, (planted, x.half)
+    # random 64-dim cosines >= 0.8 are ~6-sigma events; extras stay O(1)
+    assert extras <= 100, extras
+    x.stats = (planted, extras)
+
+
+def _ann(x, method: str):
+    c, q = x.df, _QIDS
+    rows = {
+        "bf": lambda: similarity.cosine_topk_bruteforce(c, query_ids=q, k=3),
+        "ivf": lambda: similarity.ivf_topk(c, query_ids=q, k=3, n_centroids=x.cells, n_probe=4),
+        "pq": lambda: similarity.pq_topk(c, query_ids=q, k=3, m_subspaces=8, n_codes=16, rerank=64),
+    }[method]().collect()
+    got = {}
+    for r in rows:
+        got.setdefault(r.query_id, set()).add(r.cand_id)
+    for qid in q:  # every query's planted partner is in its top-3
+        assert qid + x.half in got.get(qid, set()), (qid, sorted(got.get(qid, set())))
+
+
+def _quantized(x):
+    # 32-dim vectors in 8 planted clusters: id mod 8 lifts one dimension
+    return x.rows(F.col("id").alias("vec_id"), F.expr(
+        "transform(sequence(0, 31), d ->"
+        " CAST(pmod(xxhash64(id * 37 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
+        " + CAST(pmod(id, 8) AS DOUBLE) * CASE WHEN d = pmod(id, 8) THEN 2.0 ELSE 0.0 END)").alias("embedding"))
+
+
+def _kmeans(x):
+    assigned, centroids = clustering.fit_kmeans(x.df, k=8, iters=2)
+    agg = assigned.agg(F.count(F.lit(1)).alias("n"), F.countDistinct("cid").alias("k_used")).collect()[0]
+    assert agg.n == x.n and agg.k_used >= 2, agg
+    assert len(centroids) == 8
+
+
+def _semdedup(x):
+    out = clustering.semantic_dedup(x.df, k=8, iters=2, threshold=0.9).collect()
+    assert sum(r["n_members"] for r in out) == x.n
+    assert all(r["n_kept"] + r["n_dups"] == r["n_members"] for r in out)
+
+
+def _rrf(x):
+    q1, q2 = [F.array(*[F.lit((i * m) % 2001 - 1000).cast("long") for i in range(16)]) for m in (911, 389)]
+    c = x.df.select("vec_id", similarity._dot(F.col("x"), q1).alias("s1"),
+                    similarity._dot(F.col("x"), q2).alias("s2")).localCheckpoint(eager=True)
+    r1 = scale.bucketed_rank(c, [], scale.equidepth_bucket(c, -F.col("s1")),
+                             [F.col("s1").desc(), F.col("vec_id").asc()], rank_col="r1").localCheckpoint(eager=True)
+    r2 = scale.bucketed_rank(r1, [], scale.equidepth_bucket(r1, -F.col("s2")),
+                             [F.col("s2").desc(), F.col("vec_id").asc()], rank_col="r2")
+    one = F.lit(1).cast("double")
+    fused = (one / (F.lit(60) + F.col("r1")) + one / (F.lit(60) + F.col("r2"))).alias("rrf")
+    top = r2.select("vec_id", "r1", "r2", fused).orderBy(
+        F.col("rrf").desc(), F.col("vec_id").asc()).limit(10).collect()
+    assert len(top) == 10 and top[0]["rrf"] >= top[-1]["rrf"]
+
+
+_MH = dict(bands=8, rows_per_band=2, jaccard_threshold=0.5)
+_SPANS = dict(span_len=20, top_k=50)
+
+
+def _replicas(x, emit: bool = False):
+    # token-disjoint replicas: a per-replica token suffix, so no shingle matches across them
+    docs = table(x.spark, SF01, "documents").select("doc_id", "text")
+    x.base_pairs = dedup.minhash_lsh_pairs(docs, **_MH).count()
+    if emit:
+        _emit(f"minhash corpus: {docs.count()} docs x {x.n} replicas, {x.base_pairs} pairs/replica")
+    return x.cp(docs.crossJoin(x.spark.range(x.n).select(F.col("id").alias("rep"))).select(
+        (F.col("doc_id") + F.col("rep") * 1_000_000).alias("doc_id"),
+        F.regexp_replace("text", F.lit(r"([A-Za-z0-9]+)"), F.concat(F.lit("$1q"), F.col("rep").cast("string")))
+        .alias("text")))
+
+
+def _minhash(x):
+    n = dedup.minhash_lsh_pairs(x.df, **_MH).count()
+    # a pair with J < 1 is caught per replica with p = 1-(1-J^2)^bands: allow that
+    expect = x.n * x.base_pairs
+    assert abs(n - expect) <= max(2, 0.02 * expect), (n, expect)
+
+
+def _docs(x):
+    # deterministic ~60-token synthetic docs (doc_id, lang, text)
+    words = ("the quick brown fox jumps over a lazy dog and then runs to "
+             "data spark engine query shuffle partition broadcast join").split()
+    arr = F.array(*[F.lit(w) for w in words])
+    tokens = F.transform(F.sequence(F.lit(1), F.lit(60)), lambda i: F.element_at(
+        arr, (F.pmod(F.xxhash64(F.col("id") * 31 + i), F.lit(len(words))) + 1).cast("int")))
+    return x.rows(F.col("id").alias("doc_id"), F.lit("en").alias("lang"), F.array_join(tokens, " ").alias("text"))
+
+
+def _textmap(x):
+    out = optext.quality_scores(x.df).agg(F.count(F.lit(1)).alias("n"), F.avg("quality").alias("q")).collect()[0]
+    assert out["n"] == x.n and 0.0 < out["q"] <= 1.0
+
+
+def _langid(x, joins: bool):
+    df = optext.language_id(x.df)
+    if joins:
+        # the pre-rewrite explode -> join -> 2 groupBys -> join-back formulation
+        lex = [(lang, w) for lang, ws in optext.LANG_LEXICON.items() for w in ws]
+        lexicon = x.spark.createDataFrame(lex, "lang_cand string, tok string")
+        toks = x.df.select("doc_id", F.explode(optext.tokens_col()).alias("tok"))
+        hits = toks.join(F.broadcast(lexicon), "tok").groupBy("doc_id", "lang_cand").agg(F.count("*").alias("hits"))
+        best = hits.groupBy("doc_id").agg(
+            F.expr("max_by(lang_cand, struct(hits, lang_cand))").alias("lang_pred"), F.max("hits").alias("best_hits"))
+        df = x.df.select("doc_id").join(best, "doc_id", "left").select(
+            F.coalesce("lang_pred", F.lit("und")).alias("lang_pred"),
+            F.coalesce("best_hits", F.lit(0)).alias("best_hits"))
+    rows = df.groupBy("lang_pred").agg(F.count(F.lit(1)).alias("n"), F.sum("best_hits").alias("h")).collect()
+    return sorted((r["lang_pred"], r["n"], int(r["h"])) for r in rows)
+
+
+_TOK_A = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
+_TOK_B = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
+
+
+def _tok_docs(x):
+    # identical token arrays by construction; checked on real and synthetic docs
+    x.df, x.base = _docs(x), None
+    for what, df in (("real", table(x.spark, SF01, "documents")), ("synthetic", x.df)):
+        n_diff = df.filter(F.expr(f"NOT ({_TOK_A} <=> {_TOK_B})")).count()
+        assert n_diff == 0, f"{n_diff} {what} docs tokenize differently"
+    x.base = _tok(x, _TOK_A)
+
+
+def _tok(x, tok: str):
+    # a quality_scores-shaped consumer, so the downstream HOF work is timed too
+    stop = F.array([F.lit(w) for w in optext.LANG_LEXICON["en"]])
+    staged = x.df.select(F.expr(tok).alias("__toks")).select(
+        F.size("__toks").alias("__n_tok"),
+        F.size(F.filter(F.col("__toks"), lambda t: F.array_contains(stop, t))).alias("__n_stop"))
+    got = staged.agg(F.count(F.lit(1)).alias("n"), F.sum("__n_tok").alias("toks"),
+                     F.sum("__n_stop").alias("stops")).collect()[0]
+    assert x.base is None or got == x.base
+    return got
+
+
+_MARKER = "PLANTEDMARKERSPAN-20"
+
+
+def _hex_docs(x):
+    # ~290 md5-hex chars a doc (windows collide with p ~16^-20), a marker in every 10th
+    assert len(_MARKER) == 20  # uppercase: disjoint from the hex context
+    t = F.expr("array_join(transform(sequence(0, 8),"
+               " b -> md5(concat(CAST(id AS STRING), ':', CAST(b AS STRING)))), '')")
+    marked = F.concat(F.expr("substr(t, 1, 100)"), F.lit(_MARKER), F.expr("substr(t, 101, length(t))"))
+    x.planted = x.n // 10  # ids 0, 10, ... — exact by construction
+    return x.cp(x.spark.range(x.n).select(F.col("id").alias("doc_id"), t.alias("t")).select(
+        "doc_id", F.when(F.col("doc_id") % 10 == 0, marked).otherwise(F.col("t")).alias("text")))
+
+
+def _spans(x):
+    rows = dedup.duplicated_spans(x.df, span_len=20, top_k=None).collect()
+    got = {r.span: r for r in rows}
+    m = got[_MARKER]
+    assert m.n_occurrences == x.planted == m.n_docs
+    # every OTHER duplicated span is a marker-overlap window
+    assert all(any(c.isupper() or c == "-" for c in s) for s in got), [s for s in got if s.islower()][:5]
+    x.n_spans = len(rows)
+
+
+def _words(x):
+    # 5-12 chars over 12 letters; every 10th gets a distance-1 partner ending in 'z'
+    base = x.spark.range(x.n).select("id", F.concat(F.lit("w"), F.expr(
+        "array_join(transform(sequence(1, CAST(pmod(xxhash64(id), 8) + 4 AS INT)),"
+        " i -> chr(97 + CAST(pmod(xxhash64(id * 131 + i), 12) AS INT))), '')")).alias("w"))
+    planted = base.filter(F.col("id") % 10 == 0).select(
+        F.concat(F.expr("substr(w, 1, length(w) - 1)"), F.lit("z")).alias("w"))
+    x.n_planted = planted.distinct().join(base.select("w").distinct(), "w", "left_anti").count()
+    return x.cp(base.select("w").unionByName(planted).distinct())
+
+
+def _editdist(x):
+    got = similarity.editdist_join(x.df, max_dist=1).count()
+    # base-base accidental pairs add on top: >= is the exact floor
+    assert got >= x.n_planted, (got, x.n_planted)
+    x.n_pairs = got
+
+
+def _wide_docs(x, n: int):
+    # unique md5 blocks: map-side combine cannot hide the true span volume
+    md5s = F.transform(F.sequence(F.lit(1), F.lit(x.blocks)), lambda i: F.md5(
+        F.concat(F.col("id").cast("string"), F.lit("-"), i.cast("string"))))
+    return x.rows(F.col("id").alias("doc_id"), F.concat_ws("", md5s).alias("text"), n=n)
+
+
+def _widerow_docs(x):
+    # spans shuffle ~36x their corpus: the span shape gets a fifth of the docs
+    x.df, x.span_docs = _wide_docs(x, x.n), _wide_docs(x, x.n // 5)
+    x.corpus, x.span_corpus = x.n * x.blocks * 32, x.n // 5 * x.blocks * 32
+
+
+def _digest_df(x):
+    per_key = x.df.select(F.md5(F.encode("text", "UTF-8")).alias("key")).groupBy("key").agg(
+        F.count(F.lit(1)).alias("n"))
+    return per_key.agg(F.count(F.lit(1)).alias("n_payloads"), F.sum("n").alias("n_media"))
+
+
+def _widerow_bytes(x):
+    x.b_digest = _shuffle_bytes(_digest_df(x))
+    x.b_span = _shuffle_bytes(dedup.duplicated_spans(x.span_docs, **_SPANS))
+    _emit(f"  {x.width}: digest shuffle {x.b_digest:,} B ({100.0 * x.b_digest / x.corpus:.3f}% of "
+          f"{x.corpus:,} B corpus); span shuffle {x.b_span:,} B ({x.b_span / x.span_corpus:.1f} B/char)")
+
+
+def _widerow_contract(xs):
+    nar, wid = xs
+    res = [(x.width, x.b_digest, x.b_span) for x in xs]
+    # digests: a bounded record a ROW, so fewer rows => fewer bytes, < 100 B a row
+    assert wid.b_digest < nar.b_digest, res
+    assert nar.b_digest < 100 * nar.n, res
+    assert wid.b_digest < 100 * wid.n, res
+    # spans: width-invariant shuffle per corpus byte
+    ratio = (wid.b_span / wid.span_corpus) / (nar.b_span / nar.span_corpus)
+    _emit(f"  span shuffle B/char ratio wide/narrow: {ratio:.2f} (contract [0.7, 1.4]); "
+          f"digest bytes wide/narrow: {wid.b_digest / nar.b_digest:.2f} (contract < 1)")
+    assert 0.7 <= ratio <= 1.4, res
+
+
+def _megadoc_bytes(x):
+    b, corpus = _shuffle_bytes(dedup.duplicated_spans(x.df, **_SPANS)), x.n * x.blocks * 32
+    _emit(f"  {x.width}: {x.t[0]:.1f} s, span shuffle {b:,} B ({b / corpus:.1f} B/char)")
+    x.b_per_char = b / corpus
+
+
+def _megadoc_contract(xs):
+    nar, mega = xs
+    ratio_t, ratio_b = mega.t[0] / nar.t[0], mega.b_per_char / nar.b_per_char
+    _emit(f"  megadoc wall ratio mega/narrow: {ratio_t:.2f} (contract < 3); "
+          f"shuffle B/char ratio: {ratio_b:.2f} (contract [0.7, 1.4])")
+    assert ratio_t < 3.0, (ratio_t, ratio_b)
+    assert 0.7 <= ratio_b <= 1.4, (ratio_t, ratio_b)
+
+
+def _clustered_docs(x):
+    # the first 10% form 3-doc clusters of IDENTICAL text; the rest share no token
+    n, i = x.n, F.col("id")
+    k = F.when(i < n // 10, i - F.pmod(i, F.lit(3))).otherwise(i + n)
+    words = F.transform(F.sequence(F.lit(1), F.lit(20)), lambda j: F.hex(F.xxhash64(k * 131 + j)))
+    # a trailing partial group of 2 docs is still one component
+    x.expect_clusters = (n - n // 10) + (n // 10 + 2) // 3
+    return x.rows(i.alias("doc_id"), F.array_join(words, " ").alias("text"))
+
+
+def _split_of(c):
+    h = F.substring(F.md5(F.concat(c.cast("string"), F.lit("dfwb-split"))), 1, 8)
+    return F.when(h < "cccccccc", F.lit("train")).when(h < "e6666666", F.lit("val")).otherwise(F.lit("test"))
+
+
+def _cluster_split(x):
+    pairs = dedup.ngram_jaccard_pairs(x.df, threshold=0.9, max_doc_freq=160).localCheckpoint()
+    comps = dedup.connected_components(pairs).selectExpr("node AS doc_id", "comp AS cluster_id")
+    assign = x.df.select("doc_id").join(comps, "doc_id", "left").withColumn(
+        "rep", F.coalesce("cluster_id", "doc_id")).withColumn("split", _split_of(F.col("rep")))
+    sides = [comps.select(F.col("doc_id").alias(f"id_{s}"), _split_of(F.col("cluster_id")).alias(f"s{s}"))
+             for s in "ab"]
+    leaked = (
+        pairs.select("id_a", "id_b").join(sides[0], "id_a").join(sides[1], "id_b")
+        .filter(F.col("sa") != F.col("sb")).agg(F.count(F.lit(1)).cast("long").alias("n_cross_split_pairs")))
+    rows = assign.groupBy("split").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"), F.countDistinct("rep").cast("long").alias("n_clusters")
+    ).crossJoin(F.broadcast(leaked)).collect()
+    assert sum(r["n_docs"] for r in rows) == x.n, rows
+    assert all(r["n_cross_split_pairs"] == 0 for r in rows), rows
+    assert sum(r["n_clusters"] for r in rows) == x.expect_clusters, rows
+
+
+def _multimodal(x):
+    agg = multimodal.extract_features(x.df).agg(
+        F.count(F.lit(1)).alias("n"), F.sum("n_bytes").alias("total_bytes")).collect()[0]
+    assert agg.n == x.n and agg.total_bytes > x.n * 3000, agg
+
+
+_HALF = [dict(n=40_000, planes=10, cells=32)]
+_HALF_XL = [*_HALF, dict(n=400_000, planes=14, cells=96)]
+_HALF_SMOKE = [dict(n=1_000, planes=6, cells=8), dict(n=2_000, planes=7, cells=12)]
+_EXP = "  {} scaling exponent ({{0}} -> {{1}} {}): {{e:.2f}}".format
+
+CASES = [
+    # buckets track shuffle.partitions: <= 1.0 means no O(n^2) constant in them
+    Case("pagerank_xl", _pr_graph, [Op(
+        lambda x: f"pagerank 3 iters, prepared ({x.scale} edges, {x.nodes // 1000}k nodes)",
+        lambda x: _pr_iters(x, 3), _EXP("pagerank prepared", "edges"))],
+        [dict(n=10_000_000, nodes=500_000), dict(n=100_000_000, nodes=5_000_000)],
+        [dict(n=20_000, nodes=2_000), dict(n=40_000, nodes=4_000)]),
+    # one O(|V|) exchange a round; each round's checkpoint blocks are released
+    Case("pagerank_deep", _pr_graph, [
+        Op("pagerank 3 iters, prepared ({scale} edges)", lambda x: _pr_iters(x, 3)),
+        Op("pagerank 10 iters, prepared ({scale} edges)", lambda x: _pr_iters(x, 10))],
+        [dict(n=100_000_000, nodes=5_000_000)], [dict(n=20_000, nodes=2_000)], repeats=(2,),
+        after=lambda x: _emit(f"  marginal cost per extra iteration: {(x.t[1] - x.t[0]) / 7:.2f} s")),
+    # the adversarial chain at 10x: O(log n) more alternations expected
+    Case("cc_chain_xl", _chain, [Op(
+        lambda x: f"star CC, {x.scale}-node chain + {x.cliques // 1000}k cliques", _star_cc,
+        _EXP("star CC", "chain"))],
+        [dict(n=1_000_000, cliques=100_000), dict(n=10_000_000, cliques=1_000_000)],
+        [dict(n=100, cliques=1_000), dict(n=200, cliques=2_000)]),
+    # banded candidates are bucket-keyed: ~1.0 passes, all-pairs shows ~2.0
+    Case("minhash_xl", _replicas, [Op(
+        lambda x: f"minhash-LSH dedup ({x.scale} docs, {x.n * x.base_pairs} pairs)", _minhash,
+        _EXP("minhash-LSH", "docs"))],
+        [dict(scale="100k", n=20), dict(scale="1M", n=200)], [dict(scale="5k", n=1), dict(scale="10k", n=2)]),
+    # planes is the occupancy knob: 10 at 40k and 14 at 400k keep ~30 vectors a bucket
+    Case("embedding_xl", _planted, [Op(
+        "hyperplane-LSH near-dup ({scale} x 64-dim, planes={planes})", _lsh, _EXP("embedding-LSH", "vectors"))],
+        _HALF_XL, _HALF_SMOKE, after=lambda x: _emit(f"  planted found / extras @ {x.scale}: {x.stats}")),
+    Case("semdedup_xl", _quantized, [Op(
+        "SemDeDup prune ({scale} x 32-dim, k=8, tau=0.9)", _semdedup, _EXP("SemDeDup", "vectors"))],
+        [500_000, 2_000_000], [2_000, 8_000]),
+    Case("substring_xl", _hex_docs, [Op(
+        "duplicated spans ({scale} docs x ~290 chars, 1 planted marker)", _spans, _EXP("substring-dedup", "docs"))],
+        [30_000, 300_000], [1_000, 2_000],
+        after=lambda x: _emit(f"  duplicated spans @ {x.scale}: {x.n_spans} (marker-overlap family)")),
+    # row WIDTH 10x at constant corpus bytes
+    Case("widerow", _widerow_docs, [
+        Op(lambda x: f"widerow digest dedup, {x.width} x {x.n:,} docs", lambda x: _digest_df(x).collect()),
+        Op(lambda x: f"widerow duplicated_spans, {x.width} x {x.n // 5:,} docs",
+           lambda x: dedup.duplicated_spans(x.span_docs, **_SPANS).collect())],
+        [dict(width="narrow 2k-char", n=100_000, blocks=62), dict(width="wide 20k-char", n=10_000, blocks=625)],
+        [dict(width="narrow 2k-char", n=2_000, blocks=62), dict(width="wide 20k-char", n=200, blocks=625)],
+        repeats=(3, 3), after=_widerow_bytes, finish=_widerow_contract),
+    # 100x wider at constant bytes; >= 32 docs a width, so neither starves
+    Case("megadoc", lambda x: _wide_docs(x, x.n), [Op(
+        lambda x: f"megadoc duplicated_spans, {x.width} x {x.n:,} docs",
+        lambda x: dedup.duplicated_spans(x.df, **_SPANS).collect())],
+        [dict(width="narrow 20k-char", n=3200, blocks=625), dict(width="mega 2M-char", n=32, blocks=65536)],
+        [dict(width="narrow 20k-char", n=64, blocks=64), dict(width="mega 2M-char", n=2, blocks=2048)],
+        repeats=(3, 3), after=_megadoc_bytes, finish=_megadoc_contract),
+    Case("clustersplit_xl", _clustered_docs, [Op(
+        "cluster split composed (pairs+CC+assign+audit), {scale} docs", _cluster_split,
+        "  clustersplit_xl 10x exponent: {e:.2f} (contract <= 1.1)")],
+        [200_000, 2_000_000], [2_000, 20_000], repeats=(3, 3), max_exp=1.1),
+    # the length-band blocking FastSS replaced measured quadratic here
+    Case("editdist_xl", _words, [Op(
+        "editdist FastSS join ({scale} words, d=1)", _editdist, _EXP("editdist FastSS", "words"))],
+        [30_000, 300_000], [1_000, 2_000],
+        after=lambda x: _emit(f"  pairs found @ {x.scale}: {x.n_pairs} (planted floor {x.n_planted})")),
+    Case("interval_xl", _intervals, [Op(
+        lambda x: f"interval join ({x.scale} events x {x.keys * _HOURS // 1000}k intervals)", _interval,
+        _EXP("interval-join", "events"))],
+        [dict(n=5_000_000, keys=1_000), dict(n=50_000_000, keys=1_000)],
+        [dict(n=10_000, keys=10), dict(n=20_000, keys=10)]),
+    # basket-keyed pairs: linear where an item-keyed self-join squares hot items
+    Case("itemsets_xl", _baskets, [Op(
+        "itemset pair join ({scale} baskets x 7 items)", _itemsets, _EXP("itemset pair-join", "baskets"))],
+        [1_000_000, 10_000_000], [2_000, 4_000]),
+    Case("tokenizer_ab", _tok_docs, [
+        Op("tokenize A: regexp_extract_all ({scale} docs)", lambda x: _tok(x, _TOK_A)),
+        Op("tokenize B: split+filter ({scale} docs)", lambda x: _tok(x, _TOK_B))], [2_000_000], [2_000],
+        after=lambda x: _emit(f"  tokenizer A/B speedup: {x.t[0] / x.t[1]:.2f}x (adopt bar 1.3x)")),
+    Case("triangles_xl", _ring, [Op(
+        lambda x: f"triangle count ({x.scale} edges, {x.n // 1000}k nodes)", _triangles,
+        _EXP("triangle-count", "edges"))],
+        [dict(scale="2M", n=200_000), dict(scale="20M", n=2_000_000)],
+        [dict(scale="20k", n=2_000), dict(scale="40k", n=4_000)]),
+    Case("ann_xl", _planted, [
+        Op("IVF top-3 ({scale}, {cells} cells)", lambda x: _ann(x, "ivf"), _EXP("IVF", "vectors")),
+        Op("PQ-ADC top-3 ({scale})", lambda x: _ann(x, "pq"), _EXP("PQ-ADC", "vectors"))], _HALF_XL, _HALF_SMOKE),
+    Case("asof_xl", _asof_input, [Op(
+        lambda x: f"as-of join ({x.scale} left rows, {x.keys // 1000}k keys x 10 refs)", _asof,
+        _EXP("as-of join", "rows"))],
+        [dict(n=5_000_000, keys=100_000), dict(n=50_000_000, keys=1_000_000)],
+        [dict(n=10_000, keys=1_000), dict(n=20_000, keys=2_000)]),
+    # bucketed edges exchange only the O(|V|) rank table; ranks BIT-identical
+    Case("pagerank_prepared", lambda x: _pr_graph(x, plain=True), [
+        Op(lambda x: f"pagerank 3 iters, plain ({x.scale} edges, {x.nodes // 1000}k nodes)",
+           lambda x: _pr_iters(x, 3, plain=True)),
+        Op("pagerank 3 iters, prepared bucketed edges (same input)", lambda x: _pr_iters(x, 3))],
+        [dict(n=10_000_000, nodes=500_000)], [dict(n=20_000, nodes=2_000)], sweep=True, after=_pr_identical),
+    # broadcast off, ~120 B rows: the sketch's ~0.3 s lost at 20M narrow, 10M wide rows
+    Case("bloom_join", _selective, [
+        Op("selective join, plain SMJ ({scale} x ~120B fact, 1% dim)", lambda x: _selective_join(x, False)),
+        Op("selective join, hash-prefiltered (same input)", lambda x: _selective_join(x, True))],
+        [dict(n=40_000_000, keys=200_000)], [dict(n=20_000, keys=2_000)], sweep=True, after=_exchange_rows),
+    Case("ols2", _ols, [Op("ols2 (10 decimal cross-moments, {scale} rows, 3 groups)", _ols_fit)], sweep=True),
+    Case("survival", lambda x: x.rows(
+        (F.col("id") % (x.n // 10)).alias("user_id"), _us(90).alias("us"),
+        F.when(_hashed(2654435761, 50) == 0, "error").otherwise("view").alias("event_type")),
+        [Op(lambda x: f"survival (KM over {x.scale} events / {_h(x.n // 10)} users)", _survival)], sweep=True),
+    Case("changepoint", lambda x: x.rows(
+        (F.col("id") % 5).cast("string").alias("event_type"), F.col("id").alias("event_id"),
+        _us(90).alias("us"), _hashed(2654435761, 10000, 100.0).alias("value")), [
+        Op("cusum naive per-type window ({scale} rows, 5 types)", lambda x: _cusum(x, False)),
+        Op("cusum two-pass bucketed ({scale} rows, 5 types)", lambda x: _cusum(x, True))], sweep=True),
+    # 1/16 NULL keys exercise the null-safe offset join
+    Case("rank", lambda x: x.rows(
+        F.when(F.col("id") % 16 == 0, F.lit(None)).otherwise((F.col("id") % 5).cast("string")).alias("k"),
+        _hashed(2654435761, 1_000_000, 100.0).alias("v"), F.col("id")), [
+        Op("per-key rank naive window ({scale} rows, 5 keys)", lambda x: _rank(x, False)),
+        Op("per-key rank bucketed two-pass ({scale} rows, 5 keys)", lambda x: _rank(x, True))], sweep=True),
+    Case("minhash", lambda x: _replicas(x, emit=True), [Op(
+        lambda x: f"minhash-LSH dedup ({x.scale} docs, {x.n * x.base_pairs} verified pairs)", _minhash)],
+        [dict(scale="100k", n=20)], [dict(scale="5k", n=1)], sweep=True),
+    Case("embedding", _planted, [Op(
+        lambda x: f"hyperplane-LSH embedding dedup ({x.scale} x 64-dim, {_h(x.half)} planted pairs)", _lsh)],
+        _HALF, _HALF_SMOKE[:1], sweep=True, after=lambda x: _emit(f"planted found / extras: {x.stats}")),
+    Case("ann", _planted, [
+        Op("ANN brute-force exact top-3 ({scale} x 64-dim, 8 queries)", lambda x: _ann(x, "bf")),
+        Op("ANN IVF top-3 ({cells} cells, probe 4)", lambda x: _ann(x, "ivf")),
+        Op("ANN PQ-ADC top-3 (8 subspaces, 16 codes, re-rank 64)", lambda x: _ann(x, "pq"))],
+        _HALF, _HALF_SMOKE[:1], sweep=True),
+    Case("triangles", _ring, [Op(
+        lambda x: f"triangle count, AQE-chosen joins ({x.scale} edges, {x.n // 1000}k nodes)", _triangles)],
+        [dict(scale="2M", n=200_000)], [dict(scale="20k", n=2_000)], sweep=True),
+    # not checkpointed: 100M rows exceed the 8 g driver's storage comfort
+    Case("q1_100m", lambda x: x.spark.range(x.n).select(
+        F.expr("element_at(array('A', 'N', 'R'), CAST(id % 3 + 1 AS INT))").alias("rf"),
+        F.expr("element_at(array('F', 'O'), CAST(id % 2 + 1 AS INT))").alias("ls"),
+        _hashed(2654435761, 5000, 100.0).alias("qty"), _hashed(40503, 100000, 100.0).alias("price"),
+        _hashed(69069, 10, 100.0).alias("disc"), _hashed(12345, 8, 100.0).alias("tax")),
+        [Op("TPC-H Q1 shape, {scale} rows -> 6 groups (4 decimal measures)", _q1)],
+        [100_000_000], [100_000], sweep=True),
+    Case("ntile", _users, [
+        Op("global ntile(5), one sort task ({scale} rows)", lambda x: _ntile(x, False)),
+        Op("bucketed rank + arithmetic ntile ({scale} rows)", lambda x: _ntile(x, True))], sweep=True, agree=True),
+    # uncut won ~3x: a lazy chain is ONE action reusing its exchanges (cf. rrf)
+    Case("rfm_chain", lambda x: _users(x, _hashed(40503, 730).alias("m2"), _hashed(69069, 5_000).alias("m3")), [
+        Op("3 chained bucketed ranks, uncut lineage ({scale} rows)", lambda x: _rank_chain(x, cut=False)),
+        Op("3 chained bucketed ranks, checkpoint between ({scale} rows)", lambda x: _rank_chain(x, cut=True))],
+        sweep=True, agree=True),
+    Case("session", lambda x: x.rows(
+        (F.col("id") % (x.n // 10)).alias("user_id"), F.timestamp_micros(_us(30)).alias("ts"),
+        _hashed(2654435761, 10_000, 100.0).alias("value")),
+        [Op(lambda x: f"session_window sessionization ({x.scale} events, {_h(x.n // 10)} users)", _session)],
+        sweep=True),
+    Case("profile", lambda x: x.rows(
+        _hashed(2654435761, 1_000_000, 100.0).alias("a"),
+        F.when(F.col("id") % 97 == 0, None).otherwise(_hashed(40503, 50_000)).cast("double").alias("b"),
+        _hashed(69069, 365).cast("double").alias("c"),
+        F.expr("CAST(pmod(xxhash64(id), 1000000) AS DOUBLE) / 7.0").alias("d")), [
+        Op("column profile, exact countDistinct ({scale} rows x 4 cols)", lambda x: _profile(x, True)),
+        Op("column profile, HLL mode (same input)", lambda x: _profile(x, False))], sweep=True),
+    Case("textmap", _docs, [Op("text quality map path ({scale} x ~60-token docs, codegen-only)", _textmap)],
+         [2_000_000], [2_000], sweep=True),
+    Case("langid", _docs, [
+        Op("langid pure-map argmax ({scale} docs)", lambda x: _langid(x, False)),
+        Op("langid explode+join formulation (same input)", lambda x: _langid(x, True))],
+        [2_000_000], [2_000], sweep=True, agree=True),
+    Case("pack", lambda x: x.rows(
+        F.col("id").alias("doc_id"), (F.col("id") % 8).alias("shard"),
+        (F.expr("pmod(xxhash64(id * 19), 120)") + 1).alias("n_tokens")), [
+        Op("packing offsets, naive per-shard window ({scale} docs, 8 shards)", lambda x: _pack(x, False)),
+        Op("packing offsets, bucketed prefix sum (same input)", lambda x: _pack(x, True))], sweep=True, agree=True),
+    Case("join_100m", lambda x: x.spark.range(x.n).select(
+        (F.col("id") % 25).alias("nk"), _hashed(2654435761, 10000, 100.0).alias("v")),
+        [Op("fact join broadcast dim, {scale} rows -> 25 groups", _star_join)], [100_000_000], [100_000], sweep=True),
+    # same ranks: the delta is the per-round storage round-trip
+    Case("durable", _pr_mixed, [
+        Op("pagerank {scale} edges, localCheckpoint cuts (3 rounds)", _pr_ranks),
+        Op("pagerank {scale} edges, durable storage checkpoints", lambda x: _pr_ranks(x, x.ckdir))],
+        [dict(scale="2M", n=2_000_000, nodes=200_000)], [dict(scale="20k", n=20_000, nodes=2_000)],
+        sweep=True, agree=True),
+    Case("cc_chain", _chain, [Op(
+        lambda x: f"connected components, {x.scale}-node chain + {x.cliques // 1000}k cliques (star variant)",
+        _star_cc)], [dict(n=1_000_000, cliques=500_000)], [dict(n=100, cliques=1_000)], sweep=True),
+    # slice A is shifted +0.01, so D is genuinely nonzero
+    Case("ks", lambda x: x.rows((F.col("id") % 2 == 0).alias("is_a"), (
+        _hashed(2654435761, 100003).cast("double") / 100003.0 + F.when(F.col("id") % 2 == 0, 0.01).otherwise(0.0)
+    ).alias("score")), [Op("exact two-sample KS ({scale} rows, ~200k distinct scores)", _ks)], sweep=True),
+    Case("rrf", lambda x: x.rows(F.col("id").alias("vec_id"), F.expr(
+        "transform(sequence(0, 15), d -> CAST(pmod(xxhash64(id * 53 + d), 2001) - 1000 AS BIGINT))").alias("x")),
+        [Op("RRF fusion ({scale} x 16-dim, two bucketed global ranks)", _rrf)], [1_000_000], [10_000], sweep=True),
+    Case("semdedup", _quantized, [Op("SemDeDup prune ({scale} x 32-dim, k=8, tau=0.9)", _semdedup)],
+         [500_000], [2_000], sweep=True),
+    Case("kmeans", _quantized, [Op("k-means fit, {scale} x 32-dim, k=8, 2 iterations", _kmeans)],
+         [500_000], [2_000], sweep=True),
+    # ~3.7 KB binary payloads; the STUB decoder stands in for PIL/ffmpeg
+    Case("multimodal", lambda x: x.rows(
+        F.col("id").alias("doc_id"),
+        F.encode(F.expr("repeat(concat('payload-', CAST(id AS STRING), '-'), 256)"), "UTF-8").alias("media"),
+        F.struct(F.when(F.col("id") % 2 == 0, F.lit("png")).otherwise(F.lit("jpeg")).alias("format"),
+                 F.lit(5000).cast("bigint").alias("declared_len")).alias("meta")), [Op(
+        lambda x: f"multimodal decode plumbing, {x.scale} x ~3.7KB payloads (~{x.n * 37 // 10_000}MB)",
+        _multimodal)], [200_000], [5_000], sweep=True),
+]
+
+
+def main(argv: list[str]) -> int:
+    ids = [c.id for c in CASES]
+    if unknown := sorted(set(argv) - set(ids)):
+        print(f"unknown probe id(s): {' '.join(unknown)}\nvalid ids: {' '.join(ids)}", file=sys.stderr)
+        return 2
+    which = set(argv) or {c.id for c in CASES if c.sweep}
+    # no \r progress fragments on stdout: result lines must survive pipes
+    spark = get_spark("dfwb-scale-probe", extra_conf={"spark.ui.showConsoleProgress": "false"})
     _emit(f"probe log: {_PROBE_LOG} (probes: {sorted(which)})")
-    if "pagerank_xl" in which:
-        probe_pagerank_xl(spark)
-    if "pagerank_deep" in which:
-        probe_pagerank_deep(spark)
-    if "cc_chain_xl" in which:
-        probe_cc_chain_xl(spark)
-    if "minhash_xl" in which:
-        probe_minhash_xl(spark)
-    if "embedding_xl" in which:
-        probe_embedding_xl(spark)
-    if "semdedup_xl" in which:
-        probe_semdedup_xl(spark)
-    if "substring_xl" in which:
-        probe_substring_xl(spark)
-    if "widerow" in which:
-        probe_widerow(spark)
-    if "megadoc" in which:
-        probe_megadoc(spark)
-    if "clustersplit_xl" in which:
-        probe_clustersplit_xl(spark)
-    if "editdist_xl" in which:
-        probe_editdist_xl(spark)
-    if "interval_xl" in which:
-        probe_interval_xl(spark)
-    if "itemsets_xl" in which:
-        probe_itemsets_xl(spark)
-    if "tokenizer_ab" in which:
-        probe_tokenizer_ab(spark)
-    if "triangles_xl" in which:
-        probe_triangles_xl(spark)
-    if "ann_xl" in which:
-        probe_ann_xl(spark)
-    if "asof_xl" in which:
-        probe_asof_xl(spark)
-    if "pagerank_prepared" in which:
-        probe_pagerank_prepared(spark)
-    if "bloom_join" in which:
-        probe_bloom_join(spark)
-    if "ols2" in which:
-        probe_ols2(spark)
-    if "survival" in which:
-        probe_survival(spark)
-    if "changepoint" in which:
-        probe_changepoint(spark)
-    if "rank" in which:
-        probe_rank(spark)
-    if "minhash" in which:
-        probe_minhash(spark)
-    if "embedding" in which:
-        probe_embedding(spark)
-    if "ann" in which:
-        probe_ann(spark)
-    if "triangles" in which:
-        probe_triangles(spark)
-    if "q1_100m" in which:
-        probe_q1_100m(spark)
-    if "ntile" in which:
-        probe_ntile(spark)
-    if "rfm_chain" in which:
-        probe_rfm_chain(spark)
-    if "session" in which:
-        probe_session(spark)
-    if "profile" in which:
-        probe_profile(spark)
-    if "textmap" in which:
-        probe_textmap(spark)
-    if "langid" in which:
-        probe_langid(spark)
-    if "pack" in which:
-        probe_pack(spark)
-    if "join_100m" in which:
-        probe_join_100m(spark)
-    if "durable" in which:
-        probe_durable(spark)
-    if "cc_chain" in which:
-        probe_cc_chain(spark)
-    if "ks" in which:
-        probe_ks(spark)
-    if "rrf" in which:
-        probe_rrf(spark)
-    if "semdedup" in which:
-        probe_semdedup(spark)
-    if "kmeans" in which:
-        probe_kmeans(spark)
-    if "multimodal" in which:
-        probe_multimodal(spark)
+    for case in CASES:
+        if case.id in which:
+            run_case(spark, case)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
