@@ -511,25 +511,8 @@ class SQLEngine:
     #: table (VERDICT r11 #5): the whole-object GET matches the
     #: reference's store but serializes through ONE host — a multi-GB
     #: URL must fail loudly, not silently stage. Override per engine
-    #: (``eng.http_staging_cap_bytes = …``) or via the
-    #: SPARK_GRAFT_HTTP_CAP_BYTES env var; 0/None disables the cap.
-    HTTP_STAGING_CAP_BYTES_DEFAULT = 256 * 1024 * 1024
-
-    @property
-    def http_staging_cap_bytes(self) -> int | None:
-        import os
-
-        override = getattr(self, "_http_cap_override", None)
-        if override is not None:
-            return override or None
-        env = os.environ.get("SPARK_GRAFT_HTTP_CAP_BYTES")
-        if env is not None:
-            return int(env) or None
-        return self.HTTP_STAGING_CAP_BYTES_DEFAULT
-
-    @http_staging_cap_bytes.setter
-    def http_staging_cap_bytes(self, v: int | None) -> None:
-        self._http_cap_override = v
+    #: (``eng.http_staging_cap_bytes = …``); 0/None disables the cap.
+    http_staging_cap_bytes: int | None = 256 * 1024 * 1024
 
     def _stage_http_object(self, url: str) -> str:
         """Download an http(s) object to a local staging file (keyed by
@@ -566,8 +549,7 @@ class SQLEngine:
                         raise ExecutionError(
                             f"HTTP object too large to stage through the driver: "
                             f"{url} declares {int(clen)} bytes, cap is {cap} "
-                            f"(raise eng.http_staging_cap_bytes or "
-                            f"SPARK_GRAFT_HTTP_CAP_BYTES to override)"
+                            f"(raise eng.http_staging_cap_bytes to override)"
                         )
                 total = 0
                 with urllib.request.urlopen(url) as resp, open(  # noqa: S310
@@ -579,8 +561,7 @@ class SQLEngine:
                             raise ExecutionError(
                                 f"HTTP object exceeded the staging cap mid-download: "
                                 f"{url} passed {cap} bytes (raise "
-                                f"eng.http_staging_cap_bytes or "
-                                f"SPARK_GRAFT_HTTP_CAP_BYTES to override)"
+                                f"eng.http_staging_cap_bytes to override)"
                             )
                         out.write(chunk)
                 os.replace(dest + ".part", dest)

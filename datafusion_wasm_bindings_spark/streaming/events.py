@@ -53,11 +53,11 @@ def _sized_stream_session(
     the session's configured width: at production micro-batches (GBs
     per trigger) the clamp lands on the configured width and this is a
     no-op — not a local[32] constant. ``target`` defaults to 1 MiB of
-    source per state partition (SPARK_GRAFT_STREAM_STATE_TARGET_BYTES
-    overrides); operators whose state partitions carry per-group PYTHON
-    compute (applyInPandasWithState) pass a smaller ``target_bytes`` —
-    the Python boundary is an order of magnitude slower per byte
-    (guide §4), so those partitions amortize at far fewer bytes
+    source per state partition; operators whose state partitions carry
+    per-group PYTHON compute (applyInPandasWithState) pass a smaller
+    ``target_bytes`` — the Python boundary is an order of magnitude
+    slower per byte (guide §4), so those partitions amortize at far
+    fewer bytes
     (measured on q_stream_stateful_totals: width 2 = 6.2 s,
     width 8 = 4.1 s vs the old fixed-4 pin's 4.8 s, same box window).
 
@@ -67,11 +67,9 @@ def _sized_stream_session(
     conf flip would leak into concurrently-built plans.
     """
     import math
-    import os
 
     cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE_TARGET_BYTES")
-    target = int(env) if env else (target_bytes if target_bytes else 1 << 20)
+    target = target_bytes if target_bytes else 1 << 20
     width = max(2, math.ceil(max(src_bytes, 1) / max(target, 1)))
     if width >= cur:
         return spark

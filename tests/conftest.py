@@ -12,13 +12,12 @@ from collections import Counter
 from datetime import date, datetime
 from decimal import Decimal
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datafusion_wasm_bindings_spark.session import get_spark
-from datafusion_wasm_bindings_spark.sources.catalog import TABLE_NAMES
+from tools_driver_sim import oracle_connection
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -36,13 +35,7 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(SF_DIR, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-            )
+    con = oracle_connection(SF_DIR)
     yield con
     con.close()
 

@@ -14,10 +14,10 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
-from tools_adversarial_replay import build_mode_dir, simulate_relaxed
+from tools_adversarial_replay import build_mode_dir
+from tools_driver_sim import canon, oracle_connection, simulate
 
 # one id per fixed divergence class (see the r5 NULL-hardening commits)
 SENTINELS = [
@@ -140,15 +140,7 @@ def adv_dir():
 
 @pytest.fixture(scope="module")
 def adv_duck(adv_dir):
-    from datafusion_wasm_bindings_spark.sources.catalog import TABLE_NAMES
-
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(adv_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-            )
+    con = oracle_connection(adv_dir)
     yield con
     con.close()
 
@@ -160,7 +152,7 @@ def test_sentinel_queries_survive_null_injection(spark, adv_dir, adv_duck):
     _ensure_text_fixtures(adv_dir)
     registry = load_all()
     todo = [(n, registry[n]) for n in SENTINELS]
-    results = simulate_relaxed(todo, spark, adv_duck, adv_dir)
+    results = simulate(todo, spark, adv_duck, adv_dir, relaxed=True)
     bad = {k: v for k, v in results.items() if not v["ok"]}
     assert not bad, f"adversarial NULL replay regressions: {bad}"
 
@@ -168,21 +160,14 @@ def test_sentinel_queries_survive_null_injection(spark, adv_dir, adv_duck):
 def _mode_sentinel_check(spark, mode: str, ids: list[str]) -> None:
     from datafusion_wasm_bindings_spark.queries import load_all
     from datafusion_wasm_bindings_spark.queries.sources_q import _ensure_text_fixtures
-    from datafusion_wasm_bindings_spark.sources.catalog import TABLE_NAMES
 
     mode_dir = build_mode_dir(mode)
     _ensure_text_fixtures(mode_dir)
-    con = duckdb.connect()
+    con = oracle_connection(mode_dir)
     try:
-        for name in TABLE_NAMES:
-            path = os.path.join(mode_dir, f"{name}.parquet")
-            if os.path.exists(path):
-                con.execute(
-                    f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-                )
         registry = load_all()
         todo = [(n, registry[n]) for n in ids]
-        results = simulate_relaxed(todo, spark, con, mode_dir)
+        results = simulate(todo, spark, con, mode_dir, relaxed=True)
         bad = {k: v for k, v in results.items() if not v["ok"]}
         assert not bad, f"adversarial {mode} replay regressions: {bad}"
     finally:
@@ -230,16 +215,17 @@ def test_stability_tool_honors_mode_scoped_waivers():
     that deterministically aborts on that dir's data errors identically
     at every partitioning — documented waiver, not instability); a
     benign fixture source inherits nothing."""
-    from tools_stability import _mode_waiver
+    from tools_stability import resolve_waiver
 
-    assert _mode_waiver(
-        "/tmp/dfwb_adversarial/skewex.2a8f1ec1", "q_scan_partitioned"
+    abort = {"stable": False, "err": "SparkException: TASK_WRITE_FAILED"}
+    assert resolve_waiver(
+        "/tmp/dfwb_adversarial/skewex.2a8f1ec1", "q_scan_partitioned", abort
     ), "skewex dir must resolve the standing dirname waiver"
     assert (
-        _mode_waiver("/tmp/dfwb_adversarial/skewex.2a8f1ec1", "q_join_inner")
+        resolve_waiver("/tmp/dfwb_adversarial/skewex.2a8f1ec1", "q_join_inner", abort)
         is None
     )
-    assert _mode_waiver("/root/testdata/sf0.1", "q_scan_partitioned") is None
+    assert resolve_waiver("/root/testdata/sf0.1", "q_scan_partitioned", abort) is None
 
 
 def test_stability_waiver_covers_aborts_not_variant_output():
@@ -263,13 +249,31 @@ def test_stability_waiver_covers_aborts_not_variant_output():
         del EXCLUDED["q_totally_unscoped"]
 
 
+def test_stability_default_source_is_the_current_skewex_dir(monkeypatch, tmp_path):
+    """With SPARK_GRAFT_STAB_SRC unset, the sweep reads the skewex dir of
+    the CURRENT replay config, not whichever cached skewex dir's
+    fingerprint sorts last (a dir left by a campaign against another
+    SPARK_GRAFT_ADV_SRC, say)."""
+    import tools_adversarial_replay as adv
+    from tools_stability import source
+
+    monkeypatch.delenv("SPARK_GRAFT_STAB_SRC", raising=False)
+    monkeypatch.setattr(adv, "ROOT", str(tmp_path))
+    (tmp_path / "skewex.ffffffff").mkdir()  # another config, sorts last
+    src = source()
+    assert src == adv.build_mode_dir("skewex")
+    assert os.path.dirname(src) == str(tmp_path)
+    with open(os.path.join(src, ".complete")) as f:
+        assert f.read() == adv._config_fingerprint(adv.SRC_DIR)
+    monkeypatch.setenv("SPARK_GRAFT_STAB_SRC", "/root/testdata/sf0.01")
+    assert source() == "/root/testdata/sf0.01"
+
+
 def test_sentinel_queries_are_partition_invariant(spark):
     """Run each stability sentinel at shuffle.partitions 32 and 7 on
     the composed-hostility mutation dir and demand identical
     canonicalized output (tools_stability.py's check, pinned on the
     ids where order-dependence historically lived)."""
-    from tools_stability import canon
-
     from datafusion_wasm_bindings_spark.queries import load_all
     from datafusion_wasm_bindings_spark.queries.sources_q import _ensure_text_fixtures
 
@@ -282,9 +286,9 @@ def test_sentinel_queries_are_partition_invariant(spark):
         spec = registry[name]
         try:
             spark.conf.set("spark.sql.shuffle.partitions", "32")
-            a = canon(spec.spark_fn(spark, mode_dir).toPandas())
+            a = canon(spec.spark_fn(spark, mode_dir).toPandas(), relaxed=True)
             spark.conf.set("spark.sql.shuffle.partitions", "7")
-            b = canon(spec.spark_fn(spark, mode_dir).toPandas())
+            b = canon(spec.spark_fn(spark, mode_dir).toPandas(), relaxed=True)
         finally:
             # Restore the SESSION's value (conftest builds it at 8), not a
             # hardcoded "32" — ADVICE r11: the leak made every later test's

@@ -26,8 +26,11 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+from datetime import date
 
+import numpy as np
 import pandas as pd
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -55,6 +58,108 @@ def test_sim_flags_value_drift():
     b = pd.DataFrame({"k": [1, 2], "v": [0.5, 0.250000001]})
     assert not compare_frames(a, b)["ok"]
     assert compare_frames(a, a.copy())["ok"]
+
+
+# The relaxed comparison (the hostile replay's): the same SQL NULL
+# reaches pandas as None, NaN, NaT or <NA> depending on the engine and
+# the column type; relaxed mode counts all four as one NULL.
+def _relaxed(spark_pd, duck_pd) -> dict:
+    return compare_frames(spark_pd, duck_pd, relaxed=True)
+
+
+@pytest.mark.parametrize("null", [np.nan, pd.NA], ids=["nan", "pd_na"])
+def test_relaxed_unifies_null_spellings(null):
+    # a NULL in an object column: None from Spark, NaN (or pd.NA) from DuckDB
+    spark_pd = pd.DataFrame({"k": [1, 2], "v": pd.Series([None, "x"], dtype=object)})
+    duck_pd = pd.DataFrame({"k": [1, 2], "v": pd.Series([null, "x"], dtype=object)})
+    assert _relaxed(spark_pd, duck_pd)["ok"]
+    assert not compare_frames(spark_pd, duck_pd)["ok"]
+
+
+def test_relaxed_unifies_nat_and_int_na():
+    # a NULL DATE is None from Spark (object of date) and NaT from
+    # DuckDB (datetime64); a NULL in a nullable integer column prints <NA>
+    spark_pd = pd.DataFrame(
+        {"d": pd.Series([date(2020, 1, 1), None], dtype=object),
+         "i": pd.Series([1, None], dtype=object)}
+    )
+    duck_pd = pd.DataFrame(
+        {"d": pd.Series([pd.Timestamp("2020-01-01"), pd.NaT]),
+         "i": pd.Series([1, None], dtype="Int64")}
+    )
+    rec = _relaxed(spark_pd, duck_pd)
+    assert rec["values_match"], rec
+    assert not compare_frames(spark_pd, duck_pd)["values_match"]
+    # same NaT pair with matching dtype families: the whole record passes
+    assert _relaxed(spark_pd[["d"]], duck_pd[["d"]])["ok"]
+    assert not compare_frames(spark_pd[["d"]], duck_pd[["d"]])["ok"]
+
+
+def test_relaxed_keeps_float_nan_distinct_from_null():
+    # float on both sides: NaN is a value, and NaN matches NaN
+    a = pd.DataFrame({"f": [np.nan, 1.0]})
+    assert _relaxed(a, a.copy())["ok"]
+    assert compare_frames(a, a.copy())["ok"]
+    # a float NaN against a NULL spelled None is a different value
+    b = pd.DataFrame({"f": pd.Series([None, 1.0], dtype=object)})
+    assert not _relaxed(a, b)["values_match"]
+
+
+def test_relaxed_unifies_nulls_before_sorting_rows():
+    # 'None' < 'Oslo' < 'nan' and '2020-…' < 'NaT' < 'None': with the
+    # spellings unified only after the row sort, the two frames would
+    # sort differently and every later row would misalign
+    spark_pd = pd.DataFrame(
+        {"city": pd.Series([None, "Oslo", "Bergen"], dtype=object),
+         "d": pd.Series([None, date(2020, 1, 2), date(2020, 1, 1)], dtype=object),
+         "k": [1, 2, 3]}
+    )
+    duck_pd = pd.DataFrame(
+        {"city": pd.Series(["Oslo", np.nan, "Bergen"], dtype=object),
+         "d": pd.Series([pd.Timestamp("2020-01-02"), pd.NaT, pd.Timestamp("2020-01-01")]),
+         "k": [2, 1, 3]}
+    )
+    assert _relaxed(spark_pd, duck_pd)["ok"]
+    assert not compare_frames(spark_pd, duck_pd)["ok"]
+
+
+def test_relaxed_skips_family_check_on_two_empty_frames():
+    # a zero-row Spark DATE column is plain object: its family cannot be
+    # sampled, so relaxed mode does not compare families on empty frames
+    spark_pd = pd.DataFrame({"d": pd.Series([], dtype=object)})
+    duck_pd = pd.DataFrame({"d": pd.Series([], dtype="datetime64[ns]")})
+    assert _relaxed(spark_pd, duck_pd)["ok"]
+    assert not compare_frames(spark_pd, duck_pd)["ok"]
+    # one empty side is still a row-count failure
+    assert not _relaxed(spark_pd, pd.DataFrame({"d": [pd.Timestamp(0)]}))["ok"]
+
+
+@pytest.mark.parametrize(
+    "argv, kind, bad, valid",
+    [
+        (["tools_driver_sim.py", "q_no_such_id"], "query ids", "q_no_such_id", "q_join_inner"),
+        # a count takes no ids after it: the args are an id list
+        (["tools_driver_sim.py", "50", "q_join_inner"], "query ids", "50", "q_join_inner"),
+        (["tools_adversarial_replay.py", "nulls", "q_no_such_id"], "query ids", "q_no_such_id",
+         "q_join_inner"),
+        (["tools_adversarial_replay.py", "nuls"], "modes", "nuls", "skewex"),
+        (["tools_stability.py", "q_no_such_id"], "query ids", "q_no_such_id", "q_join_inner"),
+        (["tools_triage.py", "q_no_such_id"], "query ids", "q_no_such_id", "q_join_inner"),
+    ],
+    ids=["driver_sim", "driver_sim_count_and_id", "replay_id", "replay_mode", "stability",
+         "triage"],
+)
+def test_gate_tools_reject_unknown_names(argv, kind, bad, valid):
+    # JAVA_HOME and the stability source point nowhere: a Spark session
+    # or a fixture write started before the check fails with another code
+    env = dict(os.environ, JAVA_HOME="/nonexistent", SPARK_GRAFT_STAB_SRC="/nonexistent")
+    proc = subprocess.run(
+        [sys.executable, *argv], cwd=REPO, env=env, capture_output=True, text=True, timeout=120
+    )
+    assert proc.returncode == 2, proc.stderr[-2000:]
+    unknown, listed = proc.stderr.split(f"valid {kind}:", 1)
+    assert f"unknown {kind}: {bad}" in unknown
+    assert valid in listed.split()
 
 
 def _changed_query_modules() -> set[str]:

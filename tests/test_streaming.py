@@ -280,18 +280,6 @@ def test_sized_stream_session_width_clamp(spark):
         == "4"
     )
 
-    # env override beats both the default and the explicit target
-    os.environ["SPARK_GRAFT_STREAM_STATE_TARGET_BYTES"] = str(1 << 30)
-    try:
-        assert (
-            _sized_stream_session(spark, 5 << 20, target_bytes=64 * 1024).conf.get(
-                "spark.sql.shuffle.partitions"
-            )
-            == "2"
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_STREAM_STATE_TARGET_BYTES"]
-
     # the clone carries the runtime-set confs the streaming scans need
     for key in (
         "spark.sql.files.maxPartitionBytes",

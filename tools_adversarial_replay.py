@@ -78,24 +78,25 @@ campaign's reads, r9):
 
 Usage::
 
-    python tools_adversarial_replay.py            # both modes, all ids
+    python tools_adversarial_replay.py            # all six modes, all ids
     python tools_adversarial_replay.py nulls      # one mode
     python tools_adversarial_replay.py nulls q_a q_b   # subset of ids
 
 Exit 0 iff every query in every requested mode is ok or in the
-documented-exclusion list (`EXCLUDED`, each entry carries its reason).
+documented-exclusion list (`EXCLUDED`, each entry carries its reason);
+an unknown mode or query id exits 2 and lists the valid names.
 Verdicts land in /tmp/adversarial_replay_<mode>.json.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import zlib
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -106,8 +107,6 @@ NULL_RATE = 0.08
 DUPE_RATE = 0.05
 EXTREME_RATE = 0.04
 SEED = 0x5AD1
-
-MODES = ("nulls", "dupes", "extremes", "empty", "skew", "skewex")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -155,9 +154,9 @@ SKEW_COLS: dict[str, tuple[str, ...]] = {
 # Queries whose adversarial verdict is EXPECTED to differ, each with the
 # reason; anything listed here is reported but not counted as a failure.
 # Keys are MODE-SCOPED ("extremes:q_x") — a waiver earned under one
-# hostile axis must not silently cover another — or, rarely, global
-# ("q_x"). Keep this list SHORT and each entry justified — it is the
-# tool's honesty ledger, reviewed like code.
+# hostile axis must not silently cover another. Keep this list SHORT
+# and each entry justified — it is the tool's honesty ledger, reviewed
+# like code.
 EXCLUDED: dict[str, str] = {
     # Watermark semantics BY DESIGN, not a bug: the injected far-future
     # instant (2200-01-01) advances the stream's event-time watermark,
@@ -239,6 +238,15 @@ EXCLUDED: dict[str, str] = {
         "same grouping-sets-over-empty engine divergence as q_agg_cube"
     ),
 }
+
+
+def waiver(mode: str, qid: str) -> str | None:
+    """The documented reason ``qid`` may fail under ``mode``, or None.
+    Mode-scoped ONLY (ADVICE r11): an unscoped fallback would let one
+    hostile axis's waiver silently cover every other axis — and even
+    benign sources whose dirname happens to parse to a matching mode
+    (tools_stability reads the mode off its source dir's name)."""
+    return EXCLUDED.get(f"{mode}:{qid}")
 
 
 def _null_out(col: pa.ChunkedArray, mask: np.ndarray) -> pa.Array:
@@ -361,6 +369,78 @@ def _stable(s: str) -> int:
     return zlib.crc32(s.encode()) & 0xFFFF
 
 
+def _mask(salt: int, t: str, i: int, n: int, rate: float) -> np.ndarray:
+    return np.random.default_rng([SEED, salt, _stable(t), i]).random(n) < rate
+
+
+def _per_column(inject):
+    """Lift ``inject(col, t, i, name, mode)`` to a step over every column
+    of table ``t``. Each column's mask has its own seed, so one column
+    step over the whole table, then the next, writes the same bytes as
+    interleaving the steps column by column."""
+
+    def step(tab: pa.Table, t: str, mode: str) -> pa.Table:
+        cols = [inject(tab.column(i), t, i, name, mode) for i, name in enumerate(tab.column_names)]
+        return pa.table(cols, schema=tab.schema)
+
+    return step
+
+
+def _empty(tab: pa.Table, t: str, mode: str) -> pa.Table:
+    # schema-preserving ZERO rows: the filter-pruned-partition /
+    # empty-ingest-batch shape every 100 TB pipeline hits — no
+    # injection, the emptiness IS the mutation
+    return tab.slice(0, 0)
+
+
+@_per_column
+def _extremes(col, t, i, name, mode):
+    if name == KEY_COL[t]:  # pk values stay (module docstring, extremes)
+        return col
+    return _inject_extremes(col, _mask(0xE7E, t, i, len(col), EXTREME_RATE))
+
+
+@_per_column
+def _skew(col, t, i, name, mode):
+    if name not in SKEW_COLS.get(t, ()):
+        return col
+    return _inject_skew(col, _mask(0x5E3, t, i, len(col), SKEW_RATE))
+
+
+@_per_column
+def _nulls(col, t, i, name, mode):
+    # seeded per mode: each mode draws its own null pattern
+    return _null_out(col, _mask(_stable(mode), t, i, len(col), NULL_RATE))
+
+
+def _dupes(tab: pa.Table, t: str, mode: str) -> pa.Table:
+    """Append a RE-KEYED copy of ~DUPE_RATE of the rows: same content,
+    key column offset by KEY_OFFSET (module docstring, dupes)."""
+    rng = np.random.default_rng([SEED, 0xD0BE, _stable(t)])
+    picks = np.flatnonzero(rng.random(tab.num_rows) < DUPE_RATE)
+    if not len(picks):
+        return tab
+    copies = tab.take(pa.array(picks))
+    ki = copies.column_names.index(KEY_COL[t])
+    col = copies.column(ki).combine_chunks()
+    rekeyed = pc.add(col, pa.scalar(KEY_OFFSET, type=col.type))
+    return pa.concat_tables([tab, copies.set_column(ki, copies.schema.field(ki), rekeyed)])
+
+
+# Each mode's steps, applied in order to every table. The order is part
+# of the data: skewex's skew overwrites extremes' values in the columns
+# both touch, nulls land on top, and dupes copies rows after the nulls.
+MODE_STEPS = {
+    "nulls": (_nulls,),
+    "dupes": (_nulls, _dupes),
+    "extremes": (_extremes, _nulls),
+    "empty": (_empty,),
+    "skew": (_skew, _nulls),
+    "skewex": (_extremes, _skew, _nulls),
+}
+MODES = tuple(MODE_STEPS)
+
+
 def _config_fingerprint(src: str) -> str:
     """Everything that changes the generated mutations — a stale cached
     dir from an older (SEED, rates, tables, SOURCE dir) config must
@@ -378,7 +458,9 @@ def _config_fingerprint(src: str) -> str:
     )
 
 
-def build_mode_dir(mode: str, root: str = ROOT, src_dir: str | None = None) -> str:
+def build_mode_dir(mode: str, root: str | None = None, src_dir: str | None = None) -> str:
+    steps = MODE_STEPS[mode]
+    root = root or ROOT
     src = src_dir or SRC_DIR
     want = _config_fingerprint(src)
     # The dir is keyed by (mode, config fingerprint), NOT by mode alone
@@ -412,44 +494,9 @@ def build_mode_dir(mode: str, root: str = ROOT, src_dir: str | None = None) -> s
     os.makedirs(tmp_dir)
     for t in TABLES:
         tab = pq.read_table(os.path.join(src, f"{t}.parquet"))
-        if mode == "empty":
-            # schema-preserving ZERO rows: the filter-pruned-partition /
-            # empty-ingest-batch shape every 100 TB pipeline hits — no
-            # injection, the emptiness IS the mutation
-            pq.write_table(tab.slice(0, 0), os.path.join(tmp_dir, f"{t}.parquet"))
-            continue
-        n = tab.num_rows
-        cols = []
-        for i, name in enumerate(tab.column_names):
-            col = tab.column(i)
-            if mode in ("extremes", "skewex") and name != KEY_COL[t]:
-                erng = np.random.default_rng(
-                    [SEED, 0xE7E, _stable(t), i]
-                )
-                col = _inject_extremes(col, erng.random(n) < EXTREME_RATE)
-            if mode in ("skew", "skewex") and name in SKEW_COLS.get(t, ()):
-                srng = np.random.default_rng(
-                    [SEED, 0x5E3, _stable(t), i]
-                )
-                col = _inject_skew(col, srng.random(n) < SKEW_RATE)
-            rng = np.random.default_rng([SEED, _stable(mode), _stable(t), i])
-            mask = rng.random(n) < NULL_RATE
-            cols.append(_null_out(col, mask))
-        mut = pa.table(cols, schema=tab.schema)
-        if mode == "dupes":
-            rng = np.random.default_rng([SEED, 0xD0BE, _stable(t)])
-            picks = np.flatnonzero(rng.random(n) < DUPE_RATE)
-            if len(picks):
-                copies = mut.take(pa.array(picks))
-                kc = KEY_COL[t]
-                ki = copies.column_names.index(kc)
-                col = copies.column(ki).combine_chunks()
-                import pyarrow.compute as pc
-
-                rekeyed = pc.add(col, pa.scalar(KEY_OFFSET, type=col.type))
-                copies = copies.set_column(ki, copies.schema.field(ki), rekeyed)
-                mut = pa.concat_tables([mut, copies])
-        pq.write_table(mut, os.path.join(tmp_dir, f"{t}.parquet"))
+        for step in steps:
+            tab = step(tab, t, mode)
+        pq.write_table(tab, os.path.join(tmp_dir, f"{t}.parquet"))
     open(os.path.join(tmp_dir, ".complete"), "w").write(want)
     # Install atomically. The slot is fingerprint-keyed, so ANY dir
     # already at out_dir is either (a) another builder's completed
@@ -494,144 +541,44 @@ def build_mode_dir(mode: str, root: str = ROOT, src_dir: str | None = None) -> s
     return out_dir
 
 
-_NULL_TOKENS = {"None", "NaT", "<NA>"}
-
-
-def _tokens(pdf):
-    """Stringify a frame with every NULL SPELLING unified to 'NULL'.
-
-    pandas materializes the same SQL NULL as None (Spark object cols),
-    NaN (DuckDB nullable bool/int cols), or NaT (datetime cols) — all
-    semantically one NULL, and the two engines routinely pick different
-    spellings for the same cell (a NULL boolean is None from Spark, NaN
-    from DuckDB; a NULL date is None from Spark, NaT from DuckDB). The
-    strict driver comparison never meets this (fixture data surfaces no
-    NULL bool/date cells); the adversarial replay does constantly, and
-    flagging it would bury real divergences in representation noise.
-    Float-column 'nan' is kept DISTINCT from NULL only where the dtype
-    is float on BOTH sides (there NaN-vs-NaN already compares equal);
-    in object columns a true NaN value is unified too — a documented,
-    deliberate loss of resolution."""
-    tok = pdf.copy()
-    for c in tok.columns:
-        col = tok[c]
-        if col.dtype == object:
-            tok[c] = col.where(col.notna(), None)
-    s = tok.astype(str)
-    return s.where(~s.isin(_NULL_TOKENS), "NULL")
-
-
-def compare_frames_relaxed(spark_pd, duck_pd) -> dict:
-    """tools_driver_sim.compare_frames with null-spelling unification
-    applied BEFORE canonical row sorting (a 'None' vs 'NaT' cell would
-    otherwise sort the two frames differently and misalign every
-    subsequent row)."""
-    from tools_driver_sim import _family
-
-    rec: dict = {}
-    s_tok = _tokens(spark_pd)[sorted(spark_pd.columns, key=str.lower)]
-    d_tok = _tokens(duck_pd)[sorted(duck_pd.columns, key=str.lower)]
-    s_src = spark_pd[sorted(spark_pd.columns, key=str.lower)]
-    d_src = duck_pd[sorted(duck_pd.columns, key=str.lower)]
-    rec["rows_match"] = len(s_tok) == len(d_tok)
-    rec["cols_match"] = [c.lower() for c in s_tok.columns] == [
-        c.lower() for c in d_tok.columns
-    ]
-    # on a ZERO-ROW result the pandas dtype of an object column is
-    # unknowable (Spark DATE arrives as object-of-date, provable only by
-    # sampling values) — the family check is meaningless there, and the
-    # real driver never compares empty frames (fixture data is
-    # non-empty), so skip it for empty results (empty-mode replays)
-    fam_mismatch = [] if len(s_src) == 0 and len(d_src) == 0 else [
-        (sc, str(s_src[sc].dtype), str(d_src[dc].dtype))
-        for sc, dc in zip(s_src.columns, d_src.columns)
-        if _family(str(s_src[sc].dtype), s_src[sc])
-        != _family(str(d_src[dc].dtype), d_src[dc])
-    ]
-    rec["dtype_family_match"] = not fam_mismatch
-    if fam_mismatch:
-        rec["dtype_mismatch"] = fam_mismatch
-    eq = False
-    if rec["rows_match"] and rec["cols_match"]:
-        s_key = s_tok.apply(tuple, axis=1)
-        d_key = d_tok.apply(tuple, axis=1)
-        s_sorted = s_tok.iloc[s_key.argsort(kind="mergesort").to_numpy()]
-        d_sorted = d_tok.iloc[d_key.argsort(kind="mergesort").to_numpy()]
-        eq = s_sorted.reset_index(drop=True).equals(
-            d_sorted.set_axis(list(s_sorted.columns), axis=1).reset_index(drop=True)
-        )
-    rec["values_match"] = bool(eq)
-    rec["ok"] = all(
-        (rec["rows_match"], rec["cols_match"], rec["dtype_family_match"],
-         rec["values_match"])
-    )
-    return rec
-
-
-def simulate_relaxed(todo, spark, con, sf_dir: str) -> dict[str, dict]:
-    from datafusion_wasm_bindings_spark.queries import resolve_oracle
-
-    results: dict[str, dict] = {}
-    for name, spec in todo:
-        try:
-            rec = compare_frames_relaxed(
-                spec.spark_fn(spark, sf_dir).toPandas(),
-                con.sql(resolve_oracle(spec.oracle, sf_dir)).df(),
-            )
-        except Exception as e:  # noqa: BLE001 — report, don't abort the sweep
-            rec = {"ok": False, "err": f"{type(e).__name__}: {e}"[:300]}
-        results[name] = rec
-    return results
-
-
-def replay(mode: str, only: list[str] | None = None) -> int:
-    import duckdb
-    from datafusion_wasm_bindings_spark.queries import load_all
+def replay(mode: str, todo: list) -> int:
+    """Run the relaxed oracle check over ``todo`` — (id, QuerySpec)
+    pairs — on ``mode``'s mutation dir; return the FAIL count."""
     from datafusion_wasm_bindings_spark.queries.sources_q import _ensure_text_fixtures
     from datafusion_wasm_bindings_spark.session import get_spark
-    from datafusion_wasm_bindings_spark.sources.catalog import TABLE_NAMES
+    from tools_driver_sim import oracle_connection, report, simulate
 
     sf_dir = build_mode_dir(mode)
     _ensure_text_fixtures(sf_dir)
     spark = get_spark("dfwb-adversarial")
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
-
-    registry = load_all()
-    todo = [(k, v) for k, v in registry.items() if only is None or k in only]
-    results = simulate_relaxed(todo, spark, con, sf_dir)
-    con.close()
-
-    json.dump(results, open(f"/tmp/adversarial_replay_{mode}.json", "w"),
-              indent=1, default=str)
-    def _waiver(k: str) -> str | None:
-        # waivers are mode-scoped ("extremes:q_x") or, rarely, global ("q_x")
-        return EXCLUDED.get(f"{mode}:{k}", EXCLUDED.get(k))
-
-    bad = {k: v for k, v in results.items() if not v["ok"] and _waiver(k) is None}
-    waived = {k: v for k, v in results.items() if not v["ok"] and _waiver(k) is not None}
-    print(f"[{mode}] {len(results) - len(bad) - len(waived)}/{len(results)} ok, "
-          f"{len(waived)} waived, {len(bad)} FAIL  ({sf_dir})")
-    for k, v in sorted(bad.items()):
-        print("  FAIL", k, {kk: vv for kk, vv in v.items() if kk != "ok"})
-    for k in sorted(waived):
-        print("  waived", k, "--", _waiver(k))
-    return len(bad)
+    con = oracle_connection(sf_dir)
+    try:
+        results = simulate(todo, spark, con, sf_dir, relaxed=True)
+    finally:
+        con.close()
+    return report(
+        results,
+        f"/tmp/adversarial_replay_{mode}.json",
+        lambda ok, n, w, b: f"[{mode}] {ok}/{n} ok, {w} waived, {b} FAIL  ({sf_dir})",
+        waiver=lambda k, rec: waiver(mode, k),
+    )
 
 
 def main() -> None:
+    from datafusion_wasm_bindings_spark.queries import load_all
+    from tools_driver_sim import exit_unknown, select_ids
+
+    # argv: [mode] [q_id ...]; a first name that is neither a mode nor
+    # a query id is a mistyped mode, not an id list
+    registry = load_all()
     args = sys.argv[1:]
-    modes = list(MODES)
-    only: list[str] | None = None
+    modes = MODES
     if args and args[0] in MODES:
-        modes = [args[0]]
-        args = args[1:]
-    if args:
-        only = args
-    n_bad = sum(replay(m, only) for m in modes)
+        modes, args = (args[0],), args[1:]
+    elif args and args[0] not in registry:
+        exit_unknown("modes", args[:1], MODES)
+    todo = select_ids(registry, args)
+    n_bad = sum(replay(m, todo) for m in modes)
     sys.exit(1 if n_bad else 0)
 
 

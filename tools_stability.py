@@ -28,21 +28,22 @@ not values).
 Usage:
   python tools_stability.py [q_id ...]        # default: whole registry
   SPARK_GRAFT_STAB_SRC=<dir> python tools_stability.py
-      # default source: the most hostile cached mutation dir if
-      # present, else /root/testdata/sf0.001
+      # default source: the skewex mutation dir of the current replay
+      # config (tools_adversarial_replay.build_mode_dir("skewex"))
 
-Writes /tmp/stability_report.json and prints one verdict line.
+Writes /tmp/stability_report.json and prints one verdict line; an
+unknown query id exits 2 and lists the valid ids.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from tools_adversarial_replay import _tokens  # null-unified stringify
+from tools_adversarial_replay import build_mode_dir, waiver
+from tools_driver_sim import canon, report, select_ids
 
 DEFAULTS = {
     "spark.sql.shuffle.partitions": "32",
@@ -75,22 +76,6 @@ PERTURBATIONS = [
 APPROX_ALLOW: dict[str, str] = {}
 
 
-def _mode_waiver(src: str, name: str) -> str | None:
-    """When the source is a cached hostile mutation dir, honor the
-    replay campaign's mode-scoped waivers: a query that deterministically
-    ABORTS on that dir's hostile data (e.g. the 255-byte dirname limit)
-    errors identically at every partitioning — that is the documented
-    waiver class, not instability."""
-    from tools_adversarial_replay import EXCLUDED
-
-    base = os.path.basename(src.rstrip("/"))
-    mode = base.split(".", 1)[0]
-    # Mode-scoped ONLY (ADVICE r11): an unscoped fallback would let one
-    # hostile axis's waiver silently cover every other axis — and even
-    # benign sources whose dirname happens to parse to a matching mode.
-    return EXCLUDED.get(f"{mode}:{name}")
-
-
 def resolve_waiver(src: str, name: str, rec: dict) -> str | None:
     """Full waiver resolution for one unstable record.
 
@@ -101,13 +86,49 @@ def resolve_waiver(src: str, name: str, rec: dict) -> str | None:
     silently excused (ADVICE r11)."""
     if "err" not in rec:
         return APPROX_ALLOW.get(name)
-    return _mode_waiver(src, name)
+    # a cached hostile mutation dir is named <mode>.<fingerprint>: there
+    # a query that deterministically ABORTS on the dir's hostile data
+    # (e.g. the 255-byte dirname limit) errors identically at every
+    # partitioning — the replay's waiver class, not instability
+    mode = os.path.basename(src.rstrip("/")).split(".", 1)[0]
+    return waiver(mode, name)
 
 
-def canon(pdf):
-    s = _tokens(pdf)[sorted(pdf.columns, key=str.lower)]
-    key = s.apply(tuple, axis=1)
-    return s.iloc[key.argsort(kind="mergesort").to_numpy()].reset_index(drop=True)
+def source() -> str:
+    """The dir the sweep reads: SPARK_GRAFT_STAB_SRC, else the skewex
+    mutation dir of the CURRENT replay config (the most hostile data —
+    ties are real there). Cached dirs of other configs (another
+    SPARK_GRAFT_ADV_SRC, older seeds) are never picked up."""
+    return os.environ.get("SPARK_GRAFT_STAB_SRC") or build_mode_dir("skewex")
+
+
+def _check(spark, spec, src: str) -> dict:
+    """Run one query at the session defaults, then once per
+    PERTURBATIONS axis, and compare the canonicalized outputs."""
+    try:
+        for k, v in DEFAULTS.items():
+            spark.conf.set(k, v)
+        base = canon(spec.spark_fn(spark, src).toPandas(), relaxed=True)
+        variant_axes = []
+        for label, confs in PERTURBATIONS:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            try:
+                perturbed = canon(spec.spark_fn(spark, src).toPandas(), relaxed=True)
+            finally:
+                for k in confs:
+                    spark.conf.set(k, DEFAULTS[k])
+            if not base.equals(perturbed):
+                variant_axes.append(label)
+        rec: dict = {"stable": not variant_axes}
+        if variant_axes:
+            rec["detail"] = f"variant under: {variant_axes}"
+        return rec
+    except Exception as e:  # noqa: BLE001 — report, don't abort the sweep
+        return {"stable": False, "err": f"{type(e).__name__}: {e}"[:300]}
+    finally:
+        for k, v in DEFAULTS.items():
+            spark.conf.set(k, v)
 
 
 def main() -> None:
@@ -115,76 +136,22 @@ def main() -> None:
     from datafusion_wasm_bindings_spark.queries.sources_q import _ensure_text_fixtures
     from datafusion_wasm_bindings_spark.session import get_spark
 
-    src = os.environ.get("SPARK_GRAFT_STAB_SRC")
-    if not src:
-        # prefer the most hostile cached mutation dir (ties are real
-        # there); fall back to the benign fixture
-        cands = []
-        root = "/tmp/dfwb_adversarial"
-        if os.path.isdir(root):
-            cands = sorted(
-                os.path.join(root, d) for d in os.listdir(root) if d.startswith("skewex.")
-            )
-        src = cands[-1] if cands else "/root/testdata/sf0.001"
-    only = set(sys.argv[1:]) or None
-
+    todo = select_ids(load_all(), sys.argv[1:])
+    src = source()
     _ensure_text_fixtures(src)
     spark = get_spark("dfwb-stability")
-    reg = load_all()
-    todo = [(k, v) for k, v in reg.items() if only is None or k in only]
-
-    results: dict[str, dict] = {}
-    for name, spec in todo:
-        rec: dict = {}
-        def same(x, y):
-            return bool(
-                len(x) == len(y)
-                and list(x.columns) == list(y.columns)
-                and x.equals(y)
-            )
-
-        try:
-            for k, v in DEFAULTS.items():
-                spark.conf.set(k, v)
-            base = canon(spec.spark_fn(spark, src).toPandas())
-            variant_axes = []
-            for label, confs in PERTURBATIONS:
-                for k, v in confs.items():
-                    spark.conf.set(k, v)
-                try:
-                    perturbed = canon(spec.spark_fn(spark, src).toPandas())
-                finally:
-                    for k in confs:
-                        spark.conf.set(k, DEFAULTS[k])
-                if not same(base, perturbed):
-                    variant_axes.append(label)
-            rec["stable"] = not variant_axes
-            if variant_axes:
-                rec["detail"] = f"variant under: {variant_axes}"
-        except Exception as e:  # noqa: BLE001 — report, don't abort the sweep
-            rec = {"stable": False, "err": f"{type(e).__name__}: {e}"[:300]}
-        finally:
-            for k, v in DEFAULTS.items():
-                spark.conf.set(k, v)
-        results[name] = rec
-
-    json.dump(results, open("/tmp/stability_report.json", "w"), indent=1, default=str)
-    def _waiver(k: str, v: dict) -> str | None:
-        return resolve_waiver(src, k, v)
-
-    bad = {k: v for k, v in results.items() if not v["stable"] and _waiver(k, v) is None}
-    waived = {
-        k: _waiver(k, v) for k, v in results.items() if not v["stable"] and _waiver(k, v)
-    }
-    print(
-        f"[stability axes: {'+'.join(l for l, _ in PERTURBATIONS)}] "
-        f"{len(results) - len(bad) - len(waived)}/{len(results)} stable, "
-        f"{len(waived)} waived, {len(bad)} VARIANT  ({src})"
+    results = {name: _check(spark, spec, src) for name, spec in todo}
+    axes = "+".join(label for label, _ in PERTURBATIONS)
+    bad = report(
+        results,
+        "/tmp/stability_report.json",
+        lambda ok, n, w, b: (
+            f"[stability axes: {axes}] {ok}/{n} stable, {w} waived, {b} VARIANT  ({src})"
+        ),
+        key="stable",
+        fail="VARIANT",
+        waiver=lambda k, rec: resolve_waiver(src, k, rec),
     )
-    for k, v in sorted(bad.items()):
-        print("  VARIANT", k, {kk: vv for kk, vv in v.items() if kk != "stable"})
-    for k in sorted(waived):
-        print("  waived", k, "--", waived[k])
     sys.exit(1 if bad else 0)
 
 

@@ -20,40 +20,27 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
-    import duckdb
-    import pandas as pd
-
     from datafusion_wasm_bindings_spark.queries import load_all, resolve_oracle
     from datafusion_wasm_bindings_spark.queries.sources_q import _ensure_text_fixtures
     from datafusion_wasm_bindings_spark.session import get_spark
-    from datafusion_wasm_bindings_spark.sources.catalog import TABLE_NAMES
-    from tools_adversarial_replay import _tokens, build_mode_dir
+    from tools_adversarial_replay import build_mode_dir
+    from tools_driver_sim import canon, oracle_connection, select_ids
 
-    qid = sys.argv[1]
+    if not 2 <= len(sys.argv) <= 3:
+        print(__doc__, file=sys.stderr)
+        sys.exit(2)
+    [(_, spec)] = select_ids(load_all(), sys.argv[1:2])
     # default: the CURRENT fingerprint-keyed extremes dir (the bare
     # mode-only path stopped existing when r9 keyed dirs by config)
     d = sys.argv[2] if len(sys.argv) > 2 else build_mode_dir("extremes")
     _ensure_text_fixtures(d)
     spark = get_spark("dfwb-triage")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        p = os.path.join(d, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    spec = load_all()[qid]
-    sp = spec.spark_fn(spark, d).toPandas()
-    du = con.sql(resolve_oracle(spec.oracle, d)).df()
-    cols = sorted(sp.columns, key=str.lower)
-    sp, du = sp[cols], du[sorted(du.columns, key=str.lower)]
-    print(f"rows: spark={len(sp)} duck={len(du)}")
-    st, dt = _tokens(sp), _tokens(du)
-    key = st.apply(tuple, axis=1)
-    sp_s = sp.iloc[key.argsort(kind="mergesort").to_numpy()].reset_index(drop=True)
-    st_s = st.iloc[key.argsort(kind="mergesort").to_numpy()].reset_index(drop=True)
-    key = dt.apply(tuple, axis=1)
-    du_s = du.iloc[key.argsort(kind="mergesort").to_numpy()].reset_index(drop=True)
-    dt_s = dt.iloc[key.argsort(kind="mergesort").to_numpy()].reset_index(drop=True)
-    if len(sp) != len(du):
+    con = oracle_connection(d)
+    st = canon(spec.spark_fn(spark, d).toPandas(), relaxed=True)
+    dt = canon(con.sql(resolve_oracle(spec.oracle, d)).df(), relaxed=True)
+    con.close()
+    print(f"rows: spark={len(st)} duck={len(dt)}")
+    if len(st) != len(dt):
         so = set(map(tuple, st.values))
         do = set(map(tuple, dt.values))
         print("spark-only rows (≤5):")
@@ -63,14 +50,19 @@ def main() -> None:
         for r in list(do - so)[:5]:
             print("  ", r)
         return
+    if [c.lower() for c in st.columns] != [c.lower() for c in dt.columns]:
+        print(f"columns: spark={list(st.columns)} duck={list(dt.columns)}")
+        return
+    # both sides are null-unified string tokens, sorted the same way:
+    # a diff here is exactly what the relaxed comparison fails on
+    dt.columns = st.columns
     n_bad = 0
-    for c in cols:
-        neq = (st_s[c] != dt_s[c.lower()] if c.lower() in dt_s else st_s[c] != dt_s[c])
+    for c in st.columns:
+        neq = st[c] != dt[c]
         if neq.any():
-            idx = neq[neq].index[:6]
             print(f"col {c}: {int(neq.sum())} diffs")
-            for i in idx:
-                print(f"   row {i}: spark={sp_s[c][i]!r} duck={du_s.iloc[:, list(cols).index(c)][i]!r}")
+            for i in neq[neq].index[:6]:
+                print(f"   row {i}: spark={st[c][i]!r} duck={dt[c][i]!r}")
             n_bad += 1
     if not n_bad:
         print("token-identical after sort")
