@@ -331,10 +331,12 @@ class SQLEngine:
             self.spark.conf.set(conf, value)
 
     def _record_view(self, m: re.Match, lits: list[str]) -> None:
-        record_view_definition(_name(m["name"], lits), _unmask(m["body"], lits).strip())
+        record_view_definition(
+            self.spark, _name(m["name"], lits), _unmask(m["body"], lits).strip()
+        )
 
     def _forget_view(self, m: re.Match, lits: list[str]) -> None:
-        forget_view_definition(_name(m["name"], lits))
+        forget_view_definition(self.spark, _name(m["name"], lits))
 
     # -- handlers: the engine runs the statement ------------------------
     def _prepare(self, m: re.Match, lits: list[str]) -> DataFrame:

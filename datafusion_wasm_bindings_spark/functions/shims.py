@@ -26,7 +26,7 @@ from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from datafusion_wasm_bindings_spark.sources.catalog import _session_key
+from datafusion_wasm_bindings_spark.session import state
 
 # DataFusion name -> pyspark.sql.functions name, where it is a pure
 # rename (identical semantics). Identity mappings are omitted.
@@ -205,12 +205,6 @@ def version_string() -> str:
     return f"datafusion-wasm-bindings-spark {__version__} (spark {pyspark.__version__})"
 
 
-# session tokens (sources.catalog._session_key), not id(spark): CPython
-# reuses the id of a collected session, and a new session at that
-# address would skip registration
-_registered_sessions: set[int] = set()
-
-
 def regexp_match(col: Column, pattern: str) -> Column:
     """DataFusion/Postgres ``regexp_match`` for a LITERAL pattern,
     composed from JVM builtins — stays in whole-stage codegen, unlike
@@ -260,8 +254,8 @@ def ensure_registered(spark: SparkSession) -> None:
     so they codegen like any builtin. Only regexp_match (column
     patterns) remains a Python UDF.
     """
-    key = _session_key(spark)
-    if key in _registered_sessions:
+    st = state(spark)
+    if st.shims:
         return
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION dfwb_gcd(a BIGINT, b BIGINT) "
@@ -279,4 +273,4 @@ def ensure_registered(spark: SparkSession) -> None:
         "CREATE OR REPLACE TEMPORARY FUNCTION dfwb_version() "
         f"RETURNS STRING RETURN '{version_string()}'"
     )
-    _registered_sessions.add(key)
+    st.shims = True

@@ -46,9 +46,9 @@ QUERIES: dict[str, QuerySpec] = {}
 # verifies the first 50 registered queries). Round 1 verified the
 # flagship→sorts block green (CORRECTNESS_r01); round 2 put extensions
 # + the functions_agg head through (43 green, 7 oracle-HUGEINT fails
-# since fixed). Module order is now only the fallback — the window is
-# chosen query-granularly via _WINDOW below, driven by COVERAGE.md's
-# per-id "last verified round" ledger.
+# since fixed). The window is chosen query-granularly via _WINDOW below,
+# driven by COVERAGE.md's per-id "last verified round" ledger; module
+# order here orders every id after it (load_all).
 _MODULES = (
     "extensions",
     "functions_agg",
@@ -239,17 +239,17 @@ def resolve_oracle(oracle: str | None, sf_dir: str) -> str | None:
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (idempotent) and return the registry,
     reordered so the driver's 50-slot verification window is exactly
-    the ids named in ``_WINDOW`` (then everything else in registration
-    order)."""
+    the ids named in ``_WINDOW``, then every other id by its module's
+    place in ``_MODULES`` and its place in that module. The order does
+    not depend on which query module a caller happened to import
+    first."""
     for mod in _MODULES:
-        try:
-            importlib.import_module(f"datafusion_wasm_bindings_spark.queries.{mod}")
-        except ModuleNotFoundError as e:
-            # tolerate not-yet-written modules during incremental build
-            if f"queries.{mod}" not in str(e):
-                raise
+        importlib.import_module(f"datafusion_wasm_bindings_spark.queries.{mod}")
+    rank = {f"datafusion_wasm_bindings_spark.queries.{m}": i for i, m in enumerate(_MODULES)}
     ordered = {n: QUERIES[n] for n in _WINDOW if n in QUERIES}
-    ordered.update((n, s) for n, s in QUERIES.items() if n not in ordered)
+    # sorted() is stable: within a module, ids keep definition order
+    rest = sorted(QUERIES.values(), key=lambda spec: rank[spec.module])
+    ordered.update((s.name, s) for s in rest if s.name not in ordered)
     # in-place so references to QUERIES elsewhere observe the new order
     QUERIES.clear()
     QUERIES.update(ordered)

@@ -1,4 +1,5 @@
-"""SparkSession construction for the engine.
+"""SparkSession construction for the engine, and the state the engine
+keeps per session (``SessionState``).
 
 Maps the reference's context construction (src/core.rs:47-72) onto
 Spark. Deliberate non-replications (SURVEY.md §0):
@@ -32,12 +33,45 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from datafusion_wasm_bindings_spark import cds
 
 DEFAULT_APP_NAME = "datafusion-wasm-bindings-spark"
+
+
+@dataclass
+class SessionState:
+    """What the engine keeps per SparkSession, as the reference keeps a
+    session's catalog, functions and information_schema in the one
+    ``SessionContext`` (core.rs:47-72):
+
+    - ``sf_dir``: the fixture directory bound as temp views
+      (``sources.catalog.register_tables``);
+    - ``scans``: resolved fixture scans by (sf_dir, table, parallel),
+      bounded in ``sources.catalog.table``;
+    - ``shims``: whether the SQL-callable shims are registered
+      (``functions.shims.ensure_registered``);
+    - ``views``: definition text of the views created through
+      ``SQLEngine``, by lower-cased name (``sources.infoschema``).
+    """
+
+    sf_dir: str | None = None
+    scans: dict[tuple[str, str, bool], DataFrame] = field(default_factory=dict)
+    shims: bool = False
+    views: dict[str, str] = field(default_factory=dict)
+
+
+def state(spark: SparkSession) -> SessionState:
+    """The ``SessionState`` of ``spark``, created on first use. It lives
+    on the session object, so it dies with the session, and a new
+    session at a collected one's address (CPython reuses ids) starts
+    empty. ``setdefault`` on the instance dict is one atomic step, so
+    two threads asking at once get the same object."""
+    st = vars(spark).get("_dfwb_state")
+    return st if st is not None else vars(spark).setdefault("_dfwb_state", SessionState())
 
 
 def default_parallelism() -> int:

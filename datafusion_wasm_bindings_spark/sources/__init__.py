@@ -5,7 +5,6 @@ from datafusion_wasm_bindings_spark.sources.catalog import (
     TABLE_NAMES,
     register_tables,
     table,
-    tables,
 )
 
-__all__ = ["TABLE_NAMES", "register_tables", "table", "tables"]
+__all__ = ["TABLE_NAMES", "register_tables", "table"]

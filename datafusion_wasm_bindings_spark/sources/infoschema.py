@@ -26,7 +26,7 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from datafusion_wasm_bindings_spark.session import local_rows
+from datafusion_wasm_bindings_spark.session import local_rows, state
 
 _TABLES_SCHEMA = "table_catalog string, table_schema string, table_name string, table_type string"
 _VIEWS_SCHEMA = "table_catalog string, table_schema string, table_name string, definition string"
@@ -64,13 +64,10 @@ def information_schema_tables(spark: SparkSession) -> DataFrame:
     return local_rows(spark, _table_rows(spark), _TABLES_SCHEMA)
 
 
-def information_schema_columns(spark: SparkSession, table: str | None = None) -> DataFrame:
+def information_schema_columns(spark: SparkSession) -> DataFrame:
+    """information_schema.columns over the session catalog."""
     rows = []
-    if table:
-        tables = [table]
-    else:
-        tables = [r.tableName for r in _catalog_tables(spark)]
-    for name in tables:
+    for name in [r.tableName for r in _catalog_tables(spark)]:
         try:
             schema = spark.table(name).schema
         except Exception:  # noqa: BLE001 - table may have vanished
@@ -91,26 +88,25 @@ def information_schema_columns(spark: SparkSession, table: str | None = None) ->
 
 
 # Definition text of views created THROUGH the engine's SQL surface
-# (SQLEngine records CREATE VIEW bodies here; Spark's in-memory catalog
-# does not retain temp-view SQL text itself). Views registered by other
-# means keep a NULL definition, which DataFusion also reports when the
-# text is unknown.
-VIEW_DEFINITIONS: dict[str, str] = {}
+# (SQLEngine records CREATE VIEW bodies in the session's state; Spark's
+# in-memory catalog does not retain temp-view SQL text itself). Temp
+# views are per session, so their definitions are too. Views registered
+# by other means keep a NULL definition, which DataFusion also reports
+# when the text is unknown.
+def record_view_definition(spark: SparkSession, name: str, definition: str) -> None:
+    state(spark).views[name.lower()] = definition
 
 
-def record_view_definition(name: str, definition: str) -> None:
-    VIEW_DEFINITIONS[name.lower()] = definition
-
-
-def forget_view_definition(name: str) -> None:
-    VIEW_DEFINITIONS.pop(name.lower(), None)
+def forget_view_definition(spark: SparkSession, name: str) -> None:
+    state(spark).views.pop(name.lower(), None)
 
 
 def information_schema_views(spark: SparkSession) -> DataFrame:
     """information_schema.views: the VIEW rows of `tables`, with the
     definition text when the view was created through this engine."""
+    views = state(spark).views
     rows = [
-        (catalog, schema, name, VIEW_DEFINITIONS.get(name.lower()))
+        (catalog, schema, name, views.get(name.lower()))
         for catalog, schema, name, kind in _table_rows(spark)
         if kind == "VIEW"
     ]

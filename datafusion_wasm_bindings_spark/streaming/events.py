@@ -387,6 +387,7 @@ def streaming_late_data_demo(spark: SparkSession) -> dict[str, int]:
     O(active windows × keys), not O(stream history).
     """
     import os
+    import shutil
     import tempfile
     import time
 
@@ -396,50 +397,53 @@ def streaming_late_data_demo(spark: SparkSession) -> dict[str, int]:
     import pyarrow.parquet as pq
 
     src = tempfile.mkdtemp(prefix="dfwb_stream_late_")
-    batch1 = [
-        ("2024-01-01 10:05:00", "u1"),
-        ("2024-01-01 10:20:00", "u2"),
-        ("2024-01-01 10:40:00", "u1"),
-        ("2024-01-01 12:05:00", "u3"),  # computes watermark 11:05
-    ]
-    batch_mid = [("2024-01-01 12:10:00", "u3")]  # lets the watermark take effect
-    batch2 = [("2024-01-01 10:30:00", "u2")]  # late: 10:30 < 11:05
-    pa_schema = pa.schema([("ts", pa.timestamp("us")), ("user_id", pa.string())])
-    for i, rows in enumerate([batch1, batch_mid, batch2]):
-        t = pa.table(
-            {
-                "ts": [datetime.fromisoformat(ts) for ts, _ in rows],
-                "user_id": [u for _, u in rows],
-            },
-            schema=pa_schema,
-        )
-        # one literal file per intended trigger (a df.write dir would
-        # bundle part-files + _SUCCESS, breaking maxFilesPerTrigger=1)
-        pq.write_table(t, os.path.join(src, f"b{i}.parquet"))
-        time.sleep(1.1)  # distinct mtimes → deterministic oldest-first order
-
-    schema = "ts timestamp, user_id string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("ws"), "n")
-    )
-    name = _scoped("dfwb_stream_late_demo")
-    q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
     try:
-        q.processAllAvailable()
+        batch1 = [
+            ("2024-01-01 10:05:00", "u1"),
+            ("2024-01-01 10:20:00", "u2"),
+            ("2024-01-01 10:40:00", "u1"),
+            ("2024-01-01 12:05:00", "u3"),  # computes watermark 11:05
+        ]
+        batch_mid = [("2024-01-01 12:10:00", "u3")]  # lets the watermark take effect
+        batch2 = [("2024-01-01 10:30:00", "u2")]  # late: 10:30 < 11:05
+        pa_schema = pa.schema([("ts", pa.timestamp("us")), ("user_id", pa.string())])
+        for i, rows in enumerate([batch1, batch_mid, batch2]):
+            t = pa.table(
+                {
+                    "ts": [datetime.fromisoformat(ts) for ts, _ in rows],
+                    "user_id": [u for _, u in rows],
+                },
+                schema=pa_schema,
+            )
+            # one literal file per intended trigger (a df.write dir would
+            # bundle part-files + _SUCCESS, breaking maxFilesPerTrigger=1)
+            pq.write_table(t, os.path.join(src, f"b{i}.parquet"))
+            time.sleep(1.1)  # distinct mtimes → deterministic oldest-first order
+
+        schema = "ts timestamp, user_id string"
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        agg = (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count("*").alias("n"))
+            .select(F.col("w.start").alias("ws"), "n")
+        )
+        name = _scoped("dfwb_stream_late_demo")
+        q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return {
+            str(r.ws): r.n
+            for r in spark.sql(f"SELECT ws, n FROM {name}").collect()
+        }
     finally:
-        q.stop()
-    return {
-        str(r.ws): r.n
-        for r in spark.sql(f"SELECT ws, n FROM {name}").collect()
-    }
+        shutil.rmtree(src, ignore_errors=True)
 
 
 def streaming_running_totals(
@@ -462,6 +466,7 @@ def streaming_running_totals(
     (``GroupStateTimeout.ProcessingTimeTimeout``) evicting idle keys.
     """
     import os
+    import shutil
     import tempfile
 
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -476,65 +481,68 @@ def streaming_running_totals(
         "user_id", "value"
     )
     src = tempfile.mkdtemp(prefix="dfwb_stream_src_")
-    events.repartition(num_input_files).write.mode("overwrite").parquet(src)
-    # state width sized to the staged source: each state partition costs
-    # a Python worker + state-store commit PER micro-batch (see
-    # _sized_stream_session; replaces the r6 fixed-width pin — same
-    # bounded-demo reasoning, now input-derived and clone-scoped instead
-    # of a set/restore on the shared session). Python-state target:
-    # 64 KiB/partition (see docstring measurement).
-    staged_bytes = sum(
-        os.path.getsize(os.path.join(src, f))
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    )
-    sess = _sized_stream_session(spark, staged_bytes, target_bytes=64 * 1024)
-    stream = (
-        sess.readStream.schema(sess.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    out_schema = "user_id bigint, events_seen bigint, value_sum double"
-    state_schema = "events_seen bigint, value_sum double"
-
-    # self-contained closure (no module globals): executors deserialize
-    # it by value even when the package isn't importable on workers
-    def update(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, s))
-        yield pd.DataFrame(
-            {"user_id": [user_id], "events_seen": [n], "value_sum": [s]}
+    try:
+        events.repartition(num_input_files).write.mode("overwrite").parquet(src)
+        # state width sized to the staged source: each state partition costs
+        # a Python worker + state-store commit PER micro-batch (see
+        # _sized_stream_session; replaces the r6 fixed-width pin — same
+        # bounded-demo reasoning, now input-derived and clone-scoped instead
+        # of a set/restore on the shared session). Python-state target:
+        # 64 KiB/partition (see docstring measurement).
+        staged_bytes = sum(
+            os.path.getsize(os.path.join(src, f))
+            for f in os.listdir(src)
+            if f.endswith(".parquet")
+        )
+        sess = _sized_stream_session(spark, staged_bytes, target_bytes=64 * 1024)
+        stream = (
+            sess.readStream.schema(sess.read.parquet(src).schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
         )
 
-    updates = stream.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-    name = _scoped("dfwb_stream_state_demo")
-    q = (
-        updates.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
+        out_schema = "user_id bigint, events_seen bigint, value_sum double"
+        state_schema = "events_seen bigint, value_sum double"
+
+        # self-contained closure (no module globals): executors deserialize
+        # it by value even when the package isn't importable on workers
+        def update(key, pdfs, state):
+            import pandas as pd
+
+            (user_id,) = key
+            n, s = state.get if state.exists else (0, 0.0)
+            for pdf in pdfs:
+                n += len(pdf)
+                s += float(pdf["value"].fillna(0.0).sum())
+            state.update((n, s))
+            yield pd.DataFrame(
+                {"user_id": [user_id], "events_seen": [n], "value_sum": [s]}
+            )
+
+        updates = stream.groupBy("user_id").applyInPandasWithState(
+            update, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        )
+        name = _scoped("dfwb_stream_state_demo")
+        q = (
+            updates.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        # final per-user totals = the row with the highest events_seen
+        # (monotonic per trigger; value_sum itself may go down when values
+        # are negative, so max_by on the counter, not MAX of the sum)
+        return sess.sql(
+            f"SELECT user_id, MAX(events_seen) AS events_seen, "
+            f"MAX_BY(value_sum, events_seen) AS value_sum "
+            f"FROM {name} GROUP BY user_id"
+        )
     finally:
-        q.stop()
-    # final per-user totals = the row with the highest events_seen
-    # (monotonic per trigger; value_sum itself may go down when values
-    # are negative, so max_by on the counter, not MAX of the sum)
-    return sess.sql(
-        f"SELECT user_id, MAX(events_seen) AS events_seen, "
-        f"MAX_BY(value_sum, events_seen) AS value_sum "
-        f"FROM {name} GROUP BY user_id"
-    )
+        shutil.rmtree(src, ignore_errors=True)
 
 
 def streaming_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

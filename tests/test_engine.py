@@ -669,6 +669,7 @@ _TAILS = ("", ";", "; -- done")
 def _statement_forms(sf_dir, out_dir):
     """name → (setup(engine), statement, effect(engine, output), expected
     effect) for each statement form the engine runs itself."""
+    from datafusion_wasm_bindings_spark.session import state
     from datafusion_wasm_bindings_spark.sources import infoschema
 
     def prepare(eng, name, body="SELECT 1 AS v"):
@@ -679,7 +680,7 @@ def _statement_forms(sf_dir, out_dir):
 
     def view_state(eng, name):
         present = any(t.name == name for t in eng.spark.catalog.listTables())
-        return present, infoschema.VIEW_DEFINITIONS.get(name)
+        return present, state(eng.spark).views.get(name)
 
     copy_out = f"{out_dir}/shape_copy"
     return {
@@ -734,7 +735,7 @@ def _statement_forms(sf_dir, out_dir):
             True,
         ),
         "CREATE VIEW": (
-            lambda eng: infoschema.forget_view_definition("shape_v"),
+            lambda eng: infoschema.forget_view_definition(eng.spark, "shape_v"),
             'CREATE OR REPLACE TEMP VIEW "shape_v" AS SELECT \'x;y\' AS "q"',
             lambda eng, out: view_state(eng, "shape_v"),
             (True, "SELECT 'x;y' AS \"q\""),
@@ -1068,19 +1069,20 @@ def test_ns_timestamp_truncates_to_micros_policy(spark, tmp_path):
 
 
 def test_resolved_scan_cache_semantics(spark, sf_dir):
-    """r12 resolved-scan cache (sources/catalog.table): pure
-    plan-metadata reuse. Pins (a) a repeat call returns the SAME
-    DataFrame object (no second footer/schema job), (b) the eviction
-    loop keeps the cache bounded and never raises even when it finds
-    the dict already drained/mutated (the bench harness calls table()
-    from several threads — concurrent callers can race an eviction
-    victim), (c) register_tables(force=True) invalidates this
-    session's entries so a layout change is picked up."""
+    """Resolved-scan reuse (sources/catalog.table): pure plan-metadata
+    reuse, held in the session's state. Pins (a) a repeat call returns
+    the SAME DataFrame object (no second footer/schema job), (b) the
+    eviction loop keeps the session's scans bounded and never raises
+    even when it finds the dict already drained/mutated (the bench
+    harness calls table() from several threads — concurrent callers
+    can race an eviction victim)."""
+    from datafusion_wasm_bindings_spark.session import state
     from datafusion_wasm_bindings_spark.sources import catalog
 
-    saved = dict(catalog._table_cache)
+    scans = state(spark).scans
+    saved = dict(scans)
     try:
-        catalog._table_cache.clear()
+        scans.clear()
         a = catalog.table(spark, sf_dir, "nation")
         assert catalog.table(spark, sf_dir, "nation") is a  # cache hit
         # parallel=True is a distinct plan -> distinct cache key
@@ -1089,19 +1091,13 @@ def test_resolved_scan_cache_semantics(spark, sf_dir):
 
         # eviction pressure: prefill past the bound with dummy keys;
         # the insert path must evict down to the bound without error
-        for i in range(catalog._TABLE_CACHE_MAX + 40):
-            catalog._table_cache[(i, "dummy", "t", False)] = a
+        for i in range(catalog._SCANS_MAX + 40):
+            scans[(f"dummy{i}", "t", False)] = a
         catalog.table(spark, sf_dir, "region")
-        assert len(catalog._table_cache) <= catalog._TABLE_CACHE_MAX
-
-        # force re-registration drops this session's entries and
-        # re-resolves them fresh (view re-bind re-populates the cache)
-        old = catalog.table(spark, sf_dir, "nation")
-        catalog.register_tables(spark, sf_dir, force=True)
-        assert catalog.table(spark, sf_dir, "nation") is not old
+        assert len(scans) <= catalog._SCANS_MAX
     finally:
-        catalog._table_cache.clear()
-        catalog._table_cache.update(saved)
+        scans.clear()
+        scans.update(saved)
 
 
 def test_parquet_layout_stamp_keyed_and_directory_fallback(spark, tmp_path):
@@ -1144,15 +1140,74 @@ def test_parquet_layout_stamp_keyed_and_directory_fallback(spark, tmp_path):
     assert second is not None and second[1] == 3000
 
 
-def test_session_cache_key_is_stamped_token_not_id(spark):
-    """r13 hardening (VERDICT r12 #5): cache keys use a monotone token
-    stamped on the session object (never reused), not id(spark) (which
-    CPython recycles after GC). Stable per session, distinct across
-    sessions."""
+def test_new_session_registers_its_own_views_shims_and_scans(spark, sf_dir):
+    """Each session has its own state (session.state): a newSession()
+    that the fixture views and shims were never bound in gets them
+    bound in itself, and resolves its own scans, even after the
+    parent session registered the same directory."""
+    from datafusion_wasm_bindings_spark.functions import shims
+    from datafusion_wasm_bindings_spark.session import state
     from datafusion_wasm_bindings_spark.sources import catalog
 
-    tok = catalog._session_key(spark)
-    assert catalog._session_key(spark) == tok  # stable
+    catalog.register_tables(spark, sf_dir)
+    shims.ensure_registered(spark)
     clone = spark.newSession()
-    assert catalog._session_key(clone) != tok  # distinct object → distinct token
-    assert catalog._session_key(clone) == catalog._session_key(clone)
+    assert state(clone) is state(clone)
+    assert state(clone) is not state(spark)
+
+    catalog.register_tables(clone, sf_dir)
+    assert clone.table("nation").count() == spark.table("nation").count()
+    shims.ensure_registered(clone)
+    assert clone.sql("SELECT dfwb_gcd(12, 18) AS g").collect()[0].g == 6
+    assert catalog.table(clone, sf_dir, "nation") is not catalog.table(spark, sf_dir, "nation")
+
+
+def test_session_state_is_created_once_under_racing_threads(spark):
+    """Threads that ask a fresh session for its state at the same moment
+    all get one object (session.state creates it with one atomic
+    ``setdefault``), so no thread's registration or scan lands in a
+    state another thread then replaces."""
+    import sys
+    import threading
+
+    from datafusion_wasm_bindings_spark.session import state
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(20):
+            fresh = spark.newSession()
+            gate = threading.Barrier(16)
+            got = []
+
+            def ask():
+                gate.wait(timeout=10)
+                got.append(state(fresh))
+
+            threads = [threading.Thread(target=ask) for _ in range(16)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=10)
+            assert not any(t.is_alive() for t in threads)
+            assert len(got) == 16 and len({id(x) for x in got}) == 1
+            assert got[0] is state(fresh)
+    finally:
+        sys.setswitchinterval(prev)
+
+
+def test_view_definition_stays_in_its_session(spark):
+    """A view created through SQLEngine in one session lends its text to
+    no same-named view of another session: temp views are per session,
+    and so are their recorded definitions."""
+    from datafusion_wasm_bindings_spark import SQLEngine
+
+    def definitions(session):
+        df = SQLEngine(session).sql("SELECT table_name, definition FROM information_schema.views")
+        return {r.table_name: r.definition for r in df.collect()}
+
+    a, b = spark.newSession(), spark.newSession()
+    SQLEngine(a).execute_sql("CREATE OR REPLACE TEMP VIEW shared_v AS SELECT 1 AS one")
+    b.range(3).createOrReplaceTempView("shared_v")
+    assert definitions(b)["shared_v"] is None
+    assert definitions(a)["shared_v"] == "SELECT 1 AS one"

@@ -8,15 +8,27 @@ from datafusion_wasm_bindings_spark.sources.catalog import table
 from datafusion_wasm_bindings_spark.streaming.events import streaming_demo, tumbling
 
 
-def test_stateful_running_totals_match_batch(spark, sf_dir):
+def _staged_dirs(monkeypatch, tmp_path, prefix):
+    """Point tempfile at ``tmp_path``; return a callable listing what
+    the code under test left there under ``prefix``."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return lambda: [p.name for p in tmp_path.iterdir() if p.name.startswith(prefix)]
+
+
+def test_stateful_running_totals_match_batch(spark, sf_dir, monkeypatch, tmp_path):
     from pyspark.sql import functions as F
 
     from datafusion_wasm_bindings_spark.streaming.events import streaming_running_totals
 
+    left = _staged_dirs(monkeypatch, tmp_path, "dfwb_stream_src_")
     got = {
         r.user_id: (r.events_seen, round(r.value_sum, 6))
         for r in streaming_running_totals(spark, sf_dir).collect()
     }
+    # the result lives in the memory sink: the staged source is removed
+    assert left() == []
     want = {
         r.user_id: (r.n, round(r.s, 6))
         for r in table(spark, sf_dir, "events")
@@ -44,12 +56,14 @@ def test_streaming_matches_batch(spark, sf_dir):
     assert len(batch_out) > 0
 
 
-def test_streaming_drops_late_data_beyond_watermark(spark):
+def test_streaming_drops_late_data_beyond_watermark(spark, monkeypatch, tmp_path):
     from datafusion_wasm_bindings_spark.streaming.events import (
         streaming_late_data_demo,
     )
 
+    left = _staged_dirs(monkeypatch, tmp_path, "dfwb_stream_late_")
     got = streaming_late_data_demo(spark)
+    assert left() == []
     # the finalized 10:00 window emitted exactly the 3 on-time events;
     # the 10:30 row of batch 2 arrived past the 11:05 watermark and was
     # dropped (a count of 4 means late data leaked in)

@@ -80,6 +80,30 @@ def test_window_is_50_distinct_registered_ids_and_leads_registry():
     assert list(registry)[:50] == list(_WINDOW)
 
 
+def test_registry_order_does_not_depend_on_import_order():
+    """load_all() orders the ids after the window by module, not by
+    which query module the process imported first. Each order comes
+    from a fresh interpreter (no Spark session), one per first import."""
+    import subprocess
+    import sys
+
+    def order(first: str) -> list[str]:
+        pre = f"import datafusion_wasm_bindings_spark.queries.{first}; " if first else ""
+        code = pre + (
+            "from datafusion_wasm_bindings_spark.queries import load_all; "
+            "print(' '.join(load_all()))"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+        ).stdout
+        return out.splitlines()[-1].split()
+
+    plain = order("")
+    assert len(plain) == len(set(plain)) > 50
+    for first in ("sources_q", "analytics5"):
+        assert order(first) == plain, first
+
+
 def test_window_rotation_priorities():
     registry = load_all()
     last = _latest_verdicts()
