@@ -1,82 +1,64 @@
-"""Lineage-cut strategy for iterative operators.
+"""Lineage cuts for every materialisation barrier in the package.
 
-Every iterative operator in this package (pagerank, BFS, both
-connected-components variants, the MinHash band pipeline) must cut the
-growing lineage each round or the next round re-derives every earlier
-one — O(rounds²) recomputation. The default cut is
-``DataFrame.localCheckpoint``: fast, no storage round-trip, ideal on
-local[32] and for short jobs. But localCheckpoint blocks are stored on
-executor memory/disk ONLY — on a real cluster, losing an executor
-mid-query makes the RDD unrecoverable and fails the job (VERDICT r4
-next-round #5).
+A barrier cuts a DataFrame's lineage where leaving it lazy would
+re-derive work: the per-round state of an iterative operator (pagerank,
+BFS, both connected-components variants, recursive fixpoints — without
+a cut each round re-derives every earlier one, O(rounds²)), a subtree
+several consumers read once, or a layout a write must keep. Every such
+barrier calls ``cut`` and, once nothing reads the state any more,
+``release``.
 
-``make_checkpointer`` gives every iterative operator one optional
-``checkpoint_dir`` knob:
+Which cut is read from the session, not passed in:
 
-- ``None`` (default, bench-neutral): localCheckpoint, unchanged
-  behavior;
-- a path (HDFS/S3A/local dir): reliable ``DataFrame.checkpoint`` —
-  state is written to fault-tolerant storage, so a 1000-executor
-  PageRank over a 100 TB edge list survives executor loss at the cost
-  of one storage round-trip per round. The directory is set once per
-  SparkContext (Spark requires it before the first reliable
-  checkpoint); distinct callers may pass distinct dirs — the last one
-  set wins for subsequent checkpoints, which is safe because completed
-  checkpoints keep their files.
+- no checkpoint dir on the SparkContext (the default): ``localCheckpoint``
+  — fast, no storage round-trip, ideal on local[N] and for short jobs;
+  but its blocks live on executor memory/disk ONLY, so on a real cluster
+  losing an executor mid-query makes the state unrecoverable and fails
+  the job (VERDICT r4 next-round #5);
+- a checkpoint dir set (``SparkContext.setCheckpointDir`` or the static
+  conf ``spark.checkpoint.dir``, HDFS/S3A/local): reliable
+  ``checkpoint`` — state is written to fault-tolerant storage, so a
+  1000-executor PageRank over a 100 TB edge list survives executor
+  loss at the cost of one storage round-trip per cut. The dir's
+  lifecycle belongs to whoever set it.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 
 
-def make_checkpointer(
-    checkpoint_dir: str | None,
-) -> Callable[[DataFrame], DataFrame]:
-    """Return a ``df -> df`` lineage cut: localCheckpoint when
-    ``checkpoint_dir`` is None, reliable storage-backed checkpoint
-    into ``checkpoint_dir`` otherwise. Always eager — iterative
-    callers materialize each round's state exactly once.
+def cut(df: DataFrame) -> DataFrame:
+    """Materialise ``df`` now and return it with its lineage cut: a
+    reliable checkpoint when the session has a checkpoint dir, a
+    localCheckpoint otherwise. Always eager — every barrier materialises
+    its state exactly once, where it stands."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint()
+    return df.checkpoint()
 
-    The returned callable carries a ``.release(df)`` companion:
-    iterative operators MUST call it on the PREVIOUS round's
-    checkpointed state once the new round is materialized, or block
-    storage grows O(rounds x state) and evicts execution memory — the
-    r7 star-CC probe OOM'd an 8 g heap at a 10M-node chain (~30
-    alternations x ~200 MB of deserialized edge blocks) exactly this
-    way. ``release`` is safe ONLY on state no later round reads:
-    localCheckpoint blocks are unrecoverable, so unpersisting a live
-    one fails the job rather than silently recomputing. For durable
-    checkpoints ``release`` is a no-op (completed checkpoint files
-    are the fault-tolerance story; the directory's lifecycle belongs
-    to the caller)."""
-    if checkpoint_dir is None:
 
-        def local(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=True)
+def release(df: DataFrame | None) -> None:
+    """Free the blocks of a spent local cut.
 
-        def release(df: DataFrame | None) -> None:
-            if df is None:
-                return
-            try:
-                analyzed = df._jdf.queryExecution().analyzed()
-                # a localCheckpointed Dataset's plan root is LogicalRDD
-                # holding the block-backed RDD; unpersist frees exactly
-                # those blocks, nothing shared
-                if analyzed.getClass().getName().endswith("LogicalRDD"):
-                    analyzed.rdd().unpersist(False)
-            except Exception:
-                pass  # advisory: failing to free must never fail the job
-
-        local.release = release
-        return local
-
-    def durable(df: DataFrame) -> DataFrame:
-        sc = df.sparkSession.sparkContext
-        sc.setCheckpointDir(checkpoint_dir)
-        return df.checkpoint(eager=True)
-
-    durable.release = lambda df: None
-    return durable
+    Iterative operators MUST call it on the PREVIOUS round's cut once
+    the new round is materialized, or block storage grows
+    O(rounds x state) and evicts execution memory — the r7 star-CC probe
+    OOM'd an 8 g heap at a 10M-node chain (~30 alternations x ~200 MB of
+    deserialized edge blocks) exactly this way. It is safe ONLY on state
+    no later step reads: local blocks are unrecoverable, so unpersisting
+    a live one fails the job rather than silently recomputing. A
+    reliable cut keeps its files (they are the fault-tolerance story),
+    so it is left alone. The kind is read from the cut's RDD, not from
+    the session, whose dir may have changed since the cut."""
+    if df is None:
+        return
+    try:
+        # both kinds of cut leave a LogicalRDD plan root holding the
+        # checkpointed RDD; unpersist frees exactly its blocks, nothing
+        # shared
+        rdd = df._jdf.queryExecution().analyzed().rdd()
+        if rdd.isLocallyCheckpointed():
+            rdd.unpersist(False)
+    except Exception:
+        pass  # advisory: failing to free must never fail the job

@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.operators.similarity import _norm2, quantized
 
 Centroid = tuple[int, list[int], int]  # (cid, per-dim int sums, n)
@@ -104,12 +105,12 @@ def fit_kmeans(
     # without a lineage cut every one of those actions re-runs the
     # scan + quantization HOF (iters+2 full re-derivations; measured
     # r12: q_cluster_quality 2.8→1.6 s, q_cluster_kmeans 1.7→1.1 s at
-    # sf0.1). Values are untouched — localCheckpoint materializes the
+    # sf0.1). Values are untouched — the cut materializes the
     # same exact integer vectors the lazy plan computes.
     v = (
         embeddings.select("vec_id", quantized(F.col("embedding")).alias("x"))
         .withColumn("ssx", _norm2(F.col("x")))
-        .localCheckpoint()
+        .transform(cut)
     )
 
     seeds = v.orderBy("vec_id").limit(k).select("vec_id", "x").collect()
@@ -221,7 +222,7 @@ def semantic_dedup(
     # re-derived fit was ~half of the 11.4 s at 500k×32; VERDICT r5 #6)
     a = assigned.select("vec_id", "x", "cid").withColumn(
         "ssx", _norm2(F.col("x"))
-    ).localCheckpoint()
+    ).transform(cut)
     reps = a.groupBy("cid").agg(F.min("vec_id").alias("rep_vec"))
     repv = reps.join(
         a.select(
@@ -292,7 +293,7 @@ def kmeans_quality(
     # at sf0.1: the formatted plan shrank 16 HashAggregate nodes → 4,
     # warm wall 17.0 → 3.4 s median-of-3; job count unchanged at 13 —
     # the win is each broadcast job reading k rows instead of the
-    # corpus). si is k rows — the localCheckpoint materializes the
+    # corpus). si is k rows — the cut materializes the
     # same exact decimal-sum values once and every consumer reads the
     # k-row RDD.
     si = (
@@ -304,7 +305,7 @@ def kmeans_quality(
                 / F.count(F.lit(1))
             ).alias("s_mean"),
         )
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
     # The k×k centroid-pair distance matrix is computed DRIVER-SIDE in
     # exact Python ints + one nearest-double conversion per term: the

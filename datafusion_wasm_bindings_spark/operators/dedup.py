@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut, release
+
 # Tokenize on runs of non-alphanumerics; lowercase first. Keeps the
 # semantics identical to the DuckDB oracle (regexp_extract_all there).
 _TOKEN_PATTERN = "[a-z0-9]+"
@@ -177,9 +179,7 @@ def minhash_lsh_pairs(
     # re-runs tokenize+shingle+hash over the whole corpus. The
     # signature table is n_docs × (1+n_h) longs — tiny relative to the
     # corpus at any scale (it's the *output* of the compression step).
-    sigs = minhash_signatures(documents, num_hashes=n_h, shingle_k=shingle_k).localCheckpoint(
-        eager=True
-    )
+    sigs = cut(minhash_signatures(documents, num_hashes=n_h, shingle_k=shingle_k))
     # AFTER the checkpoint (see minhash_signatures): zero-shingle docs
     # carry all-NULL signatures, and F.hash(NULL, seed) is a CONSTANT —
     # unfiltered they'd all share one LSH bucket and pair at union = 0,
@@ -216,7 +216,7 @@ def minhash_lsh_pairs(
         # materialize: the candidate set is referenced three times below
         # (pair join + both sides of the id semi-join); without a
         # lineage cut each reference re-runs signature generation
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
 
     # shingle ONLY the docs that appear in some candidate pair — at
@@ -559,7 +559,6 @@ def connected_components(
     dst: str = "id_b",
     *,
     max_iters: int = 25,
-    checkpoint_dir: str | None = None,
     prepared: bool = False,
 ) -> DataFrame:
     """Resolve similarity candidate pairs into duplicate CLUSTERS —
@@ -571,10 +570,11 @@ def connected_components(
     labeled with itself; each round takes the min of its own and its
     neighbors' labels; converges in O(graph diameter) rounds. Each
     round is one shuffle join + one shuffle agg on the edge list —
-    fully distributed, no driver-side graph. ``localCheckpoint`` cuts
-    the growing lineage per round (the same fix that de-pathologized
-    MinHash re-evaluation). Dedup graphs are overwhelmingly short
-    chains/cliques, so rounds ≈ 2-4 in practice; at 100 TB with
+    fully distributed, no driver-side graph. A lineage cut
+    (operators/checkpoint.py) ends each round (the same fix that
+    de-pathologized MinHash re-evaluation). Dedup graphs are
+    overwhelmingly short chains/cliques, so rounds ≈ 2-4 in practice;
+    at 100 TB with
     adversarially long chains you would switch to the large-star/
     small-star variant (alternating rounds, O(log n) convergence) —
     same join/agg primitives, more rounds fused.
@@ -582,25 +582,19 @@ def connected_components(
     Returns (node, comp): every node appearing in ``pairs`` mapped to
     its component id = min node id in the component.
 
-    ``checkpoint_dir``: None (default) cuts per-round lineage with
-    localCheckpoint; a storage path switches to fault-tolerant
-    ``checkpoint`` (operators/checkpoint.py). ``prepared=True`` takes
-    ``pairs`` from ``prepare_cc_edges`` (columns ``a``/``b``, already
-    symmetrized + deduped, bucketed by ``b``): the symmetrize pass
-    and its checkpoint are skipped so every round's label join stays
-    exchange-free on the edge side.
+    ``prepared=True`` takes ``pairs`` from ``prepare_cc_edges``
+    (columns ``a``/``b``, already symmetrized + deduped, bucketed by
+    ``b``): the symmetrize pass and its checkpoint are skipped so every
+    round's label join stays exchange-free on the edge side.
     """
-    from datafusion_wasm_bindings_spark.operators.checkpoint import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
     if prepared:
         edges = pairs.select("a", "b")
     else:
         e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        edges = ckpt(
+        edges = cut(
             e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
         )
-    labels = ckpt(
+    labels = cut(
         edges.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
@@ -616,7 +610,7 @@ def connected_components(
         # the change flag falls out of the same row (old comp vs
         # neighbor min) — checking it on the checkpointed result avoids
         # a per-round convergence join
-        new_labels = ckpt(
+        new_labels = cut(
             labels.join(nbr_min, "node", "left")
             .select(
                 "node",
@@ -627,7 +621,7 @@ def connected_components(
         changed = new_labels.filter("changed").limit(1).count()
         # the old labels checkpoint fed only this round's materialization
         # — free its blocks (O(1) state in rounds, r7 release convention)
-        ckpt.release(prev_labels)
+        release(prev_labels)
         prev_labels = new_labels
         labels = new_labels.drop("changed")
         if changed == 0:
@@ -649,7 +643,6 @@ def connected_components_star(
     dst: str = "id_b",
     *,
     max_iters: int = 50,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star —
     the 100 TB scale path (Kiveris et al., "Connected Components in
@@ -673,12 +666,9 @@ def connected_components_star(
 
     Returns (node, comp) exactly like ``connected_components``: every
     node appearing in ``pairs`` mapped to the min node id of its
-    component. ``checkpoint_dir``: see ``connected_components``.
+    component.
     """
-    from datafusion_wasm_bindings_spark.operators.checkpoint import make_checkpointer
-
-    ckpt = make_checkpointer(checkpoint_dir)
-    edges = ckpt(
+    edges = cut(
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -716,7 +706,7 @@ def connected_components_star(
             F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
         )
         smins = oriented.groupBy("hi").agg(F.min("lo").alias("m"))
-        small = ckpt(
+        small = cut(
             oriented.join(smins, "hi")
             .select(F.col("lo").alias("a"), F.col("m").alias("b"))
             .union(smins.select(F.col("hi").alias("a"), F.col("m").alias("b")))
@@ -728,7 +718,7 @@ def connected_components_star(
         # large/small-star materialization — free its blocks. Without
         # this, ~O(log n) rounds x O(|E|) deserialized blocks accumulate:
         # measured r7, a 10M-node chain OOM'd the 8 g probe heap
-        ckpt.release(prev_edges)
+        release(prev_edges)
         prev_edges = edges
         sig = signature(edges)
         if sig == prev_sig:

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datafusion_wasm_bindings_spark.operators.checkpoint import make_checkpointer
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut, release
 
 DEC = "decimal(18,9)"
 
@@ -41,7 +41,6 @@ def pagerank(
     *,
     iters: int = 3,
     damping: float = 0.85,
-    checkpoint_dir: str | None = None,
     prepared: bool = False,
 ) -> DataFrame:
     """PageRank over a directed edge list (columns ``src``, ``dst``).
@@ -52,11 +51,6 @@ def pagerank(
     from the uniform start. Rank mass is NOT renormalized per round;
     with no dangling nodes it is conserved exactly as in the standard
     formulation.
-
-    ``checkpoint_dir``: None (default) cuts per-round lineage with
-    localCheckpoint; a storage path switches to fault-tolerant
-    ``checkpoint`` so executor loss mid-run is recoverable on a real
-    cluster (operators/checkpoint.py).
 
     ``prepared=True``: ``edges`` is the table scan written by
     ``prepare_pagerank_edges`` — already deduped, carrying the ``d``
@@ -71,9 +65,8 @@ def pagerank(
     # materialize the iteration-invariant state ONCE (the dedup'd edge
     # list and out-degrees), and each round's ranks: without this the
     # lineage re-derives every previous round inside the next one —
-    # O(iters²) recomputation (same per-round localCheckpoint pattern
+    # O(iters²) recomputation (same per-round lineage-cut pattern
     # as connected components, operators/dedup.py)
-    ckpt = make_checkpointer(checkpoint_dir)
     if prepared:
         # hint("merge"): enforce the prepared-mode contract — bucketed
         # SMJ with NO exchange (and no broadcast BUILD) of the O(|E|)
@@ -89,17 +82,17 @@ def pagerank(
         # past-threshold edge table gets anyway (r5 broadcast-hint rule
         # untouched: no broadcast hints here).
         ed = edges.hint("merge")
-        nodes = ckpt(ed.select(F.col("src").alias("node")).distinct())
+        nodes = cut(ed.select(F.col("src").alias("node")).distinct())
     else:
-        e = ckpt(edges.select("src", "dst").distinct())
+        e = cut(edges.select("src", "dst").distinct())
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         # degrees are iteration-invariant: join them into the edge list
         # ONCE and checkpoint, so each round joins ranks only (one join +
         # one aggregate per iteration instead of two joins)
-        ed = ckpt(e.join(deg, "src"))
+        ed = cut(e.join(deg, "src"))
         # no-dangling precondition ⇒ node set == distinct sources == deg's
         # keys: one shuffle instead of two
-        nodes = ckpt(ed.select(F.col("src").alias("node")).distinct())
+        nodes = cut(ed.select(F.col("src").alias("node")).distinct())
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n_nodes"))
 
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
@@ -126,10 +119,10 @@ def pagerank(
             )
         )
         if i < iters - 1:
-            ranks = ckpt(ranks)
+            ranks = cut(ranks)
             # the (i-1)-round checkpoint fed only this materialization —
             # free its blocks so state stays O(1), not O(iters)
-            ckpt.release(prev_ranks)
+            release(prev_ranks)
             prev_ranks = ranks
     return ranks
 
@@ -226,18 +219,14 @@ def pagerank_topk(
     *,
     iters: int = 3,
     k: int = 20,
-    checkpoint_dir: str | None = None,
     prepared: bool = False,
 ) -> DataFrame:
     """Top-``k`` PageRank nodes: (node, pos, rank) with rank rounded to
-    6 places and ties broken by node id ascending. ``checkpoint_dir``
-    and ``prepared`` forward to ``pagerank`` (durable lineage cuts /
-    bucketed pre-built edge table)."""
+    6 places and ties broken by node id ascending. ``prepared``
+    forwards to ``pagerank`` (bucketed pre-built edge table)."""
     from pyspark.sql import Window
 
-    r = pagerank(
-        edges, iters=iters, checkpoint_dir=checkpoint_dir, prepared=prepared
-    )
+    r = pagerank(edges, iters=iters, prepared=prepared)
     # TakeOrdered top-k first (distributed per-partition heaps), THEN
     # number positions with a window over only k rows — never a global
     # single-partition window over all |nodes|
@@ -280,7 +269,6 @@ def bfs_levels(
     source: int,
     *,
     max_depth: int = 4,
-    checkpoint_dir: str | None = None,
     prepared: bool = False,
 ) -> DataFrame:
     """Breadth-first levels from ``source`` over a directed edge list
@@ -295,16 +283,13 @@ def bfs_levels(
     O(rounds²)), releases the previous round's blocks once the new
     ones materialize (r7 release convention, storage O(1) in rounds),
     and exits early on the cheap ``isEmpty`` of the just-materialized
-    frontier; ``checkpoint_dir``
-    switches the cut to fault-tolerant storage checkpoints
-    (operators/checkpoint.py). ``prepared=True`` takes ``edges`` from
+    frontier. ``prepared=True`` takes ``edges`` from
     ``prepare_bfs_edges`` (already deduped, bucketed by src): the
     dedup pass and its checkpoint are skipped — a file-rooted scan
     has constant lineage, and checkpointing would erase the bucketing
     that makes each round's frontier join exchange-free on the edge
     side."""
-    ckpt = make_checkpointer(checkpoint_dir)
-    e = edges.select("src", "dst") if prepared else ckpt(
+    e = edges.select("src", "dst") if prepared else cut(
         edges.select("src", "dst").distinct()
     )
     spark = e.sparkSession
@@ -325,12 +310,12 @@ def bfs_levels(
         # every earlier round's expansion inside the next one (the same
         # O(rounds²) trap the visited checkpoint already guards), and a
         # materialized frontier makes the empty-frontier exit free
-        frontier = ckpt(nxt)
-        visited = ckpt(visited.unionByName(frontier))
+        frontier = cut(nxt)
+        visited = cut(visited.unionByName(frontier))
         # both consumers of the previous round's state have
         # materialized — free its blocks (state stays O(1) in rounds)
-        ckpt.release(prev_visited)
-        ckpt.release(prev_frontier)
+        release(prev_visited)
+        release(prev_frontier)
         prev_visited, prev_frontier = visited, frontier
         if frontier.isEmpty():
             break  # no new nodes: further rounds are no-ops

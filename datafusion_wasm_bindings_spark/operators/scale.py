@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut, release
+
 
 def salted_join(
     left: DataFrame,
@@ -80,18 +82,13 @@ def write_bucketed(
     3 rounds. ``repartition(buckets, key)`` uses the same
     Murmur3-pmod hash as bucketBy, so each task receives exactly one
     bucket's rows — but the repartition must be MATERIALIZED
-    (localCheckpoint) before the write: inside the V1 write command's
+    (a lineage cut, operators/checkpoint.py) before the write: inside the V1 write command's
     re-planned query the optimizer drops a top-level repartition that
     sits above a union-fed pipeline (measured: 288 task×bucket files
     instead of 32, with or without AQE coalescing), and the barrier is
-    the only arrangement that survives every caller's plan shape. The
-    checkpoint blocks are freed once the files are committed."""
-    from datafusion_wasm_bindings_spark.operators.checkpoint import (
-        make_checkpointer,
-    )
-
-    ckpt = make_checkpointer(None)
-    aligned = ckpt(df.repartition(buckets, F.col(key)))
+    the only arrangement that survives every caller's plan shape. A
+    local cut's blocks are freed once the files are committed."""
+    aligned = cut(df.repartition(buckets, F.col(key)))
     try:
         writer = (
             aligned.write.mode("overwrite")
@@ -103,7 +100,7 @@ def write_bucketed(
             writer = writer.option("path", path)
         writer.saveAsTable(table_name)
     finally:
-        ckpt.release(aligned)
+        release(aligned)
 
 
 def bucketed_join(

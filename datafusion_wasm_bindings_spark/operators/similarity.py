@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
+
 
 def quantized(col: F.Column, scale: int = 1000) -> F.Column:
     """array<float> → array<bigint> with deterministic per-component
@@ -218,7 +220,7 @@ def cosine_pairs_lsh(
                 seed=seed,
             )
         ).alias("t", "bucket"),
-    ).localCheckpoint(eager=True)
+    ).transform(cut)
     a, b = buckets.alias("a"), buckets.alias("b")
     pairs = (
         a.join(
@@ -459,7 +461,7 @@ def ivf_index(
             [dims[i] for i in sorted(dims)]
             for _, dims in sorted(by_cell.items())
         ]
-    assignments = _assign_cells(base, cents).localCheckpoint(eager=True)
+    assignments = cut(_assign_cells(base, cents))
     centroids = spark.createDataFrame(
         [(cell, cv) for cell, cv in enumerate(cents)],
         "cell long, cv array<double>",
@@ -568,7 +570,7 @@ def lsh_bucketed_topk(
         # this subtree; without a lineage cut the (interpreted
         # higher-order-function) bucket projection runs twice over the
         # corpus. The bucketed table is what a real ANN index persists.
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
 
     q = base.filter(F.col("vec_id").isin(query_ids)).select(
@@ -912,7 +914,7 @@ def pq_index(
             books[si][ci] = [dims[d] for d in sorted(dims)]
         # (sub, code) cells with no members keep their previous
         # centroid — dead codes stay addressable, ids never renumber
-    codes = _encode_codes(base, books, sub_len).localCheckpoint(eager=True)
+    codes = cut(_encode_codes(base, books, sub_len))
     cb = spark.createDataFrame(
         [
             (si, ci, cv)

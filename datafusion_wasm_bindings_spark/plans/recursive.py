@@ -9,7 +9,7 @@ building block for iterative algorithms that aren't SQL-expressible).
 Scale notes:
 - each iteration is a full distributed job on the *delta only*
   (UNION ALL semantics), not the accumulated result;
-- ``localCheckpoint`` truncates lineage each round — without it the
+- a lineage cut (operators/checkpoint.py) truncates lineage each round — without it the
   plan tree grows linearly and planning time explodes by ~iteration 30;
 - cycle safety = iteration cap + optional dedup against accumulated
   rows (UNION semantics), trading a distinct-shuffle per round.
@@ -20,6 +20,8 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
+
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 
 
 def recursive_fixpoint(
@@ -42,13 +44,13 @@ def recursive_fixpoint(
     # and no round pays a re-materialization of everything accumulated
     # so far (the previous acc-copy-per-round was quadratic in total
     # result size)
-    deltas = [seed.localCheckpoint(eager=True)]
+    deltas = [cut(seed)]
     delta = deltas[0]
     for _ in range(max_iterations):
         delta = step(delta)
         if distinct:
             delta = delta.subtract(reduce(DataFrame.unionAll, deltas))
-        delta = delta.localCheckpoint(eager=True)
+        delta = cut(delta)
         if delta.isEmpty():
             return reduce(DataFrame.unionAll, deltas)
         deltas.append(delta)

@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.queries import query
 from datafusion_wasm_bindings_spark.queries._util import DEC, davg_sql, dsum_sql
 from datafusion_wasm_bindings_spark.sources.catalog import table
@@ -582,7 +583,7 @@ def _dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.e. the component label itself) → retention stats. Every stage is
     the already-plan-audited building block; the composition shows the
     full pipeline stays shuffle-bounded (bucketed pair-gen, O(diameter)
-    label rounds with per-round localCheckpoint, the cluster map joined
+    label rounds with per-round lineage cuts, the cluster map joined
     back WITHOUT a broadcast hint — it is O(near-dup docs), corpus-
     proportional at a 30-50% dup rate, so AQE picks broadcast only
     when the runtime size fits, the triangle-count lesson). The
@@ -1094,16 +1095,16 @@ def _events_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "freq",
             "monetary",
         )
-        .localCheckpoint(eager=True)  # feeds 3 ranks + the count: one events scan
+        .transform(cut)  # feeds 3 ranks + the count: one events scan
     )
     n_tot = per_user.agg(F.count(F.lit(1)).alias("__n"))
 
     def ntile5(rn: F.Column) -> F.Column:
         q = _idiv(F.col("__n"), F.lit(5))
         r = F.col("__n") - q * 5
-        cut = r * (q + 1)
-        return F.when(rn <= cut, _idiv(rn - 1, q + 1) + 1).otherwise(
-            r + _idiv(rn - cut - 1, q) + 1
+        split = r * (q + 1)
+        return F.when(rn <= split, _idiv(rn - 1, q + 1) + 1).otherwise(
+            r + _idiv(rn - split - 1, q) + 1
         )
 
     seg = per_user

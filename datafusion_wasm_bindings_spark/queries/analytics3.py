@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.queries import query
 from datafusion_wasm_bindings_spark.queries._util import DEC, dsum
 from datafusion_wasm_bindings_spark.sources.catalog import table
@@ -49,7 +50,7 @@ def _stats_entropy_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize the |X|x|Y|-row table once (house pattern for
         # reused subtrees): every derived marginal/entropy branch below
         # would otherwise re-derive it — 6 scans of the fact table.
-        .localCheckpoint()
+        .transform(cut)
     )
     tot = joint.agg(F.sum("cnt").cast("long").alias("n"))
     px = joint.groupBy("o_orderpriority").agg(F.sum("cnt").cast("long").alias("nx"))
@@ -127,7 +128,7 @@ def _stats_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority").alias("x"), F.col("o_orderstatus").alias("y")
         )
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()  # one fact scan; marginals reuse the cells
+        .transform(cut)  # one fact scan; marginals reuse the cells
     )
     rx = joint.groupBy("x").agg(F.sum("cnt").cast("long").alias("nx"))
     cy = joint.groupBy("y").agg(F.sum("cnt").cast("long").alias("ny"))
@@ -309,7 +310,7 @@ def _stats_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("digit")
         .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-        .localCheckpoint()  # one fact scan; the total reuses the 9 rows
+        .transform(cut)  # one fact scan; the total reuses the 9 rows
     )
     tot = digits.agg(F.sum("n_obs").cast("long").alias("n_all"))
     freq = F.col("n_obs") / F.col("n_all")
@@ -380,7 +381,7 @@ def _ml_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n_g"),
             F.sum("t").cast("long").alias("s_g"),
         )
-        .localCheckpoint()  # one stats pass over the join
+        .transform(cut)  # one stats pass over the join
     )
     # global prior FROM the per-nation stats (25 rows) — re-deriving it
     # from j would run the orders⋈customer join a second time.
@@ -784,7 +785,7 @@ def _stats_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = (
         o.groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()  # one fact scan; marginals/diagonal reuse it
+        .transform(cut)  # one fact scan; marginals/diagonal reuse it
     )
     ra = m.groupBy("a").agg(F.sum("cnt").cast("long").alias("na"))
     cb = m.groupBy("b").agg(F.sum("cnt").cast("long").alias("nb"))
@@ -899,7 +900,7 @@ def _ml_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum(F.col("score"), "s_score"),
             F.sum("y").cast("long").alias("s_y"),
         )
-        .localCheckpoint()  # one fact scan; total + ECE reuse the bins
+        .transform(cut)  # one fact scan; total + ECE reuse the bins
     )
     tot = g.agg(F.sum("n_bin").cast("long").alias("n_all"))
     conf = F.col("s_score") / F.col("n_bin")
@@ -1229,7 +1230,7 @@ def _ml_woe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum("t").cast("long").alias("n_pos"),
         )
-        .localCheckpoint()  # one stats pass; totals reuse the 25 rows
+        .transform(cut)  # one stats pass; totals reuse the 25 rows
     )
     w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     staged = g.select(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.queries import query
 from datafusion_wasm_bindings_spark.queries._util import DEC, dsum
 from datafusion_wasm_bindings_spark.sources.catalog import table
@@ -195,7 +196,7 @@ def _sales_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # monotone bucket of the DESC sort key: -rev/1000 rises as rev falls
     b = per_cust.withColumn(
         "bkt", F.floor(-F.col("rev") / 1000.0).cast("long")
-    ).localCheckpoint(eager=True)  # feeds bucket sums, totals, and the final pass
+    ).transform(cut)  # feeds bucket sums, totals, and the final pass
     bs = b.groupBy("c_nationkey", "bkt").agg(
         F.sum(F.col("rev").cast(DEC)).alias("bsum")
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.operators.scale import hash_prefilter_join
 from datafusion_wasm_bindings_spark.queries import query
 from datafusion_wasm_bindings_spark.queries._util import dsum, dsum_sql, nsjoin
@@ -213,7 +214,7 @@ def auc_from_scores(d: DataFrame, *, bucket_scale: float = 8000.0) -> DataFrame:
 
     The distinct-score table ``g`` feeds the bucket offsets, the rank
     join, AND the totals — uncut, each branch re-runs the fact scan +
-    aggregate (the r3 contingency-cells lesson). One localCheckpoint
+    aggregate (the r3 contingency-cells lesson). One lineage cut
     bounds the fact work at exactly one scan; ``g`` is no larger than
     what the groupBy shuffle already materialized
     (plan-asserted: tests/test_plans.py
@@ -225,7 +226,7 @@ def auc_from_scores(d: DataFrame, *, bucket_scale: float = 8000.0) -> DataFrame:
             F.sum("label").cast("long").alias("p"),
         )
         .withColumn("__bkt", F.floor(F.col("score") * bucket_scale).cast("long"))
-        .localCheckpoint()
+        .transform(cut)
     )
     bs = g.groupBy("__bkt").agg(F.sum("n").alias("bn"))
     w_pref = (
@@ -384,7 +385,7 @@ def ks_from_scores(d: DataFrame, *, bucket_scale: float = 8000.0) -> DataFrame:
     The 1-row totals and max rows attach via broadcast nested-loop
     joins (1-row build side — the allowed scalar-attachment shape)."""
     # distinct-score table: feeds offsets, the rank join, and totals —
-    # one localCheckpoint = one fact scan (see auc_from_scores)
+    # one lineage cut = one fact scan (see auc_from_scores)
     g = (
         d.groupBy("score")
         .agg(
@@ -393,7 +394,7 @@ def ks_from_scores(d: DataFrame, *, bucket_scale: float = 8000.0) -> DataFrame:
         )
         .withColumn("nb", (F.col("n") - F.col("na")).cast("long"))
         .withColumn("__bkt", F.floor(F.col("score") * bucket_scale).cast("long"))
-        .localCheckpoint()
+        .transform(cut)
     )
     bs = g.groupBy("__bkt").agg(
         F.sum("na").alias("ba"), F.sum("nb").alias("bb")
@@ -511,7 +512,7 @@ def _ml_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded work with 1-row broadcast attachments."""
     d = _src_score(spark, sf_dir)
     # bounded |bins| table: feeds both totals and terms — one
-    # localCheckpoint = one fact scan (see auc_from_scores)
+    # lineage cut = one fact scan (see auc_from_scores)
     g = (
         d.groupBy(
             F.floor(F.col("score") * _PSI_BINS_SCALE).cast("long").alias("bin")
@@ -521,7 +522,7 @@ def _ml_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("is_a").cast("long")).cast("long").alias("na"),
         )
         .withColumn("nb", (F.col("n") - F.col("na")).cast("long"))
-        .localCheckpoint()
+        .transform(cut)
     )
     t = g.agg(
         F.sum("na").cast("long").alias("n_a"),
@@ -636,7 +637,7 @@ def _rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # dots, which the oracle's join-on-components formulation drops
         # implicitly (adversarial NULL replay, r5)
         .filter(F.col("s1").isNotNull() & F.col("s2").isNotNull())
-        .localCheckpoint(eager=True)
+        .transform(cut)
     )
     r1 = bucketed_rank(
         c,
@@ -644,7 +645,7 @@ def _rank_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         equidepth_bucket(c, -F.col("s1")),
         [F.col("s1").desc(), F.col("vec_id").asc()],
         rank_col="r1",
-    ).localCheckpoint(eager=True)
+    ).transform(cut)
     r2 = bucketed_rank(
         r1,
         [],

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.queries import QUERIES, query, sql_query
 from datafusion_wasm_bindings_spark.queries._util import dsum_sql
 from datafusion_wasm_bindings_spark.sources.catalog import table
@@ -321,7 +322,7 @@ def _pipeline_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (both pair members share a component, hence a
     representative, hence a split).
 
-    Scale posture: pairs is localCheckpointed ONCE (single-scan rule —
+    Scale posture: pairs is cut ONCE (single-scan rule —
     it feeds both the CC rounds and the audit; without the cut the
     audit re-runs the whole inverted-index build). comps is CC's
     already-materialized label RDD, consumed three times for free. The
@@ -339,7 +340,7 @@ def _pipeline_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_full = table(spark, sf_dir, "documents").filter("doc_id < 200")
     pairs = ngram_jaccard_pairs(
         docs_full, threshold=0.9, max_doc_freq=160
-    ).localCheckpoint()
+    ).transform(cut)
     comps = connected_components(pairs).selectExpr(
         "node AS doc_id", "comp AS cluster_id"
     )
@@ -1101,7 +1102,7 @@ def _text_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     cm = (
         pred.groupBy(F.col("lang"), F.col("lang_pred"))
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()
+        .transform(cut)
     )
     support = cm.groupBy("lang").agg(F.sum("n").cast("long").alias("n_true"))
     predtot = cm.groupBy("lang_pred").agg(F.sum("n").cast("long").alias("n_pred"))

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.queries import query
 from datafusion_wasm_bindings_spark.queries._util import dsum, dsum_sql
 from datafusion_wasm_bindings_spark.sources.catalog import table
@@ -452,7 +453,7 @@ def _q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the aggregate feeds BOTH the MAX scalar and the filter join —
     # materialize it once so lineitem isn't scanned/re-aggregated twice
     # (house pattern, same as q_tpch_q11's reused subtree)
-    rev = rev.localCheckpoint(eager=True)
+    rev = cut(rev)
     mx = rev.agg(F.max("total_revenue").alias("mx"))
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
@@ -857,7 +858,7 @@ def _q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(s), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
         .agg(dsum(_rev(), "value"))
-        .localCheckpoint()
+        .transform(cut)
     )
     tot = per_part.agg(
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("tv")

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_wasm_bindings_spark.operators.checkpoint import cut
 from datafusion_wasm_bindings_spark.queries._util import dsum
 from datafusion_wasm_bindings_spark.sources.catalog import normalize_event_ts
 
@@ -644,7 +645,7 @@ def streaming_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_totalprice").alias("price"),
         )
     )
-    out = snapshot.localCheckpoint()  # materialize before scratch cleanup
+    out = cut(snapshot)  # materialize before scratch cleanup
     shutil.rmtree(root, ignore_errors=True)
     return out
 

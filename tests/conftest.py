@@ -9,6 +9,7 @@ import math
 import os
 import sys
 from collections import Counter
+from contextlib import contextmanager
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -26,6 +27,24 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark("dfwb-spark-tests", shuffle_partitions=8)
     yield s
+
+
+@contextmanager
+def checkpoint_dir(spark, path):
+    """Make every lineage cut inside the block durable, into ``path``.
+
+    The checkpoint dir lives on the session-wide SparkContext, so the
+    previous dir (normally none) comes back on exit: no later test in the
+    process cuts into this one's temp dir. Yields the dir Spark made
+    (a fresh subdir of ``path``)."""
+    sc = spark.sparkContext
+    old = sc.getCheckpointDir()
+    sc.setCheckpointDir(str(path))
+    try:
+        yield sc.getCheckpointDir()
+    finally:
+        # setCheckpointDir would nest a fresh subdir under ``old``; restore it exactly
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(old))
 
 
 @pytest.fixture(scope="session")

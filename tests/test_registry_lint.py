@@ -107,3 +107,72 @@ def test_sql_query_runs_through_compat_rewrite(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(compat, "rewrite", counting)
     REGISTRY["q_cte"].spark_fn(spark, sf_dir)
     assert len(calls) == 1, calls
+
+
+def _package_sources():
+    import pathlib
+
+    import datafusion_wasm_bindings_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    return [(p.relative_to(root).as_posix(), p.read_text()) for p in sorted(root.rglob("*.py"))]
+
+
+def test_every_lineage_cut_goes_through_the_session_policy():
+    """One cut policy: only operators/checkpoint.py calls
+    localCheckpoint/checkpoint, and no barrier takes its own dir."""
+    direct = [
+        f"{rel}:{i}"
+        for rel, text in _package_sources()
+        if rel != "operators/checkpoint.py"
+        for i, line in enumerate(text.splitlines(), 1)
+        if ".localCheckpoint(" in line or ".checkpoint(" in line
+    ]
+    assert not direct, f"lineage cuts outside operators/checkpoint.cut: {direct}"
+    knobs = [
+        rel for rel, text in _package_sources()
+        if "make_checkpointer" in text or "checkpoint_dir" in text
+    ]
+    assert not knobs, f"per-call checkpoint knobs (the session's dir decides): {knobs}"
+
+
+# Every driver-side collect() in operators/ and streaming/, by module and
+# enclosing function, with the bound that keeps what it pulls small at
+# any input size.
+DRIVER_COLLECTS = [
+    ("operators/clustering.py", "fit_kmeans", "k seed vectors (limit(k))"),
+    ("operators/clustering.py", "fit_kmeans", "k x dims partial sums per Lloyd round"),
+    ("operators/dedup.py", "signature", "one row: a global count + bit_xor"),
+    ("operators/similarity.py", "ivf_index", "n_train training vectors (limit(n_train))"),
+    ("operators/similarity.py", "pq_index", "n_train training vectors (limit(n_train))"),
+    ("streaming/events.py", "streaming_late_data_demo", "the hourly windows of a fixed 6-event demo"),
+]
+
+
+def test_every_driver_collect_is_bounded():
+    import ast
+    from collections import Counter
+
+    found = Counter()
+    for rel, text in _package_sources():
+        if not rel.startswith(("operators/", "streaming/")):
+            continue
+
+        def visit(node, fn):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                fn = node.name
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "collect"
+            ):
+                found[(rel, fn)] += 1
+            for child in ast.iter_child_nodes(node):
+                visit(child, fn)
+
+        visit(ast.parse(text), None)
+    listed = Counter((rel, fn) for rel, fn, _ in DRIVER_COLLECTS)
+    assert found == listed, (
+        f"unlisted: {sorted((found - listed).elements())}; "
+        f"stale: {sorted((listed - found).elements())}"
+    )

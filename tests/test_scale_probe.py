@@ -40,7 +40,9 @@ def test_case_table():
 @pytest.mark.parametrize("case", probe.CASES, ids=lambda c: c.id)
 def test_case_smoke(spark, case, tmp_path, monkeypatch):
     monkeypatch.setattr(probe, "_PROBE_LOG", str(tmp_path / "probe_log.txt"))
+    ckdir = spark.sparkContext.getCheckpointDir()
     xs = probe.run_case(spark, case, smoke=True)
+    assert spark.sparkContext.getCheckpointDir() == ckdir  # no case leaks its dir
     assert [len(x.t) for x in xs] == [len(case.ops)] * len(case.smoke)
     assert all(t > 0 for x in xs for t in x.t)
     assert (tmp_path / "probe_log.txt").read_text().count("warm median") == len(case.ops) * len(xs)

@@ -31,7 +31,7 @@ from datafusion_wasm_bindings_spark.operators import (
     asof, clustering, dedup, graph, multimodal, profiling, rangejoin, scale, similarity,
 )
 from datafusion_wasm_bindings_spark.operators import text as optext
-from datafusion_wasm_bindings_spark.operators.checkpoint import make_checkpointer
+from datafusion_wasm_bindings_spark.operators.checkpoint import release
 from datafusion_wasm_bindings_spark.queries._util import DEC, dsum
 from datafusion_wasm_bindings_spark.queries.analytics5 import ks_from_scores
 from datafusion_wasm_bindings_spark.session import get_spark
@@ -80,7 +80,7 @@ class Size(SimpleNamespace):
 
     def cp(self, df):
         df = df.localCheckpoint()
-        self.undo.append(lambda: make_checkpointer(None).release(df))
+        self.undo.append(lambda: release(df))
         return df
 
     def tmpdir(self, prefix: str) -> str:
@@ -92,6 +92,14 @@ class Size(SimpleNamespace):
         old, conf = self.spark.conf.get(key, None), self.spark.conf
         conf.set(key, value)
         self.undo.append(lambda: conf.set(key, old) if old is not None else conf.unset(key))
+
+    def checkpoint_dir(self, prefix: str) -> None:
+        """Cut lineage durably into a fresh temp dir until the size is done."""
+        sc, d = self.spark.sparkContext, self.tmpdir(prefix)
+        old = sc.getCheckpointDir()
+        sc.setCheckpointDir(d)
+        # setCheckpointDir would nest a fresh subdir under ``old``; restore it exactly
+        self.undo.append(lambda: getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.apply(old)))
 
 
 class Op(NamedTuple):
@@ -475,11 +483,12 @@ def _pr_mixed(x):
         .unionByName(x.spark.range(n).select(src, ((F.col("id") + 1) % n).alias("dst")))
         .unionByName(x.spark.range(8 * n).select(
             F.expr(f"pmod(xxhash64(id), {n})").alias("src"), F.expr(f"pmod(xxhash64(id + 13), {n})").alias("dst"))))
-    x.ckdir = x.tmpdir("dfwb_durable_probe_")
 
 
-def _pr_ranks(x, ckdir=None):
-    return sorted((r.node, round(r.rank, 9)) for r in graph.pagerank(x.df, iters=3, checkpoint_dir=ckdir).collect())
+def _pr_ranks(x, durable=False):
+    if durable and x.spark.sparkContext.getCheckpointDir() is None:
+        x.checkpoint_dir("dfwb_durable_probe_")
+    return sorted((r.node, round(r.rank, 9)) for r in graph.pagerank(x.df, iters=3).collect())
 
 
 _VEC = "CAST(pmod(xxhash64(id * 64 + d), 2001) - 1000 AS DOUBLE) / 1000.0"
@@ -950,7 +959,7 @@ CASES = [
     # same ranks: the delta is the per-round storage round-trip
     Case("durable", _pr_mixed, [
         Op("pagerank {scale} edges, localCheckpoint cuts (3 rounds)", _pr_ranks),
-        Op("pagerank {scale} edges, durable storage checkpoints", lambda x: _pr_ranks(x, x.ckdir))],
+        Op("pagerank {scale} edges, durable storage checkpoints", lambda x: _pr_ranks(x, durable=True))],
         [dict(scale="2M", n=2_000_000, nodes=200_000)], [dict(scale="20k", n=20_000, nodes=2_000)],
         sweep=True, agree=True),
     Case("cc_chain", _chain, [Op(
