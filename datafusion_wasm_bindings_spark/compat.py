@@ -48,6 +48,24 @@ ARROW_TO_SPARK_TYPE = {
     "Date64": "DATE",
 }
 
+# Spark typeof() name → Arrow type name as DataFusion's arrow_typeof
+# prints it (datafusion/functions arrow_typeof; the reference compiles
+# it in via datafusion-functions, Cargo.lock:783).
+_ARROW_TYPE_NAMES = {
+    "tinyint": "Int8",
+    "smallint": "Int16",
+    "int": "Int32",
+    "bigint": "Int64",
+    "float": "Float32",
+    "double": "Float64",
+    "string": "Utf8",
+    "boolean": "Boolean",
+    "date": "Date32",
+    "binary": "Binary",
+    "timestamp": 'Timestamp(Microsecond, Some("UTC"))',
+    "timestamp_ntz": "Timestamp(Microsecond, None)",
+}
+
 
 _QUOTE_OR_COMMENT_RE = re.compile(r"['\"]|--|/\*")
 
@@ -240,20 +258,22 @@ _DATE_BIN_RE = re.compile(
     re.IGNORECASE,
 )
 
-# DataFusion function spelling → Spark builtin, where a bare token
+# DataFusion function spelling → Spark function, where a bare token
 # rename is exact (args and semantics identical). Applied to the
-# masked statement so string literals are never touched.
+# masked statement so string literals are never touched. Only names
+# Spark does not resolve itself belong here: a name Spark has with
+# other semantics needs a call rewrite instead (strpos, trunc, … in
+# ``rewrite``). tests/test_compat.py checks both sides of every entry.
 FN_RENAMES = {
     "ends_with": "endswith",
     "starts_with": "startswith",
     "to_hex": "hex",
     "datetrunc": "date_trunc",
-    "datepart": "date_part",
     "today": "current_date",
     "substr_index": "substring_index",
     "list_extract": "element_at",  # both 1-based
-    "character_length": "char_length",
-    "gcd": "dfwb_gcd",  # registered pandas UDFs (functions/shims.py)
+    "approx_distinct": "approx_count_distinct",
+    "gcd": "dfwb_gcd",  # session-registered (functions/shims.py)
     "lcm": "dfwb_lcm",
     "regexp_match": "dfwb_regexp_match",
 }
@@ -290,6 +310,21 @@ def _parse_args(s: str, open_paren: int) -> tuple[list[str], int]:
     if tail or args:
         args.append(tail)
     return args, i
+
+
+def _enclosing_close(masked: str, start: int) -> int:
+    """Index of the ')' that closes the parenthesis enclosing
+    ``masked[start]`` — the end of the subquery around it — or
+    ``len(masked)`` at the top level."""
+    depth = 0
+    for i in range(start, len(masked)):
+        if masked[i] == "(":
+            depth += 1
+        elif masked[i] == ")":
+            depth -= 1
+            if depth < 0:
+                return i
+    return len(masked)
 
 
 def _rewrite_calls(masked: str, name: str, make: "callable") -> str:
@@ -329,17 +364,7 @@ def rewrite_distinct_on(masked: str) -> str:
         if not m2:
             return masked
         s = m2.start()
-        depth = 0
-        e = len(masked)
-        for i in range(s, len(masked)):
-            ch = masked[i]
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    e = i
-                    break
+        e = _enclosing_close(masked, s)
         m = _DISTINCT_ON_RE.match(masked[s:e])
         if not m:
             # unparseable shape: leave the statement untouched rather
@@ -422,26 +447,13 @@ def _depths(masked: str) -> list:
     return out
 
 
-def _balanced_end(masked: str, open_paren: int) -> int:
-    """Index just past the ')' matching ``masked[open_paren] == '('``."""
-    depth = 0
-    for i in range(open_paren, len(masked)):
-        if masked[i] == "(":
-            depth += 1
-        elif masked[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-    return len(masked)
-
-
 def rewrite_groups_frames(masked: str) -> str:
     counter = 0
     while re.search(r"\bGROUPS\b", masked, re.IGNORECASE):
         target = None
         for m in _OVER_RE.finditer(masked):
             op = m.end() - 1
-            end = _balanced_end(masked, op)
+            end = _parse_args(masked, op)[1]
             wm = _GROUPS_WIN_RE.match(masked[op + 1 : end - 1])
             if wm and "EXCLUDE" not in wm.group("frame").upper():
                 target = (m.start(), end, wm)
@@ -457,11 +469,7 @@ def rewrite_groups_frames(masked: str) -> str:
                 sel_start = sm.start()
         if sel_start is None:
             return masked
-        span_end = len(masked)
-        for i in range(s_over, len(masked)):
-            if depth[i] < d0:
-                span_end = i
-                break
+        span_end = _enclosing_close(masked, s_over)
         from_pos = None
         for fm in _FROM_RE.finditer(masked, sel_start, span_end):
             if depth[fm.start()] == d0:
@@ -481,7 +489,7 @@ def rewrite_groups_frames(masked: str) -> str:
             if depth[abs_over] != d0:
                 continue
             op = base + m.end() - 1
-            end = _balanced_end(masked, op)
+            end = _parse_args(masked, op)[1]
             wm = _GROUPS_WIN_RE.match(masked[op + 1 : end - 1])
             if wm is None or "EXCLUDE" in wm.group("frame").upper():
                 continue
@@ -632,6 +640,12 @@ def rewrite(sql: str) -> str:
         "strpos",
         lambda a: f"locate({a[1]}, {a[0]})" if len(a) == 2 else f"locate({', '.join(a)})",
     )
+    # approx_median(x) → approximate 0.5 percentile, as DataFusion
+    # defines it; Spark's sketch returns an input value where
+    # DataFusion's t-digest may interpolate between two
+    masked = _rewrite_calls(
+        masked, "approx_median", lambda a: f"percentile_approx({a[0]}, 0.5)"
+    )
     # iszero(x) → exact ±0.0 test, null-safe like any comparison
     masked = _rewrite_calls(
         masked, "iszero", lambda a: f"(CAST({a[0]} AS DOUBLE) = 0.0D)"
@@ -671,10 +685,6 @@ def rewrite(sql: str) -> str:
     # space); unmapped names pass through.
     # typeof is constant-folded, so the repeated subexpression is free.
     def arrow_typeof_repl(a: list[str]) -> str:
-        from datafusion_wasm_bindings_spark.functions.shims import (
-            _ARROW_TYPE_NAMES,
-        )
-
         t = f"typeof({a[0]})"
         cases = " ".join(
             f"WHEN {t} = '{k}' THEN '{v}'" for k, v in _ARROW_TYPE_NAMES.items()

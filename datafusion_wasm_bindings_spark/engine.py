@@ -414,12 +414,15 @@ class SQLEngine:
 
     def _explain_analyze(self, m: re.Match, lits: list[str]) -> DataFrame:
         # reference: EXPLAIN ANALYZE executes and reports metrics.
-        # Spark's EXPLAIN never executes, so run the query first and
-        # return the post-AQE executed plan (the plan that actually
-        # ran, with runtime-chosen joins/partition counts).
-        df = self._dispatch(_unmask(m["body"], lits))
-        n = df.count()
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        # Spark's EXPLAIN never executes, so run the statement's own
+        # physical plan first (toRdd: the jobs a collect() runs, with
+        # the rows counted on the executors) and return that plan in
+        # its final post-AQE form, runtime-chosen joins and partition
+        # counts included. df.count() would run a different plan,
+        # pruned to no columns, and leave df's own plan unexecuted.
+        qe = self._dispatch(_unmask(m["body"], lits))._jdf.queryExecution()
+        n = qe.toRdd().count()
+        plan = qe.executedPlan().toString()
         lines = [f"rows: {n}"] + plan.splitlines()
         return local_rows(self.spark, [(line,) for line in lines], "plan string")
 

@@ -1,1 +1,3 @@
-"""functions subpackage (filled in during the build; see SURVEY.md §7)."""
+"""SQL functions the engine registers in each session
+(``shims.ensure_registered``); the DataFusion → Spark function-name
+map itself lives in ``compat.py``."""

@@ -17,9 +17,7 @@ all transcendental outputs are rounded to 6 decimals on BOTH sides
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from datafusion_wasm_bindings_spark.queries import query, sql_query
+from datafusion_wasm_bindings_spark.queries import sql_query
 
 # --- core: null handling ----------------------------------------------
 sql_query(
@@ -150,39 +148,29 @@ sql_query(
 )
 
 # --- introspection: arrow_typeof / version (SURVEY §2.8 "—" rows) ---------
-def _typeof_version(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from datafusion_wasm_bindings_spark.engine import SQLEngine
-    from datafusion_wasm_bindings_spark.functions.shims import arrow_typeof
-
-    version_ok = SQLEngine(spark).sql(
-        "SELECT dfwb_version() RLIKE '^datafusion-wasm-bindings-spark' AS ok"
-    ).collect()[0].ok
-    return spark.range(1).select(
-        arrow_typeof(F.lit(1).cast("bigint")).alias("t_int64"),
-        arrow_typeof(F.lit(1).cast("int")).alias("t_int32"),
-        arrow_typeof(F.lit(1.5)).alias("t_float64"),
-        arrow_typeof(F.lit("x")).alias("t_utf8"),
-        arrow_typeof(F.lit(True)).alias("t_bool"),
-        arrow_typeof(F.lit(None).cast("date")).alias("t_date32"),
-        arrow_typeof(F.lit("9.99").cast("decimal(4,2)")).alias("t_decimal"),
-        F.lit(bool(version_ok)).alias("version_ok"),
-    )
-
-
 # oracle = the exact Arrow type names DataFusion's arrow_typeof prints;
 # version() can't value-match across engines, so the checked column is
 # the boolean contract "version() matches this engine's identity".
-query(
+# Spark SQL reads 1.5 as DECIMAL(2,1): the Float64 probe is 1.5D.
+sql_query(
     "q_fn_typeof_version",
     """
+    SELECT arrow_typeof(CAST(1 AS BIGINT)) AS t_int64,
+           arrow_typeof(CAST(1 AS INT)) AS t_int32,
+           arrow_typeof(1.5D) AS t_float64,
+           arrow_typeof('x') AS t_utf8,
+           arrow_typeof(TRUE) AS t_bool,
+           arrow_typeof(CAST(NULL AS DATE)) AS t_date32,
+           arrow_typeof(CAST('9.99' AS DECIMAL(4,2))) AS t_decimal,
+           dfwb_version() RLIKE '^datafusion-wasm-bindings-spark' AS version_ok
+    """,
+    oracle="""
     SELECT 'Int64' AS t_int64, 'Int32' AS t_int32, 'Float64' AS t_float64,
            'Utf8' AS t_utf8, 'Boolean' AS t_bool, 'Date32' AS t_date32,
            'Decimal128(4, 2)' AS t_decimal, TRUE AS version_ok
     """,
     tags=("functions", "introspection"),
-)(_typeof_version)
+)
 
 
 # --- strings: basic -------------------------------------------------------
@@ -204,11 +192,11 @@ sql_query(
            octet_length(c_name) AS octets
     FROM customer WHERE c_custkey <= 200
     """,
-    # DuckDB's octet_length takes BLOB, not VARCHAR. `cat` demonstrates
-    # the ENGINE's concat — DataFusion/Postgres/DuckDB concat SKIPS
-    # NULL arguments, Spark's propagates them (functions/shims.concat),
-    # so the Spark side spells it concat_ws('') to match the surface
-    # the engine actually exposes (adversarial NULL replay, r5).
+    # DuckDB's octet_length takes BLOB, not VARCHAR. `cat`: DataFusion/
+    # Postgres/DuckDB concat SKIPS NULL arguments, while the engine's
+    # SQL concat is Spark's, which propagates them (ROADMAP small
+    # carries), so the Spark side spells it concat_ws('') (adversarial
+    # NULL replay, r5).
     oracle="""
     SELECT c_custkey,
            length(c_name) AS len,

@@ -64,17 +64,6 @@ def test_information_schema_columns(engine, spark, sf_dir):
     assert cols == ["r_regionkey", "r_name"]
 
 
-def test_concat_shim_skips_nulls(spark):
-    # DataFusion/Postgres concat skips NULLs; Spark's null-propagates.
-    from pyspark.sql import functions as F
-
-    from datafusion_wasm_bindings_spark.functions.shims import concat
-
-    df = spark.createDataFrame([("a", None), (None, None)], "x string, y string")
-    rows = df.select(concat(F.col("x"), F.lit("-"), F.col("y")).alias("r")).collect()
-    assert [r.r for r in rows] == ["a-", "-"]
-
-
 def test_gcd_lcm_jvm_shims_exact(spark):
     # gcd/lcm run as a bounded Euclid fold (96 mod steps) in Catalyst's
     # `aggregate` higher-order function — no Python workers. The
@@ -197,10 +186,25 @@ def test_datafusion_function_spellings_through_engine(spark):
         "SELECT trunc(DATE '2024-05-15', 'MM') AS r": "2024-05-01",
         "SELECT today() IS NOT NULL AS r": "true",
         "SELECT character_length('abc') AS r": "3",
+        "SELECT datepart('year', DATE '2024-05-15') AS r": "2024",
     }
     for sql, want in cases.items():
         out = eng.execute_sql(sql)
         assert want.lower() in out.lower(), f"{sql} -> {out}"
+
+
+def test_fn_renames_are_pure_renames(spark):
+    """Every FN_RENAMES key is a name Spark does not resolve, and every
+    target one it does once the session's shims are registered. A name
+    Spark already resolves keeps Spark's meaning, so where DataFusion's
+    differs it needs a call rewrite, not a rename."""
+    from datafusion_wasm_bindings_spark.compat import FN_RENAMES
+    from datafusion_wasm_bindings_spark.functions.shims import ensure_registered
+
+    ensure_registered(spark)
+    exists = spark.catalog.functionExists
+    assert [k for k in FN_RENAMES if exists(k)] == []
+    assert [v for v in FN_RENAMES.values() if not exists(v)] == []
 
 
 def test_information_schema_views_and_settings(engine, spark, sf_dir):
@@ -273,6 +277,14 @@ _DIALECT_CASES = {
         "SELECT p_partkey, gcd(p_size - 25, 24) AS g, lcm(p_size % 5, 4) AS l "
         "FROM part WHERE p_partkey <= 200",
         "same",
+    ),
+    "approx_distinct": (
+        "SELECT approx_distinct(n_regionkey) AS n FROM nation",
+        "SELECT count(DISTINCT n_regionkey) AS n FROM nation",
+    ),
+    "approx_median": (
+        "SELECT approx_median(n_nationkey) AS m FROM nation",
+        "SELECT quantile_disc(n_nationkey, 0.5) AS m FROM nation",
     ),
 }
 

@@ -4,9 +4,10 @@
 Each statement runs under its own job group and its jobs are counted
 with the status tracker. The engine's own result rows (PREPARE,
 DEALLOCATE, EXPLAIN, DDL, COPY's count) are local relations and run no
-job; COPY runs its query once, inside the write; and the session's
-codegen cache holds more classes than one statement mix generates, so
-re-running the mix compiles nothing.
+job; COPY runs its query once, inside the write; EXPLAIN ANALYZE runs
+exactly its statement's jobs; and the session's codegen cache holds
+more classes than one statement mix generates, so re-running the mix
+compiles nothing.
 """
 
 from __future__ import annotations
@@ -73,6 +74,24 @@ def test_execute_binds_its_arguments_without_a_job(engine):
     assert "42" in out and "2024-02-29" in out
     assert n == body_jobs
     engine.execute_sql("DEALLOCATE cost_e")
+
+
+def test_explain_analyze_runs_the_statements_own_jobs(engine, sf_dir):
+    # EXPLAIN ANALYZE runs the plain statement's plan, no other: the
+    # same jobs, and the plan it prints is the final adaptive one
+    from datafusion_wasm_bindings_spark.sources.catalog import register_tables
+
+    register_tables(engine.spark, sf_dir)
+    query = (
+        "SELECT o_orderpriority, COUNT(*) AS n, SUM(l_quantity) AS q "
+        "FROM orders JOIN lineitem ON o_orderkey = l_orderkey GROUP BY o_orderpriority"
+    )
+    rows = len(engine.sql(query).collect())
+    _, plain_jobs = _jobs(engine.spark, lambda: engine.execute_sql(query))
+    out, n = _jobs(engine.spark, lambda: engine.execute_sql(f"EXPLAIN ANALYZE {query}"))
+    assert n == plain_jobs
+    assert "isFinalPlan=true" in out
+    assert f"rows: {rows} " in out
 
 
 def test_copy_runs_the_jobs_of_one_write(engine, tmp_path):
