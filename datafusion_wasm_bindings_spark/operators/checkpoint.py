@@ -19,8 +19,9 @@ Which cut is read from the session, not passed in:
   conf ``spark.checkpoint.dir``, HDFS/S3A/local): reliable
   ``checkpoint`` — state is written to fault-tolerant storage, so a
   1000-executor PageRank over a 100 TB edge list survives executor
-  loss at the cost of one storage round-trip per cut. The dir's
-  lifecycle belongs to whoever set it.
+  loss at the cost of one storage round-trip per cut. ``release``
+  deletes a spent cut's files; the dir itself belongs to whoever set
+  it.
 """
 
 from __future__ import annotations
@@ -39,26 +40,30 @@ def cut(df: DataFrame) -> DataFrame:
 
 
 def release(df: DataFrame | None) -> None:
-    """Free the blocks of a spent local cut.
+    """Free the storage of a spent cut: a local cut's blocks, a
+    reliable cut's checkpoint files.
 
     Iterative operators MUST call it on the PREVIOUS round's cut once
-    the new round is materialized, or block storage grows
-    O(rounds x state) and evicts execution memory — the r7 star-CC probe
-    OOM'd an 8 g heap at a 10M-node chain (~30 alternations x ~200 MB of
-    deserialized edge blocks) exactly this way. It is safe ONLY on state
-    no later step reads: local blocks are unrecoverable, so unpersisting
-    a live one fails the job rather than silently recomputing. A
-    reliable cut keeps its files (they are the fault-tolerance story),
-    so it is left alone. The kind is read from the cut's RDD, not from
-    the session, whose dir may have changed since the cut."""
+    the new round is materialized, or storage grows O(rounds x state):
+    the r7 star-CC probe OOM'd an 8 g heap at a 10M-node chain (~30
+    alternations x ~200 MB of deserialized edge blocks) exactly this
+    way. It is safe ONLY on state no later step reads: neither kind is recomputed once freed, so releasing a
+    live cut fails the job. The kind is read from the cut's RDD, not
+    from the session, whose dir may have changed since the cut."""
     if df is None:
         return
     try:
         # both kinds of cut leave a LogicalRDD plan root holding the
-        # checkpointed RDD; unpersist frees exactly its blocks, nothing
-        # shared
+        # checkpointed RDD; unpersist frees exactly its blocks, and a
+        # reliable cut's files sit in one rdd-<id> dir of its own
         rdd = df._jdf.queryExecution().analyzed().rdd()
         if rdd.isLocallyCheckpointed():
             rdd.unpersist(False)
+            return
+        ckpt = rdd.getCheckpointFile()
+        if ckpt.isDefined():
+            sc = df.sparkSession.sparkContext
+            path = sc._jvm.org.apache.hadoop.fs.Path(ckpt.get())
+            path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
     except Exception:
         pass  # advisory: failing to free must never fail the job

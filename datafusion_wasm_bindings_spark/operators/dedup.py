@@ -545,12 +545,15 @@ def prepare_cc_edges(
     parallelism (spark.sql.shuffle.partitions) — on a mismatch the
     planner disables the bucketed scan rather than de-parallelize
     the label side (operators/graph.prepare_pagerank_edges)."""
-    from datafusion_wasm_bindings_spark.operators.scale import write_bucketed
+    from datafusion_wasm_bindings_spark.operators.scale import (
+        sorted_bucketed_scan,
+        write_bucketed,
+    )
 
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     write_bucketed(und, table_name, "b", buckets=buckets, path=path)
-    return spark.table(table_name)
+    return sorted_bucketed_scan(spark, table_name)
 
 
 def connected_components(
@@ -634,6 +637,8 @@ def connected_components(
             f"connected_components did not converge in {max_iters} rounds "
             "(graph diameter too large) — use connected_components_star"
         )
+    if not prepared:
+        release(edges)  # the final labels are materialized without it
     return labels
 
 

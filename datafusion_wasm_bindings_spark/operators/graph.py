@@ -90,6 +90,7 @@ def pagerank(
         # ONCE and checkpoint, so each round joins ranks only (one join +
         # one aggregate per iteration instead of two joins)
         ed = cut(e.join(deg, "src"))
+        release(e)  # read only by the materialized ``ed``
         # no-dangling precondition ⇒ node set == distinct sources == deg's
         # keys: one shuffle instead of two
         nodes = cut(ed.select(F.col("src").alias("node")).distinct())
@@ -151,12 +152,15 @@ def prepare_pagerank_edges(
     a mismatch the planner disables the bucketed scan rather than
     de-parallelize the rank side (observed: 4 buckets vs 32 shuffle
     partitions reads un-bucketed)."""
-    from datafusion_wasm_bindings_spark.operators.scale import write_bucketed
+    from datafusion_wasm_bindings_spark.operators.scale import (
+        sorted_bucketed_scan,
+        write_bucketed,
+    )
 
     e = edges.select("src", "dst").distinct()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     write_bucketed(e.join(deg, "src"), table_name, "src", buckets=buckets, path=path)
-    return spark.table(table_name)
+    return sorted_bucketed_scan(spark, table_name)
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
@@ -252,7 +256,10 @@ def prepare_bfs_edges(
     join then plans no exchange on the O(|E|) edge side — only the
     frontier (usually broadcast-sized anyway) moves. Match ``buckets``
     to the join's target parallelism (see prepare_pagerank_edges)."""
-    from datafusion_wasm_bindings_spark.operators.scale import write_bucketed
+    from datafusion_wasm_bindings_spark.operators.scale import (
+        sorted_bucketed_scan,
+        write_bucketed,
+    )
 
     write_bucketed(
         edges.select("src", "dst").distinct(),
@@ -261,7 +268,7 @@ def prepare_bfs_edges(
         buckets=buckets,
         path=path,
     )
-    return spark.table(table_name)
+    return sorted_bucketed_scan(spark, table_name)
 
 
 def bfs_levels(

@@ -292,46 +292,79 @@ def _nearest_idx(sv, cb_arr, ss_arr, n: int):
     )["i"]
 
 
-def _argmin_idx_driver(
-    v: list[float], cents: list[list[float]], css: list[float]
-) -> int:
-    """Driver twin of ``_nearest_idx`` for ONE vector: same score
-    d = css[i] − 2.0·(left-fold dot), same total order (a NULL score —
-    any length mismatch, mirroring zip_with's null padding — sorts
-    FIRST; NaN sorts GREATEST, Java Double semantics; ties break to the
-    LOWEST index). Every add/multiply replays the Spark expression's
-    IEEE sequence, so the picked index is bit-for-bit the one
-    ``_nearest_idx`` returns (pinned by
-    tests/test_operators.py::test_driver_lloyd_fit_matches_spark_fit)."""
-    import math
-
-    best = None
-    for i, cv in enumerate(cents):
-        if len(cv) != len(v):
-            # zip_with pads the shorter array with NULL → NULL dot →
-            # NULL score; struct ordering puts NULL first (smallest)
-            key = (0, False, 0.0, i)
-        else:
-            acc = 0.0
-            for a, b in zip(v, cv):
-                acc = acc + a * b
-            d = css[i] - 2.0 * acc
-            key = (1, math.isnan(d), d, i)
-        if best is None or key < best:
-            best = key
-    return best[3]
+# training rows scored at once by _lloyd_round: driver memory is
+# O(block × cells), not O(n_train × cells) (4096 cells × 204,800 rows
+# unblocked = a 6.7 GB score matrix)
+_LLOYD_BLOCK = 1024
 
 
-def _avg_update_driver(
-    sums: dict, counts: dict, key: tuple, dim: int, x: float
-) -> None:
-    """One avg-accumulation step with Spark Sum semantics: the first
-    value is ASSIGNED (buffer starts null), later values added — keeps
-    ±0.0 signs exactly as Spark's Sum does."""
-    k = (*key, dim)
-    prev = sums.get(k)
-    sums[k] = x if prev is None else prev + x
-    counts[k] = counts.get(k, 0) + 1
+def _train_matrix(base: DataFrame, n_train: int):
+    """The bounded train sample — the ``n_train`` lowest vec_ids, in
+    vec_id order — as ONE driver-side n × dim float64 matrix, collected
+    by one corpus TakeOrdered; None for an empty corpus. Vectors of
+    unequal length cannot form the matrix: the first one whose length
+    differs from the lowest vec_id's is rejected by id."""
+    import numpy as np
+
+    rows = base.orderBy("vec_id").limit(n_train).collect()
+    if not rows:
+        return None
+    dim = len(rows[0]["v"])
+    for r in rows:
+        if len(r["v"]) != dim:
+            raise ValueError(
+                f"training vector vec_id={r['vec_id']} has {len(r['v'])} "
+                f"dims, vec_id={rows[0]['vec_id']} has {dim}"
+            )
+    return np.array([r["v"] for r in rows], dtype=np.float64)
+
+
+def _lloyd_round(X, C):
+    """One Lloyd round on the driver: assign every row of ``X`` (n ×
+    dim) to its nearest centroid of ``C`` (k × dim) and return each
+    cell's member mean (k × dim; NaN where empty) and member count (k).
+
+    It replays the Spark-side fit's IEEE sequence exactly — the
+    ``_nearest_idx`` argmin, then a per-cell avg over the vec_id-ordered
+    sample — pinned bit for bit by tests/test_operators.py::
+    test_driver_lloyd_fit_matches_spark_fit:
+
+    - score ‖c‖² − 2.0·x·c, the dot and ‖c‖² each a left fold over
+      dims, one multiply and one add per step (``X @ C.T`` would block
+      the sum and may fuse multiply-add, which changes the bits);
+    - ties go to the lowest index; NaN sorts greatest (a finite score
+      or a real +inf beats an earlier NaN); an all-NaN row goes to 0;
+    - sums start at −0.0, the IEEE additive identity, and add rows in
+      order (``np.add.at``): Spark Sum's assign-first rule, −0.0 kept.
+    """
+    import numpy as np
+
+    k, dim = C.shape
+    sums = np.full((k, dim), -0.0)
+    counts = np.zeros(k, dtype=np.int64)
+    # inf/NaN inputs give IEEE inf/NaN scores and sums, as in Spark
+    with np.errstate(all="ignore"):
+        css = np.zeros(k)
+        for j in range(dim):
+            css += C[:, j] * C[:, j]
+        for lo in range(0, len(X), _LLOYD_BLOCK):
+            xb = X[lo : lo + _LLOYD_BLOCK]
+            acc = np.zeros((len(xb), k))
+            for j in range(dim):
+                acc += xb[:, j, None] * C[None, :, j]
+            score = css - 2.0 * acc
+            masked = np.where(np.isnan(score), np.inf, score)
+            cell = masked.argmin(axis=1)
+            # +inf minimum: either a real +inf (the first one wins over
+            # any NaN) or an all-NaN row (cell 0)
+            top = masked[np.arange(len(xb)), cell] == np.inf
+            if top.any():
+                real = score[top] == np.inf
+                cell[top] = np.where(real.any(axis=1), real.argmax(axis=1), 0)
+            np.add.at(sums, cell, xb)
+            counts += np.bincount(cell, minlength=k)
+        means = sums / counts[:, None]
+    return means, counts
 
 
 def _assign_cells(base: DataFrame, cents: list[list[float]]) -> DataFrame:
@@ -407,13 +440,13 @@ def ivf_index(
     # the driver (r13 job fold, guide §1.2/§5): the sample is
     # driver-scale state BY DESIGN (standard IVF practice — the
     # quantizer needs a distribution sketch, not the corpus), so the
-    # seed pick and every Lloyd round now run as driver code instead of
+    # seed pick and every Lloyd round run as driver code instead of
     # one Spark job each (was: checkpoint job + seeds job + a
-    # collect per Lloyd round). The driver fit replays the Spark
-    # expressions' exact IEEE sequences (_argmin_idx_driver /
-    # _avg_update_driver) and is order-deterministic (TakeOrdered's
-    # vec_id total order), pinned bit-identical to the Spark-side fit
-    # by tests/test_operators.py::test_driver_lloyd_fit_matches_spark_fit.
+    # collect per Lloyd round). Each round is one vectorized
+    # _lloyd_round, which replays the Spark expressions' exact IEEE
+    # sequences over the vec_id-ordered sample, pinned bit-identical to
+    # the Spark-side fit by
+    # tests/test_operators.py::test_driver_lloyd_fit_matches_spark_fit.
     # SAMPLE-ORDER CAVEAT (ADVICE r8, resolved r9 by measurement): the
     # deterministic lowest-vec_id prefix assumes ids are UNCORRELATED
     # with vector content; on a corpus where content tracks id
@@ -426,13 +459,9 @@ def ivf_index(
     # contract; hash-prefix seeds and farthest-point seeding both
     # degraded fixture recall (outlier-chasing). The prefix sample is
     # the only variant with verified recall at every scale tested.
-    train_rows: list[list[float]] = [
-        [float(x) for x in r["v"]]
-        for r in base.orderBy("vec_id").limit(n_train).collect()
-    ]
-    cents: list[list[float]] = [list(v) for v in train_rows[:n_centroids]]
+    X = _train_matrix(base, n_train)
     spark = embeddings.sparkSession
-    if not cents:
+    if X is None:
         # EMPTY corpus: typed empty index (empty-mode replay r7 — never
         # build an argmin over zero choices)
         empty_a = spark.createDataFrame(
@@ -440,27 +469,11 @@ def ivf_index(
         )
         empty_c = spark.createDataFrame([], "cell bigint, cv array<double>")
         return empty_a, empty_c
+    cents = X[:n_centroids]
     for _ in range(lloyd_iters):
-        # element-wise mean per cell over the driver-held sample —
-        # identical accumulation order to the old Spark collect (the
-        # checkpointed TakeOrdered sample was one vec_id-sorted
-        # partition, so Spark's per-group avg consumed values in
-        # exactly this row order); cells that drop empty are re-indexed
-        # positionally as before
-        css = [float(sum(x * x for x in cv)) for cv in cents]
-        sums: dict[tuple[int, int], float] = {}
-        counts: dict[tuple[int, int], int] = {}
-        for v in train_rows:
-            cell = _argmin_idx_driver(v, cents, css)
-            for dim, x in enumerate(v):
-                _avg_update_driver(sums, counts, (cell,), dim, x)
-        by_cell: dict[int, dict[int, float]] = {}
-        for (cell, dim), s in sums.items():
-            by_cell.setdefault(cell, {})[dim] = s / counts[(cell, dim)]
-        cents = [
-            [dims[i] for i in sorted(dims)]
-            for _, dims in sorted(by_cell.items())
-        ]
+        means, counts = _lloyd_round(X, cents)
+        cents = means[counts > 0]  # empty cells drop, the rest renumber
+    cents = cents.tolist()
     assignments = cut(_assign_cells(base, cents))
     centroids = spark.createDataFrame(
         [(cell, cv) for cell, cv in enumerate(cents)],
@@ -859,15 +872,12 @@ def pq_index(
     # ONE corpus TakeOrdered collects the bounded train sample to the
     # driver (r13 job fold — see ivf_index for the full rationale and
     # the SAMPLE-ORDER CAVEAT): seeds, dimensionality, and every Lloyd
-    # round are now driver code (was: checkpoint job + seeds job + a
-    # join+explode+avg collect per Lloyd round). Bit-identical to the
-    # Spark-side fit — pinned by tests/test_operators.py::
-    # test_driver_lloyd_fit_matches_spark_fit.
-    train_rows: list[list[float]] = [
-        [float(x) for x in r["v"]]
-        for r in base.orderBy("vec_id").limit(n_train).collect()
-    ]
-    if not train_rows:
+    # round are driver code (was: checkpoint job + seeds job + a
+    # join+explode+avg collect per Lloyd round), one _lloyd_round per
+    # subspace a round. Bit-identical to the Spark-side fit — pinned by
+    # tests/test_operators.py::test_driver_lloyd_fit_matches_spark_fit.
+    X = _train_matrix(base, n_train)
+    if X is None:
         # EMPTY corpus: no dimensionality to probe, no codebook to
         # train — return typed empty frames so callers compose to an
         # empty result instead of crashing (empty-mode replay r7)
@@ -881,39 +891,18 @@ def pq_index(
     # dimensionality read from the sample rows already on the driver —
     # the old separate first()-probe was one more full-plan job per
     # index build for a value the sample carries anyway (r12)
-    dim = len(train_rows[0])
-    sub_len = dim // m_subspaces
+    sub_len = X.shape[1] // m_subspaces
+    subs = [X[:, i * sub_len : (i + 1) * sub_len] for i in range(m_subspaces)]
     # books[sub][code] = sub_len doubles; seeded from the n_codes
     # lowest vec_ids' subvectors
-    books: list[list[list[float]]] = [
-        [
-            list(v[i * sub_len : (i + 1) * sub_len])
-            for v in train_rows[:n_codes]
-        ]
-        for i in range(m_subspaces)
-    ]
+    books = [sx[:n_codes].copy() for sx in subs]
     for _ in range(lloyd_iters):
-        # per-(sub, code, dim) mean over the driver-held sample — same
-        # encounter order (vec_id-sorted rows) and IEEE sequences as
-        # the old Spark join+posexplode+avg collect
-        css = [
-            [float(sum(x * x for x in cv)) for cv in book] for book in books
-        ]
-        sums: dict[tuple[int, int, int], float] = {}
-        counts: dict[tuple[int, int, int], int] = {}
-        for v in train_rows:
-            for si in range(m_subspaces):
-                sv = v[si * sub_len : (si + 1) * sub_len]
-                ci = _argmin_idx_driver(sv, books[si], css[si])
-                for d, x in enumerate(sv):
-                    _avg_update_driver(sums, counts, (si, ci), d, x)
-        upd: dict[tuple[int, int], dict[int, float]] = {}
-        for (si, ci, d), s in sums.items():
-            upd.setdefault((si, ci), {})[d] = s / counts[(si, ci, d)]
-        for (si, ci), dims in upd.items():
-            books[si][ci] = [dims[d] for d in sorted(dims)]
-        # (sub, code) cells with no members keep their previous
-        # centroid — dead codes stay addressable, ids never renumber
+        for sx, book in zip(subs, books):
+            means, counts = _lloyd_round(sx, book)
+            # codes with no members keep their previous centroid —
+            # dead codes stay addressable, ids never renumber
+            book[counts > 0] = means[counts > 0]
+    books = [book.tolist() for book in books]
     codes = cut(_encode_codes(base, books, sub_len))
     cb = spark.createDataFrame(
         [

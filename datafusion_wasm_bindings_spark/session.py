@@ -123,16 +123,6 @@ def get_spark(
         # 0.316→0.200 s per build. Costs only error-message context.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # bucketed scans report their sortBy ordering (only possible
-        # when each bucket is ONE file — operators/scale.write_bucketed
-        # guarantees that layout): downstream sort-merge joins then
-        # skip re-sorting the bucketed side on EVERY read. Measured r13
-        # on q_graph_pagerank: the per-round SMJ's Sort over the
-        # 1.18M-row edge side disappears from the plan (plans/r13).
-        # Cost: planning lists files of bucketed tables — only the
-        # repo's own prepared tables, and at 100 TB one listing per
-        # plan vs a full-table sort per iteration is the right trade.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
         # events.parquet carries TIMESTAMP(NANOS) which Spark rejects by
         # default (FIXTURES.md: ns → µs policy). Read nanos as long and
         # convert to µs timestamps at the view layer (sources/catalog.py).

@@ -592,62 +592,63 @@ def streaming_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = tempfile.mkdtemp(prefix="dfwb_stream_upsert_")
-    src = os.path.join(root, "changes")
-    # one parquet file per change wave → one micro-batch per wave
-    updates.coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "w1"))
-    deletes.coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "w2"))
-
-    state = {"path": os.path.join(root, "state0")}
-    base.write.mode("overwrite").parquet(state["path"])
-    w = Window.partitionBy("o_orderkey").orderBy(F.col("version").desc())
-
-    def merge(batch_df, batch_id):
-        cur = batch_df.sparkSession.read.parquet(state["path"])
-        merged = (
-            cur.unionByName(batch_df)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        nxt = os.path.join(root, f"state{batch_id + 1}")
-        merged.write.mode("overwrite").parquet(nxt)
-        state["path"] = nxt
-
-    # the per-batch MERGE (window over |state| rows + parquet rewrite)
-    # runs on the stream's session: size its shuffle width to the state
-    # snapshot it rewrites each batch, not the tiny change feed — at
-    # production state sizes the clamp keeps the configured width
-    state_bytes = sum(
-        os.path.getsize(os.path.join(state["path"], f))
-        for f in os.listdir(state["path"])
-        if f.endswith(".parquet")
-    )
-    sess = _sized_stream_session(spark, state_bytes)
-    stream = (
-        sess.readStream.schema(sess.read.parquet(os.path.join(src, "w1")).schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    q = stream.writeStream.foreachBatch(merge).start()
     try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+        src = os.path.join(root, "changes")
+        # one parquet file per change wave → one micro-batch per wave
+        updates.coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "w1"))
+        deletes.coalesce(1).write.mode("overwrite").parquet(os.path.join(src, "w2"))
 
-    snapshot = (
-        spark.read.parquet(state["path"])
-        .filter((F.col("op") != "D") & (F.col("o_orderkey") % 5 == 0))
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            F.col("o_orderstatus").alias("status"),
-            F.col("o_totalprice").alias("price"),
+        state = {"path": os.path.join(root, "state0")}
+        base.write.mode("overwrite").parquet(state["path"])
+        w = Window.partitionBy("o_orderkey").orderBy(F.col("version").desc())
+
+        def merge(batch_df, batch_id):
+            cur = batch_df.sparkSession.read.parquet(state["path"])
+            merged = (
+                cur.unionByName(batch_df)
+                .withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+            nxt = os.path.join(root, f"state{batch_id + 1}")
+            merged.write.mode("overwrite").parquet(nxt)
+            state["path"] = nxt
+
+        # the per-batch MERGE (window over |state| rows + parquet rewrite)
+        # runs on the stream's session: size its shuffle width to the state
+        # snapshot it rewrites each batch, not the tiny change feed — at
+        # production state sizes the clamp keeps the configured width
+        state_bytes = sum(
+            os.path.getsize(os.path.join(state["path"], f))
+            for f in os.listdir(state["path"])
+            if f.endswith(".parquet")
         )
-    )
-    out = cut(snapshot)  # materialize before scratch cleanup
-    shutil.rmtree(root, ignore_errors=True)
-    return out
+        sess = _sized_stream_session(spark, state_bytes)
+        stream = (
+            sess.readStream.schema(sess.read.parquet(os.path.join(src, "w1")).schema)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(src)
+        )
+        q = stream.writeStream.foreachBatch(merge).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+        snapshot = (
+            spark.read.parquet(state["path"])
+            .filter((F.col("op") != "D") & (F.col("o_orderkey") % 5 == 0))
+            .select(
+                "o_orderkey",
+                "o_custkey",
+                F.col("o_orderstatus").alias("status"),
+                F.col("o_totalprice").alias("price"),
+            )
+        )
+        return cut(snapshot)  # materialize before scratch cleanup
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def streaming_sessions(

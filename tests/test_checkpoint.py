@@ -50,15 +50,18 @@ def _cutting_module() -> str:
     return "?"
 
 
-def _spy_on_cuts(spark, monkeypatch) -> list[tuple[str, str, bool]]:
-    """Record (kind, module, RDD locally checkpointed) for every cut made."""
+def _spy_on_cuts(spark, monkeypatch) -> list[tuple[str, str, bool, str | None]]:
+    """Record (kind, module, RDD locally checkpointed, checkpoint files
+    on disk when cut or None) for every cut made."""
     cls, seen = type(spark.range(1)), []
     for kind in ("localCheckpoint", "checkpoint"):
 
         def spy(df, *args, _real=getattr(cls, kind), _kind=kind, **kwargs):
             out = _real(df, *args, **kwargs)
             rdd = out._jdf.queryExecution().analyzed().rdd()
-            seen.append((_kind, _cutting_module(), rdd.isLocallyCheckpointed()))
+            f = rdd.getCheckpointFile()
+            f = f.get() if f.isDefined() and os.path.isdir(f.get().removeprefix("file:")) else None
+            seen.append((_kind, _cutting_module(), rdd.isLocallyCheckpointed(), f))
             return out
 
         monkeypatch.setattr(cls, kind, spy)
@@ -76,26 +79,26 @@ def test_every_barrier_cuts_by_the_session_checkpoint_dir(spark, sf_dir, tmp_pat
     for module, qid in CUTTING_IDS.items():
         del seen[:]
         local[qid] = _rows(registry[qid].spark_fn(spark, sf_dir))
-        assert {m for _, m, _ in seen} >= {module}, (qid, seen)
-        assert all(k == "localCheckpoint" and lc for k, _, lc in seen), (qid, seen)
+        assert {m for _, m, _, _ in seen} >= {module}, (qid, seen)
+        assert all(k == "localCheckpoint" and lc and f is None for k, _, lc, f in seen), (qid, seen)
 
     with checkpoint_dir(spark, tmp_path / "ck") as ck:
-        ck = ck.removeprefix("file:")
         for module, qid in CUTTING_IDS.items():
             del seen[:]
-            before = set(os.listdir(ck))
             assert _rows(registry[qid].spark_fn(spark, sf_dir)) == local[qid], qid
-            assert {m for _, m, _ in seen} >= {module}, (qid, seen)
-            assert all(k == "checkpoint" and not lc for k, _, lc in seen), (qid, seen)
-            assert set(os.listdir(ck)) > before, f"{qid}: no checkpoint files written"
+            assert {m for _, m, _, _ in seen} >= {module}, (qid, seen)
+            assert all(k == "checkpoint" and not lc for k, _, lc, _ in seen), (qid, seen)
+            # every cut wrote its files under the session dir (spent
+            # ones are deleted again by release)
+            assert all(f and f.startswith(ck + "/") for _, _, _, f in seen), (qid, seen)
     assert spark.sparkContext.getCheckpointDir() is None
 
 
 def test_write_bucketed_under_a_checkpoint_dir(spark, tmp_path, monkeypatch):
     """VERDICT r13 #3: the layout barrier honours the session dir and
     keeps one file per bucket on a union-fed input (the 288-file trap),
-    the bucketed join plans no exchange, and ``release`` leaves the
-    durable cut readable."""
+    the bucketed join plans no exchange, and ``release`` deletes the
+    spent durable cut's files."""
     from datafusion_wasm_bindings_spark.operators import scale
 
     cuts, real_cut = [], scale.cut
@@ -111,8 +114,9 @@ def test_write_bucketed_under_a_checkpoint_dir(spark, tmp_path, monkeypatch):
     try:
         assert len(cuts) == 2
         for c in cuts:
-            assert not c._jdf.queryExecution().analyzed().rdd().isLocallyCheckpointed()
-            assert c.count() == 6000  # released, yet still readable from its files
+            rdd = c._jdf.queryExecution().analyzed().rdd()
+            assert not rdd.isLocallyCheckpointed()
+            assert not os.path.exists(rdd.getCheckpointFile().get().removeprefix("file:"))
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = scale.bucketed_join(spark, "ckpt_bkt_l", "ckpt_bkt_r", "k")
         plan = joined._jdf.queryExecution().executedPlan().toString()
@@ -123,3 +127,54 @@ def test_write_bucketed_under_a_checkpoint_dir(spark, tmp_path, monkeypatch):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS ckpt_bkt_l")
         spark.sql("DROP TABLE IF EXISTS ckpt_bkt_r")
+
+
+def _cut_files_read(df) -> set[str]:
+    """The rdd-* dirs of the durable cuts ``df``'s plan reads."""
+    leaves, out = df._jdf.queryExecution().analyzed().collectLeaves(), set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            f = leaf.rdd().getCheckpointFile()
+            if f.isDefined():
+                out.add(os.path.basename(f.get()))
+    return out
+
+
+def test_release_deletes_spent_durable_cuts(spark, sf_dir, tmp_path):
+    """Under a checkpoint dir, the rdd-* dirs an iterative operator
+    leaves are exactly those its result still reads: ``release``
+    deletes every spent round's files, so their number does not grow
+    with the number of rounds."""
+    from datafusion_wasm_bindings_spark.operators.dedup import connected_components
+    from datafusion_wasm_bindings_spark.operators.graph import pagerank
+
+    registry = load_all()
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 1) % 20) for i in range(20)] + [(i, (i + 1) % 20) for i in range(20)],
+        "src long, dst long",
+    )
+
+    def chain(n):  # min-label propagation needs ~n rounds on an n-node path
+        return spark.createDataFrame([(i, i + 1) for i in range(n)], "id_a long, id_b long")
+
+    runs = {
+        "q_graph_pagerank": lambda: registry["q_graph_pagerank"].spark_fn(spark, sf_dir),
+        "q_dedup_clusters": lambda: registry["q_dedup_clusters"].spark_fn(spark, sf_dir),
+        "pagerank 2 rounds": lambda: pagerank(edges, iters=2),
+        "pagerank 6 rounds": lambda: pagerank(edges, iters=6),
+        "min-label CC, 3-edge chain": lambda: connected_components(chain(3)),
+        "min-label CC, 12-edge chain": lambda: connected_components(chain(12)),
+    }
+    left = {}
+    with checkpoint_dir(spark, tmp_path / "ck") as ck:
+        ck = ck.removeprefix("file:")
+        for name, run in runs.items():
+            before = set(os.listdir(ck))
+            out = run()
+            left[name] = set(os.listdir(ck)) - before
+            assert left[name] == _cut_files_read(out), name
+            assert left[name] and all(d.startswith("rdd-") for d in left[name]), name
+            out.collect()  # the kept files still serve the result
+    assert len(left["pagerank 2 rounds"]) == len(left["pagerank 6 rounds"]), left
+    assert len(left["min-label CC, 3-edge chain"]) == len(left["min-label CC, 12-edge chain"]), left

@@ -2499,28 +2499,114 @@ def test_driver_lloyd_fit_matches_spark_fit(spark, sf_dir):
             assert bits(got_books[(si, ci)]) == bits(cv), f"PQ book ({si},{ci}) diverged"
 
 
-def test_argmin_idx_driver_edge_semantics():
-    """The driver argmin twin's corner cases, matched to _nearest_idx /
-    Spark struct ordering: NaN scores sort GREATEST (non-NaN wins);
-    all-NaN ties break to the lowest index; a length-mismatched
-    centroid (zip_with null padding -> NULL score) sorts FIRST."""
-    from datafusion_wasm_bindings_spark.operators.similarity import (
-        _argmin_idx_driver,
-    )
+def test_lloyd_round_argmin_edge_semantics():
+    """_lloyd_round's argmin corner cases, matched to _nearest_idx /
+    Spark struct ordering: NaN scores sort GREATEST (a finite score or
+    a real +inf wins, even at a higher index); an all-NaN row goes to
+    index 0; plain ties break to the lowest index."""
+    import numpy as np
+
+    from datafusion_wasm_bindings_spark.operators.similarity import _lloyd_round
 
     nan = float("nan")
-    # css chosen so d = css - 2*dot; vectors crafted per case
-    v = [1.0, 0.0]
-    # non-NaN beats NaN even at a higher index
-    cents = [[nan, 0.0], [1.0, 0.0]]
-    css = [nan, 1.0]
-    assert _argmin_idx_driver(v, cents, css) == 1
+    X = np.array([[1.0, 0.0]])
+
+    def cell(C):
+        _, counts = _lloyd_round(X, np.array(C))
+        assert counts.sum() == 1, counts
+        return int(counts.argmax())
+
+    # non-NaN beats NaN even at a higher index (score NaN vs -1.0)
+    assert cell([[nan, 0.0], [1.0, 0.0]]) == 1
+    # a real +inf beats an earlier NaN (‖c‖² overflows to inf, the dot
+    # stays finite: inf - 2e200 = inf)
+    assert cell([[nan, 0.0], [1e200, 0.0]]) == 1
     # all-NaN -> lowest index
-    assert _argmin_idx_driver(v, [[nan, 0.0], [nan, 0.0]], [nan, nan]) == 0
-    # length mismatch (NULL score) sorts before any real score
-    assert _argmin_idx_driver(v, [[0.0, 0.0], [5.0]], [0.0, 25.0]) == 1
-    # plain tie -> lowest index
-    assert _argmin_idx_driver(v, [[0.5, 0.5], [0.5, 0.5]], [0.5, 0.5]) == 0
+    assert cell([[nan, 0.0], [nan, 0.0]]) == 0
+    # plain tie -> lowest index, and the member's mean is its own row
+    assert cell([[0.5, 0.5], [0.5, 0.5]]) == 0
+    means, counts = _lloyd_round(X, np.array([[0.5, 0.5], [0.5, 0.5]]))
+    assert means[0].tolist() == [1.0, 0.0] and counts.tolist() == [1, 0]
+
+
+def _lloyd_reference(rows, cents):
+    """Per-element replay of one Spark-side Lloyd round: left-fold dots,
+    the (NaN last, score, index) argmin order, and sums that start with
+    the first member and add the rest in row order."""
+    import math
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    css = [dot(c, c) for c in cents]
+    sums, counts = {}, {}
+    for v in rows:
+
+        def key(i):
+            d = css[i] - 2.0 * dot(v, cents[i])
+            return (math.isnan(d), 0.0 if math.isnan(d) else d, i)
+
+        cell = min(range(len(cents)), key=key)
+        sums[cell] = [s + x for s, x in zip(sums[cell], v)] if cell in sums else list(v)
+        counts[cell] = counts.get(cell, 0) + 1
+    return {c: [s / counts[c] for s in sums[c]] for c in sums}, counts
+
+
+def test_lloyd_round_matches_per_element_reference():
+    """_lloyd_round is bit-identical to the per-element reference on
+    hostile samples: duplicate seeds (score ties that empty a cell),
+    zero and -0.0 vectors (the -0.0 sum identity), coarse grids (many
+    exact ties), and non-finite coordinates."""
+    import random
+    import struct
+
+    import numpy as np
+
+    from datafusion_wasm_bindings_spark.operators.similarity import _lloyd_round
+
+    def bits(vals):
+        return [struct.pack("<d", x) for x in vals]
+
+    for seed in range(4):
+        rnd = random.Random(seed)
+        rows = [[rnd.uniform(-1, 1) for _ in range(5)] for _ in range(300)]
+        if seed % 2:
+            rows = [[round(x * 2) / 2 for x in r] for r in rows]
+        rows[1], rows[3] = list(rows[0]), list(rows[0])
+        rows[4], rows[7] = [0.0] * 5, [-0.0] * 5
+        rows[150:160] = [[-0.0] * 5] * 10
+        # a far cell whose members are all -0.0 in dim 0
+        rows[5] = [-0.0, 5.0, 5.0, 5.0, 5.0]
+        rows[200:210] = [list(rows[5])] * 10
+        if seed == 3:
+            rows[2][0], rows[9][1], rows[11][0] = float("inf"), float("-inf"), float("nan")
+        for k in (1, 8, 40):
+            want_means, want_counts = _lloyd_reference(rows, rows[:k])
+            means, counts = _lloyd_round(np.array(rows), np.array(rows[:k]))
+            assert {c: int(n) for c, n in enumerate(counts) if n} == want_counts, (seed, k)
+            for c, m in want_means.items():
+                assert bits(means[c].tolist()) == bits(m), (seed, k, c)
+
+
+def test_ann_index_rejects_unequal_training_vectors(spark):
+    """Training vectors of unequal length cannot form the driver's
+    train matrix: ivf_index and pq_index raise ValueError naming the
+    first mismatched vec_id (in vec_id order)."""
+    from datafusion_wasm_bindings_spark.operators.similarity import ivf_index, pq_index
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [5.0]), (4, [1.0, 1.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+    for build in (
+        lambda: ivf_index(emb, n_centroids=2),
+        lambda: pq_index(emb, m_subspaces=2, n_codes=2),
+    ):
+        with pytest.raises(ValueError, match="vec_id=3 "):
+            build()
 
 
 def test_ann_index_build_job_count(spark):

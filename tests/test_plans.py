@@ -1342,6 +1342,37 @@ def test_pagerank_prepared_edges_no_edge_exchange(spark, sf_dir, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_pr_edges")
 
 
+def test_prepared_pagerank_scan_is_sorted_without_the_session_conf(spark, tmp_path):
+    """The sorted bucketed scan travels with the operator: in a session
+    with bucketedTableScan.outputOrdering set to false,
+    prepare_pagerank_edges still returns a scan that reports its sortBy
+    order, so the prepared round's sort-merge join plans neither a Sort
+    nor an Exchange on the edge side."""
+    from datafusion_wasm_bindings_spark.operators.graph import (
+        pagerank,
+        prepare_pagerank_edges,
+    )
+
+    conf = "spark.sql.legacy.bucketedTableScan.outputOrdering"
+    edges = spark.createDataFrame(
+        [(i % 13, (i * 3 + 1) % 13) for i in range(200)], "src long, dst long"
+    )
+    buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    spark.conf.set(conf, "false")
+    try:
+        prep = prepare_pagerank_edges(
+            spark, edges, "bkt_pr_sorted", buckets=buckets, path=str(tmp_path / "pr")
+        )
+        plan = _plan(pagerank(prep, iters=1, prepared=True))
+        assert "Bucketed: true" in plan, plan
+        # the rank join's left child is the edge side, down to its scan
+        edge_side = plan.split("SortMergeJoin [src", 1)[1].split("FileScan parquet", 1)[0]
+        assert "Sort " not in edge_side and "Exchange" not in edge_side, plan
+    finally:
+        spark.conf.unset(conf)
+        spark.sql("DROP TABLE IF EXISTS bkt_pr_sorted")
+
+
 def test_bfs_cc_prepared_edges_identity_and_bucketed_scan(spark, sf_dir, tmp_path):
     """prepare_bfs_edges / prepare_cc_edges: results identical to the
     un-prepared operators, and the per-round edge side is a bucketed

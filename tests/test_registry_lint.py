@@ -143,8 +143,7 @@ DRIVER_COLLECTS = [
     ("operators/clustering.py", "fit_kmeans", "k seed vectors (limit(k))"),
     ("operators/clustering.py", "fit_kmeans", "k x dims partial sums per Lloyd round"),
     ("operators/dedup.py", "signature", "one row: a global count + bit_xor"),
-    ("operators/similarity.py", "ivf_index", "n_train training vectors (limit(n_train))"),
-    ("operators/similarity.py", "pq_index", "n_train training vectors (limit(n_train))"),
+    ("operators/similarity.py", "_train_matrix", "n_train training vectors (limit(n_train))"),
     ("streaming/events.py", "streaming_late_data_demo", "the hourly windows of a fixed 6-event demo"),
 ]
 

@@ -44,6 +44,25 @@ def test_stateful_running_totals_match_batch(spark, sf_dir, monkeypatch, tmp_pat
         assert abs(got[u][1] - want[u][1]) < 1e-6, u
 
 
+def test_incremental_upsert_removes_scratch_when_merge_fails(spark, sf_dir, monkeypatch, tmp_path):
+    """A failing per-batch merge fails the call, and the upsert's
+    scratch root (change waves + state snapshots) is removed anyway."""
+    import pytest
+
+    from datafusion_wasm_bindings_spark.streaming.events import streaming_incremental_upsert
+
+    left = _staged_dirs(monkeypatch, tmp_path, "dfwb_stream_upsert_")
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("merge failed")
+
+    # unionByName is first called inside the foreachBatch merge
+    monkeypatch.setattr(type(spark.range(1)), "unionByName", boom)
+    with pytest.raises(Exception, match="merge failed"):
+        streaming_incremental_upsert(spark, sf_dir)
+    assert left() == []
+
+
 def test_streaming_matches_batch(spark, sf_dir):
     stream_out = {
         (r.ws, r.event_type): r.n for r in streaming_demo(spark, sf_dir).collect()
