@@ -116,31 +116,19 @@ def chunk_documents(
     the window, else ``ceil((n − chunk)/stride) + 1`` — the final
     window is allowed to be short.
 
-    Pure map + explode: tokens materialize once per doc (the HOF
-    re-evaluation rule — see operators/dedup.py), windows slice that
-    array, and no shuffle exists at any corpus size.
+    Pure map + explode: one row per chunk id, each slicing the doc's
+    token array once; no shuffle exists at any corpus size.
     """
-    from pyspark.sql import functions as F
-
-    from datafusion_wasm_bindings_spark.operators.dedup import tokens
-
-    toks = documents.select("doc_id", tokens().alias("__toks"))
+    toks = documents.select("doc_id", tokens_col().alias("__toks"))
     n = F.size("__toks")
     n_chunks = F.when(n <= chunk_tokens, F.lit(1)).otherwise(
         F.ceil((n - chunk_tokens) / F.lit(float(stride))) + 1
     )
-    sized = toks.select("doc_id", n.alias("n_tokens"), "__toks", n_chunks.alias("__nc"))
-    exploded = sized.select(
+    exploded = toks.select(
         "doc_id",
-        "n_tokens",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.col("__nc") - 1),
-                lambda i: F.concat_ws(
-                    " ", F.slice("__toks", i * stride + 1, chunk_tokens)
-                ),
-            )
-        ).alias("chunk_id", "chunk_text"),
+        n.alias("n_tokens"),
+        "__toks",
+        F.explode(F.sequence(F.lit(0), n_chunks.cast("int") - 1)).alias("chunk_id"),
     )
     start = F.col("chunk_id") * stride
     return exploded.select(
@@ -151,7 +139,9 @@ def chunk_documents(
         F.greatest(
             F.least(F.lit(chunk_tokens), F.col("n_tokens") - start), F.lit(0)
         ).alias("n_chunk_tokens"),
-        "chunk_text",
+        F.concat_ws(" ", F.slice("__toks", start + 1, chunk_tokens)).alias(
+            "chunk_text"
+        ),
     )
 
 

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TOKEN_RE = "[a-z0-9]+"
+TOKEN_CHAR = "[a-z0-9]"
+TOKEN_RE = TOKEN_CHAR + "+"
 
 # Tiny built-in stopword lexicons for the n-gram/stopword language
 # heuristic. Real pipelines plug in fastText-style models via
@@ -33,18 +34,18 @@ def tokens_col(text_col: str = "text") -> F.Column:
 def token_counts(documents: DataFrame) -> DataFrame:
     """Whitespace + regex token counting (north-star 'token counting').
 
-    ws_tokens: split on whitespace runs; re_tokens: alnum runs (a
+    ws_tokens: maximal non-whitespace runs; re_tokens: alnum runs (a
     BPE-ish pre-tokenizer grain); chars from length().
 
-    Empty-text edge: Spark's ``split('')`` yields ``['']`` (size 1),
-    but an empty or whitespace-only document has zero tokens — the
-    filter below aligns with the oracle's ``list_filter(..., <> '')``
-    so a fixture with empty docs can't diverge.
+    ws_tokens counts ``\\S+`` matches of the trimmed text, which is by
+    construction the number of non-empty pieces of ``split(trim(text),
+    '\\s+')`` — the oracle's ``list_filter(..., <> '')`` form — so an
+    empty or whitespace-only document has zero tokens, not Spark's
+    ``split('') -> ['']`` one.
     """
-    ws = F.filter(F.split(F.trim(F.col("text")), "\\s+"), lambda t: t != "")
     return documents.select(
         "doc_id",
-        F.size(ws).alias("ws_tokens"),
+        F.regexp_count(F.trim(F.col("text")), F.lit(r"\S+")).alias("ws_tokens"),
         F.size(tokens_col()).alias("re_tokens"),
         F.length("text").alias("n_chars_measured"),
         F.col("n_chars").alias("n_chars_given"),
@@ -68,8 +69,13 @@ def bpe_pretokenize_counts(documents: DataFrame) -> DataFrame:
     vocab exists.
 
     Scale: pure map over the corpus, one regex pass; the match array is
-    materialized once in its own select (HOF re-evaluation rule,
-    operators/dedup.py) and every class count reads that array.
+    materialized once in its own select and every class count filters
+    that array. The class counts keep the match list (no per-class
+    ``regexp_count``): which class a span lands in depends on the
+    leftmost-first alternation over the whole pattern: in ``''s`` the
+    punctuation branch takes ``''`` first, leaving the word ``s``, so
+    a standalone count of ``'s`` would find a contraction that the
+    tokenizer never emits. Only the matches themselves classify.
     """
     matches = F.regexp_extract_all(F.col("text"), F.lit(BPE_PRETOKEN_RE), F.lit(0))
     base = documents.select("doc_id", matches.alias("toks"))
@@ -139,19 +145,26 @@ def tfidf_keywords(documents: DataFrame, *, k: int = 3) -> DataFrame:
     )
 
 
+def _lexicon_re(lang: str) -> str:
+    """``lang``'s lexicon words as whole tokens: a lexicon word with no
+    token character on either side is exactly a token (a maximal
+    ``TOKEN_RE`` run) equal to that word. Group 1 holds the word."""
+    return f"(?<!{TOKEN_CHAR})({'|'.join(LANG_LEXICON[lang])})(?!{TOKEN_CHAR})"
+
+
 def quality_scores(documents: DataFrame) -> DataFrame:
     """Heuristic quality features + a composite score ∈ [0,1]:
     length band, alpha ratio, mean token length, stopword ratio —
     the standard cheap pre-filters before model-based scoring.
 
-    Staged in two selects per the materialization rule (CLAUDE.md):
-    the token regexp and the alpha counter are each evaluated
-    ONCE into their own columns, then every feature reads the staged
-    integers. Inlined, the regexps re-ran per referencing column and
-    inside the HOF filter (outside codegen subexpression elimination)
-    — measured 73.8 s → much less at 2M docs (probe textmap). The
-    surfaced doubles are bit-identical: same integer inputs, same
-    expression order.
+    Staged per the materialization rule (CLAUDE.md): the token regexp
+    and the alpha counter are each evaluated ONCE into their own
+    columns, then every feature reads the staged integers. Inlined,
+    the regexps re-ran per referencing column — measured 73.8 s →
+    much less at 2M docs (probe textmap). One regex pass matches each
+    token once, capturing it only if it is a stopword: the token count
+    is the array's size, the stopword count its non-empty entries (a
+    second, stopword-only scan cost more than it saved on short words).
 
     The alpha count is ``length(lt) − length(translate(lt, a..z, ''))``
     — a per-codepoint table lookup, NOT the former
@@ -159,11 +172,8 @@ def quality_scores(documents: DataFrame) -> DataFrame:
     document through the regex engine: identical counts on every input
     (both count exactly the [a-z] codepoints after lower()), measured
     **7.36× on the whole operator** at 2M docs (29.2 → 4.0 s,
-    BASELINE.md r8 `alpha_ab`; per-doc cost was the regex, not the
-    tokenizer — the r8 tokenizer A/B measured split+filter at 0.91× of
-    regexp_extract_all, so the token path stays).
+    BASELINE.md r8 `alpha_ab`).
     """
-    en_stop = F.array([F.lit(w) for w in LANG_LEXICON["en"]])
     staged = documents.select(
         "doc_id",
         F.length("text").alias("__n_chars"),
@@ -173,15 +183,15 @@ def quality_scores(documents: DataFrame) -> DataFrame:
                 F.translate(F.lower("text"), "abcdefghijklmnopqrstuvwxyz", "")
             )
         ).alias("__alpha"),
-        tokens_col().alias("__toks"),
+        F.regexp_extract_all(
+            F.lower("text"), F.lit(f"{_lexicon_re('en')}|{TOKEN_RE}"), F.lit(1)
+        ).alias("__toks"),
     ).select(
         "doc_id",
         "__n_chars",
         "__alpha",
         F.size("__toks").alias("__n_tok"),
-        F.size(
-            F.filter(F.col("__toks"), lambda t: F.array_contains(en_stop, t))
-        ).alias("__n_stop"),
+        F.size(F.array_remove("__toks", "")).alias("__n_stop"),
     )
     n_tok = F.col("__n_tok")
     n_chars = F.col("__n_chars")
@@ -209,9 +219,9 @@ def language_id(documents: DataFrame, spark: SparkSession | None = None) -> Data
     with deterministic tiebreak (highest hits, then lexicographically
     greatest language code), 'und' (undetermined) when nothing matches.
 
-    Shape (r5 rewrite): a PURE MAP — the lexicons are bounded literal
-    arrays, so each language's hit count is an HOF filter over the
-    once-materialized token array and the argmax is ``array_max`` over
+    Shape (r5 rewrite): a PURE MAP — the lexicons are bounded literals,
+    so each language's hit count is one ``regexp_count`` (NULL text
+    counts 0) and the argmax is ``array_max`` over
     a |languages|-sized (hits, lang) struct array. ZERO shuffles at
     any corpus size. The previous explode → broadcast-join →
     groupBy(doc, lang) → groupBy(doc) → join-back formulation shuffled
@@ -221,13 +231,9 @@ def language_id(documents: DataFrame, spark: SparkSession | None = None) -> Data
     since the map variant shuffles NOTHING. The oracle keeps the
     join/group formulation: same output, different plan.
     """
-    langs = sorted(LANG_LEXICON)
-    base = documents.select("doc_id", "lang", tokens_col().alias("__toks"))
-
     def hits(lang: str) -> F.Column:
-        lex = F.array(*[F.lit(w) for w in LANG_LEXICON[lang]])
-        n = F.size(F.filter(F.col("__toks"), lambda t: F.array_contains(lex, t)))
-        return F.when(F.col("__toks").isNull(), F.lit(0)).otherwise(n).cast("long")
+        n = F.regexp_count(F.lower("text"), F.lit(_lexicon_re(lang)))
+        return F.coalesce(n, F.lit(0)).cast("long")
 
     # array_max over structs compares field-wise: (hits, lang_cand) —
     # exactly the old max_by(lang_cand, struct(hits, lang_cand)) order
@@ -235,16 +241,16 @@ def language_id(documents: DataFrame, spark: SparkSession | None = None) -> Data
         F.array(
             *[
                 F.struct(hits(lang).alias("hits"), F.lit(lang).alias("lang_cand"))
-                for lang in langs
+                for lang in sorted(LANG_LEXICON)
             ]
         )
     )
-    return base.select(
+    return documents.select("doc_id", "lang", best.alias("__best")).select(
         "doc_id",
-        F.when(best["hits"] > 0, best["lang_cand"])
+        F.when(F.col("__best.hits") > 0, F.col("__best.lang_cand"))
         .otherwise(F.lit("und"))
         .alias("lang_pred"),
-        best["hits"].alias("best_hits"),
+        F.col("__best.hits").alias("best_hits"),
         "lang",
     )
 

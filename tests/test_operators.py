@@ -383,17 +383,198 @@ def test_chunk_documents_covers_every_token_with_overlap(documents):
 
 def test_token_counts_empty_text_edge(spark):
     """Empty and whitespace-only docs have ZERO whitespace tokens —
-    Spark's split('') -> [''] quirk must not count one (operators/text.py
-    filter; the DuckDB oracle applies list_filter(..., <> '') the same
-    way)."""
+    Spark's split('') -> [''] quirk must not count one (the DuckDB
+    oracle applies list_filter(..., <> '')); NBSP and control
+    characters are not whitespace."""
     from datafusion_wasm_bindings_spark.operators.text import token_counts
 
     docs = spark.createDataFrame(
-        [(1, "", 0), (2, "   ", 3), (3, "two words", 9)],
+        [
+            (1, "", 0),
+            (2, "   ", 3),
+            (3, "two words", 9),
+            (4, None, None),
+            (5, "\t\n \x0b", 4),
+            (6, " a\tb\nc ", 7),
+            (7, "a\u00a0b", 3),  # NBSP is not \s: one token
+            (8, "\x01 x", 3),
+        ],
         "doc_id long, text string, n_chars long",
     )
     got = {r.doc_id: r.ws_tokens for r in token_counts(docs).collect()}
-    assert got == {1: 0, 2: 0, 3: 2}
+    assert got == {1: 0, 2: 0, 3: 2, 4: None, 5: 0, 6: 3, 7: 1, 8: 2}
+
+
+def _hof_reference(docs):
+    """The higher-order-function formulations that token_counts,
+    quality_scores, language_id and chunk_documents replaced with
+    compiled builtins, replayed as the reference for
+    test_text_builtins_match_hof_reference."""
+    from pyspark.sql import functions as F
+
+    from datafusion_wasm_bindings_spark.operators.text import (
+        LANG_LEXICON,
+        tokens_col,
+    )
+
+    toks = docs.select("*", tokens_col().alias("t"))
+
+    def hits(words):
+        lex = F.array(*[F.lit(w) for w in words])
+        return F.size(F.filter("t", lambda x: F.array_contains(lex, x)))
+
+    ws = F.filter(F.split(F.trim(F.col("text")), "\\s+"), lambda x: x != "")
+    tokens = toks.select(
+        "doc_id",
+        F.size(ws).alias("ws_tokens"),
+        F.size("t").alias("re_tokens"),
+        F.length("text").alias("n_chars_measured"),
+        F.col("n_chars").alias("n_chars_given"),
+    )
+
+    lower = F.lower("text")
+    alpha = F.length(lower) - F.length(
+        F.translate(lower, "abcdefghijklmnopqrstuvwxyz", "")
+    )
+    q = toks.select(
+        "doc_id",
+        F.length("text").alias("c"),
+        alpha.alias("a"),
+        F.size("t").alias("n"),
+        hits(LANG_LEXICON["en"]).alias("s"),
+    )
+    n, c, a, st = F.col("n"), F.col("c"), F.col("a"), F.col("s")
+    mean = F.when(n > 0, a / n).otherwise(F.lit(0.0))
+    score = (
+        F.least(c / F.lit(400.0), F.lit(1.0)) * 0.3
+        + (a / F.greatest(c, F.lit(1))) * 0.3
+        + F.least(st / F.greatest(n, F.lit(1)) * 4.0, F.lit(1.0)) * 0.2
+        + F.when((mean >= 3) & (mean <= 8), 0.2).otherwise(0.0)
+    )
+    quality = q.select(
+        "doc_id",
+        n.alias("n_tokens"),
+        F.round(a / F.greatest(c, F.lit(1)), 6).alias("alpha_ratio"),
+        F.round(st / F.greatest(n, F.lit(1)), 6).alias("stopword_ratio"),
+        F.round(mean, 6).alias("mean_token_len"),
+        F.round(score, 6).alias("quality"),
+    )
+
+    best = F.array_max(
+        F.array(
+            *[
+                F.struct(
+                    F.when(F.col("t").isNull(), F.lit(0))
+                    .otherwise(hits(LANG_LEXICON[lang]))
+                    .cast("long")
+                    .alias("hits"),
+                    F.lit(lang).alias("lang_cand"),
+                )
+                for lang in sorted(LANG_LEXICON)
+            ]
+        )
+    )
+    langid = toks.select(
+        "doc_id",
+        F.when(best["hits"] > 0, best["lang_cand"])
+        .otherwise(F.lit("und"))
+        .alias("lang_pred"),
+        best["hits"].alias("best_hits"),
+        "lang",
+    )
+
+    size = F.size("t")
+    nc = F.when(size <= 64, F.lit(1)).otherwise(F.ceil((size - 64) / F.lit(48.0)) + 1)
+    start = F.col("chunk_id") * 48
+    chunks = toks.select(
+        "doc_id",
+        size.alias("n_tokens"),
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), nc - 1),
+                lambda i: F.concat_ws(" ", F.slice("t", i * 48 + 1, 64)),
+            )
+        ).alias("chunk_id", "chunk_text"),
+    ).select(
+        "doc_id",
+        "n_tokens",
+        "chunk_id",
+        start.alias("start_tok"),
+        F.greatest(F.least(F.lit(64), F.col("n_tokens") - start), F.lit(0)).alias(
+            "n_chunk_tokens"
+        ),
+        "chunk_text",
+    )
+    return {
+        "token_counts": tokens,
+        "quality_scores": quality,
+        "language_id": langid,
+        "chunk_documents": chunks,
+    }
+
+
+def test_text_builtins_match_hof_reference(spark):
+    """token_counts, quality_scores, language_id and chunk_documents
+    count and slice tokens with regexp_count / explode+slice instead of
+    lambdas over the token array; each must equal its former HOF form
+    (_hof_reference) row for row, dtypes included, on NULL, empty and
+    whitespace-only text, tab/newline/vertical-tab/NBSP separators,
+    control characters at the edges, stopwords glued to '_', digits or
+    accents, upper case, docs at the 64/48 chunk boundaries, and 200
+    seeded random soups of lexicon words and separators."""
+    import random
+
+    from datafusion_wasm_bindings_spark.operators.packing import chunk_documents
+    from datafusion_wasm_bindings_spark.operators.text import (
+        LANG_LEXICON,
+        language_id,
+        quality_scores,
+        token_counts,
+    )
+
+    texts = [
+        None, "", "   ", "\t", "\n\n", "\u00a0", " \t\n\u00a0\x0b\f ",
+        "\x01the", "the\x01", "\x01 and \x01", "the_end", "the1", "1the",
+        "THE", "thé", "the\u0301", "la les le", "lesa les.", "l'un et l'autre",
+        "der\tdie\ndas\u00a0und", " ist  nicht ",
+    ]
+    boundary = [
+        " ".join("the" if i % 2 else f"w{i}" for i in range(n))
+        for n in (64, 65, 112, 113)
+    ]
+    texts += boundary
+    rng = random.Random(20261020)
+    words = [w for ws in LANG_LEXICON.values() for w in ws] + [
+        "THE", "Der", "x9", "the_", "_and", "in1", "é", "qué",
+    ]
+    seps = [" ", "  ", "\t", "\n", "\u00a0", "_", "-", ".", "1", "\x01", "é", "'"]
+    for _ in range(200):
+        parts = []
+        for _ in range(rng.randint(0, 140)):
+            parts += [rng.choice(words), rng.choice(seps)]
+        texts.append("".join(parts))
+    docs = spark.createDataFrame(
+        [
+            (i, "en", t, None if t is None else len(t))
+            for i, t in enumerate(texts)
+        ],
+        "doc_id long, lang string, text string, n_chars long",
+    )
+    ref = _hof_reference(docs)
+    got = {
+        "token_counts": token_counts(docs),
+        "quality_scores": quality_scores(docs),
+        "language_id": language_id(docs),
+        "chunk_documents": chunk_documents(docs),
+    }
+    for name, df in got.items():
+        assert df.dtypes == ref[name].dtypes, name
+        rows = sorted(map(tuple, df.collect()), key=repr)
+        assert rows == sorted(map(tuple, ref[name].collect()), key=repr), name
+    # the 64/65/112/113-token docs cut into 1, 2, 2 and 3 windows
+    ids = [texts.index(t) for t in boundary]
+    per_doc = got["chunk_documents"].groupBy("doc_id").count().collect()
+    assert [dict(map(tuple, per_doc))[i] for i in ids] == [1, 2, 2, 3]
 
 
 def test_asof_join_known_values(spark):
@@ -1954,6 +2135,9 @@ def test_language_id_map_matches_explode_join_reference(spark):
         (3, "en", "the und la"),          # 4-way tie at 1 hit -> 'fr'
         (4, "de", "xyzzy qwerty"),        # zero hits -> 'und'
         (5, "en", "The AND of of of"),    # case-folded, per-occurrence
+        (6, "en", " \t\n\u00a0"),          # whitespace only -> 'und'
+        (7, "de", "\x01der_die1 das\x01"),  # '_'/char(1) split, 'die1' no hit
+        (8, "fr", "thé lés les.la"),       # accents split tokens
     ]
     rows += [
         (10 + i, "en", " ".join(rng.choices(pool, k=rng.randint(1, 30))))
@@ -1998,6 +2182,9 @@ def test_language_id_map_matches_explode_join_reference(spark):
     assert by_id[3][1:3] == ("fr", 1)
     assert by_id[4][1:3] == ("und", 0)
     assert by_id[5][1:3] == ("en", 5)
+    assert by_id[6][1:3] == ("und", 0)
+    assert by_id[7][1:3] == ("de", 2)
+    assert by_id[8][1:3] == ("fr", 2)
 
 
 def test_bucketed_prefix_sum_matches_naive_window(spark):

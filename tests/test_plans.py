@@ -455,6 +455,23 @@ def test_pipeline_epochs_is_map_plus_explode(spark, sf_dir):
     assert "Generate explode" in plan, plan
 
 
+def test_text_and_chunk_operators_compile_no_lambda(spark, sf_dir):
+    """Token counts, quality, language ID and chunking count and slice
+    tokens with compiled builtins (regexp_count, explode + slice): no
+    interpreted higher-order-function lambda survives optimization."""
+    from datafusion_wasm_bindings_spark.operators.packing import chunk_documents
+    from datafusion_wasm_bindings_spark.operators.text import (
+        language_id,
+        quality_scores,
+        token_counts,
+    )
+
+    docs = table(spark, sf_dir, "documents")
+    for op in (token_counts, quality_scores, language_id, chunk_documents):
+        plan = op(docs)._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan, (op.__name__, plan)
+
+
 def test_text_tokens_bpe_is_shuffle_free(spark, sf_dir):
     """BPE pre-token counting is one regex pass per document — a single
     map stage: no Exchange, and exactly one scan."""
