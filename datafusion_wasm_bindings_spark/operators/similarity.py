@@ -24,10 +24,20 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from datafusion_wasm_bindings_spark.operators.checkpoint import cut
+
+# The index builds' mapInArrow kernels call this module's _nearest on
+# the Python workers, which may not import this package (the driver
+# harness patches sys.path in its driver process only): ship the
+# module's functions by value, like a self-contained closure.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 
 def quantized(col: F.Column, scale: int = 1000) -> F.Column:
@@ -96,8 +106,6 @@ def cosine_topk_bruteforce(
         .withColumn("dot", _dot(F.col("qv"), F.col("cv")))
         .withColumn("cos", F.col("dot") / F.sqrt(F.col("qn2") * F.col("cn2")))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("cand_id").asc()
     )
@@ -264,38 +272,24 @@ def _norm2d(a: F.Column) -> F.Column:
     )
 
 
-def _nearest_idx(sv, cb_arr, ss_arr, n: int):
-    """Shared argmin core of the r8 map-side index builds: the index
-    i < n minimizing ss_arr[i] − 2·sv·cb_arr[i] (= ‖c_i‖² − 2·sv·c_i;
-    ‖sv‖² is row-constant and drops out of the argmin), as an
-    array_min over (score, i) structs. Ties break to the LOWEST index
-    (struct compare), deterministic where a min_by would be
-    unspecified. All three args are Columns reading broadcast DATA —
-    inlined literal matrices bloated task binaries past a megabyte and
-    re-initialized per task (measured seconds of fixed cost/pass)."""
-    return F.array_min(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n - 1)),
-            lambda i: F.struct(
-                (
-                    F.get(ss_arr, i)
-                    - 2.0
-                    * F.aggregate(
-                        F.zip_with(sv, F.get(cb_arr, i), lambda a, b: a * b),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ).alias("d"),
-                i.cast("long").alias("i"),
-            ),
-        )
-    )["i"]
+# rows scored at once by _nearest: memory is O(block × cells), not
+# O(rows × cells) (4096 cells × 204,800 rows unblocked = a 6.7 GB
+# score matrix)
+_NEAREST_BLOCK = 1024
 
 
-# training rows scored at once by _lloyd_round: driver memory is
-# O(block × cells), not O(n_train × cells) (4096 cells × 204,800 rows
-# unblocked = a 6.7 GB score matrix)
-_LLOYD_BLOCK = 1024
+def _index_population(embeddings: DataFrame) -> DataFrame:
+    """The ANN index population: (vec_id bigint, v array<double>).
+
+    NULL embeddings — and vectors carrying a NULL ELEMENT — are OUT of
+    it: they have no defined distance to anything. Unfiltered, either
+    class would seed a driver TypeError (float(None)) or rank FIRST
+    downstream via NULL scores under ASC NULLS FIRST (r8/r9 review
+    findings)."""
+    return embeddings.select(
+        F.col("vec_id").cast("long").alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+    ).filter(F.col("v").isNotNull() & ~F.exists("v", lambda x: x.isNull()))
 
 
 def _train_matrix(base: DataFrame, n_train: int):
@@ -319,75 +313,120 @@ def _train_matrix(base: DataFrame, n_train: int):
     return np.array([r["v"] for r in rows], dtype=np.float64)
 
 
-def _lloyd_round(X, C):
-    """One Lloyd round on the driver: assign every row of ``X`` (n ×
-    dim) to its nearest centroid of ``C`` (k × dim) and return each
-    cell's member mean (k × dim; NaN where empty) and member count (k).
+def _nearest(X, C):
+    """The nearest centroid of ``C`` (k × dim) for every row of ``X``
+    (n × dim), as n int64 cell indexes: the argmin of ‖c‖² − 2.0·x·c
+    (‖x‖² is row-constant and drops out). The one argmin of the Lloyd
+    rounds and of the corpus assignment and encode:
 
-    It replays the Spark-side fit's IEEE sequence exactly — the
-    ``_nearest_idx`` argmin, then a per-cell avg over the vec_id-ordered
-    sample — pinned bit for bit by tests/test_operators.py::
-    test_driver_lloyd_fit_matches_spark_fit:
-
-    - score ‖c‖² − 2.0·x·c, the dot and ‖c‖² each a left fold over
-      dims, one multiply and one add per step (``X @ C.T`` would block
-      the sum and may fuse multiply-add, which changes the bits);
+    - the dot and ‖c‖² are each a left fold over dims, one multiply and
+      one add per step (``X @ C.T`` would block the sum and may fuse
+      multiply-add, which changes the bits);
     - ties go to the lowest index; NaN sorts greatest (a finite score
-      or a real +inf beats an earlier NaN); an all-NaN row goes to 0;
-    - sums start at −0.0, the IEEE additive identity, and add rows in
-      order (``np.add.at``): Spark Sum's assign-first rule, −0.0 kept.
+      or a real +inf beats an earlier NaN); an all-NaN row goes to 0.
     """
     import numpy as np
 
     k, dim = C.shape
-    sums = np.full((k, dim), -0.0)
-    counts = np.zeros(k, dtype=np.int64)
-    # inf/NaN inputs give IEEE inf/NaN scores and sums, as in Spark
+    cell = np.empty(len(X), dtype=np.int64)
+    # inf/NaN inputs give IEEE inf/NaN scores
     with np.errstate(all="ignore"):
         css = np.zeros(k)
         for j in range(dim):
             css += C[:, j] * C[:, j]
-        for lo in range(0, len(X), _LLOYD_BLOCK):
-            xb = X[lo : lo + _LLOYD_BLOCK]
+        for lo in range(0, len(X), _NEAREST_BLOCK):
+            xb = X[lo : lo + _NEAREST_BLOCK]
             acc = np.zeros((len(xb), k))
             for j in range(dim):
                 acc += xb[:, j, None] * C[None, :, j]
             score = css - 2.0 * acc
             masked = np.where(np.isnan(score), np.inf, score)
-            cell = masked.argmin(axis=1)
+            best = masked.argmin(axis=1)
             # +inf minimum: either a real +inf (the first one wins over
             # any NaN) or an all-NaN row (cell 0)
-            top = masked[np.arange(len(xb)), cell] == np.inf
+            top = masked[np.arange(len(xb)), best] == np.inf
             if top.any():
                 real = score[top] == np.inf
-                cell[top] = np.where(real.any(axis=1), real.argmax(axis=1), 0)
-            np.add.at(sums, cell, xb)
-            counts += np.bincount(cell, minlength=k)
+                best[top] = np.where(real.any(axis=1), real.argmax(axis=1), 0)
+            cell[lo : lo + len(xb)] = best
+    return cell
+
+
+def _lloyd_round(X, C):
+    """One Lloyd round on the driver: ``_nearest`` assigns every row of
+    ``X`` (n × dim) to a centroid of ``C`` (k × dim); return each
+    cell's member mean (k × dim; NaN where empty) and member count (k).
+    The sums start at −0.0, the IEEE additive identity, and add rows in
+    order (``np.add.at``): Spark Sum's assign-first rule, −0.0 kept —
+    pinned bit for bit against Spark's ``avg`` by tests/
+    test_operators.py::test_driver_lloyd_fit_matches_spark_fit."""
+    import numpy as np
+
+    cell = _nearest(X, C)
+    sums = np.full(C.shape, -0.0)
+    with np.errstate(all="ignore"):
+        np.add.at(sums, cell, X)
+        counts = np.bincount(cell, minlength=len(C))
         means = sums / counts[:, None]
     return means, counts
 
 
+def _batch_matrix(rb, dim: int):
+    """An Arrow batch's ``v`` column as an n × dim float64 matrix. A
+    vector of another length has no distance to the centroids: the
+    batch's first one is rejected by vec_id."""
+    import numpy as np
+
+    v = rb.column("v")
+    lens = np.diff(v.offsets.to_numpy())
+    bad = np.flatnonzero(lens != dim)
+    if bad.size:
+        i = bad[0]
+        raise ValueError(
+            f"corpus vector vec_id={rb.column('vec_id')[i].as_py()} has "
+            f"{lens[i]} dims, the index has {dim}"
+        )
+    return v.flatten().to_numpy().reshape(len(v), dim)
+
+
+def _cut_index(index: DataFrame, base: DataFrame, dim: int) -> DataFrame:
+    """Materialise a corpus assignment or encode of ``base``. A vector
+    of a length other than ``dim`` fails its Arrow batch on a worker;
+    the build then raises ValueError naming the lowest such vec_id, as
+    ``_train_matrix`` does for the train sample."""
+    try:
+        return cut(index)
+    except PythonException:
+        bad = base.filter(F.size("v") != dim).orderBy("vec_id").first()
+        if bad is None:
+            raise
+        raise ValueError(
+            f"corpus vector vec_id={bad['vec_id']} has {len(bad['v'])} "
+            f"dims, the index has {dim}"
+        ) from None
+
+
 def _assign_cells(base: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """Nearest-centroid assignment as a PURE MAP: the centroid matrix
-    (cells × dims doubles + per-cell ‖c‖²) rides in as a ONE-ROW
-    broadcast (the allowed scalar-attachment shape) and the nearest
-    cell is the _nearest_idx argmin projection. ZERO shuffle, zero row
-    expansion; cell ids are matrix positions 0..m−1."""
-    spark = base.sparkSession
-    ss = [float(sum(x * x for x in cv)) for cv in cents]
-    cmat = F.broadcast(
-        spark.createDataFrame(
-            [(cents, ss)], "cm array<array<double>>, css array<double>"
-        )
-    )
-    return (
-        base.crossJoin(cmat)
-        .withColumn(
-            "cell",
-            _nearest_idx(F.col("v"), F.col("cm"), F.col("css"), len(cents)),
-        )
-        .drop("cm", "css")
-    )
+    """Nearest-centroid assignment as a PURE MAP: one mapInArrow runs
+    ``_nearest`` over each Arrow batch of ``base`` (vec_id, v) against
+    the centroid matrix, which rides in the pickled kernel. ZERO
+    shuffle, zero row expansion; cell ids are matrix positions
+    0..m−1."""
+    import numpy as np
+
+    C = np.array(cents, dtype=np.float64)
+
+    def batches(it):
+        import pyarrow as pa
+
+        for rb in it:
+            cell = _nearest(_batch_matrix(rb, C.shape[1]), C)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column("vec_id"), rb.column("v"), pa.array(cell)],
+                names=["vec_id", "v", "cell"],
+            )
+
+    return base.mapInArrow(batches, "vec_id bigint, v array<double>, cell bigint")
 
 
 def ivf_index(
@@ -412,41 +451,26 @@ def ivf_index(
     ``centroids``: cell, cv (array<double>) — tiny, broadcast at probe
     time.
 
-    Scale (r8 rewrite, measured by scale probe `ann_xl`): assignment is a PURE
-    MAP — the centroid state (cells × dims doubles, the same bounded
-    driver state operators/clustering.py holds) ships as a one-row
-    broadcast and the nearest cell is an argmin projection
-    (_assign_cells / _nearest_idx). The old
-    shape crossJoined the corpus against the centroid table and
-    groupBy(vec_id)-reduced it back: a full-corpus SHUFFLE of the
-    vector payload per Lloyd pass ((iters+1)× at any scale) that made
-    the 40k→400k exponent 1.14 at 68.7 s; the rewrite removes every
-    corpus shuffle from the build (update sums are cells×dims partial
-    aggregates; the train sample bounds iteration cost corpus-
-    independently). Lloyd iterations are index-build cost, amortized
-    across every query served."""
-    base = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).filter(
-        F.col("v").isNotNull() & ~F.exists("v", lambda x: x.isNull())
-    )
-    # NULL embeddings — and vectors carrying a NULL ELEMENT — are OUT
-    # of the index population (the old explode-based build skipped
-    # whole-NULL implicitly; unfiltered either class would seed a
-    # driver TypeError (float(None)) or rank FIRST downstream via NULL
-    # scores under ASC NULLS FIRST — r8/r9 review findings)
+    Scale (measured by scale probe `ann_xl`): the corpus is read
+    twice and never shuffled — one TakeOrdered collects the train
+    sample, and the full-corpus assignment is a PURE MAP: one
+    mapInArrow runs the numpy ``_nearest`` argmin over each Arrow batch
+    against the centroid matrix (cells × dims doubles, the same bounded
+    driver state operators/clustering.py holds), which ships inside the
+    kernel (_assign_cells). The r8 shape crossJoined the corpus against
+    the centroid table and groupBy(vec_id)-reduced it back: a
+    full-corpus SHUFFLE of the vector payload per Lloyd pass that made
+    the 40k→400k exponent 1.14 at 68.7 s. Lloyd iterations run on the
+    driver over the bounded sample: index-build cost independent of
+    the corpus size, amortized across every query served."""
+    base = _index_population(embeddings)
     n_train = train_sample or max(10_000, 50 * n_centroids)
     # ONE corpus TakeOrdered collects the WHOLE bounded train sample to
     # the driver (r13 job fold, guide §1.2/§5): the sample is
     # driver-scale state BY DESIGN (standard IVF practice — the
     # quantizer needs a distribution sketch, not the corpus), so the
-    # seed pick and every Lloyd round run as driver code instead of
-    # one Spark job each (was: checkpoint job + seeds job + a
-    # collect per Lloyd round). Each round is one vectorized
-    # _lloyd_round, which replays the Spark expressions' exact IEEE
-    # sequences over the vec_id-ordered sample, pinned bit-identical to
-    # the Spark-side fit by
-    # tests/test_operators.py::test_driver_lloyd_fit_matches_spark_fit.
+    # seed pick and every Lloyd round (one _lloyd_round each) run as
+    # driver code instead of one Spark job each.
     # SAMPLE-ORDER CAVEAT (ADVICE r8, resolved r9 by measurement): the
     # deterministic lowest-vec_id prefix assumes ids are UNCORRELATED
     # with vector content; on a corpus where content tracks id
@@ -474,7 +498,7 @@ def ivf_index(
         means, counts = _lloyd_round(X, cents)
         cents = means[counts > 0]  # empty cells drop, the rest renumber
     cents = cents.tolist()
-    assignments = cut(_assign_cells(base, cents))
+    assignments = _cut_index(_assign_cells(base, cents), base, X.shape[1])
     centroids = spark.createDataFrame(
         [(cell, cv) for cell, cv in enumerate(cents)],
         "cell long, cv array<double>",
@@ -614,8 +638,6 @@ def lsh_bucketed_topk(
         F.aggregate(F.zip_with("v", "qv", lambda x, y: x * y), F.lit(0.0), lambda a, b: a + b)
         / (F.sqrt(F.col("n2v")) * F.sqrt(F.col("qn2"))),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -775,58 +797,41 @@ def _encode_codes(
     books: list[list[list[float]]],
     sub_len: int,
 ) -> DataFrame:
-    """PQ-encode as a PURE MAP: the full codebook state (m × n_codes ×
-    sub_len doubles + per-(sub, code) ‖c‖²) rides in as a ONE-ROW
-    broadcast and each vector's m codes are an argmin projection per
-    subspace (score = ‖c‖² − 2·sv·c; ‖sv‖² is row-constant). The old
-    shape exploded the corpus into m sub-rows, broadcast-joined the
-    codebook TABLE (m × n_codes fan-out), and groupBy(vec_id,
-    sub_id)-reduced it back — a corpus×m shuffle of subvector payloads
-    per Lloyd pass plus one more for the final encode, and its seeding
-    window (PARTITION BY sub_id = m partitions) was a low-cardinality
-    fact window. Zero shuffles now; dead codes keep their slot so code
-    ids never renumber. Ties break to the LOWEST code id."""
-    spark = base.sparkSession
-    m = len(books)
-    css = [[float(sum(x * x for x in cv)) for cv in book] for book in books]
-    cbm = F.broadcast(
-        spark.createDataFrame(
-            [(books, css)],
-            "cbm array<array<array<double>>>, css array<array<double>>",
-        )
-    )
-    n_codes = len(books[0])
+    """PQ-encode as a PURE MAP: one mapInArrow runs ``_nearest`` over
+    each Arrow batch of ``base`` (vec_id, v), once per subspace against
+    that subspace's codebook (the m × n_codes × sub_len doubles ride in
+    the pickled kernel), and emits each vector's m codes as m
+    (vec_id, sub_id, code) rows. The r8 shape exploded the corpus into
+    m sub-rows, broadcast-joined the codebook TABLE (m × n_codes
+    fan-out), and groupBy(vec_id, sub_id)-reduced it back — a corpus×m
+    shuffle of subvector payloads per Lloyd pass. Zero shuffles now;
+    dead codes keep their slot so code ids never renumber. Ties break
+    to the LOWEST code id."""
+    import numpy as np
 
-    def best_code(i):  # i: subspace index Column; reads pre-sliced svs
-        return _nearest_idx(
-            F.get(F.col("svs"), i),
-            F.get(F.col("cbm"), i),
-            F.get(F.col("css"), i),
-            n_codes,
-        ).cast("int")
+    B = [np.array(book, dtype=np.float64) for book in books]
+    m = len(B)
 
-    # subvector slices materialize ONCE per row before the argmin: an
-    # HOF lambda sits outside codegen subexpression elimination, so an
-    # inlined slice would re-run per code candidate (n_codes× per
-    # subspace — the CLAUDE.md materialization rule, measured on this
-    # exact operator: 21.2 → ~15 s at 400k)
-    sliced = base.crossJoin(cbm).select(
-        "vec_id",
-        "cbm",
-        "css",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda i: F.slice(F.col("v"), i * sub_len + 1, sub_len),
-        ).alias("svs"),
-    )
-    return sliced.select(
-        "vec_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)), lambda i: best_code(i)
+    def batches(it):
+        import pyarrow as pa
+
+        for rb in it:
+            X = _batch_matrix(rb, m * sub_len)
+            codes = np.stack(
+                [_nearest(X[:, i * sub_len : (i + 1) * sub_len], b) for i, b in enumerate(B)],
+                axis=1,
             )
-        ).alias("sub_id", "code"),
-    )
+            n = len(X)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    rb.column("vec_id").take(np.repeat(np.arange(n), m)),
+                    pa.array(np.tile(np.arange(m, dtype=np.int32), n)),
+                    pa.array(codes.astype(np.int32).ravel()),
+                ],
+                names=["vec_id", "sub_id", "code"],
+            )
+
+    return base.mapInArrow(batches, "vec_id bigint, sub_id int, code int")
 
 
 def pq_index(
@@ -851,31 +856,17 @@ def pq_index(
     code) — the persisted index, m rows per vector; codebooks =
     (sub_id, code, cv) — tiny, broadcast at query time.
 
-    Scale (r8 rewrite, see _encode_codes): codebook training touches
-    only the bounded sample; the corpus is read ONCE for the final
-    encode, a pure map with zero shuffles (the posexplode of the
-    m-length code array is the only fan-out, and it carries ints, not
-    subvectors)."""
-    base = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    ).filter(
-        F.col("v").isNotNull() & ~F.exists("v", lambda x: x.isNull())
-    )
-    # NULL embeddings — and vectors carrying a NULL ELEMENT — are OUT
-    # of the index population (the old explode-based build skipped
-    # whole-NULL via posexplode(NULL) emitting nothing; unfiltered
-    # either class would seed a driver TypeError (float(None)) or rank
-    # FIRST in the ADC window via NULL scores — r8/r9 review findings).
-    # The dim probe reads the filtered population for the same reason.
+    Scale (see _encode_codes): codebook training touches only the
+    bounded sample; the corpus is read ONCE for the final encode, one
+    mapInArrow with zero shuffles (its m rows per vector carry ints,
+    not subvectors)."""
+    base = _index_population(embeddings)
     spark = embeddings.sparkSession
     n_train = train_sample or max(10_000, 50 * n_codes)
     # ONE corpus TakeOrdered collects the bounded train sample to the
-    # driver (r13 job fold — see ivf_index for the full rationale and
-    # the SAMPLE-ORDER CAVEAT): seeds, dimensionality, and every Lloyd
-    # round are driver code (was: checkpoint job + seeds job + a
-    # join+explode+avg collect per Lloyd round), one _lloyd_round per
-    # subspace a round. Bit-identical to the Spark-side fit — pinned by
-    # tests/test_operators.py::test_driver_lloyd_fit_matches_spark_fit.
+    # driver (see ivf_index for the rationale and the SAMPLE-ORDER
+    # CAVEAT): seeds, dimensionality, and every Lloyd round (one
+    # _lloyd_round per subspace) are driver code.
     X = _train_matrix(base, n_train)
     if X is None:
         # EMPTY corpus: no dimensionality to probe, no codebook to
@@ -888,9 +879,10 @@ def pq_index(
             [], "sub_id int, code int, cv array<double>"
         )
         return codes, cb, 0
-    # dimensionality read from the sample rows already on the driver —
-    # the old separate first()-probe was one more full-plan job per
-    # index build for a value the sample carries anyway (r12)
+    # dimensionality read from the sample rows already on the driver
+    # (r12: no separate first()-probe job)
+    if X.shape[1] % m_subspaces:
+        raise ValueError(f"{X.shape[1]} dims do not split into {m_subspaces} subspaces")
     sub_len = X.shape[1] // m_subspaces
     subs = [X[:, i * sub_len : (i + 1) * sub_len] for i in range(m_subspaces)]
     # books[sub][code] = sub_len doubles; seeded from the n_codes
@@ -903,7 +895,7 @@ def pq_index(
             # dead codes stay addressable, ids never renumber
             book[counts > 0] = means[counts > 0]
     books = [book.tolist() for book in books]
-    codes = cut(_encode_codes(base, books, sub_len))
+    codes = _cut_index(_encode_codes(base, books, sub_len), base, X.shape[1])
     cb = spark.createDataFrame(
         [
             (si, ci, cv)

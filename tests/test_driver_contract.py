@@ -7,7 +7,7 @@ this guards (see git history):
    ``spark.sql.legacy.parquet.nanosAsLong`` set AT RUNTIME by our
    table loader, not by session construction we don't control.
 2. Python worker processes may not have the repo importable: every
-   pandas/mapInPandas closure must be self-contained.
+   pandas/mapInPandas/mapInArrow function must be pickled by value.
 
 Run in a subprocess so the session-scoped test SparkSession (already
 configured) can't mask either trap.
@@ -63,6 +63,9 @@ _SCRIPT = textwrap.dedent(
         "q_scan_partitioned",
         "q_fn_typeof_version",
         "q_sample_temperature",
+        # the IVF/PQ index builds' mapInArrow argmin kernels
+        "q_sim_ivf_topk",
+        "q_sim_pq_topk",
     ):
         df = qs[name](spark, sf)
         df.collect()

@@ -2687,10 +2687,11 @@ def test_driver_lloyd_fit_matches_spark_fit(spark, sf_dir):
 
 
 def test_lloyd_round_argmin_edge_semantics():
-    """_lloyd_round's argmin corner cases, matched to _nearest_idx /
-    Spark struct ordering: NaN scores sort GREATEST (a finite score or
-    a real +inf wins, even at a higher index); an all-NaN row goes to
-    index 0; plain ties break to the lowest index."""
+    """_lloyd_round's argmin corner cases (its _nearest), matched to
+    Spark struct ordering (_nearest_idx_reference): NaN scores sort
+    GREATEST (a finite score or a real +inf wins, even at a higher
+    index); an all-NaN row goes to index 0; plain ties break to the
+    lowest index."""
     import numpy as np
 
     from datafusion_wasm_bindings_spark.operators.similarity import _lloyd_round
@@ -2714,6 +2715,140 @@ def test_lloyd_round_argmin_edge_semantics():
     assert cell([[0.5, 0.5], [0.5, 0.5]]) == 0
     means, counts = _lloyd_round(X, np.array([[0.5, 0.5], [0.5, 0.5]]))
     assert means[0].tolist() == [1.0, 0.0] and counts.tolist() == [1, 0]
+
+
+def _nearest_idx_reference(sv, cb_arr, ss_arr, n):
+    """The executor argmin that _assign_cells and _encode_codes ran as
+    higher-order functions: the index i < n minimizing
+    ss_arr[i] - 2.0 * sv . cb_arr[i], as an array_min over (score, i)
+    structs (NaN sorts greatest, ties go to the lowest index)."""
+    return F.array_min(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(n - 1)),
+            lambda i: F.struct(
+                (
+                    F.get(ss_arr, i)
+                    - 2.0
+                    * F.aggregate(
+                        F.zip_with(sv, F.get(cb_arr, i), lambda a, b: a * b),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    )
+                ).alias("d"),
+                i.cast("long").alias("i"),
+            ),
+        )
+    )["i"]
+
+
+def _assign_cells_reference(base, cents):
+    """The higher-order-function _assign_cells: the centroid matrix and
+    its norms ride in as a one-row broadcast."""
+    ss = [float(sum(x * x for x in cv)) for cv in cents]
+    cmat = F.broadcast(
+        base.sparkSession.createDataFrame(
+            [(cents, ss)], "cm array<array<double>>, css array<double>"
+        )
+    )
+    return (
+        base.crossJoin(cmat)
+        .withColumn("cell", _nearest_idx_reference(F.col("v"), F.col("cm"), F.col("css"), len(cents)))
+        .drop("cm", "css")
+    )
+
+
+def _encode_codes_reference(base, books, sub_len):
+    """The higher-order-function _encode_codes: the codebooks ride in as
+    a one-row broadcast, subvectors are sliced once per row, and the m
+    codes posexplode into (sub_id, code) rows."""
+    m, n_codes = len(books), len(books[0])
+    css = [[float(sum(x * x for x in cv)) for cv in book] for book in books]
+    cbm = F.broadcast(
+        base.sparkSession.createDataFrame(
+            [(books, css)], "cbm array<array<array<double>>>, css array<array<double>>"
+        )
+    )
+    subs = F.sequence(F.lit(0), F.lit(m - 1))
+    sliced = base.crossJoin(cbm).select(
+        "vec_id",
+        "cbm",
+        "css",
+        F.transform(subs, lambda i: F.slice(F.col("v"), i * sub_len + 1, sub_len)).alias("svs"),
+    )
+    return sliced.select(
+        "vec_id",
+        F.posexplode(
+            F.transform(
+                subs,
+                lambda i: _nearest_idx_reference(
+                    F.get(F.col("svs"), i), F.get(F.col("cbm"), i), F.get(F.col("css"), i), n_codes
+                ).cast("int"),
+            )
+        ).alias("sub_id", "code"),
+    )
+
+
+def test_ann_assignment_matches_hof_reference(spark, sf_dir):
+    """_assign_cells cells and _encode_codes codes equal the former
+    higher-order-function argmin row for row: on the sf0.01 and sf0.1
+    embeddings corpora, and on hostile rows and centroids (NaN, +-inf,
+    a 1e200 norm that overflows to inf, duplicate centroids, +-0.0 and
+    the zero vector)."""
+    import os
+    import random
+
+    from datafusion_wasm_bindings_spark.operators.similarity import (
+        _assign_cells,
+        _encode_codes,
+    )
+
+    def population(emb):
+        return emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ).filter(F.col("v").isNotNull() & ~F.exists("v", lambda x: x.isNull()))
+
+    def check(base, cents, m):
+        sub_len = len(cents[0]) // m
+        books = [[c[i * sub_len : (i + 1) * sub_len] for c in cents] for i in range(m)]
+        for got, want, key in (
+            (_assign_cells(base, cents), _assign_cells_reference(base, cents), ("vec_id", "cell")),
+            (
+                _encode_codes(base, books, sub_len),
+                _encode_codes_reference(base, books, sub_len),
+                ("vec_id", "sub_id", "code"),
+            ),
+        ):
+            assert got.select(*key).dtypes == want.select(*key).dtypes
+            rows = sorted(tuple(r) for r in got.select(*key).collect())
+            assert rows == sorted(tuple(r) for r in want.select(*key).collect()), key
+            assert len({r[-1] for r in rows}) > 1, key  # more than one cell chosen
+
+    for sf in ("sf0.01", "sf0.1"):  # siblings of the test scale factor's dir
+        base = population(table(spark, os.path.join(os.path.dirname(sf_dir), sf), "embeddings"))
+        seeds = [list(r["v"]) for r in base.orderBy("vec_id").limit(16).collect()]
+        check(base, seeds + [seeds[3]], m=8)  # a duplicate: exact ties
+
+    nan, inf = float("nan"), float("inf")
+    rnd = random.Random(5)
+    rows = [[rnd.choice([-1.0, -0.5, 0.0, 0.5, 1.0]) for _ in range(4)] for _ in range(60)]
+    rows += [
+        [nan, 0.0, 0.0, 0.0],
+        [inf, 0.0, 1.0, 0.0],
+        [-inf, 1.0, 0.0, 0.0],
+        [0.0, 0.0, 0.0, 0.0],
+        [-0.0, -0.0, -0.0, -0.0],
+        [1e200, 0.0, 0.0, 1.0],
+    ]
+    base = population(
+        spark.createDataFrame(list(enumerate(rows)), "vec_id long, embedding array<double>")
+    )
+    for cents in (
+        [[nan, 0.0, 0.0, 0.0], [1.0, 0.0, 0.5, 0.0], [0.5, 0.5, 0.0, -0.5]],
+        [[1e200, 0.0, 0.0, 0.0], [nan, nan, 0.0, 1.0], [0.0, 1.0, 0.0, 0.0], [0.0, 0.0, 1e200, 0.0]],
+        [[inf, 0.0, 0.0, 0.0], [-inf, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0], [0.0, 1.0, 0.0, -1.0]],
+        [[0.5, 0.5, 0.0, 0.0], [0.5, 0.5, 0.0, 0.0], [-0.0, 0.0, -0.0, 1.0], [0.0, 0.0, 0.0, 0.0]],
+    ):
+        check(base, cents, m=2)
 
 
 def _lloyd_reference(rows, cents):
@@ -2779,9 +2914,10 @@ def test_lloyd_round_matches_per_element_reference():
 
 
 def test_ann_index_rejects_unequal_training_vectors(spark):
-    """Training vectors of unequal length cannot form the driver's
-    train matrix: ivf_index and pq_index raise ValueError naming the
-    first mismatched vec_id (in vec_id order)."""
+    """Vectors of unequal length have no distance to the index:
+    ivf_index and pq_index raise ValueError naming the first mismatched
+    vec_id (in vec_id order), in the train sample and past it. pq_index
+    also rejects a dim that does not split into its subspaces."""
     from datafusion_wasm_bindings_spark.operators.similarity import ivf_index, pq_index
 
     emb = spark.createDataFrame(
@@ -2795,13 +2931,33 @@ def test_ann_index_rejects_unequal_training_vectors(spark):
         with pytest.raises(ValueError, match="vec_id=3 "):
             build()
 
+    # the same rule past the train sample: the corpus pass rejects the
+    # lowest vec_id past it whose length differs from the centroid dim
+    # (vec_ids 3 and 4 hold 3 + 1 values, a full 2 x 2 matrix's worth)
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [5.0, 5.0, 5.0]), (4, [-3.0]), (5, [0.0, 2.0])],
+        "vec_id long, embedding array<float>",
+    )
+    for build in (
+        lambda: ivf_index(emb, n_centroids=2, lloyd_iters=1, train_sample=2),
+        lambda: pq_index(emb, m_subspaces=2, n_codes=2, lloyd_iters=1, train_sample=2),
+    ):
+        with pytest.raises(ValueError, match="vec_id=3 "):
+            build()
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 2.0]), (2, [0.0, 1.0, 2.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="3 dims do not split into 2 subspaces"):
+        pq_index(emb, m_subspaces=2, n_codes=2)
+
 
 def test_ann_index_build_job_count(spark):
     """r13 job fold: an ivf_index / pq_index build runs at most THREE
-    Spark jobs — one collect of the bounded train sample, one eager
-    checkpoint of the full-corpus assignment/encode, plus (AQE) the
-    broadcast-materialization job of the centroid/codebook matrix
-    inside the final assignment. The old shape ran 5+ with
+    Spark jobs — one collect of the bounded train sample and one eager
+    checkpoint of the full-corpus assignment/encode (a mapInArrow; the
+    centroid/codebook matrix rides in its kernel, so no broadcast
+    job is left). The old shape ran 5+ with
     lloyd_iters=2 (sample checkpoint + seeds collect + one
     collect per Lloyd round + final checkpoint); the fold is the
     win, so pin the ceiling."""

@@ -1526,14 +1526,13 @@ def test_approx_rank_contract_broadcasts_sketch_frame(spark, sf_dir):
 
 
 def test_ann_index_builds_are_shuffle_free(spark):
-    """r8 IVF/PQ rewrite invariant: the index-build data path never
-    shuffles the corpus. `_assign_cells` (IVF nearest-cell) and
-    `_encode_codes` (PQ encode) are pure maps against a ONE-ROW
-    broadcast centroid/codebook matrix — the plan must contain no
-    hash-partitioning Exchange and no corpus-side SortExec (the old
-    shapes shuffled the full vector payload per Lloyd pass; the PQ
-    seeding additionally ran a PARTITION BY sub_id window = m
-    sequential partitions over the whole corpus)."""
+    """IVF/PQ index-build invariant: the corpus pass never shuffles.
+    `_assign_cells` (IVF nearest-cell) and `_encode_codes` (PQ encode)
+    are each one MapInArrow running the numpy argmin over Arrow
+    batches — no hash-partitioning Exchange, no Window (the old PQ
+    seeding ran a PARTITION BY sub_id window = m sequential partitions
+    over the whole corpus), and no interpreted array_min/transform
+    argmin projection."""
     from pyspark.sql import functions as F
 
     from datafusion_wasm_bindings_spark.operators.similarity import (
@@ -1543,20 +1542,16 @@ def test_ann_index_builds_are_shuffle_free(spark):
 
     base = spark.range(1000).select(
         F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(0, 7), d ->"
-            " CAST(pmod(xxhash64(id * 8 + d), 101) AS DOUBLE))"
+        F.array(
+            *[F.pmod(F.xxhash64(F.col("id") * 8 + d), F.lit(101)).cast("double") for d in range(8)]
         ).alias("v"),
     )
     cents = [[float(j * 8 + d) for d in range(8)] for j in range(4)]
-    p = _plan(_assign_cells(base, cents))
-    assert "Exchange hashpartitioning" not in p, p
-    assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p, p
-
     books = [[[float(c) for _ in range(4)] for c in range(4)] for _ in range(2)]
-    p = _plan(_encode_codes(base, books, 4))
-    assert "Exchange hashpartitioning" not in p, p
-    assert "Window" not in p, p  # the old per-sub seeding window is gone
+    for p in (_plan(_assign_cells(base, cents)), _plan(_encode_codes(base, books, 4))):
+        assert "MapInArrow" in p, p
+        for gone in ("Exchange hashpartitioning", "Window", "array_min", "transform"):
+            assert gone not in p, (gone, p)
 
 
 def test_multimodal_dedup_exchange_carries_digest_only(spark, sf_dir):
